@@ -62,8 +62,7 @@ def _live_pages(spark, sf_dir):
     # it reuses this exchange (no extra shuffle) and its output keeps
     # explicit-N partitioning instead of AQE byte-coalescing ~6MB of
     # text rows into ONE partition — which serialized every downstream
-    # token explode (the kg_linked_mentions chain; same fix as
-    # construct_kg's low-split branch)
+    # token explode (same fix as construct_kg's low-split branch)
     pages = fan_out(fixtures.pages_df(spark, sf_dir, with_html=False), "url")
     heads = V.latest_version(pages, key="url", version="version")
     return heads.where(~F.col("tombstone"))
@@ -92,22 +91,9 @@ def q_kg_mentions_preferred(spark, sf_dir):
     return hits.groupBy("url", "iri").agg(F.count("*").alias("n_mentions"))
 
 
-def _linked(spark, sf_dir):
-    live = _live_pages(spark, sf_dir)
-    alias = fixtures.alias_df(spark)
-    cands = M.detect_mentions(M.tokenize(live), alias)
-    linked = M.link_entities(cands, alias=alias)
-    canon = spark.createDataFrame(
-        list(fixtures.canonical_map_py().items()), "iri string, canonical_iri string"
-    )
-    # NOTE: queries use the closed-form canonical map as a *broadcast
-    # dictionary input* (q_kg_canonical_map checks the distributed CC
-    # operator against the same map); entry() runs the CC path.
-    return M.mention_counts(linked.join(F.broadcast(canon), "iri"), entity_col="canonical_iri")
-
-
 def q_kg_linked_mentions(spark, sf_dir):
-    return _linked(spark, sf_dir).select("url", "canonical_iri", "n_mentions", "first_pos")
+    res = P.construct_kg(spark, sf_dir, use_golden_text=True)
+    return res.linked.select("url", "canonical_iri", "n_mentions", "first_pos")
 
 
 def q_kg_canonical_map(spark, sf_dir):

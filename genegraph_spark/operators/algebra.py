@@ -389,7 +389,9 @@ def transitive_closure(
     a diameter-d graph converges in ⌈log2 d⌉ rounds instead of d — the
     round count, not per-round work, dominates at cluster scale (each
     round is a full shuffle + barrier). localCheckpoint per round cuts
-    the exponential lineage."""
+    the exponential lineage. Raises ``RuntimeError`` if the distributed
+    loop has not converged after ``max_iter`` rounds — a partial closure
+    is never returned."""
     edges = (
         triples.where(F.col("predicate") == pred)
         .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
@@ -445,9 +447,9 @@ def transitive_closure(
         closure = closure.union(doubled).distinct().localCheckpoint(eager=False)
         n = closure.count()
         if n == prev_count:
-            break
+            return closure
         prev_count = n
-    return closure
+    raise RuntimeError(f"transitive closure did not converge in {max_iter} rounds")
 
 
 def text_search(triples: DataFrame, term: str, predicate: str | None = None) -> DataFrame:

@@ -150,7 +150,12 @@ def minhash_near_duplicates(
     re-aggregated per pair: 4 extra exchanges, measured ~2x this plan's
     wall time). The per-doc frame is cached: bands and both verify sides
     reuse it (at lake scale this is the persisted per-doc signature
-    table)."""
+    table).
+
+    ``threshold`` must be > 0: at 0 every band collision would pass the
+    verify, emitting pairs that share no shingle."""
+    if threshold <= 0:
+        raise ValueError(f"threshold must be > 0, got {threshold}")
     sh = shingles(docs, id_col, text_col, k)
     # sh is distinct per (id, shingle), so collect_list builds the SET;
     # only its size and intersection size are consumed — order-free.

@@ -5,30 +5,51 @@ identifier dictionary on every transform — per-event lookups like the
 ``?gene :owl/same-as ?hgnc_gene`` join
 (``src/genegraph/transform/gene_validity_refactor.clj:347-348``) and the
 per-row symbol queries (``src/genegraph/transform/hi_index.clj:13``).
-Re-expressed Spark-first: the dictionary is tiny relative to the corpus,
-so mention detection is a **broadcast hash join** between the exploded
-token stream and the exploded alias table — zero shuffle of the big side
-at detection time, no Python in the hot path.
 
-Disambiguation (two entities sharing a surface form) is scored
-JVM-side: label-kind weight (preferred > alt > hidden, the skos ranking
-of transform/gene.clj:51-67) plus document-context support (how many
-*distinct other* surface forms of the same entity occur in the document),
-then a deterministic argmax per (doc, position).
+One linking semantics, two engines:
 
-Scale notes (100 TB): the token explode multiplies rows ~200×; it never
-shuffles — detection is explode → broadcast-join → local aggregation, and
-the only shuffles are the per-(doc,entity) aggregations, keyed by doc so
-Zipf-skewed hot *entities* (BRCA1-class) do not create hot *keys*; the
-final mention table is keyed by doc as well.
+* **Hot path** — :func:`make_page_mapper`, an Arrow-batched
+  ``mapInPandas`` stage that extracts, tokenizes, matches against the
+  broadcast gazetteer (compiled driver-side by :func:`gazetteer_payload`)
+  and disambiguates in one pass per page, emitting slim per-page int
+  arrays. ``construct_kg`` and every KG leaf use it.
+* **Fallback** — the JVM-side composition :func:`detect_mentions` →
+  :func:`link_entities` → :func:`mention_counts` (broadcast hash join of
+  the exploded token stream against the exploded alias table), for
+  gazetteers above the broadcast caps that :func:`assert_gazetteer_scale`
+  enforces. A test pins it to the mapper's output.
+
+Disambiguation (two entities sharing a surface form): label-kind weight
+(:data:`KIND_WEIGHT`, preferred > alt > hidden — the skos ranking of
+transform/gene.clj:51-67) plus document-context support (how many
+*distinct* surface forms of the same entity occur in the document), then
+a deterministic argmax per (doc, position), ties on the smaller IRI.
+
+Scale notes (100 TB): the fallback's token explode multiplies rows ~200×
+but never shuffles — detection is explode → broadcast-join → local
+aggregation, and the only shuffles are the per-(doc,entity)
+aggregations, keyed by doc so Zipf-skewed hot *entities* (BRCA1-class)
+do not create hot *keys*.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: skos label-kind ranking, strongest first; the single source for the
+#: mapper's gazetteer, the fallback's scoring and alias deduplication
 KIND_WEIGHT = {"preferred": 3, "alt": 2, "hidden": 1}
+
+
+def _kind_weight() -> Column:
+    """:data:`KIND_WEIGHT` of ``label_kind`` as a CASE expression; an
+    unknown kind weighs as the weakest."""
+    cases = [(F.col("label_kind") == k, w) for k, w in KIND_WEIGHT.items()]
+    expr = F.when(*cases[0])
+    for cond, w in cases[1:]:
+        expr = expr.when(cond, w)
+    return expr.otherwise(min(KIND_WEIGHT.values()))
 
 
 def tokenize(pages: DataFrame, id_col: str = "url", text_col: str = "text") -> DataFrame:
@@ -50,9 +71,7 @@ def detect_mentions(tokens: DataFrame, alias: DataFrame) -> DataFrame:
     )
 
 
-def link_entities(
-    candidates: DataFrame, alias: DataFrame | None = None, id_col: str = "url"
-) -> DataFrame:
+def link_entities(candidates: DataFrame, alias: DataFrame, id_col: str = "url") -> DataFrame:
     """Resolve ambiguous candidates to one entity per (doc, position).
 
     Contract: the alias table feeding detect_mentions must be unique on
@@ -65,67 +84,52 @@ def link_entities(
     Ties break on iri (deterministic). Returns
     (id, pos, token, iri, entity_type, label_kind).
 
-    Scale path: ambiguity is a property of the (tiny) gazetteer, so when
-    ``alias`` is given, only occurrences of *ambiguous* surface forms pay
-    the per-(doc,pos) window shuffle and the per-(doc,entity) support
-    aggregation — unambiguous tokens (the overwhelming majority of a
-    Zipf-skewed corpus, including the BRCA1-class hot head) pass through
-    map-only. Results are identical to the full-window path.
+    Scale path: ambiguity is a property of the (tiny) gazetteer, so only
+    occurrences of *ambiguous* surface forms pay the per-(doc,pos) window
+    shuffle and the per-(doc,entity) support aggregation — unambiguous
+    tokens (the overwhelming majority of a Zipf-skewed corpus, including
+    the BRCA1-class hot head) pass through map-only.
     """
     out_cols = [id_col, "pos", "token", "iri", "entity_type", "label_kind"]
-    if alias is not None:
-        # candidates is consumed THREE times below (ambiguous slice,
-        # unambiguous slice, support input); without a cut the whole
-        # upstream — page synthesis, version window, token explode,
-        # gazetteer join — executes three times (plan-audited: the
-        # tokenize→window→explode subtree appeared 3x). One lazy
-        # localCheckpoint makes the three consumers share a single
-        # evaluation; at lake scale this is the persisted slim
-        # candidate-mention intermediate.
-        candidates = candidates.localCheckpoint(eager=False)
-        amb_labels = (
-            alias.groupBy("label")
-            .agg(F.countDistinct("iri").alias("_n"))
-            .where("_n > 1")
-            .select(F.col("label").alias("token"))
-        )
-        amb_entities = (
-            alias.join(amb_labels, alias["label"] == amb_labels["token"])
-            .select("iri")
-            .distinct()
-        )
-        cand_amb = candidates.join(F.broadcast(amb_labels), "token", "left_semi")
-        cand_unamb = candidates.join(F.broadcast(amb_labels), "token", "left_anti")
-        support_input = candidates.join(F.broadcast(amb_entities), "iri", "left_semi")
-        picked = _score_and_pick(cand_amb, support_input, id_col)
-        return cand_unamb.select(*out_cols).unionByName(picked.select(*out_cols))
-    return _score_and_pick(candidates, candidates, id_col).select(*out_cols)
-
-
-def _score_and_pick(cands: DataFrame, support_input: DataFrame, id_col: str) -> DataFrame:
-    kind_w = (
-        F.when(F.col("label_kind") == "preferred", 3)
-        .when(F.col("label_kind") == "alt", 2)
-        .otherwise(1)
+    # candidates is consumed THREE times below (ambiguous slice,
+    # unambiguous slice, support input); without a cut the whole
+    # upstream — page synthesis, version window, token explode,
+    # gazetteer join — executes three times (plan-audited: the
+    # tokenize→window→explode subtree appeared 3x). One lazy
+    # localCheckpoint makes the three consumers share a single
+    # evaluation; at lake scale this is the persisted slim
+    # candidate-mention intermediate.
+    candidates = candidates.localCheckpoint(eager=False)
+    amb_labels = (
+        alias.groupBy("label")
+        .agg(F.countDistinct("iri").alias("_n"))
+        .where("_n > 1")
+        .select(F.col("label").alias("token"))
     )
-    support = support_input.groupBy(id_col, "iri").agg(
-        F.countDistinct("token").alias("context_support")
+    amb_entities = (
+        alias.join(amb_labels, alias["label"] == amb_labels["token"])
+        .select("iri")
+        .distinct()
     )
-    scored = cands.join(support, [id_col, "iri"]).withColumn(
-        "score", kind_w * 10 + F.col("context_support")
+    cand_amb = candidates.join(F.broadcast(amb_labels), "token", "left_semi")
+    cand_unamb = candidates.join(F.broadcast(amb_labels), "token", "left_anti")
+    support = (
+        candidates.join(F.broadcast(amb_entities), "iri", "left_semi")
+        .groupBy(id_col, "iri")
+        .agg(F.countDistinct("token").alias("context_support"))
+    )
+    scored = cand_amb.join(support, [id_col, "iri"]).withColumn(
+        "score", _kind_weight() * 10 + F.col("context_support")
     )
     w = Window.partitionBy(id_col, "pos").orderBy(F.desc("score"), F.asc("iri"))
-    return scored.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
+    picked = scored.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
+    return cand_unamb.select(*out_cols).unionByName(picked.select(*out_cols))
 
 
 MAP_SCHEMA = (
     "url string, doc_id long, version int, lang string, is_del boolean, ok boolean, "
     "m_cidx array<int>, m_cnt array<int>, m_pos array<int>"
 )
-# keep_text variant: consumers that need BOTH triples and the extracted
-# text (golden tests, downstream text pipelines) get it from the same
-# single Arrow pass instead of paying extraction twice
-MAP_SCHEMA_TEXT = MAP_SCHEMA + ", warc_ts timestamp, etext string"
 
 
 def alias_from_dictionary(dictionary: DataFrame) -> DataFrame:
@@ -152,12 +156,7 @@ def alias_from_dictionary(dictionary: DataFrame) -> DataFrame:
     # preferred and alt for the same entity would double-count every
     # occurrence in the unambiguous fast path (which passes candidate
     # rows through without a per-(doc,pos) pick). Keep the strongest kind.
-    kind_rank = (
-        F.when(F.col("label_kind") == "preferred", 0)
-        .when(F.col("label_kind") == "alt", 1)
-        .otherwise(2)
-    )
-    w = Window.partitionBy("iri", "label").orderBy(kind_rank)
+    w = Window.partitionBy("iri", "label").orderBy(_kind_weight().desc())
     return (
         exploded.withColumn("_rn", F.row_number().over(w))
         .where("_rn = 1")
@@ -220,20 +219,19 @@ def gazetteer_payload(alias_rows, canon_of: dict[str, str]):
     eidx = {iri: i for i, iri in enumerate(iris)}
     canon_iris = sorted({canon_of[i] for i in iris})
     cidx = {iri: i for i, iri in enumerate(canon_iris)}
-    kindw = {"preferred": 3, "alt": 2, "hidden": 1}
     by_label: dict[str, dict[int, int]] = {}
     for r in alias_rows:
         # (label, entity) unique, strongest kind wins (same contract as
         # alias_from_dictionary — duplicates would double-count mentions)
         ents = by_label.setdefault(r["label"], {})
         e = eidx[r["iri"]]
-        ents[e] = max(ents.get(e, 0), kindw[r["label_kind"]])
+        ents[e] = max(ents.get(e, 0), KIND_WEIGHT[r["label_kind"]])
     by_label = {l: sorted(ents.items()) for l, ents in by_label.items()}
     e_to_c = {eidx[i]: cidx[canon_of[i]] for i in iris}
     return by_label, e_to_c, canon_iris
 
 
-def make_page_mapper(by_label, e_to_c, use_golden_text: bool, keep_text: bool = False):
+def make_page_mapper(by_label, e_to_c, use_golden_text: bool):
     """Arrow-batched mapInPandas function: html → extracted text →
     tokenize → gazetteer match → contextual disambiguation → per-page
     canonical mention counts. This is the north-star hot path: one pass
@@ -244,7 +242,7 @@ def make_page_mapper(by_label, e_to_c, use_golden_text: bool, keep_text: bool = 
     Disambiguation = argmax(10*kind_weight + context_support) per surface
     form with min-entity-index tie-break; context_support = number of the
     entity's distinct surface forms present in the document (identical to
-    the operator-composition path)."""
+    the detect_mentions → link_entities → mention_counts fallback)."""
     import pandas as pd
 
     from ..functions.text import extract_text_py
@@ -293,7 +291,7 @@ def make_page_mapper(by_label, e_to_c, use_golden_text: bool, keep_text: bool = 
                 link_text(t) if (t is not None and not d) else ([], [], [])
                 for t, d in zip(texts, is_del)
             ]
-            out = {
+            yield pd.DataFrame({
                 "url": pdf["url"],
                 "doc_id": pdf["doc_id"],
                 "version": pdf["version"],
@@ -303,102 +301,9 @@ def make_page_mapper(by_label, e_to_c, use_golden_text: bool, keep_text: bool = 
                 "m_cidx": [m[0] for m in mentions],
                 "m_cnt": [m[1] for m in mentions],
                 "m_pos": [m[2] for m in mentions],
-            }
-            if keep_text:
-                out["warc_ts"] = pdf["warc_ts"]
-                out["etext"] = texts
-            yield pd.DataFrame(out)
+            })
 
     return mapper
-
-
-def linked_mention_counts(
-    docs: DataFrame,
-    alias: DataFrame,
-    canonical_map: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Fused detection+linking+aggregation on dictionary-encoded keys:
-    returns (id, canonical_iri, n_mentions, first_pos).
-
-    Scale design: the token explode multiplies the corpus ~200×, so every
-    byte carried per token row is ~200× of scan bandwidth. This path
-    shuffles only (doc_id:long, pos:int, eidx:int) — entity IRIs, label
-    kinds and ambiguity flags live in the broadcast gazetteer as small
-    ints, and the wide strings re-attach after the per-(doc, entity)
-    aggregation (~1 row per mentioned entity per doc). Measured ~4× CPU
-    reduction at 32 threads vs carrying the strings (memory-bandwidth
-    bound otherwise).
-
-    Entity indexes are assigned in sorted-IRI order so the deterministic
-    tie-break (asc iri) is asc(eidx). Semantics identical to
-    detect_mentions → link_entities → mention_counts."""
-    spark = docs.sparkSession
-    alias_rows = alias.join(canonical_map, "iri").collect()  # gazetteer is tiny by design
-    iris = sorted({r["iri"] for r in alias_rows})
-    eidx = {iri: i for i, iri in enumerate(iris)}
-    canon_of = {r["iri"]: r["canonical_iri"] for r in alias_rows}
-    kindw = {"preferred": 3, "alt": 2, "hidden": 1}
-    # (label, iri) unique, strongest kind wins — duplicate alias rows
-    # would double-count every unambiguous occurrence
-    best_kind: dict[tuple[str, str], int] = {}
-    for r in alias_rows:
-        k = (r["label"], r["iri"])
-        best_kind[k] = max(best_kind.get(k, 0), kindw[r["label_kind"]])
-    by_label: dict[str, list[str]] = {}
-    for (label, iri_) in best_kind:
-        by_label.setdefault(label, []).append(iri_)
-    amb_labels = {l for l, irs in by_label.items() if len(set(irs)) > 1}
-    amb_entities = {eidx[i] for l in amb_labels for i in by_label[l]}
-    gaz = [
-        (
-            label,
-            eidx[iri_],
-            kw,
-            label in amb_labels,
-            eidx[iri_] in amb_entities,
-        )
-        for (label, iri_), kw in sorted(best_kind.items())
-    ]
-    gaz_df = spark.createDataFrame(
-        gaz, "token string, eidx int, kindw int, lbl_amb boolean, ent_amb boolean"
-    )
-    ent_df = spark.createDataFrame(
-        [(i, iri, canon_of[iri]) for iri, i in eidx.items()],
-        "eidx int, iri string, canonical_iri string",
-    )
-
-    toks = tokenize(docs, id_col=id_col, text_col=text_col)
-    cand = toks.join(F.broadcast(gaz_df), "token")
-    unamb = cand.where(~F.col("lbl_amb")).select(id_col, "pos", "eidx")
-    # support: distinct surface forms per (doc, entity) among entities
-    # that own an ambiguous label — tiny slice of the stream
-    support = (
-        cand.where(F.col("ent_amb"))
-        .groupBy(id_col, "eidx")
-        .agg(F.countDistinct("token").alias("support"))
-    )
-    amb = (
-        cand.where(F.col("lbl_amb"))
-        .join(support, [id_col, "eidx"])
-        .withColumn("score", F.col("kindw") * 10 + F.col("support"))
-    )
-    w = Window.partitionBy(id_col, "pos").orderBy(F.desc("score"), F.asc("eidx"))
-    picked = (
-        amb.withColumn("_rn", F.row_number().over(w))
-        .where("_rn = 1")
-        .select(id_col, "pos", "eidx")
-    )
-    linked = unamb.unionByName(picked)
-    counts = linked.groupBy(id_col, "eidx").agg(
-        F.count("*").alias("n"), F.min("pos").alias("fp")
-    )
-    return (
-        counts.join(F.broadcast(ent_df), "eidx")
-        .groupBy(id_col, "canonical_iri")
-        .agg(F.sum("n").alias("n_mentions"), F.min("fp").alias("first_pos"))
-    )
 
 
 def mention_counts(linked: DataFrame, id_col: str = "url", entity_col: str = "iri") -> DataFrame:

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from .. import fixtures
 from ..functions.text import extract_text, is_tombstone
+from ..operators import mentions
 
 PAGE_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
@@ -110,13 +111,8 @@ def stream_mention_counts(
         src.withColumn("etext", extract_text(F.col("html")))
         .where(F.col("etext").isNotNull() & ~is_tombstone(F.col("html")))
     )
-    toks = extracted.select(
-        "url", F.explode(F.split(F.col("etext"), " ")).alias("token")
-    ).where(F.col("token") != "")
     alias = fixtures.alias_df(spark).where(F.col("label_kind") == "preferred")
-    hits = toks.join(
-        F.broadcast(alias.withColumnRenamed("label", "token")), "token", "inner"
-    )
+    hits = mentions.detect_mentions(mentions.tokenize(extracted, text_col="etext"), alias)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         partial = batch_df.groupBy("iri").agg(F.count("*").alias("n_part"))

@@ -108,6 +108,36 @@ def test_transitive_closure(triples):
     }
 
 
+def _chain(spark, n, cyclic=False):
+    """n-node subClassOf chain n0 -> n1 -> ... (closed back to n0 if cyclic)."""
+    edges = [(f"n{i}", f"n{i + 1}") for i in range(n - 1)]
+    if cyclic:
+        edges.append((f"n{n - 1}", "n0"))
+    return spark.createDataFrame(
+        [("g", s, "subClassOf", o, True, None) for s, o in edges], TRIPLE_SCHEMA
+    )
+
+
+def test_transitive_closure_non_convergence_raises(spark):
+    """A 9-node chain needs 4 doubling rounds; stopping after 1 must fail
+    loudly instead of returning a partial closure (15 of 36 pairs)."""
+    with pytest.raises(RuntimeError, match="did not converge"):
+        A.transitive_closure(_chain(spark, 9), "subClassOf", max_iter=1, local_threshold=0)
+
+
+def test_transitive_closure_distributed_matches_local_on_cycle(spark):
+    """The distributed doubling loop and the driver-local saturation agree
+    on a cyclic graph: a 5-cycle plus a tail reaches every (u, v) pair in
+    the cycle, self-pairs included."""
+    t = _chain(spark, 5, cyclic=True).unionByName(
+        spark.createDataFrame([("g", "n4", "subClassOf", "tail", True, None)], TRIPLE_SCHEMA)
+    )
+    local = {tuple(r) for r in A.transitive_closure(t, "subClassOf").collect()}
+    dist = {tuple(r) for r in A.transitive_closure(t, "subClassOf", local_threshold=0).collect()}
+    cycle = [f"n{i}" for i in range(5)]
+    assert local == dist == {(u, v) for u in cycle for v in cycle + ["tail"]}
+
+
 def test_text_search(triples):
     got = A.text_search(triples, "BRCA1")
     assert {r["node"] for r in got.collect()} == {"gene1"}

@@ -53,6 +53,13 @@ def test_minhash_lsh_finds_near_dups(docs):
     assert (1, 4) not in pairs and (3, 4) not in pairs
 
 
+@pytest.mark.parametrize("threshold", [0.0, -0.5])
+def test_minhash_rejects_non_positive_threshold(docs, threshold):
+    """threshold <= 0 would pass band collisions sharing no shingle."""
+    with pytest.raises(ValueError, match="threshold"):
+        dedup.minhash_near_duplicates(docs, threshold=threshold)
+
+
 def test_simhash(docs):
     s = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
     assert s[1] == s[2] == s[5]  # identical text ⇒ identical simhash

@@ -370,9 +370,10 @@ class TestGazetteerGuard:
             mentions.assert_gazetteer_scale(alias)
 
     def test_join_path_matches_fused_pipeline(self, spark, sf_dir):
-        """The guard's escape hatch must be real: the join-based
-        detect→link→aggregate composition produces exactly the fused
-        mapInPandas pipeline's linked-mention table."""
+        """The guard's escape hatch must be real: the public join-based
+        detect_mentions → link_entities → mention_counts composition
+        produces exactly the fused mapInPandas pipeline's linked-mention
+        table."""
         from genegraph_spark import fixtures
         from genegraph_spark.operators import mentions
         from genegraph_spark.plans.pipeline import construct_kg
@@ -388,14 +389,8 @@ class TestGazetteerGuard:
         )
         toks = mentions.tokenize(res.live_pages)
         picked = mentions.link_entities(mentions.detect_mentions(toks, alias), alias)
-        composed = {
-            tuple(r)
-            for r in picked.join(canon, "iri")
-            .groupBy("url", "canonical_iri")
-            .agg(F.count("*").alias("n_mentions"), F.min("pos").alias("first_pos"))
-            .select(cols)
-            .collect()
-        }
+        counts = mentions.mention_counts(picked.join(canon, "iri"), entity_col="canonical_iri")
+        composed = {tuple(r) for r in counts.select(cols).collect()}
         assert composed == fused
 
 
