@@ -147,9 +147,15 @@ def moi_edges_sql() -> str:
 
 
 def dictionary_df(spark: SparkSession) -> DataFrame:
-    """Normalized dictionary: one row per entity (arrays for labels)."""
+    """Normalized dictionary: one row per entity (arrays for labels).
+
+    Built from pandas: with Arrow on it is a JVM ``LocalRelation``, so an
+    evaluation starts no Python workers (a list becomes a Python RDD)."""
+    import pandas as pd
+
+    cols = ["iri", "entity_type", "preferred_label", "alt_labels", "hidden_labels", "same_as"]
     return spark.createDataFrame(
-        ENTITIES,
+        pd.DataFrame(ENTITIES, columns=cols),
         "iri string, entity_type string, preferred_label string, "
         "alt_labels array<string>, hidden_labels array<string>, same_as array<string>",
     )

@@ -50,6 +50,62 @@ TRIPLE_SCHEMA = (
     "object_is_iri boolean, object_datatype string"
 )
 
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _le(b: bytes, k: int, width: int = 8) -> int:
+    return int.from_bytes(b[k:k + width], "little")
+
+
+def xxhash64(s: str, seed: int = 42) -> int:
+    """Spark's ``xxhash64(<string column>)`` on the driver: XXH64 over the
+    UTF-8 bytes with Spark's default seed 42, as a signed 64-bit value."""
+    b = s.encode("utf-8")
+    n, i = len(b), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i <= n - 32:
+            for j in range(4):
+                v[j] = _xxh_round(v[j], _le(b, i))
+                i += 8
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    tail = n - n % 8
+    for k in range(i, tail, 8):
+        h = (_rotl(h ^ _xxh_round(0, _le(b, k)), 27) * _P1 + _P4) & _M64
+    i = tail
+    if i + 4 <= n:
+        h = (_rotl(h ^ (_le(b, i, 4) * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for c in b[i:]:
+        h = _rotl(h ^ (c * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def graph_bucket(graph: str, n_buckets: int) -> int:
+    """The store bucket of ``graph``: ``pmod(xxhash64(graph), n_buckets)``,
+    the writer's partition transform, computed without a Spark job."""
+    return xxhash64(graph) % n_buckets
+
 
 class NamedGraphStore:
     def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64):
@@ -94,23 +150,28 @@ class NamedGraphStore:
         return self.spark.createDataFrame([], TRIPLE_SCHEMA + ", bucket bigint")
 
     def _read_segments(self, manifest: dict, buckets: set[int] | None = None) -> DataFrame:
-        """Union the manifest's segments, optionally restricted to buckets."""
-        by_dir: dict[str, list[int]] = {}
+        """Union the manifest's segments, optionally restricted to buckets.
+
+        Each commit dir is read through the ``bucket=K`` directories the
+        manifest assigns to it (``basePath`` keeps ``bucket`` a partition
+        column), so a keep-side read lists only the touched buckets'
+        directories, on the driver; listing a whole 64-bucket dir crosses
+        Spark's parallel-listing threshold and runs a listing job. A
+        bucket whose rows were all deleted has no directory and is
+        skipped."""
+        by_dir: dict[str, list[str]] = {}
         for b_str, d in manifest["buckets"].items():
-            b = int(b_str)
-            if buckets is None or b in buckets:
-                by_dir.setdefault(d, []).append(b)
-        parts = []
-        for d, bs in by_dir.items():
-            full = os.path.join(self.path, d)
-            if os.path.exists(full):
-                # explicit schema: a delete-only commit writes ZERO data
-                # files under its bucket=K layout, which breaks inference
-                parts.append(
-                    self.spark.read.schema(TRIPLE_SCHEMA + ", bucket bigint")
-                    .parquet(full)
-                    .where(F.col("bucket").isin(bs))
-                )
+            if buckets is None or int(b_str) in buckets:
+                path = os.path.join(self.path, d, f"bucket={b_str}")
+                if os.path.isdir(path):
+                    by_dir.setdefault(d, []).append(path)
+        parts = [
+            # explicit schema: no inference pass over the footers
+            self.spark.read.schema(TRIPLE_SCHEMA + ", bucket bigint")
+            .option("basePath", os.path.join(self.path, d))
+            .parquet(*paths)
+            for d, paths in by_dir.items()
+        ]
         return reduce(lambda a, b: a.unionByName(b), parts) if parts else self._empty()
 
     # -- read paths ----------------------------------------------------------
@@ -129,17 +190,16 @@ class NamedGraphStore:
     def graphs(self, graph_iris: list[str], commit: int | None = None) -> DataFrame:
         """Point lookup of specific named graphs (``getNamedModel``,
         load.clj:72-87 read side) — reads ONLY the buckets those graphs
-        hash to (same pmod(xxhash64) the writer used), so a k-graph
-        lookup scans ~k/n_buckets of the store instead of all of it.
-        The graph filter on top is pushed into the parquet scan."""
+        hash to, so a k-graph lookup scans ~k/n_buckets of the store
+        instead of all of it. The IRIs are hashed on the driver
+        (:func:`graph_bucket`, the writer's pmod(xxhash64)), so building
+        the lookup runs no Spark job. The graph filter on top is pushed
+        into the parquet scan."""
         if commit is None:
             commit = self.last_commit()
         if commit is None:
             return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        hashed = self._bucket(
-            self.spark.createDataFrame([(g,) for g in graph_iris], "graph string")
-        )
-        wanted = {r["bucket"] for r in hashed.select("bucket").distinct().collect()}
+        wanted = {graph_bucket(g, self.n_buckets) for g in graph_iris}
         seg = self._read_segments(self._read_manifest(commit), wanted)
         return (
             seg.where(F.col("graph").isin(graph_iris))
@@ -216,7 +276,8 @@ class NamedGraphStore:
                 os.close(fd)
             except FileExistsError:
                 try:
-                    holder = int(open(lock).read().strip() or "0")
+                    with open(lock) as f:
+                        holder = int(f.read().strip() or "0")
                 except (OSError, ValueError):
                     holder = 0
                 alive = False
@@ -277,60 +338,64 @@ class NamedGraphStore:
         if delete_graphs is not None:
             affected = affected.union(delete_graphs.select("graph")).distinct()
         affected = self._bucket(affected).cache()
-        touched = {r["bucket"] for r in affected.select("bucket").distinct().collect()}
+        # unpersist on every exit: a write that raises must not leave both
+        # frames pinned in the session's cache manager
+        try:
+            touched = {r["bucket"] for r in affected.select("bucket").distinct().collect()}
 
-        data_dir = f"data/c{commit:08d}"
-        if last is not None:
-            prev = self._read_manifest(last)
-            keep = self._read_segments(prev, touched).join(
-                affected.select("graph"), "graph", "left_anti"
-            )
-            out = keep.unionByName(new.where(F.col("bucket").isin(list(touched))))
-            buckets_map = dict(prev["buckets"])
-        else:
-            out = new
-            touched = set(range(self.n_buckets))
-            buckets_map = {}
-        # mode=overwrite: the commit id is derived from manifests only, so
-        # a run killed after this write but before the manifest write
-        # leaves an orphan data/cNNNNNNNN dir; the replayed merge computes
-        # the same commit id and must clobber the orphan (the manifest
-        # written last is what makes a commit visible — an interrupted
-        # commit is invisible and replay converges, load.clj:72-87
-        # idempotence kept)
-        t0 = time.monotonic()
-        # bucket=K subdirectories: point lookups (graphs()) and the next
-        # merge's keep-side read prune at the FILE level, not just via a
-        # row filter — the partitioned-table layout the Iceberg mapping
-        # prescribes (bucket(graph, N) partition transform)
-        out.repartition("bucket").sortWithinPartitions("bucket", "graph").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(os.path.join(self.path, data_dir))
-        write_s = time.monotonic() - t0
-        for b in touched:
-            buckets_map[str(b)] = data_dir
+            data_dir = f"data/c{commit:08d}"
+            if last is not None:
+                prev = self._read_manifest(last)
+                keep = self._read_segments(prev, touched).join(
+                    affected.select("graph"), "graph", "left_anti"
+                )
+                out = keep.unionByName(new.where(F.col("bucket").isin(list(touched))))
+                buckets_map = dict(prev["buckets"])
+            else:
+                out = new
+                touched = set(range(self.n_buckets))
+                buckets_map = {}
+            # mode=overwrite: the commit id is derived from manifests only, so
+            # a run killed after this write but before the manifest write
+            # leaves an orphan data/cNNNNNNNN dir; the replayed merge computes
+            # the same commit id and must clobber the orphan (the manifest
+            # written last is what makes a commit visible — an interrupted
+            # commit is invisible and replay converges, load.clj:72-87
+            # idempotence kept)
+            t0 = time.monotonic()
+            # bucket=K subdirectories: point lookups (graphs()) and the next
+            # merge's keep-side read prune at the FILE level, not just via a
+            # row filter — the partitioned-table layout the Iceberg mapping
+            # prescribes (bucket(graph, N) partition transform)
+            out.repartition("bucket").sortWithinPartitions("bucket", "graph").write.mode(
+                "overwrite"
+            ).partitionBy("bucket").parquet(os.path.join(self.path, data_dir))
+            write_s = time.monotonic() - t0
+            for b in touched:
+                buckets_map[str(b)] = data_dir
 
-        if os.environ.get("GG_CRASH_AFTER_DATA_WRITE"):
-            # test hook: simulate a hard kill between the data write and
-            # the manifest write (tests/test_store.py kill/resume)
-            os._exit(17)
+            if os.environ.get("GG_CRASH_AFTER_DATA_WRITE"):
+                # test hook: simulate a hard kill between the data write and
+                # the manifest write (tests/test_store.py kill/resume)
+                os._exit(17)
 
-        t0 = time.monotonic()
-        self._write_lineage(commit, new, delete_graphs, graph_versions)
-        lineage_s = time.monotonic() - t0
-        self._write_metrics(commit, data_dir)
-        meta = {
-            "commit": commit,
-            "buckets": buckets_map,
-            "n_buckets": self.n_buckets,
-            "wall_ts": time.time(),
-            "timings": {"write_s": round(write_s, 3), "lineage_s": round(lineage_s, 3)},
-        }
-        with open(self._manifest_path(commit), "w") as f:
-            json.dump(meta, f)
-        affected.unpersist()
-        new.unpersist()
-        return meta
+            t0 = time.monotonic()
+            self._write_lineage(commit, new, delete_graphs, graph_versions)
+            lineage_s = time.monotonic() - t0
+            self._write_metrics(commit, data_dir)
+            meta = {
+                "commit": commit,
+                "buckets": buckets_map,
+                "n_buckets": self.n_buckets,
+                "wall_ts": time.time(),
+                "timings": {"write_s": round(write_s, 3), "lineage_s": round(lineage_s, 3)},
+            }
+            with open(self._manifest_path(commit), "w") as f:
+                json.dump(meta, f)
+            return meta
+        finally:
+            affected.unpersist()
+            new.unpersist()
 
     def delete_graphs(self, graphs: DataFrame) -> dict:
         """Unpublish: remove graphs entirely (sink/event.clj:41-46)."""

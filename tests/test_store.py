@@ -5,6 +5,7 @@ replaceNamedModel semantics, database/load.clj:72-87)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from genegraph_spark.sinks.named_graph import TRIPLE_SCHEMA, NamedGraphStore
@@ -234,3 +235,119 @@ def test_expire_keep_more_than_commits_is_noop(spark, tmp_path):
 def test_graphs_on_empty_store(spark, tmp_path):
     store = NamedGraphStore(spark, str(tmp_path / "es"), n_buckets=4)
     assert store.graphs(["g1"]).count() == 0
+
+
+def test_graph_bucket_matches_spark_xxhash64(spark):
+    """The driver-side bucket function equals the writer's Spark
+    ``pmod(xxhash64(graph), n)``: every byte length 0-40 (the 4-, 8- and
+    32-byte paths of XXH64), the empty string, non-ASCII text, and a few
+    thousand seeded IRIs."""
+    import random
+
+    import pandas as pd
+
+    from genegraph_spark.sinks.named_graph import graph_bucket
+
+    rng = random.Random(20260)
+    ascii_ = "abcdefghijklmnopqrstuvwxyz0123456789/:.-_"
+    wide = ascii_ + "éüß中文🧬Ω"
+    graphs = ["".join(rng.choice(ascii_) for _ in range(n)) for n in range(41)]
+    graphs += ["", "é", "中文", "🧬", "https://ex.org/p/ü"]
+    graphs += [
+        f"https://ex{rng.randrange(97)}.example.org/p/"
+        + "".join(rng.choice(wide) for _ in range(rng.randrange(60)))
+        for _ in range(3000)
+    ]
+    df = spark.createDataFrame(pd.DataFrame({"graph": graphs}), "graph string")
+    for n in (16, 64):
+        got = df.select("graph", F.pmod(F.xxhash64("graph"), F.lit(n)).alias("b")).collect()
+        assert len(got) == len(graphs)
+        bad = [(r.graph, r.b) for r in got if graph_bucket(r.graph, n) != r.b]
+        assert not bad, bad[:5]
+
+
+def test_graph_lookup_submits_no_spark_job(spark, tmp_path):
+    """Building a point lookup hashes the IRIs on the driver and lists
+    only their bucket directories: no Spark job until it is collected."""
+    store = NamedGraphStore(spark, str(tmp_path / "nj"), n_buckets=64)
+    store.merge(make(spark, [t(f"g{i}", "s", "p", f"o{i}") for i in range(200)]))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("lookup-build", "graphs() without a job")
+        lookup = store.graphs(["g7", "g42"])
+        assert list(tracker.getJobIdsForGroup("lookup-build")) == []
+        # the probe sees jobs of this group: collecting the lookup runs one
+        sc.setJobGroup("lookup-run", "graphs() collect")
+        got = {(r.graph, r.object) for r in lookup.collect()}
+        assert list(tracker.getJobIdsForGroup("lookup-run"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == {("g7", "o7"), ("g42", "o42")}
+
+
+def test_failed_merge_leaves_no_cached_frames(spark, tmp_path):
+    """A merge whose incoming triples raise at evaluation unpersists the
+    frames it cached before the error propagates."""
+    spark.catalog.clearCache()
+    store = NamedGraphStore(spark, str(tmp_path / "fail"), n_buckets=8)
+    store.merge(make(spark, [t("g1", "s", "p", "o1")]))
+    bad = make(spark, [t("g2", "s", "p", "boom")]).withColumn(
+        "object",
+        F.when(F.col("object") == "boom", F.raise_error(F.lit("boom")))
+        .otherwise(F.col("object")),
+    )
+    with pytest.raises(Exception, match="boom"):
+        store.merge(bad)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # the failed commit is invisible and the store still accepts writes
+    assert store.last_commit() == 0
+    store.merge(make(spark, [t("g2", "s", "p", "o2")]))
+    assert {r.graph for r in store.triples().collect()} == {"g1", "g2"}
+
+
+def test_incremental_commit_runs_the_mapper_once(spark, sf_dir, tmp_path, monkeypatch):
+    """One ``run_to_store(incremental=True)`` commit runs the page mapper
+    over each stale page exactly once: triples, deletes and the watermark
+    all read the persisted slim rows."""
+    from genegraph_spark import fixtures
+    from genegraph_spark.operators import mentions
+    from genegraph_spark.plans.pipeline import run_to_store
+
+    path = str(tmp_path / "once")
+    base = fixtures.pages_df(spark, sf_dir)
+    run_to_store(spark, sf_dir, path, pages=base, use_golden_text=True)
+
+    heads = base.groupBy("url").agg(F.max("version").alias("v"))
+    urls = [r.url for r in heads.where(F.col("v") == 1).orderBy("url").limit(3).collect()]
+    upd = (
+        base.where(F.col("url").isin(urls))
+        .withColumn("version", F.col("version") + F.lit(1))
+        .withColumn("text", F.lit("spark big slow"))
+    )
+
+    emitted = spark.sparkContext.accumulator(0)
+    make_mapper = mentions.make_page_mapper
+
+    def counting_mapper(*args, **kwargs):
+        inner = make_mapper(*args, **kwargs)
+
+        def mapper(batches):
+            for pdf in inner(batches):
+                emitted.add(len(pdf))
+                yield pdf
+
+        return mapper
+
+    monkeypatch.setattr(mentions, "make_page_mapper", counting_mapper)
+    res, store, _ = run_to_store(
+        spark, sf_dir, path, pages=base.unionByName(upd),
+        incremental=True, use_golden_text=True,
+    )
+    n_emitted = emitted.value
+    stale = res.pages.count()
+    assert stale >= len(urls)
+    assert n_emitted == stale
+    changed = {r.graph for r in store.diff(store.last_commit() - 1, store.last_commit()).collect()}
+    assert changed == set(urls)
