@@ -11,7 +11,9 @@ equi-join keys, and Catalyst handles join ordering / broadcast /
 pushdown. ``ld_path`` reproduces the RDFResource traversal semantics
 (``query/types.clj:249-278``: ``:>`` out-edge, ``:<`` in-edge);
 ``transitive_closure`` is the ``rdfs:subClassOf*``-style fixpoint
-(``source/graphql/common/curation.clj:303-314``).
+(``source/graphql/common/curation.clj:303-314``) over :func:`closure`,
+the one path-doubling fixpoint that SPARQL ``*``/``+`` paths also run;
+its driver-local branch is budgeted by output size (:data:`LOCAL_ROWS`).
 
 Variables are strings starting with ``?``; everything else in a pattern
 is a constant. ``bgp`` returns one column per variable.
@@ -31,6 +33,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 Term = str  # '?var' or constant
+
+# Driver-local budget, in rows, shared by :func:`closure` and
+# canonicalize.connected_components: a driver-side fixpoint costs a full
+# job + Catalyst pass per round regardless of data size, so a graph whose
+# driver-side work stays under this many rows is solved on the driver in
+# one pass. Closure counts the pairs it holds (its output can be
+# quadratic in its input); CC counts input edges (its output is bounded
+# by the node count). Read at call time, so tests can patch it.
+LOCAL_ROWS = 200_000
 
 
 def _is_var(t: Term) -> bool:
@@ -341,7 +352,7 @@ def ld_path(triples: DataFrame, start: DataFrame, steps: list[tuple]) -> DataFra
     - ``('range', pred, n, m)`` — bounded repetition ``pred{n,m}``:
       n mandatory out-hops then m−n optional ones, i.e. the union of
       ``pred^i`` for n ≤ i ≤ m. A bounded unrolled join chain — unlike
-      ``*``/``+`` (:func:`transitive_closure`) it needs no fixpoint.
+      ``*``/``+`` (:func:`closure`) it needs no fixpoint.
 
     Returns one column ``node``. Each hop is an equi-join against a
     predicate-filtered scan; predicate pushdown applies."""
@@ -363,7 +374,8 @@ def ld_path(triples: DataFrame, start: DataFrame, steps: list[tuple]) -> DataFra
             cur = follow(cur, ">", step[1], negate=True)
         elif kind == "range":
             _, pred, lo, hi = step
-            assert 0 <= lo <= hi, f"range step needs 0 <= n <= m, got {lo},{hi}"
+            if not 0 <= lo <= hi:
+                raise ValueError(f"range step needs 0 <= n <= m, got {lo},{hi}")
             for _ in range(lo):
                 cur = follow(cur, ">", pred)
             for _ in range(hi - lo):
@@ -373,83 +385,82 @@ def ld_path(triples: DataFrame, start: DataFrame, steps: list[tuple]) -> DataFra
     return cur
 
 
-def transitive_closure(
-    triples: DataFrame,
-    pred: str,
-    max_iter: int = 20,
-    local_threshold: int = 50_000,
-) -> DataFrame:
+def transitive_closure(triples: DataFrame, pred: str, max_iter: int = 20) -> DataFrame:
     """``pred+`` reachability pairs (src, dst): one-or-more hops — the
     reference's recursive-traversal analog (curation.clj:303-314).
     SPARQL's ``pred*`` (zero-or-more) additionally includes the
     reflexive (x, x) pair for every node; union the node set in the
-    caller when zero-hop semantics are needed.
-
-    Path-doubling fixpoint: each round joins the closure with itself, so
-    a diameter-d graph converges in ⌈log2 d⌉ rounds instead of d — the
-    round count, not per-round work, dominates at cluster scale (each
-    round is a full shuffle + barrier). localCheckpoint per round cuts
-    the exponential lineage. Raises ``RuntimeError`` if the distributed
-    loop has not converged after ``max_iter`` rounds — a partial closure
-    is never returned."""
-    edges = (
-        triples.where(F.col("predicate") == pred)
-        .select(F.col("subject").alias("src"), F.col("object").alias("dst"))
-        .distinct()
+    caller when zero-hop semantics are needed. Runs :func:`closure`."""
+    edges = triples.where(F.col("predicate") == pred).select(
+        F.col("subject").alias("src"), F.col("object").alias("dst")
     )
-    # Adaptive execution, same pattern (and threshold discipline) as
-    # canonicalize.connected_components: a driver-side fixpoint costs a
-    # full job + Catalyst pass per round regardless of data size, so an
-    # edge set below ``local_threshold`` is collected and closed on the
-    # driver in one pass (ontology/:next chains are dimension-scale by
-    # nature); bigger graphs take the distributed doubling loop below.
-    # Same result either way. The threshold is half of CC's 200k: CC's
-    # output is bounded by the node count, while a closure can be
-    # superlinear in its input, so the driver-side set budget is kept
-    # smaller.
-    probe = edges.limit(local_threshold + 1).collect()
-    if len(probe) <= local_threshold:
-        # monotone set saturation — cycle-safe (a DAG assumption would be
-        # wrong for general ``pred+``), terminates because reach sets only
-        # grow and are bounded by the node set; cost is proportional to
-        # the closure being emitted, which any engine must materialize
-        reach: dict[str, set[str]] = {}
-        for r in probe:
-            reach.setdefault(r[0], set()).add(r[1])
-        changed = True
-        while changed:
-            changed = False
-            for u, s in reach.items():
-                add: set[str] = set()
-                for v in s:
-                    nxt = reach.get(v)
-                    if nxt is not None and not nxt <= s:
-                        add |= nxt
-                if add - s:
-                    s |= add
-                    changed = True
-        pairs = sorted((u, v) for u, s in reach.items() for v in s)
-        return edges.sparkSession.createDataFrame(pairs, "src string, dst string")
+    return closure(edges, max_iter=max_iter)
 
+
+def closure(pairs: DataFrame, keys: tuple[str, ...] = (), max_iter: int = 20) -> DataFrame:
+    """One-or-more-hop reachability over a ``(src, dst, *keys)`` pairs
+    frame; a path never crosses a change of ``keys`` (SPARQL's per-graph
+    mode passes ``("_g",)``). Returns the distinct ``(src, dst, *keys)``
+    closure pairs.
+
+    Pairs that saturate on the driver within :data:`LOCAL_ROWS` rows come
+    back as one local frame (ontology and ``:next`` chains are
+    dimension-scale by nature). Otherwise the distributed path-doubling
+    fixpoint runs: each round joins the closure with itself, so a
+    diameter-d graph converges in ⌈log2 d⌉ rounds instead of d — the
+    round count, not per-round work, dominates at cluster scale (each
+    round is a full shuffle + barrier). Raises ``RuntimeError`` if it has
+    not converged after ``max_iter`` rounds — a partial closure is never
+    returned."""
+    edges = pairs.select("src", "dst", *keys).distinct()
+    local = _saturate(edges.limit(LOCAL_ROWS + 1).collect())
+    if local is not None:
+        return edges.sparkSession.createDataFrame(local, edges.schema)
     # lazy checkpoint + count: ONE job materializes the checkpoint and
-    # returns the size (an eager checkpoint followed by count ran two
-    # jobs per round — pure driver-side scheduling overhead, which
-    # dominates the fixpoint at interactive scales and is still one
-    # round-trip saved per round on a cluster)
-    closure = edges.localCheckpoint(eager=False)
-    prev_count = closure.count()
+    # returns the size; the checkpoint cuts the exponential lineage
+    out = edges.localCheckpoint(eager=False)
+    prev_count = out.count()
+    on = [F.col("l.dst") == F.col("r.src")] + [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    hop = ["l.src", "r.dst"] + [f"l.{k}" for k in keys]
     for _ in range(max_iter):
-        doubled = (
-            closure.alias("l")
-            .join(closure.alias("r"), F.col("l.dst") == F.col("r.src"))
-            .select(F.col("l.src").alias("src"), F.col("r.dst").alias("dst"))
-        )
-        closure = closure.union(doubled).distinct().localCheckpoint(eager=False)
-        n = closure.count()
+        doubled = out.alias("l").join(out.alias("r"), on).select(*hop)
+        out = out.union(doubled).distinct().localCheckpoint(eager=False)
+        n = out.count()
         if n == prev_count:
-            return closure
+            return out
         prev_count = n
     raise RuntimeError(f"transitive closure did not converge in {max_iter} rounds")
+
+
+def _saturate(rows) -> list[tuple] | None:
+    """Close ``(src, dst, *keys)`` rows on the driver: the closure rows,
+    or ``None`` as soon as the reach sets hold more than
+    :data:`LOCAL_ROWS` pairs. Monotone set saturation — cycle-safe (a DAG
+    assumption would be wrong for general ``pred+``) and terminating,
+    because reach sets only grow and are bounded by the node set."""
+    if len(rows) > LOCAL_ROWS:
+        return None
+    reach: dict[tuple, set] = {}  # (keys, src) -> dsts
+    for r in rows:
+        reach.setdefault((tuple(r[2:]), r[0]), set()).add(r[1])
+    held = sum(map(len, reach.values()))
+    changed = True
+    while changed:
+        changed = False
+        for (k, u), s in reach.items():
+            add: set = set()
+            for v in s:
+                nxt = reach.get((k, v))
+                if nxt is not None and not nxt <= s:
+                    add |= nxt
+            add -= s
+            if add:
+                held += len(add)
+                if held > LOCAL_ROWS:
+                    return None
+                s |= add
+                changed = True
+    return [(u, v, *k) for (k, u), s in reach.items() for v in s]
 
 
 def text_search(triples: DataFrame, term: str, predicate: str | None = None) -> DataFrame:

@@ -31,13 +31,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import algebra as A
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    local_threshold: int = 200_000,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components. Returns (node, component) where ``component``
@@ -45,17 +46,19 @@ def connected_components(
     deterministic, independent of partitioning and iteration order.
 
     Adaptive execution: a driver-side fixpoint loop costs ~1s of job
-    scheduling per round regardless of data size, so graphs under
-    ``local_threshold`` edges (the curated-dictionary case — always
-    dictionary-scale, not corpus-scale) are collected and union-found on
-    the driver in one pass; bigger graphs take the distributed
-    alternating-star contraction (module docstring). Same result either
-    way. ``stats`` (optional dict) is filled with {"path", "rounds"} so
-    tests can assert the logarithmic round bound."""
+    scheduling per round regardless of data size, so graphs of at most
+    :data:`.algebra.LOCAL_ROWS` edges (the curated-dictionary case —
+    always dictionary-scale, not corpus-scale) are collected and
+    union-found on the driver in one pass; the output is bounded by the
+    node count, so the input edge count budgets the driver. Bigger graphs
+    take the distributed alternating-star contraction (module
+    docstring). Same result either way. ``stats`` (optional dict) is
+    filled with {"path", "rounds"} so tests can assert the logarithmic
+    round bound."""
     if stats is None:
         stats = {}
-    probe = edges.select(src, dst).limit(local_threshold + 1).collect()
-    if len(probe) <= local_threshold:
+    probe = edges.select(src, dst).limit(A.LOCAL_ROWS + 1).collect()
+    if len(probe) <= A.LOCAL_ROWS:
         stats.update(path="local", rounds=0)
         rows = probe
         parent: dict[str, str] = {}
@@ -206,7 +209,6 @@ def surface_form_edges(
 def canonical_entity_map(
     dictionary: DataFrame,
     sameas: DataFrame,
-    local_threshold: int = 200_000,
     surface_edges: DataFrame | None = None,
 ) -> DataFrame:
     """(iri, canonical_iri): canonical = min *entity* IRI per component.
@@ -214,11 +216,13 @@ def canonical_entity_map(
     Singleton entities (no shared xref) map to themselves.
     ``surface_edges``: optional (src, dst) near-match edges from
     :func:`surface_form_edges`, unioned with the explicit same-as graph.
+    Components come from :func:`connected_components`, solved on the
+    driver when the edges fit in :data:`.algebra.LOCAL_ROWS`.
     """
     edges = sameas.select(F.col("iri").alias("src"), F.col("xref").alias("dst"))
     if surface_edges is not None:
         edges = edges.unionByName(surface_edges.select("src", "dst"))
-    comps = connected_components(edges, local_threshold=local_threshold)
+    comps = connected_components(edges)
     entities = dictionary.select("iri").distinct()
     ent_comp = entities.join(comps, entities["iri"] == comps["node"], "left_outer").select(
         "iri", F.coalesce("component", "iri").alias("component")

@@ -50,9 +50,11 @@ same convention the repo's triple store uses (``functions/iri.py``).
 Scale: a parsed query compiles to exactly the plan the programmatic
 combinators would build — pattern constants push to the parquet scan,
 shared variables become shuffled equi-joins under Catalyst/AQE, VALUES
-becomes a broadcast join, ``*``/``+`` paths use the path-doubling
-fixpoint of :func:`.algebra.transitive_closure` (⌈log2 d⌉ rounds). The
-parse itself is driver-side and O(query text), never O(data).
+becomes a broadcast join, ``*``/``+`` paths run
+:func:`.algebra.closure` — solved on the driver while the closure stays
+within its output budget (:data:`.algebra.LOCAL_ROWS` pairs), else the
+path-doubling fixpoint (⌈log2 d⌉ rounds). The parse itself is
+driver-side and O(query text), never O(data).
 """
 
 from __future__ import annotations
@@ -636,6 +638,8 @@ class _Parser:
             self.eat_op("}")
             if hi is None:
                 raise SparqlSyntaxError("unbounded {n,} repetition is not supported; use p+ with a prefix")
+            if hi < lo:
+                raise SparqlSyntaxError(f"bounded repetition {{{lo},{hi}}} needs n <= m")
             return ("rep", p, lo, hi)
         return p
 
@@ -1112,8 +1116,9 @@ class _Compiler:
         """(node, next) tagged endpoint pairs for a path expression.
         seq/alt keep bag semantics; ?/*/+/{n,m} are distinct per SPARQL
         1.1 §9.3. Each base step is a predicate-filtered scan (pushdown);
-        * / + use the path-doubling fixpoint of
-        :func:`.algebra.transitive_closure` (⌈log2 d⌉ shuffle rounds).
+        * / + run :func:`.algebra.closure`: driver-local within
+        :data:`.algebra.LOCAL_ROWS` output pairs, else the path-doubling
+        fixpoint (⌈log2 d⌉ shuffle rounds).
 
         Under ``graph_var`` (GRAPH ?g / per-graph mode) every pairs
         frame also carries the raw ``_g`` graph column and every path
@@ -1148,7 +1153,10 @@ class _Compiler:
         if kind == "opt":
             return self._identity().unionByName(self.path_pairs(p[1])).distinct()
         if kind in ("star", "plus"):
-            closure = self._closure(self.path_pairs(p[1]))
+            pairs = self.path_pairs(p[1]).withColumnsRenamed({"node": "src", "next": "dst"})
+            closure = A.closure(pairs, ("_g",) if in_g else ()).withColumnsRenamed(
+                {"src": "node", "dst": "next"}
+            )
             if kind == "star":
                 closure = closure.unionByName(self._identity()).distinct()
             return closure
@@ -1187,21 +1195,6 @@ class _Compiler:
             self.triples.select(_enc_object().alias("node"))
         ).distinct()
         return nodes.select("node", F.col("node").alias("next"))
-
-    def _closure(self, edges: DataFrame, max_iter: int = 20) -> DataFrame:
-        """Path-doubling closure over a pairs frame — the generalized form
-        of :func:`.algebra.transitive_closure` (same convergence guard).
-        Under graph mode the doubling join co-keys on ``_g``."""
-        closure = edges.distinct().localCheckpoint(eager=True)
-        prev = closure.count()
-        for _ in range(max_iter):
-            doubled = self._seq_pairs(closure, closure)
-            closure = closure.union(doubled).distinct().localCheckpoint(eager=True)
-            n = closure.count()
-            if n == prev:
-                return closure
-            prev = n
-        raise RuntimeError(f"path closure did not converge in {max_iter} rounds")
 
     # -- groups --------------------------------------------------------------
     def group(self, elements: list) -> DataFrame:

@@ -118,14 +118,15 @@ def _chain(spark, n, cyclic=False):
     )
 
 
-def test_transitive_closure_non_convergence_raises(spark):
+def test_transitive_closure_non_convergence_raises(spark, monkeypatch):
     """A 9-node chain needs 4 doubling rounds; stopping after 1 must fail
     loudly instead of returning a partial closure (15 of 36 pairs)."""
+    monkeypatch.setattr(A, "LOCAL_ROWS", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        A.transitive_closure(_chain(spark, 9), "subClassOf", max_iter=1, local_threshold=0)
+        A.transitive_closure(_chain(spark, 9), "subClassOf", max_iter=1)
 
 
-def test_transitive_closure_distributed_matches_local_on_cycle(spark):
+def test_transitive_closure_distributed_matches_local_on_cycle(spark, monkeypatch):
     """The distributed doubling loop and the driver-local saturation agree
     on a cyclic graph: a 5-cycle plus a tail reaches every (u, v) pair in
     the cycle, self-pairs included."""
@@ -133,9 +134,54 @@ def test_transitive_closure_distributed_matches_local_on_cycle(spark):
         spark.createDataFrame([("g", "n4", "subClassOf", "tail", True, None)], TRIPLE_SCHEMA)
     )
     local = {tuple(r) for r in A.transitive_closure(t, "subClassOf").collect()}
-    dist = {tuple(r) for r in A.transitive_closure(t, "subClassOf", local_threshold=0).collect()}
+    monkeypatch.setattr(A, "LOCAL_ROWS", 0)
+    dist = {tuple(r) for r in A.transitive_closure(t, "subClassOf").collect()}
     cycle = [f"n{i}" for i in range(5)]
     assert local == dist == {(u, v) for u in cycle for v in cycle + ["tail"]}
+
+
+def test_closure_over_budget_falls_back_to_distributed(spark, monkeypatch):
+    """The driver-local branch is budgeted by OUTPUT pairs: a 200-node
+    chain has only 199 edges but 19,900 closure pairs, so under a
+    1,000-row budget the saturation gives up and the distributed loop
+    returns the full closure."""
+    monkeypatch.setattr(A, "LOCAL_ROWS", 1_000)
+    gave_up = []
+    saturate = A._saturate
+
+    def spy(rows):
+        out = saturate(rows)
+        gave_up.append(out is None)
+        return out
+
+    monkeypatch.setattr(A, "_saturate", spy)
+    got = {tuple(r) for r in A.transitive_closure(_chain(spark, 200), "subClassOf").collect()}
+    assert gave_up == [True]
+    assert got == {(f"n{i}", f"n{j}") for i in range(200) for j in range(i + 1, 200)}
+    assert len(got) == 19_900
+
+
+def test_saturate_gives_up_at_default_budget(monkeypatch):
+    """At the default budget the driver-local saturation stops once it
+    holds more than LOCAL_ROWS pairs instead of building the closure: a
+    50,000-edge chain (1.25B pairs) and a "broom" of 500 roots -> hub ->
+    500 leaves (1,000 edges, 251,000 pairs). Paths never cross keys."""
+    chain = [(f"n{i}", f"n{i + 1}") for i in range(50_000)]
+    assert A._saturate(chain) is None
+    broom = [(f"r{i}", "hub") for i in range(500)] + [("hub", f"l{i}") for i in range(500)]
+    assert A._saturate(broom) is None
+    monkeypatch.setattr(A, "LOCAL_ROWS", 251_000)
+    assert len(A._saturate(broom)) == 251_000
+    keyed = [("a", "b", "g1"), ("b", "c", "g1"), ("c", "d", "g2")]
+    assert sorted(A._saturate(keyed)) == [
+        ("a", "b", "g1"), ("a", "c", "g1"), ("b", "c", "g1"), ("c", "d", "g2"),
+    ]
+
+
+def test_ld_path_range_rejects_reversed_bounds(spark, triples):
+    start = spark.createDataFrame([("c1",)], "node string")
+    with pytest.raises(ValueError, match="0 <= n <= m"):
+        A.ld_path(triples, start, [("range", "subClassOf", 3, 1)])
 
 
 def test_text_search(triples):

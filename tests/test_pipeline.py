@@ -166,13 +166,15 @@ def test_quarantine_catches_malformed(spark, sf_dir):
     assert res.live_pages.count() == 0
 
 
-def test_cc_distributed_path_matches_local(spark):
+def test_cc_distributed_path_matches_local(spark, monkeypatch):
     """The iterative-join CC (big-graph path) and the driver union-find
     (small-graph fast path) agree."""
+    from genegraph_spark.operators import algebra
     from genegraph_spark.operators.canonicalize import canonical_entity_map
 
     d = fixtures.dictionary_df(spark)
     s = fixtures.sameas_df(spark)
     local = {tuple(r) for r in canonical_entity_map(d, s).collect()}
-    dist = {tuple(r) for r in canonical_entity_map(d, s, local_threshold=0).collect()}
+    monkeypatch.setattr(algebra, "LOCAL_ROWS", 0)
+    dist = {tuple(r) for r in canonical_entity_map(d, s).collect()}
     assert local == dist == set(golden_canonical().items())

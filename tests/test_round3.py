@@ -29,20 +29,20 @@ def _union_find(pairs):
 
 @pytest.mark.slow
 class TestConnectedComponentsLogRounds:
-    def test_cc_random_graph_matches_union_find(self, spark):
+    def test_cc_random_graph_matches_union_find(self, spark, monkeypatch):
         random.seed(7)
         pairs = [
             (f"n{random.randrange(500):03d}", f"n{random.randrange(500):03d}")
             for _ in range(400)
         ]
         pairs = [(a, b) for a, b in pairs if a != b]
+        from genegraph_spark.operators import algebra
         from genegraph_spark.operators.canonicalize import connected_components
 
+        monkeypatch.setattr(algebra, "LOCAL_ROWS", 10)
         df = spark.createDataFrame(pairs, "src string, dst string")
         stats: dict = {}
-        got = sorted(
-            map(tuple, connected_components(df, local_threshold=10, stats=stats).collect())
-        )
+        got = sorted(map(tuple, connected_components(df, stats=stats).collect()))
         assert stats["path"] == "distributed"
         assert got == _union_find(pairs)
 
@@ -110,14 +110,16 @@ class TestConnectedComponentsLogRounds:
         # cosine-verified against the same threshold
         assert all(r[1] - r[0] == 100000 or r[0] < r[1] for r in lsh)
 
-    def test_cc_unconverged_raises(self, spark):
+    def test_cc_unconverged_raises(self, spark, monkeypatch):
+        from genegraph_spark.operators import algebra
         from genegraph_spark.operators.canonicalize import connected_components
 
+        monkeypatch.setattr(algebra, "LOCAL_ROWS", 0)
         df = spark.createDataFrame(
             [(f"a{i}", f"a{i+1}") for i in range(40)], "src string, dst string"
         )
         with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(df, local_threshold=0, max_iter=1)
+            connected_components(df, max_iter=1)
 
 
 class TestShapeRegistry:

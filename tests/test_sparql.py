@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from genegraph_spark.operators import algebra as A
 from genegraph_spark.operators import sparql as S
 
 REF_DIR = "/root/reference/src/genegraph/transform/gene_validity_refactor"
@@ -31,6 +32,15 @@ def iri(s, p, o):
 
 def lit(s, p, o, dt=None):
     return (s, p, o, False, dt)
+
+
+@pytest.fixture(params=["local", "distributed"])
+def closure_branch(request, monkeypatch):
+    """Run a ``*``/``+`` path test on both branches of
+    :func:`.algebra.closure`: the default driver-local budget, and
+    ``LOCAL_ROWS = 0``, which forces the distributed loop."""
+    if request.param == "distributed":
+        monkeypatch.setattr(A, "LOCAL_ROWS", 0)
 
 
 @pytest.fixture(scope="module")
@@ -75,6 +85,10 @@ class TestParser:
         (el,) = q.pattern
         path = el[1][0][1]
         assert path[0] == "seq"  # left-nested sequence tree
+
+    def test_bounded_repetition_rejects_reversed_bounds(self):
+        with pytest.raises(S.SparqlSyntaxError, match="needs n <= m"):
+            S.parse_sparql("SELECT ?y WHERE { ?x :p{3,1} ?y }")
 
     def test_values_undef_and_multirow(self):
         q = S.parse_sparql(
@@ -188,18 +202,6 @@ class TestCompiler:
             graph, "SELECT ?z WHERE { ?a :name \"alice\" . ?a :knows/:knows ?z }"
         ).collect()
         assert [r.z for r in out] == ["urn:c"]
-        # star includes zero hops
-        out = S.sparql(
-            graph,
-            'SELECT DISTINCT ?z WHERE { ?a :name "bob" . ?a :knows* ?z }',
-        ).collect()
-        assert sorted(r.z for r in out) == ["urn:b", "urn:c", "urn:d"]
-        # plus excludes zero hops
-        out = S.sparql(
-            graph,
-            'SELECT DISTINCT ?z WHERE { ?a :name "bob" . ?a :knows+ ?z }',
-        ).collect()
-        assert sorted(r.z for r in out) == ["urn:c", "urn:d"]
         # bounded repetition {1,2}
         out = S.sparql(
             graph,
@@ -216,6 +218,20 @@ class TestCompiler:
         out = S.sparql(
             graph,
             'SELECT DISTINCT ?z WHERE { ?a :name "carol" . ?a :knows? ?z }',
+        ).collect()
+        assert sorted(r.z for r in out) == ["urn:c", "urn:d"]
+
+    def test_star_plus_paths(self, spark, graph, closure_branch):
+        # star includes zero hops
+        out = S.sparql(
+            graph,
+            'SELECT DISTINCT ?z WHERE { ?a :name "bob" . ?a :knows* ?z }',
+        ).collect()
+        assert sorted(r.z for r in out) == ["urn:b", "urn:c", "urn:d"]
+        # plus excludes zero hops
+        out = S.sparql(
+            graph,
+            'SELECT DISTINCT ?z WHERE { ?a :name "bob" . ?a :knows+ ?z }',
         ).collect()
         assert sorted(r.z for r in out) == ["urn:c", "urn:d"]
 
@@ -1323,24 +1339,27 @@ class TestGraphPattern:
         ).collect()
         assert [r.g for r in out] == ["urn:g1"]
 
+    # r6: property paths thread the graph column (corpus mode needs them)
+    PER_GRAPH_ROWS = [
+        ("urn:g1", "urn:a", ":p", "urn:b", True, None),
+        ("urn:g1", "urn:b", ":q", "v1", False, None),
+        ("urn:g2", "urn:a", ":p", "urn:c", True, None),
+        # bait: the second step exists only in g2 — a cross-graph
+        # join would produce (g?, urn:a, v2)
+        ("urn:g2", "urn:b", ":q", "v2", False, None),
+        (None, "urn:a", ":p", "urn:b", True, None),  # default graph
+    ]
+
     def test_path_inside_graph_var_stays_per_graph(self, spark):
-        # r6: property paths thread the graph column (corpus mode needs
-        # them) — a seq path inside GRAPH ?g must not hop across graphs
-        rows = [
-            ("urn:g1", "urn:a", ":p", "urn:b", True, None),
-            ("urn:g1", "urn:b", ":q", "v1", False, None),
-            ("urn:g2", "urn:a", ":p", "urn:c", True, None),
-            # bait: the second step exists only in g2 — a cross-graph
-            # join would produce (g?, urn:a, v2)
-            ("urn:g2", "urn:b", ":q", "v2", False, None),
-            (None, "urn:a", ":p", "urn:b", True, None),  # default graph
-        ]
-        t = spark.createDataFrame(rows, TRIPLE_SCHEMA)
+        # a seq path inside GRAPH ?g must not hop across graphs
+        t = spark.createDataFrame(self.PER_GRAPH_ROWS, TRIPLE_SCHEMA)
         out = S.sparql(
             t, "SELECT ?g ?s ?v WHERE { GRAPH ?g { ?s :p/:q ?v } }"
         ).collect()
         assert [(r.g, r.s, r.v) for r in out] == [("urn:g1", "urn:a", "v1")]
-        # closure paths stay per-graph too
+
+    def test_closure_path_inside_graph_var_stays_per_graph(self, spark, closure_branch):
+        t = spark.createDataFrame(self.PER_GRAPH_ROWS, TRIPLE_SCHEMA)
         out = S.sparql(
             t,
             "SELECT DISTINCT ?g ?v WHERE { GRAPH ?g { ?s :p*/:q ?v } } ORDER BY ?v",
@@ -1348,6 +1367,16 @@ class TestGraphPattern:
         assert [(r.g, r.v) for r in out] == [
             ("urn:g1", "v1"), ("urn:g2", "v2"),
         ]
+        # bait: urn:b :p urn:e only in g2 and urn:e :q v3 only in g1 — a
+        # closure joined across graphs would reach (urn:g1, urn:a, v3)
+        t = t.unionByName(spark.createDataFrame([
+            ("urn:g2", "urn:b", ":p", "urn:e", True, None),
+            ("urn:g1", "urn:e", ":q", "v3", False, None),
+        ], TRIPLE_SCHEMA))
+        out = S.sparql(
+            t, "SELECT DISTINCT ?g ?s ?v WHERE { GRAPH ?g { ?s :p+/:q ?v } }"
+        ).collect()
+        assert [(r.g, r.s, r.v) for r in out] == [("urn:g1", "urn:a", "v1")]
 
     def test_path_inside_constant_graph_works(self, spark, multi):
         out = S.sparql(
