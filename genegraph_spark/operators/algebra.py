@@ -13,7 +13,8 @@ pushdown. ``ld_path`` reproduces the RDFResource traversal semantics
 ``transitive_closure`` is the ``rdfs:subClassOf*``-style fixpoint
 (``source/graphql/common/curation.clj:303-314``) over :func:`closure`,
 the one path-doubling fixpoint that SPARQL ``*``/``+`` paths also run;
-its driver-local branch is budgeted by output size (:data:`LOCAL_ROWS`).
+its driver-local branch is budgeted by the edges its search visits,
+which bounds the output size (:data:`LOCAL_ROWS`).
 
 Variables are strings starting with ``?``; everything else in a pattern
 is a constant. ``bgp`` returns one column per variable.
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -38,10 +40,14 @@ Term = str  # '?var' or constant
 # canonicalize.connected_components: a driver-side fixpoint costs a full
 # job + Catalyst pass per round regardless of data size, so a graph whose
 # driver-side work stays under this many rows is solved on the driver in
-# one pass. Closure counts the pairs it holds (its output can be
-# quadratic in its input); CC counts input edges (its output is bounded
-# by the node count). Read at call time, so tests can patch it.
+# one pass. Closure counts the edges its search visits, which bounds both
+# the pairs it holds (its output can be quadratic in its input) and its
+# CPU; CC counts input edges (its output is bounded by the node count).
+# Read at call time, so tests can patch it.
 LOCAL_ROWS = 200_000
+# Path-doubling rounds before :func:`closure` gives up: 20 rounds close
+# any path of up to 2**20 hops.
+MAX_ROUNDS = 20
 
 
 def _is_var(t: Term) -> bool:
@@ -385,7 +391,7 @@ def ld_path(triples: DataFrame, start: DataFrame, steps: list[tuple]) -> DataFra
     return cur
 
 
-def transitive_closure(triples: DataFrame, pred: str, max_iter: int = 20) -> DataFrame:
+def transitive_closure(triples: DataFrame, pred: str) -> DataFrame:
     """``pred+`` reachability pairs (src, dst): one-or-more hops — the
     reference's recursive-traversal analog (curation.clj:303-314).
     SPARQL's ``pred*`` (zero-or-more) additionally includes the
@@ -394,73 +400,76 @@ def transitive_closure(triples: DataFrame, pred: str, max_iter: int = 20) -> Dat
     edges = triples.where(F.col("predicate") == pred).select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     )
-    return closure(edges, max_iter=max_iter)
+    return closure(edges)
 
 
-def closure(pairs: DataFrame, keys: tuple[str, ...] = (), max_iter: int = 20) -> DataFrame:
+def closure(pairs: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
     """One-or-more-hop reachability over a ``(src, dst, *keys)`` pairs
     frame; a path never crosses a change of ``keys`` (SPARQL's per-graph
     mode passes ``("_g",)``). Returns the distinct ``(src, dst, *keys)``
     closure pairs.
 
-    Pairs that saturate on the driver within :data:`LOCAL_ROWS` rows come
-    back as one local frame (ontology and ``:next`` chains are
+    Pairs that close on the driver within :data:`LOCAL_ROWS` edge visits
+    come back as one local frame (ontology and ``:next`` chains are
     dimension-scale by nature). Otherwise the distributed path-doubling
     fixpoint runs: each round joins the closure with itself, so a
     diameter-d graph converges in ⌈log2 d⌉ rounds instead of d — the
     round count, not per-round work, dominates at cluster scale (each
     round is a full shuffle + barrier). Raises ``RuntimeError`` if it has
-    not converged after ``max_iter`` rounds — a partial closure is never
-    returned."""
-    edges = pairs.select("src", "dst", *keys).distinct()
-    local = _saturate(edges.limit(LOCAL_ROWS + 1).collect())
-    if local is not None:
-        return edges.sparkSession.createDataFrame(local, edges.schema)
+    not converged after :data:`MAX_ROUNDS` rounds — a partial closure is
+    never returned."""
     # lazy checkpoint + count: ONE job materializes the checkpoint and
-    # returns the size; the checkpoint cuts the exponential lineage
-    out = edges.localCheckpoint(eager=False)
+    # returns the size, so only an edge set within budget is collected
+    # (from the checkpoint), and the loop starts from the same edges;
+    # the checkpoint cuts the exponential lineage
+    out = pairs.select("src", "dst", *keys).distinct().localCheckpoint(eager=False)
     prev_count = out.count()
+    if prev_count <= LOCAL_ROWS:
+        local = _saturate(out.collect())
+        if local is not None:
+            # from pandas, so with Arrow on it is a JVM LocalRelation and
+            # evaluating it starts no Python workers
+            local = pd.DataFrame(local, columns=out.columns)
+            return out.sparkSession.createDataFrame(local, out.schema)
     on = [F.col("l.dst") == F.col("r.src")] + [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
     hop = ["l.src", "r.dst"] + [f"l.{k}" for k in keys]
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         doubled = out.alias("l").join(out.alias("r"), on).select(*hop)
         out = out.union(doubled).distinct().localCheckpoint(eager=False)
         n = out.count()
         if n == prev_count:
             return out
         prev_count = n
-    raise RuntimeError(f"transitive closure did not converge in {max_iter} rounds")
+    raise RuntimeError(f"transitive closure did not converge in {MAX_ROUNDS} rounds")
 
 
 def _saturate(rows) -> list[tuple] | None:
-    """Close ``(src, dst, *keys)`` rows on the driver: the closure rows,
-    or ``None`` as soon as the reach sets hold more than
-    :data:`LOCAL_ROWS` pairs. Monotone set saturation — cycle-safe (a DAG
-    assumption would be wrong for general ``pred+``) and terminating,
-    because reach sets only grow and are bounded by the node set."""
-    if len(rows) > LOCAL_ROWS:
-        return None
-    reach: dict[tuple, set] = {}  # (keys, src) -> dsts
+    """Close ``(src, dst, *keys)`` rows on the driver with one search per
+    source: the closure rows, or ``None`` as soon as the searches have
+    visited more than :data:`LOCAL_ROWS` edges. Every closure pair is
+    found by a visit, and every input row is visited at least once, so
+    the budget bounds the pairs held, the input and the CPU alike (a
+    dense strongly connected component gives up early instead of
+    costing n³ set checks). Cycle-safe: each search keeps a seen set."""
+    out_edges: dict[tuple, list] = {}  # (keys, src) -> dsts
     for r in rows:
-        reach.setdefault((tuple(r[2:]), r[0]), set()).add(r[1])
-    held = sum(map(len, reach.values()))
-    changed = True
-    while changed:
-        changed = False
-        for (k, u), s in reach.items():
-            add: set = set()
-            for v in s:
-                nxt = reach.get((k, v))
-                if nxt is not None and not nxt <= s:
-                    add |= nxt
-            add -= s
-            if add:
-                held += len(add)
-                if held > LOCAL_ROWS:
-                    return None
-                s |= add
-                changed = True
-    return [(u, v, *k) for (k, u), s in reach.items() for v in s]
+        out_edges.setdefault((tuple(r[2:]), r[0]), []).append(r[1])
+    visits = 0
+    closed: list[tuple] = []
+    for k, u in out_edges:
+        seen: set = set()
+        todo = [u]
+        while todo:
+            nxt = out_edges.get((k, todo.pop()), ())
+            visits += len(nxt)
+            if visits > LOCAL_ROWS:
+                return None
+            for v in nxt:
+                if v not in seen:
+                    seen.add(v)
+                    todo.append(v)
+        closed.extend((u, v, *k) for v in seen)
+    return closed
 
 
 def text_search(triples: DataFrame, term: str, predicate: str | None = None) -> DataFrame:

@@ -51,10 +51,11 @@ Scale: a parsed query compiles to exactly the plan the programmatic
 combinators would build — pattern constants push to the parquet scan,
 shared variables become shuffled equi-joins under Catalyst/AQE, VALUES
 becomes a broadcast join, ``*``/``+`` paths run
-:func:`.algebra.closure` — solved on the driver while the closure stays
-within its output budget (:data:`.algebra.LOCAL_ROWS` pairs), else the
-path-doubling fixpoint (⌈log2 d⌉ rounds). The parse itself is
-driver-side and O(query text), never O(data).
+:func:`.algebra.closure` — solved on the driver while its search stays
+within :data:`.algebra.LOCAL_ROWS` edge visits (a bound on the output
+pairs and the driver CPU), else the path-doubling fixpoint (⌈log2 d⌉
+rounds). The parse itself is driver-side and O(query text), never
+O(data).
 """
 
 from __future__ import annotations
@@ -1117,7 +1118,7 @@ class _Compiler:
         seq/alt keep bag semantics; ?/*/+/{n,m} are distinct per SPARQL
         1.1 §9.3. Each base step is a predicate-filtered scan (pushdown);
         * / + run :func:`.algebra.closure`: driver-local within
-        :data:`.algebra.LOCAL_ROWS` output pairs, else the path-doubling
+        :data:`.algebra.LOCAL_ROWS` edge visits, else the path-doubling
         fixpoint (⌈log2 d⌉ shuffle rounds).
 
         Under ``graph_var`` (GRAPH ?g / per-graph mode) every pairs

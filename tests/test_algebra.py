@@ -122,8 +122,9 @@ def test_transitive_closure_non_convergence_raises(spark, monkeypatch):
     """A 9-node chain needs 4 doubling rounds; stopping after 1 must fail
     loudly instead of returning a partial closure (15 of 36 pairs)."""
     monkeypatch.setattr(A, "LOCAL_ROWS", 0)
+    monkeypatch.setattr(A, "MAX_ROUNDS", 1)
     with pytest.raises(RuntimeError, match="did not converge"):
-        A.transitive_closure(_chain(spark, 9), "subClassOf", max_iter=1)
+        A.transitive_closure(_chain(spark, 9), "subClassOf")
 
 
 def test_transitive_closure_distributed_matches_local_on_cycle(spark, monkeypatch):
@@ -162,10 +163,11 @@ def test_closure_over_budget_falls_back_to_distributed(spark, monkeypatch):
 
 
 def test_saturate_gives_up_at_default_budget(monkeypatch):
-    """At the default budget the driver-local saturation stops once it
-    holds more than LOCAL_ROWS pairs instead of building the closure: a
-    50,000-edge chain (1.25B pairs) and a "broom" of 500 roots -> hub ->
-    500 leaves (1,000 edges, 251,000 pairs). Paths never cross keys."""
+    """At the default budget the driver-local saturation stops once its
+    searches have visited more than LOCAL_ROWS edges instead of building
+    the closure: a 50,000-edge chain (1.25B pairs) and a "broom" of 500
+    roots -> hub -> 500 leaves (1,000 edges, 251,000 pairs, 251,000
+    visits). Paths never cross keys."""
     chain = [(f"n{i}", f"n{i + 1}") for i in range(50_000)]
     assert A._saturate(chain) is None
     broom = [(f"r{i}", "hub") for i in range(500)] + [("hub", f"l{i}") for i in range(500)]
@@ -176,6 +178,20 @@ def test_saturate_gives_up_at_default_budget(monkeypatch):
     assert sorted(A._saturate(keyed)) == [
         ("a", "b", "g1"), ("a", "c", "g1"), ("b", "c", "g1"), ("c", "d", "g2"),
     ]
+
+
+def test_saturate_budget_bounds_work_on_dense_cycles():
+    """The budget counts edge visits, not only pairs held. A 440-node
+    ring (440 edges) closes to 193,600 pairs, under the 200,000 budget,
+    and costs one visit per pair. The complete digraph on the same 440
+    nodes has the same closure, but a search from every node visits all
+    193,160 edges, so it gives up instead of doing ~n³ work."""
+    ring = [(f"n{i}", f"n{(i + 1) % 440}") for i in range(440)]
+    got = A._saturate(ring)
+    assert len(got) == 193_600
+    assert set(got) == {(f"n{u}", f"n{v}") for u in range(440) for v in range(440)}
+    dense = [(f"n{u}", f"n{v}") for u in range(440) for v in range(440) if u != v]
+    assert A._saturate(dense) is None
 
 
 def test_ld_path_range_rejects_reversed_bounds(spark, triples):
