@@ -1099,9 +1099,7 @@ def q_snap_export(spark, sf_dir):
     # ∘ ga4gh.clj:179-200 latest-versions-seq-all ∘ the as-of filters of
     # variation_descriptor.clj:20-39): latest version ≤ cutoff per
     # entity, entities whose LATEST in-window version is a tombstone
-    # dropped entirely — the exact rows the gzipped NDJSON artifact
-    # serializes (byte determinism + manifest + publish covered by
-    # TestSnapshotExport)
+    # dropped entirely — the exact rows write-snapshots serializes
     from genegraph_spark.plans.snapshot_export import latest_versions
 
     pages = fixtures.pages_df(spark, sf_dir, with_html=False)

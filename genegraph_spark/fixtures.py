@@ -229,13 +229,6 @@ def canonical_sql() -> str:
     return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(iri, canonical_iri)"
 
 
-def sameas_sql() -> str:
-    rows = [
-        f"({_sql_quote(iri)}, {_sql_quote(x)})" for iri, _, _, _, _, xs in ENTITIES for x in xs
-    ]
-    return "SELECT * FROM (VALUES " + ", ".join(rows) + ") AS t(iri, xref)"
-
-
 # ---------------------------------------------------------------------------
 # pages table: deterministic derivation from `documents`
 # ---------------------------------------------------------------------------

@@ -70,51 +70,3 @@ def decode_media(media: DataFrame, fake: bool = True) -> DataFrame:
             )
 
     return media.mapInPandas(batches, DECODED_SCHEMA)
-
-
-def resize_images(media: DataFrame, target_w: int = 64, target_h: int = 64, fake: bool = True) -> DataFrame:
-    """Resize plumbing for image payloads: binary in → binary out with
-    updated dimension metadata, one Arrow batch at a time.
-
-    The pixel work is STUBBED (no PIL in this container): ``fake=True``
-    emits a deterministic truncation/padding of the payload sized
-    ``target_w*target_h`` bytes so batch shapes and memory behavior are
-    real; ``fake=False`` raises where the PIL resize call belongs."""
-    out_schema = "media_id long, payload binary, width int, height int"
-    n_out = target_w * target_h
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not fake:
-                raise NotImplementedError("real resize requires PIL; replace the stub")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": pdf["payload"].map(
-                        # NULL/empty payloads zero-fill rather than killing
-                        # the task (quarantine upstream is the real handler)
-                        lambda b: (b * (n_out // len(b) + 1))[:n_out]
-                        if b
-                        else b"\x00" * n_out
-                    ),
-                    "width": target_w,
-                    "height": target_h,
-                }
-            )
-
-    return media.where(F.col("kind") == "image").mapInPandas(batches, out_schema)
-
-
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plumbing for video payloads: emits (media_id,
-    frame_idx, frame_payload) rows. The split is byte-range slicing as a
-    stand-in for keyframe extraction — the explode/partition shape is the
-    real thing."""
-    video = media.where(F.col("kind") == "video")
-    n_frames = F.greatest((F.length("payload") / every_n).cast("int"), F.lit(1))
-    return video.select(
-        "media_id",
-        F.posexplode(F.transform(F.sequence(F.lit(1), n_frames), lambda i: i)).alias(
-            "frame_idx", "_i"
-        ),
-    ).select("media_id", "frame_idx")

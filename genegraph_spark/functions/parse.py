@@ -22,8 +22,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     LongType,
@@ -193,22 +191,4 @@ def parse_hgvs(s: pd.Series) -> pd.DataFrame:
     cols = [f.name for f in HGVS_STRUCT.fields]
     return pd.DataFrame(
         {c: parsed.map(lambda d, c=c: None if d is None else d[c]) for c in cols}
-    )
-
-
-def unparse_cnv(struct_col: Column) -> Column:
-    """JVM-side inverse (a concat — no Python needed on the way out)."""
-    return F.when(
-        struct_col.isNotNull() & struct_col["assembly"].isNotNull(),
-        F.concat(
-            struct_col["assembly"],
-            F.lit(" chr"),
-            struct_col["chrom"],
-            F.lit(":"),
-            struct_col["start"].cast("string"),
-            F.lit("-"),
-            struct_col["end"].cast("string"),
-            F.lit(" "),
-            struct_col["svtype"],
-        ),
     )

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     StringType,
     StructField,
@@ -405,51 +404,6 @@ def parse_rdfxml(docs: DataFrame, xml_col: str = "rdfxml") -> DataFrame:
         F.when(attr_kind == "datatype", _xml_unescape(attr_val)).alias(
             "object_datatype"
         ),
-    )
-
-
-# -- binary transport encoding (the RDF-Thrift role) --------------------------
-
-# DataType instance (not a DDL string): string return types are parsed via
-# the active SparkContext at decoration time, which makes this module
-# unimportable before a session exists (oracle_sql() imports it for the
-# JSON-LD context without ever starting Spark).
-@pandas_udf(BinaryType())
-def _deflate(s: pd.Series) -> pd.Series:
-    import zlib
-
-    # level pinned for byte determinism across runs/engines
-    return s.map(lambda v: None if v is None else zlib.compress(v.encode("utf-8"), 6))
-
-
-@pandas_udf(StringType())
-def _inflate(b: pd.Series) -> pd.Series:
-    import zlib
-
-    return b.map(lambda v: None if v is None else zlib.decompress(bytes(v)).decode("utf-8"))
-
-
-def binary_docs(triples: DataFrame) -> DataFrame:
-    """(graph, blob): compact binary per-graph model documents — the
-    transport role of the reference's RDF-Thrift serialization
-    (``database/query.clj:87-100`` writes Turtle / JSON-LD / RDF-XML /
-    binary Thrift from one model). Encoding: zlib level 6 over the
-    deterministic sorted JSON doc of :func:`graph_documents`, so the
-    blob is byte-deterministic for a given graph regardless of
-    partitioning (round-trip: :func:`parse_binary_docs`).
-
-    The compress/decompress pair is the one Python step — Arrow-batched
-    pandas UDFs on the serialization path only (same budget as the
-    parser inverses; never in the triples hot path)."""
-    return graph_documents(triples).select(
-        "graph", _deflate(F.col("doc")).alias("blob")
-    )
-
-
-def parse_binary_docs(docs: DataFrame, blob_col: str = "blob") -> DataFrame:
-    """Inverse of :func:`binary_docs`: blobs → triple rows."""
-    return parse_documents(
-        docs.select(_inflate(F.col(blob_col)).alias("doc")), doc_col="doc"
     )
 
 

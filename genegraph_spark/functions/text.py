@@ -86,9 +86,3 @@ def is_tombstone(html_col: Column) -> Column:
     return F.contains(
         col, F.lit(bytearray(b'<meta name="status" content="unpublished"'))
     )
-
-
-def page_iri(url_col: Column) -> Column:
-    """The page's graph IRI: the url itself (reference names graphs by the
-    root entity IRI, ``src/genegraph/annotate.clj:38-52``)."""
-    return url_col

@@ -40,12 +40,6 @@ def distinct_token_ratio(text: Column) -> Column:
     )
 
 
-def mean_token_length(text: Column) -> Column:
-    toks = F.filter(F.split(text, r"\s+"), lambda t: t != "")
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def lang_id_en(text: Column, threshold: float = 0.05) -> Column:
     """N-gram-free heuristic language ID: 'en' when the English stopword
     ratio clears the threshold, else 'unknown'. (A real model plugs in

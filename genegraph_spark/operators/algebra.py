@@ -48,6 +48,8 @@ LOCAL_ROWS = 200_000
 # Path-doubling rounds before :func:`closure` gives up: 20 rounds close
 # any path of up to 2**20 hops.
 MAX_ROUNDS = 20
+# Blank-node hops :func:`describe` follows before it gives up.
+DESCRIBE_ROUNDS = 10
 
 
 def _is_var(t: Term) -> bool:
@@ -170,19 +172,17 @@ def slice(df: DataFrame, limit: int | None = None, offset: int = 0, order: list 
     single-partition exchange of the full input (the round-1
     no-partitionBy ``row_number`` window moved every row through one
     task). The offset prefix is then dropped with a row_number window
-    over the ≤ offset+limit survivors, which is driver-trivial."""
+    over the ≤ offset+limit survivors, which is driver-trivial. An
+    OFFSET with no LIMIT numbers every row in one window; with no ORDER
+    BY the skipped rows are arbitrary (SPARQL leaves them unspecified)."""
     if offset:
         from pyspark.sql import Window
 
-        assert limit is not None and order, "offset pagination requires order + limit"
-        ocols = _sort_exprs(order, numeric_aware)
-        top = df.orderBy(*ocols).limit(offset + limit)
-        w = Window.orderBy(*ocols)
-        return (
-            top.withColumn("_rn", F.row_number().over(w))
-            .where((F.col("_rn") > offset) & (F.col("_rn") <= offset + limit))
-            .drop("_rn")
-        )
+        ocols = _sort_exprs(order, numeric_aware) if order else [F.lit(1)]
+        if limit is not None:
+            df = (df.orderBy(*ocols) if order else df).limit(offset + limit)
+        out = df.withColumn("_rn", F.row_number().over(Window.orderBy(*ocols)))
+        return out.where(F.col("_rn") > offset).drop("_rn")
     if order:
         df = order_by(df, *order, numeric_aware=numeric_aware)
     return df.limit(limit) if limit is not None else df
@@ -278,7 +278,7 @@ def construct(bindings: DataFrame, templates: list[tuple], graph: Term = None) -
     return reduce(lambda a, b: a.unionByName(b), outs).dropDuplicates()
 
 
-def describe(triples: DataFrame, nodes: DataFrame, max_iter: int = 10) -> DataFrame:
+def describe(triples: DataFrame, nodes: DataFrame) -> DataFrame:
     """SPARQL DESCRIBE as a Concise Bounded Description: every triple
     whose subject is a described node, recursively following blank-node
     objects (Jena's DESCRIBE handler semantics; the reference serializes
@@ -302,7 +302,7 @@ def describe(triples: DataFrame, nodes: DataFrame, max_iter: int = 10) -> DataFr
     frontier = nodes.select(F.col("node").alias("subject")).distinct()
     seen = frontier.localCheckpoint(eager=True)
     out = triples.join(seen, "subject", "inner")
-    for _ in range(max_iter):
+    for _ in range(DESCRIBE_ROUNDS):
         bnodes = (
             out.where(is_bnode_obj)
             .select(F.col("object").alias("subject"))
@@ -316,8 +316,8 @@ def describe(triples: DataFrame, nodes: DataFrame, max_iter: int = 10) -> DataFr
         out = out.unionByName(triples.join(bnodes, "subject", "inner"))
     else:
         raise RuntimeError(
-            f"describe() bnode closure did not converge in {max_iter} rounds "
-            "(deeper anonymous structure than expected); raise max_iter"
+            f"describe() bnode closure did not converge in {DESCRIBE_ROUNDS} "
+            "rounds: the blank-node chains are deeper than DESCRIBE_ROUNDS"
         )
     return out.select(
         "graph", "subject", "predicate", "object", "object_is_iri", "object_datatype"
@@ -727,25 +727,3 @@ def _op(triples: DataFrame, form) -> DataFrame:
         sub, start, length = args
         return slice(_op(triples, sub), limit=length, offset=start)
     raise ValueError(f"Unknown operation {head}")
-
-
-def data_query(
-    triples: DataFrame,
-    form,
-    params: dict | None = None,
-    mode: str = "select",
-    distinct: bool = True,
-):
-    """``create-query`` on a data form + execution mode
-    (``query/resource.clj:234-239``): ``select`` returns the bindings
-    frame, ``ask`` a boolean, ``count`` the row count — the three modes
-    the curation tier invokes (``{::q/params {:type :count}}`` /
-    ``{::q/type :ask}``). ``distinct`` defaults True per
-    resource.clj:236-238 (non-ASK queries get ``.setDistinct``); ASK
-    mode ignores it, exactly like the reference's ``case`` branch."""
-    out = op(triples, form, params, distinct=(distinct and mode != "ask"))
-    if mode == "ask":
-        return ask(out)
-    if mode == "count":
-        return count(out)
-    return out

@@ -33,12 +33,15 @@ from pyspark.sql import functions as F
 
 from . import algebra as A
 
+# Star-contraction rounds before :func:`connected_components` gives up
+# (≈ log₂ of the diameter are needed; a 300k-edge chain takes ≤ 20).
+CC_ROUNDS = 50
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components. Returns (node, component) where ``component``
@@ -107,7 +110,7 @@ def connected_components(
     )
     prev_cnt = e.count()
     converged = False
-    for rnd in range(1, max_iter + 1):
+    for rnd in range(1, CC_ROUNDS + 1):
         # large-star: every node u links its strictly-larger neighbors to
         # min(Γ(u) ∪ {u}); halves long chains by skipping over u.
         nbrs = e.select("u", "v").union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -145,7 +148,7 @@ def connected_components(
         # stars — unlike monotone label propagation there is no safe
         # partial answer, so fail loudly.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {CC_ROUNDS} rounds"
         )
     return all_nodes.join(
         e.select(F.col("u").alias("node"), F.col("v").alias("parent")), "node", "left_outer"

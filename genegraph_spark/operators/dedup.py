@@ -14,7 +14,7 @@ Scale notes (100 TB):
   per-band bucket join — only same-bucket pairs materialize, and bucket
   skew (boilerplate-heavy shingles) is AQE-skew-splittable. The verify
   join recomputes true Jaccard only for candidates.
-- SimHash: one agg per doc; near-dup pairs via byte-band blocking.
+- SimHash: one agg per doc.
 """
 
 from __future__ import annotations
@@ -229,51 +229,6 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bit
         term = F.when(F.col(f"b{i}") > 0, F.lit(2**i).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
         sim = term if sim is None else sim + term
     return agg.select(F.col(id_col), sim.alias("simhash"))
-
-
-def simhash_near_duplicates(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 32, max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
-
-    Blocking splits the hash into ``max_hamming + 1`` contiguous bit
-    slices: a pair within the distance budget differs in ≤ max_hamming
-    slices, so it must AGREE on ≥ 1 (pigeonhole) — recall is exact for
-    any max_hamming < number of slices (the round-1 fixed-4-byte layout
-    silently lost recall past distance 3)."""
-    n_blocks = max_hamming + 1
-    assert n_blocks <= bits, "max_hamming + 1 slices need at least 1 bit each"
-    widths = [bits // n_blocks + (1 if i < bits % n_blocks else 0) for i in range(n_blocks)]
-    s = simhash(docs, id_col, text_col, bits)
-    blocks = None
-    offset = 0
-    for i, width in enumerate(widths):
-        blk = s.select(
-            F.col(id_col),
-            F.col("simhash"),
-            F.lit(i).alias("block"),
-            F.shiftright(F.col("simhash"), offset)
-            .bitwiseAND(F.lit((1 << width) - 1))
-            .alias("key"),
-        )
-        offset += width
-        blocks = blk if blocks is None else blocks.unionByName(blk)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(b, ["block", "key"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.select("id_a", "id_b", hamming.alias("hamming")).where(
-        F.col("hamming") <= max_hamming
-    )
 
 
 def embedding_near_duplicates(

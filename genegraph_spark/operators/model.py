@@ -1,12 +1,11 @@
-"""Model-level set operations and graph isomorphism up to blank-node
-renaming.
+"""Model difference and graph isomorphism up to blank-node renaming.
 
-Reference analogs: model union / difference / isomorphism
+Reference analogs: model difference / isomorphism
 (``src/genegraph/database/query.clj:102-110,167-175`` — ``is-isomorphic?``
 wraps Jena's blank-node-aware graph equality, used for golden
 comparisons in tests).
 
-Spark-first: union/difference are ``unionByName``/``exceptAll``.
+Spark-first: difference is ``exceptAll``.
 Isomorphism uses Weisfeiler-Lehman-style signature hashing: every blank
 node's label is iteratively refined from the md5 of its sorted edge
 signatures (ground terms keep themselves as labels), then blank nodes
@@ -27,11 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _B = "_:"
-
-
-def model_union(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bag union of two models (query.clj:102-107)."""
-    return a.unionByName(b)
 
 
 def model_diff(a: DataFrame, b: DataFrame) -> DataFrame:

@@ -45,21 +45,3 @@ def find_superseded(
         .where(F.col("graph") != F.col("supersedes"))
         .select("graph", "supersedes")
     )
-
-
-def publish_with_replaces(
-    store,
-    triples: DataFrame,
-    incoming_keys: DataFrame,
-    installed_keys: DataFrame,
-    key_cols: list[str],
-) -> dict:
-    """Publish ``triples`` and delete every superseded graph in the same
-    commit (event.clj:53-58: add-to-db then replace-curation in one tx).
-
-    Returns the commit metadata; superseded graphs appear in lineage as
-    ``unpublish`` rows."""
-    superseded = find_superseded(installed_keys, incoming_keys, key_cols).select(
-        F.col("supersedes").alias("graph")
-    )
-    return store.merge(triples, delete_graphs=superseded)

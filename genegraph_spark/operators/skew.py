@@ -4,9 +4,9 @@ Net-new relative to the reference (single-node, no shuffle —
 SURVEY §4); required at 100 TB where BRCA1-class entities concentrate
 orders of magnitude more rows on one key than the median. AQE's skew
 join (`spark.sql.adaptive.skewJoin.enabled`, on in session.py) splits
-oversized *partitions* after the fact; these utilities remove the hot
-key at the *logical* level, which also covers aggregations and top-k —
-cases AQE's join-only splitter does not.
+oversized *partitions* after the fact; salting removes the hot key at
+the *logical* level, which also covers top-k — a case AQE's join-only
+splitter does not.
 
 All salts are deterministic (hash of a disambiguating column, never
 rand()) so retries and resume recompute identical partitions.
@@ -20,72 +20,6 @@ from pyspark.sql import functions as F
 
 def _salt(col: Column, n_salts: int) -> Column:
     return F.pmod(F.xxhash64(col), F.lit(n_salts)).cast("int")
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: str,
-    n_salts: int = 8,
-    salt_by: str | None = None,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where ``skewed.on`` is Zipf-hot and ``other`` is too big
-    to broadcast outright but tolerable to replicate ``n_salts``×.
-
-    Each skewed row gets a deterministic salt from ``salt_by`` (a column
-    that varies within the hot key — defaults to the whole row via
-    monotonic fallback is NOT used; pass a real column); ``other`` is
-    exploded across all salts; the join key becomes (on, salt), spreading
-    the hot key over ``n_salts`` tasks. Result is row-identical to the
-    unsalted join for inner/left joins; right/full-preserving joins would
-    emit each unmatched ``other`` row once per salt replica and are
-    rejected."""
-    assert salt_by is not None, "pass salt_by: a column that varies within the hot key"
-    assert how in ("inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"), (
-        f"salted_join cannot preserve unmatched right-side rows (how={how!r}): "
-        "the replicated side would duplicate them n_salts times"
-    )
-    s = skewed.withColumn("_salt", _salt(F.col(salt_by), n_salts))
-    o = other.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))))
-    return s.join(o, [on, "_salt"], how).drop("_salt")
-
-
-def salted_aggregate(
-    df: DataFrame,
-    key: str,
-    aggs: dict[str, str],
-    n_salts: int = 8,
-    salt_by: str | None = None,
-) -> DataFrame:
-    """Two-phase aggregation for hot keys: partial per (key, salt), final
-    per key. For algebraic aggregates (sum/count/min/max) Spark's
-    map-side partial aggregation already does this physically; the
-    explicit form exists for the cases it can't cover — e.g. building
-    bounded collect/top-k state per key — and as the documented pattern.
-
-    ``aggs``: {column: 'sum'|'count'|'min'|'max'}."""
-    assert salt_by is not None
-    s = df.withColumn("_salt", _salt(F.col(salt_by), n_salts))
-    partial_exprs, final_exprs = [], []
-    for c, fn in aggs.items():
-        p = f"_p_{fn}_{c}"
-        if fn == "count":
-            partial_exprs.append(F.count(c).alias(p))
-            final_exprs.append(F.sum(p).alias(f"{fn}_{c}"))
-        elif fn == "sum":
-            partial_exprs.append(F.sum(c).alias(p))
-            final_exprs.append(F.sum(p).alias(f"{fn}_{c}"))
-        elif fn == "min":
-            partial_exprs.append(F.min(c).alias(p))
-            final_exprs.append(F.min(p).alias(f"{fn}_{c}"))
-        elif fn == "max":
-            partial_exprs.append(F.max(c).alias(p))
-            final_exprs.append(F.max(p).alias(f"{fn}_{c}"))
-        else:
-            raise ValueError(f"unsupported agg {fn}")
-    partial = s.groupBy(key, "_salt").agg(*partial_exprs)
-    return partial.groupBy(key).agg(*final_exprs)
 
 
 def salted_top_k(

@@ -1,15 +1,14 @@
-"""Declarative per-root-type validation (SHACL analog) with a
-quarantine-with-reason split.
+"""Declarative per-root-type validation (SHACL analog) with the list of
+violated constraints per row.
 
 Reference analog: events are validated against SHACL shapes selected by
 root type (``src/genegraph/annotate.clj:72-132``,
 ``src/genegraph/database/validation.clj:8-19``, shapes in
 ``resources/shapes.edn``); an event failing its shape terminates the
 interceptor chain. Here a shape is a list of named column constraints;
-failing rows route to a quarantine table carrying the list of violated
-constraint names (batch pipelines quarantine rather than abort — the
-round-1 quarantine split only caught undecodable pages; this is the
-general declarative checker).
+each row carries the list of violated constraint names, so failing rows
+can be quarantined with their reasons (batch pipelines quarantine rather
+than abort).
 
 Spark-first: each constraint is one boolean column expression; the
 violation list is a filtered array of constraint names — a single
@@ -43,11 +42,6 @@ def matches(col: str, pattern: str) -> Constraint:
     return Constraint(f"{col}:pattern", F.col(col).rlike(pattern))
 
 
-def in_set(col: str, allowed: list) -> Constraint:
-    """sh:in analog."""
-    return Constraint(f"{col}:in", F.col(col).isin(allowed))
-
-
 def in_range(col: str, lo=None, hi=None) -> Constraint:
     """sh:minInclusive / sh:maxInclusive analog."""
     c = F.col(col)
@@ -57,12 +51,6 @@ def in_range(col: str, lo=None, hi=None) -> Constraint:
     if hi is not None:
         check = check & (c <= hi)
     return Constraint(f"{col}:range", check)
-
-
-def when_then(name: str, cond: Column, then: Column) -> Constraint:
-    """Conditional constraint (implication): rows matching ``cond`` must
-    satisfy ``then``."""
-    return Constraint(name, ~cond | then)
 
 
 def violation_array(shape: list[Constraint]) -> Column:
@@ -125,17 +113,6 @@ def page_shape_registry() -> ShapeRegistry:
     common = [matches("url", "^https://"), in_range("version", 1, 3)]
     web = [Constraint("html:decodable", F.col("ok")), required("lang"), *common]
     return ShapeRegistry({"WebPage": web, "TombstonePage": list(common)})
-
-
-def quarantine_split(
-    df: DataFrame, shape: list[Constraint]
-) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantined): quarantined rows carry ``violations``
-    (annotate.clj:128-132 — but quarantine, not chain-abort)."""
-    v = with_violations(df, shape)
-    valid = v.where(F.size("violations") == 0).drop("violations")
-    quarantined = v.where(F.size("violations") > 0)
-    return valid, quarantined
 
 
 def violation_report(df: DataFrame, shape: list[Constraint]) -> DataFrame:

@@ -1,12 +1,11 @@
-"""Versioned-entity idioms: latest-as-of, version chains, tombstone
-compaction.
+"""Versioned-entity idioms: latest-as-of, as-of joins, version chains,
+sessionization.
 
 These re-express the single most important query idiom in the reference
 (SURVEY §2.3): ``ORDER BY DESC(?release_date) LIMIT 1`` per unversioned
 key (``src/genegraph/transform/clinvar/common.clj:209-258``), the RocksDB
-prefix-scan + take-last (``clinical_assertion.clj:612-627``), the
-version-head compaction with tombstone filtering
-(``transform/clinvar/ga4gh.clj:170-190``), and the predecessor chain that
+prefix-scan + take-last (``clinical_assertion.clj:612-627``), and the
+predecessor chain that
 emits ``dc:replaces`` / ``dc:isReplacedBy``
 (``common.clj:235-272`` ``mark-prior-replaced``).
 
@@ -34,15 +33,6 @@ def latest_as_of(df: DataFrame, key: str, version: str, cutoff: Column | str) ->
     """
     cutoff_col = F.lit(cutoff) if isinstance(cutoff, str) else cutoff
     return latest_version(df.where(F.col(version) <= cutoff_col), key, version)
-
-
-def compact_heads(df: DataFrame, key: str, version: str, deleted: str = "tombstone") -> DataFrame:
-    """Version-history compaction: keep the newest version per key, then
-    drop keys whose head is a tombstone (ga4gh.clj:170-190 semantics).
-    A NULL flag means NOT deleted (rows predating the flag are live)."""
-    return latest_version(df, key, version).where(
-        ~F.coalesce(F.col(deleted), F.lit(False))
-    )
 
 
 def asof_join(

@@ -62,30 +62,6 @@ def _presence(
     )
 
 
-def model_changes(
-    old: DataFrame, new: DataFrame, canonicalize: bool = False,
-    rounds: int = 3,
-) -> tuple[DataFrame, DataFrame]:
-    """(created, deleted) triple frames — ``model-diff``
-    (event_analyzer.clj:24-30) for every graph at once.
-
-    ``canonicalize=True`` WL-relabels blank nodes first so a
-    re-transform that only regenerated bnode ids diffs as EMPTY, the
-    way Jena's difference over isomorphic models reads to the
-    reference's users. Leave False for bnode-free models (cheaper).
-
-    SET semantics like Jena: a transform that merely re-emits an
-    existing triple twice is NOT a model change."""
-    p = _presence(old, new, canonicalize, rounds)
-    created = p.where(
-        (F.col("in_new") == 1) & (F.col("in_old") == 0)
-    ).select(*_COLS)
-    deleted = p.where(
-        (F.col("in_old") == 1) & (F.col("in_new") == 0)
-    ).select(*_COLS)
-    return created, deleted
-
-
 def change_summary(
     old: DataFrame, new: DataFrame, canonicalize: bool = False,
     rounds: int = 3,
@@ -148,12 +124,3 @@ def type_count_diff(old: DataFrame, new: DataFrame) -> DataFrame:
         z("new_n").alias("new_n"),
         (z("new_n") - z("old_n")).alias("delta"),
     ).where(F.col("delta") != 0)
-
-
-def processing_statistics(events: DataFrame, outcome_col: str) -> DataFrame:
-    """Outcome frequencies over a recorded topic — ``statistics``
-    (event_analyzer.clj:57-64): one map-side-combined groupBy."""
-    return (
-        events.groupBy(F.col(outcome_col).alias("outcome"))
-        .agg(F.count("*").alias("n"))
-    )

@@ -1,63 +1,23 @@
-"""Snapshot export — the batch artifact product built from the
-versioned entity stores.
+"""Snapshot export row set — the latest version of every entity in a
+versioned entity store.
 
-Reference: ``source/snapshot/core.clj`` ``write-snapshots`` (each
-dataset = the LATEST version of every entity from its RocksDB store,
-deleted-latest entries dropped, one JSON line per record, optional
-gzip, files under ``<output-vol>/<output-prefix>/``),
-``snapshot-datasets`` (``variation-descriptors.ndjson`` +
-``statements.ndjson``), ``write-snapshot-outputs-to-bucket``
-(publish path = ``<prefix>/<filename>``), ``join-dedup-delimiters``
-(core.clj:25-41), and the as-of row-set query
+Reference: ``source/snapshot/core.clj`` ``write-snapshots`` exports,
+per dataset, the LATEST version of every entity from its RocksDB
+store with deleted-latest entries dropped; the as-of row-set query
 ``variation_descriptor.clj:20-39`` (``?version <= ?until_version`` with
-a NOT EXISTS over newer replacements — on a versioned table that is
-exactly "max version ≤ until per entity").
+a NOT EXISTS over newer replacements) is, on a versioned table, exactly
+"max version ≤ until per entity".
 
 Spark-first shape: ``latest-versions-seq-all`` (ga4gh.clj:179-200) is a
 RocksDB prefix-scan + partition-by in the reference; here it is ONE
 per-key window over the snapshot table — fully distributed, one shuffle
-on the entity key. The NDJSON artifact is written sorted by entity key
-with ``shards`` range partitions (default 1 = the reference's
-single-file product; at corpus scale pass shards≈input partitions and
-each shard is an independently-sorted gzip member — concatenated gzip
-members are themselves a valid gzip stream). Bytes are deterministic:
-fixed column order in the JSON, explicit sort, and gzip headers written
-with mtime=0.
+on the entity key.
 """
 
 from __future__ import annotations
 
-import gzip
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..sinks.snapshots import SnapshotStore
-
-
-def join_dedup_delimiters(delim: str, values: list[str]) -> str:
-    """Join path segments without doubling delimiters
-    (core.clj:25-41): each value is trimmed of leading/trailing
-    delimiters before joining; a leading delimiter on the FIRST value
-    and a trailing one on the LAST are preserved."""
-    if not values:
-        return ""
-    terms = []
-    for v in values:
-        if v.startswith(delim):
-            v = v[len(delim):]
-        if v.endswith(delim):
-            v = v[: -len(delim)]
-        terms.append(v)
-    out = delim.join(terms)
-    if values[0].startswith(delim):
-        out = delim + out
-    if values[-1].endswith(delim):
-        out = out + delim
-    return out
 
 
 def latest_versions(
@@ -86,193 +46,3 @@ def latest_versions(
     if filter_deleted and deleted_col in df.columns:
         out = out.where(~F.coalesce(F.col(deleted_col), F.lit(False)))
     return out
-
-
-def _ndjson_lines(docs: DataFrame, key: str) -> DataFrame:
-    cols = [c for c in docs.columns if c != "snapshot"]
-    return docs.select(
-        F.col(key).alias("_k"),
-        F.to_json(F.struct(*cols)).alias("line"),
-    )
-
-
-def write_snapshots(
-    store: SnapshotStore,
-    datasets: list[dict],
-    output_vol: str,
-    output_prefix: str,
-    gzip_output: bool = True,
-    until=None,
-    shards: int = 1,
-) -> dict:
-    """``write-snapshots`` (core.clj:76-130): for each dataset
-    ``{"output_basename": ..., "entity_type": ..., ["key"], ["version"]}``
-    export the latest versions as NDJSON under
-    ``<output_vol>/<output_prefix>/``. Returns the manifest map the
-    reference returns (+ per-file row counts), and writes it alongside
-    the files as ``manifest.json``.
-
-    Unlike the reference, the output prefix is ALWAYS caller-provided —
-    the wall-clock default (``snapshots/<Instant.now>``) would make the
-    artifact non-reproducible; version ids come from the caller or the
-    migration machinery."""
-    out_dir = os.path.join(output_vol, output_prefix)
-    os.makedirs(out_dir, exist_ok=True)
-    manifest = {
-        "output_vol": output_vol,
-        "output_prefix": output_prefix,
-        "files": [],
-        "counts": {},
-    }
-    for ds in datasets:
-        key = ds.get("key", "is_version_of")
-        docs = latest_versions(
-            store.read(ds["entity_type"]),
-            key=key,
-            version=ds.get("version", "version"),
-            until=until,
-        )
-        filename = ds["output_basename"] + (".gz" if gzip_output else "")
-        n = _write_sorted_ndjson(
-            _ndjson_lines(docs, key),
-            os.path.join(out_dir, filename),
-            gzip_output,
-            shards,
-        )
-        manifest["files"].append(filename)
-        manifest["counts"][filename] = n
-    with open(os.path.join(out_dir, "manifest.json"), "w") as fh:
-        json.dump(manifest, fh, sort_keys=True, indent=1)
-    return manifest
-
-
-def _make_shard_compressor(gzip_output: bool):
-    """Executor-side shard writer for ``mapInArrow``: consumes a
-    partition's (sorted) ``line`` batches and yields (chunk, n) rows —
-    the shard's single gzip member (mtime=0, level 6, Python gzip, so
-    the member bytes are identical to the former driver-side
-    compressor's) cut into bounded binary chunks, with ``n`` = lines
-    consumed since the previous chunk. Empty partitions yield nothing
-    (matching the former writer's skip of empty shard files)."""
-
-    def compress(batches):
-        import io
-
-        import pyarrow as pa
-
-        buf = io.BytesIO()
-        gz = (
-            gzip.GzipFile(fileobj=buf, mode="wb", mtime=0, compresslevel=6)
-            if gzip_output
-            else buf
-        )
-        pending = 0
-
-        def cut():
-            nonlocal pending
-            data = buf.getvalue()
-            buf.seek(0)
-            buf.truncate(0)
-            batch = pa.record_batch(
-                [pa.array([data], pa.binary()), pa.array([pending], pa.int64())],
-                names=["chunk", "n"],
-            )
-            pending = 0
-            return batch
-
-        any_rows = False
-        for batch in batches:
-            col = batch.column(0)
-            if len(col) == 0:
-                continue
-            any_rows = True
-            gz.write(("\n".join(col.to_pylist()) + "\n").encode("utf-8"))
-            pending += len(col)
-            if buf.tell() >= (8 << 20):
-                yield cut()
-        if any_rows:
-            if gzip_output:
-                gz.close()
-            yield cut()
-
-    return compress
-
-
-def _write_sorted_ndjson(
-    lines: DataFrame, path: str, gzip_output: bool, shards: int
-) -> int:
-    """Deterministic artifact writer: range-partition on the sort key,
-    sort within each shard, compress one gzip member per shard IN
-    EXECUTORS (mtime=0) and concatenate in shard order — RFC 1952
-    multi-member output that any gzip reader treats as one stream. The
-    driver never compresses a byte of a non-empty export: the shard
-    members land as pre-compressed chunk rows in a temp parquet
-    (written under Spark's commit protocol, so task retries are safe),
-    and the driver streams those files in shard order into the artifact
-    — I/O only, O(chunk) memory. (The former writer gzipped every
-    shard serially ON the driver: correct, but O(corpus bytes) of
-    single-threaded CPU — hours at a 100 GB export.)"""
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="gg_snap_export_")
-    try:
-        arranged = (
-            lines.repartitionByRange(max(shards, 1), "_k")
-            .sortWithinPartitions("_k", "line")
-            .select("line")
-        )
-        members = arranged.mapInArrow(
-            _make_shard_compressor(gzip_output), "chunk binary, n long"
-        )
-        # parquet keeps row order per task and one file per shard, named
-        # in partition order; compression off — the payload is already
-        # gzip (or raw text destined for a plain artifact)
-        members.write.mode("overwrite").option("compression", "none").parquet(tmp)
-        parts = sorted(
-            f for f in os.listdir(tmp) if f.startswith("part-") and f.endswith(".parquet")
-        )
-        n = 0
-        wrote_any = False
-        with open(path, "wb") as out:
-            for p in parts:
-                pf = pq.ParquetFile(os.path.join(tmp, p))
-                # stream row-by-row batches: O(chunk) driver memory even
-                # when a shard produced many chunks
-                for rb in pf.iter_batches(batch_size=1):
-                    chunk = rb.column(0)[0].as_py()
-                    if chunk:
-                        wrote_any = True
-                        out.write(chunk)
-                    n += rb.column(1)[0].as_py()
-            if gzip_output and not wrote_any:
-                # a zero-row export must still be a VALID gzip stream
-                # (one empty member), not a 0-byte file downstream
-                # readers reject (review-caught)
-                with gzip.GzipFile(
-                    fileobj=out, mode="wb", mtime=0, compresslevel=6
-                ):
-                    pass
-        return n
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def publish_snapshots(manifest: dict, bucket_dir: str) -> list[str]:
-    """``write-snapshot-outputs-to-bucket`` (core.clj:137-155): copy
-    every manifest file (+ the manifest) to
-    ``<bucket>/<prefix>/<filename>`` — paths composed with
-    :func:`join_dedup_delimiters` so a trailing-slash prefix never
-    doubles the separator. Returns the bucket-relative paths."""
-    src_dir = os.path.join(manifest["output_vol"], manifest["output_prefix"])
-    published = []
-    for filename in [*manifest["files"], "manifest.json"]:
-        rel = join_dedup_delimiters(
-            "/", [manifest["output_prefix"], filename]
-        )
-        target = os.path.join(bucket_dir, rel)
-        os.makedirs(os.path.dirname(target), exist_ok=True)
-        shutil.copyfile(os.path.join(src_dir, filename), target)
-        published.append(rel)
-    return published

@@ -12,7 +12,7 @@ Spark mapping: one table per entity type, rows keyed
 key-partitioned window, "latest as-of" is the top-1-per-key idiom
 (``transform/clinvar/common.clj:209-258``). Batches land under
 ``snapshot=N`` dirs — replaying a snapshot id overwrites it (the same
-idempotent-commit contract as the store and producer sinks). At cluster
+idempotent-commit contract as the named-graph store). At cluster
 scale each table is Iceberg with a sort order on (is_version_of,
 version) so the as-of read is a merge-scan, not a full shuffle.
 """

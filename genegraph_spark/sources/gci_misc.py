@@ -1,7 +1,7 @@
 """The small GCI ingest variants + the ClinVar submitter agent transform.
 
-Completes the ``transform/`` directory census with the four remaining
-ingestion namespaces, each a handful of map-only column expressions:
+Two of the smaller ingestion namespaces, each a handful of map-only
+column expressions:
 
 - ``transform/gci_neo4j.clj`` — the Neo4j-era gene-validity export:
   report + score-string content node + the full evidence-level assertion
@@ -10,10 +10,6 @@ ingestion namespaces, each a handful of map-only column expressions:
 - ``transform/gci_neo4j_report_only.clj`` — the same export reduced to
   the report skeleton + content node (different IRI scheme: no date
   suffix).
-- ``transform/gci_legacy_report_only.clj`` — legacy report skeleton +
-  raw-bytes content node + the conditional animal-model flag, behind the
-  ``::curation`` spec gate (rows without an iri drop).
-- ``transform/gci.clj:33-38`` — the GDI stub (report + typed assertion).
 - ``transform/clinvar/submitter.clj:23-41`` — submitter snapshot →
   GA4GH ``Agent`` rows (versioned ``clinvar_submitter_<id>.<date>`` id,
   ``fields-to-extension-maps`` over the selected fields — including the
@@ -31,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from genegraph_spark.functions.iri import bnode
-from genegraph_spark.sources.dosage_jira import _arr, _t
+from genegraph_spark.sources.dosage_jira import _t
 
 GCI_ROOT = "http://dataexchange.clinicalgenome.org/gci/"
 AFFILIATION_ROOT = "http://dataexchange.clinicalgenome.org/agent/"
@@ -122,57 +118,6 @@ def gci_neo4j_triples(reports: DataFrame, report_only: bool = False) -> DataFram
         ]
     return (
         reports.select(iri.alias("graph"), F.explode(F.array(*base)).alias("t"))
-        .select("graph", "t.subject", "t.predicate", "t.object",
-                "t.object_is_iri", "t.object_datatype")
-    )
-
-
-def gci_legacy_report_only_triples(reports: DataFrame) -> DataFrame:
-    """Legacy report-only skeleton (``gci_legacy_report_only.clj``):
-    spec gate (iri required), raw-payload content node, conditional
-    animal-model flag.
-
-    ``reports`` columns: id (nullable — null drops at the spec gate),
-    payload (the ORIGINAL report bytes; the reference re-encodes the
-    parsed map, which is byte-unstable across JSON writers — same
-    source-bytes decision as ``gci_legacy.py``), animal_model
-    (nullable string)."""
-    valid = reports.where(F.col("id").isNotNull())
-    iri = F.concat(F.lit(GCI_ROOT), F.col("id"), F.lit("_report"))
-    assertion = F.concat(F.lit(GCI_ROOT), F.col("id"))
-    content = bnode(iri, F.lit("content"))
-    triples = F.concat(
-        F.array(
-            _t(iri, RDF_TYPE, ":sepio/GeneValidityReport", True),
-            _t(iri, ":bfo/has-part", content, True),
-            _t(iri, ":bfo/has-part", assertion, True),
-            _t(content, RDF_TYPE, ":cnt/ContentAsText", True),
-            _t(content, ":cnt/chars", F.col("payload"), False),
-        ),
-        _arr(
-            F.col("animal_model").isNotNull(),
-            _t(iri, ":cg/is-animal-model-only", F.col("animal_model"), False),
-        ),
-    )
-    return (
-        valid.select(iri.alias("graph"), F.explode(triples).alias("t"))
-        .select("graph", "t.subject", "t.predicate", "t.object",
-                "t.object_is_iri", "t.object_datatype")
-    )
-
-
-def gdi_report_triples(docs: DataFrame) -> DataFrame:
-    """The GDI stub (``gci.clj:33-38``): report + typed assertion.
-    ``docs`` columns: report_id (the document ``@id``)."""
-    rid = F.col("report_id")
-    assertion = F.concat(F.lit("/assertion"), rid)
-    triples = F.array(
-        _t(rid, RDF_TYPE, ":sepio/GeneValidityReport", True),
-        _t(rid, ":bfo/has-part", assertion, True),
-        _t(assertion, RDF_TYPE, ":sepio/GeneValidityEvidenceLevelAssertion", True),
-    )
-    return (
-        docs.select(rid.alias("graph"), F.explode(triples).alias("t"))
         .select("graph", "t.subject", "t.predicate", "t.object",
                 "t.object_is_iri", "t.object_datatype")
     )

@@ -30,11 +30,6 @@ ENVELOPE_SCHEMA = (
 )
 
 
-def parse_json_col(df: DataFrame, col: str, schema: str, out: str = "parsed") -> DataFrame:
-    """Parse a JSON string column with an explicit schema."""
-    return df.withColumn(out, F.from_json(F.col(col), schema))
-
-
 def parse_nested_content(
     df: DataFrame, col: str, outer_schema: str, content_field: str, content_schema: str
 ) -> DataFrame:

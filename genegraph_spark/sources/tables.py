@@ -18,24 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def read_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_table(spark, sf_dir, t) for t in TPCH_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Temp views for the SQL API (same names the DuckDB oracle uses)."""
-    for t in TPCH_TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
 
 def pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The authoritative input table (url, warc_ts, html, text, lang,
@@ -44,9 +26,3 @@ def pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import fixtures
 
     return fixtures.pages_df(spark, sf_dir)
-
-
-def event_archive(spark: SparkSession, path: str) -> DataFrame:
-    """Batch replay of a JSONL event archive (sink/batch.clj analog):
-    schema-on-read json with the event envelope columns."""
-    return spark.read.json(path)

@@ -277,46 +277,6 @@ def stream_user_running_totals(
     )
 
 
-# -- catch-up / offsets-up-to-date check -------------------------------------
-
-def processed_source_files(checkpoint_dir: str) -> set[str]:
-    """File paths the stream's checkpoint has committed (the offset-file
-    analog, stream.clj:27-43: Spark's FileStreamSource log replaces the
-    hand-rolled ``partition_offsets.edn``)."""
-    import json
-
-    src_dir = os.path.join(checkpoint_dir, "sources", "0")
-    paths: set[str] = set()
-    if not os.path.isdir(src_dir):
-        return paths
-    for name in os.listdir(src_dir):
-        if not (name.isdigit() or name.endswith(".compact")):
-            continue
-        with open(os.path.join(src_dir, name)) as f:
-            for line in f:
-                line = line.strip()
-                if line.startswith("{"):
-                    paths.add(json.loads(line)["path"])
-    return paths
-
-
-def source_up_to_date(source_dir: str, checkpoint_dir: str) -> dict:
-    """Catch-up detection (stream.clj:190-208 ``merge-with <=`` of current
-    vs end offsets): have all currently-available source files been
-    committed by the stream? Returns {up_to_date, n_available, n_processed}."""
-    available = {
-        "file://" + os.path.join(source_dir, f)
-        for f in os.listdir(source_dir)
-        if f.endswith(".parquet")
-    }
-    processed = processed_source_files(checkpoint_dir)
-    return {
-        "up_to_date": available <= processed,
-        "n_available": len(available),
-        "n_processed": len(processed),
-    }
-
-
 # -- Kafka plan builders (cluster path; no broker in the sandbox) ------------
 
 def kafka_reader(spark: SparkSession, brokers: str, topic: str, starting_offsets: str = "earliest"):

@@ -87,16 +87,6 @@ class TestChangeSummary:
         assert got.changed is False
         assert (got.previous, got.current) == (1, 1)
 
-    def test_model_changes_frames(self, spark, frames):
-        old, new = frames
-        created, deleted = AN.model_changes(old, new)
-        c = {(r.graph, r.predicate, r.object) for r in created.collect()}
-        assert ("g2", ":status", "X") in c
-        assert ("g2", I.RDF_TYPE, ":PriorityOrder") in c
-        d = {(r.graph, r.predicate, r.object) for r in deleted.collect()}
-        assert ("g2", ":status", "F") in d
-        assert ("g3", I.RDF_TYPE, ":Order") in d
-
 
 class TestTypeCountDiff:
     def test_only_moved_counts(self, spark, frames):
@@ -110,16 +100,6 @@ class TestTypeCountDiff:
         assert got[("g3", ":Order")] == (1, 0, -1)
         assert got[("g4", ":Order")] == (0, 1, 1)
         assert ("g1", ":Order") not in got  # unchanged → no row
-
-
-class TestProcessingStatistics:
-    def test_outcome_frequencies(self, spark):
-        ev = spark.createDataFrame(
-            [("ok",), ("ok",), ("exception",)], "outcome_kind string"
-        )
-        got = {r.outcome: r.n for r in
-               AN.processing_statistics(ev, "outcome_kind").collect()}
-        assert got == {"ok": 2, "exception": 1}
 
 
 class TestCanonicalizedSizes:

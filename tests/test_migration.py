@@ -1,106 +1,10 @@
-"""Versioned migration workflow (migration.clj analog)."""
+"""Snapshot export row set (source/snapshot/core.clj analog)."""
 
 from __future__ import annotations
 
-import os
-import tarfile
-
-import pytest
-
-from genegraph_spark.plans import migration as MIG
-from genegraph_spark.sinks.named_graph import NamedGraphStore
-
-
-@pytest.fixture(scope="module")
-def artifact(spark, sf_dir, tmp_path_factory):
-    base = tmp_path_factory.mktemp("mig_base")
-    bucket = tmp_path_factory.mktemp("mig_bucket")
-    info = MIG.create_migration(
-        spark, sf_dir, str(base), str(bucket), version="v2024-test"
-    )
-    return info, str(bucket)
-
-
-class TestCreateMigration:
-    def test_build_package_publish(self, spark, artifact):
-        info, bucket = artifact
-        assert info["version"] == "v2024-test"
-        assert os.path.exists(info["archive"])
-        assert os.path.basename(info["archive"]) == "v2024-test.tar.gz"
-        # the built database is a readable store
-        store = NamedGraphStore(spark, info["database"])
-        assert store.triples().count() > 0
-        # archive holds the store files
-        with tarfile.open(info["archive"]) as tar:
-            names = tar.getnames()
-        assert any("manifest" in n or "data" in n for n in names)
-
-    def test_version_collision_refuses(self, spark, sf_dir, artifact):
-        info, bucket = artifact
-        base = os.path.dirname(info["database"])
-        with pytest.raises(FileExistsError):
-            MIG.create_migration(spark, sf_dir, base, bucket,
-                                 version="v2024-test")
-
-
-class TestRestore:
-    def test_restore_round_trips(self, spark, artifact, tmp_path):
-        info, bucket = artifact
-        vol = str(tmp_path / "data_vol")
-        restored = MIG.populate_data_vol_if_needed(
-            spark, vol, bucket, "v2024-test"
-        )
-        assert restored is True
-        src = NamedGraphStore(spark, info["database"])
-        dst = NamedGraphStore(spark, vol)
-        assert dst.triples().count() == src.triples().count()
-        assert dst.last_commit() == src.last_commit()
-        # second call: the volume is populated → no-op
-        assert MIG.populate_data_vol_if_needed(
-            spark, vol, bucket, "v2024-test"
-        ) is False
-
-    def test_missing_version_raises(self, artifact, tmp_path):
-        _, bucket = artifact
-        with pytest.raises(FileNotFoundError):
-            MIG.retrieve_migration(bucket, "no-such-version",
-                                   str(tmp_path / "x"))
-
-    def test_hostile_archive_member_rejected(self, tmp_path):
-        evil = tmp_path / "evil.tar.gz"
-        payload = tmp_path / "p.txt"
-        payload.write_text("x")
-        with tarfile.open(evil, "w:gz") as tar:
-            tar.add(payload, arcname="../escape.txt")
-        with pytest.raises(ValueError):
-            MIG.decompress_database(str(tmp_path / "out"), str(evil))
-
-
-class TestLoadStreamData:
-    def test_catch_up_is_idempotent(self, spark, sf_dir, artifact, tmp_path):
-        info, bucket = artifact
-        vol = str(tmp_path / "vol2")
-        r1 = MIG.load_stream_data(
-            spark, sf_dir, vol, bucket_dir=bucket, version="v2024-test"
-        )
-        n1 = NamedGraphStore(spark, vol).triples().count()
-        # re-running the same streams over a restored volume changes
-        # nothing (merge idempotence = the offset-reset semantics)
-        MIG.load_stream_data(spark, sf_dir, vol)
-        n2 = NamedGraphStore(spark, vol).triples().count()
-        assert n1 == n2
-        assert r1["commit"] is not None
-
-    def test_version_id_derivation(self, spark, artifact):
-        info, _ = artifact
-        store = NamedGraphStore(spark, info["database"])
-        assert MIG.version_id(store).startswith("commit-")
-        assert MIG.version_id(store, "explicit") == "explicit"
-
 
 class TestSnapshotExport:
-    """plans/snapshot_export — write-snapshots / latest-versions /
-    publish (source/snapshot/core.clj:25-155, ga4gh.clj:179-200,
+    """plans/snapshot_export — latest-versions (ga4gh.clj:179-200,
     variation_descriptor.clj:20-39)."""
 
     def _store(self, spark, tmp_path):
@@ -139,132 +43,3 @@ class TestSnapshotExport:
         # filter_deleted=False keeps the tombstoned latest
         out = SE.latest_versions(docs, filter_deleted=False).count()
         assert out == 3
-
-    def test_export_is_byte_deterministic(self, spark, tmp_path):
-        import gzip as _gz
-
-        from genegraph_spark.plans import snapshot_export as SE
-
-        store = self._store(spark, tmp_path)
-        datasets = [
-            {"output_basename": "variation-descriptors.ndjson",
-             "entity_type": "variation"}
-        ]
-        m1 = SE.write_snapshots(store, datasets, str(tmp_path / "o1"), "snapshots/v7")
-        m2 = SE.write_snapshots(store, datasets, str(tmp_path / "o2"), "snapshots/v7")
-        f1 = tmp_path / "o1" / "snapshots/v7" / "variation-descriptors.ndjson.gz"
-        f2 = tmp_path / "o2" / "snapshots/v7" / "variation-descriptors.ndjson.gz"
-        b1, b2 = f1.read_bytes(), f2.read_bytes()
-        assert b1 == b2 and len(b1) > 0
-        lines = [l for l in _gz.decompress(b1).decode().splitlines() if l]
-        assert len(lines) == 2 == m1["counts"]["variation-descriptors.ndjson.gz"]
-        import json as _json
-
-        recs = [_json.loads(l) for l in lines]
-        # sorted by entity key; snapshot partition column not exported
-        assert [r["is_version_of"] for r in recs] == ["urn:v1", "urn:v3"]
-        assert all("snapshot" not in r for r in recs)
-        assert m1["files"] == ["variation-descriptors.ndjson.gz"]
-        # multi-shard output is still one valid gzip stream, same rows
-        SE.write_snapshots(
-            store, datasets, str(tmp_path / "o3"), "snapshots/v7", shards=3
-        )
-        b3 = (tmp_path / "o3" / "snapshots/v7" / "variation-descriptors.ndjson.gz").read_bytes()
-        assert _gz.decompress(b3) == _gz.decompress(b1)
-
-    def test_compression_runs_in_executors_not_driver(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """The driver stage of a non-empty export is concat-only: patch
-        gzip.GzipFile to raise IN THE DRIVER PROCESS (executor workers
-        import their own unpatched module copy) — the export must still
-        succeed, and its bytes must equal the former driver-side
-        compressor's output (one mtime=0 level-6 member per non-empty
-        shard, concatenated in shard order)."""
-        import gzip as _gz
-        import io
-
-        from genegraph_spark.plans import snapshot_export as SE
-
-        store = self._store(spark, tmp_path)
-        datasets = [
-            {"output_basename": "variation-descriptors.ndjson",
-             "entity_type": "variation"}
-        ]
-
-        def _boom(*a, **k):
-            raise AssertionError(
-                "driver-side gzip.GzipFile called for a NON-EMPTY export"
-            )
-
-        monkeypatch.setattr(SE.gzip, "GzipFile", _boom)
-        m = SE.write_snapshots(
-            store, datasets, str(tmp_path / "oe"), "snapshots/vX", shards=2
-        )
-        monkeypatch.undo()
-        assert m["counts"]["variation-descriptors.ndjson.gz"] == 2
-        got = (
-            tmp_path / "oe" / "snapshots/vX" / "variation-descriptors.ndjson.gz"
-        ).read_bytes()
-
-        # former writer, reproduced: gzip each sorted shard's text bytes
-        # on one thread (member per shard, mtime=0, level 6)
-        docs = SE.latest_versions(store.read("variation"))
-        lines = SE._ndjson_lines(docs, "is_version_of")
-        shards = (
-            lines.repartitionByRange(2, "_k")
-            .sortWithinPartitions("_k", "line")
-            .select("line")
-        )
-        want = io.BytesIO()
-        for part in shards.rdd.glom().collect():
-            if not part:
-                continue
-            with _gz.GzipFile(
-                fileobj=want, mode="wb", mtime=0, compresslevel=6
-            ) as z:
-                z.write(("\n".join(r["line"] for r in part) + "\n").encode())
-        assert got == want.getvalue()
-
-    def test_zero_row_export_is_valid_gzip(self, spark, tmp_path):
-        import gzip as _gz
-
-        from genegraph_spark.plans import snapshot_export as SE
-
-        store = self._store(spark, tmp_path)
-        m = SE.write_snapshots(
-            store,
-            [{"output_basename": "variation-descriptors.ndjson",
-              "entity_type": "variation"}],
-            str(tmp_path / "empty"),
-            "snapshots/v9",
-            until="1900-01-01",  # predates every version → zero rows
-        )
-        assert m["counts"]["variation-descriptors.ndjson.gz"] == 0
-        b = (
-            tmp_path / "empty" / "snapshots/v9" /
-            "variation-descriptors.ndjson.gz"
-        ).read_bytes()
-        assert len(b) > 0 and _gz.decompress(b) == b""  # valid empty gzip
-
-    def test_publish_and_delimiter_join(self, spark, tmp_path):
-        from genegraph_spark.plans import snapshot_export as SE
-
-        assert SE.join_dedup_delimiters("/", ["a/", "/b", "c"]) == "a/b/c"
-        assert SE.join_dedup_delimiters("/", ["/a/", "b/"]) == "/a/b/"
-        assert SE.join_dedup_delimiters("/", ["a"]) == "a"
-        store = self._store(spark, tmp_path)
-        m = SE.write_snapshots(
-            store,
-            [{"output_basename": "variation-descriptors.ndjson",
-              "entity_type": "variation"}],
-            str(tmp_path / "out"),
-            "snapshots/v8/",  # trailing slash must not double
-        )
-        rels = SE.publish_snapshots(m, str(tmp_path / "bucket"))
-        assert rels == [
-            "snapshots/v8/variation-descriptors.ndjson.gz",
-            "snapshots/v8/manifest.json",
-        ]
-        for rel in rels:
-            assert (tmp_path / "bucket" / rel).exists()

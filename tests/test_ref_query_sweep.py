@@ -542,9 +542,10 @@ class TestAlgebraDataForms:
     query/algebra.clj op) — the way the whole curation resolver tier
     builds its queries. The reference's actual data forms
     (common/curation.clj) transliterated 1:1 (Clojure symbols → ?vars)
-    and executed through algebra.op/data_query: the per-activity ASK
-    patterns, the :project BGP queries, disease-list's three-way
-    :union, and the count mode."""
+    and executed through algebra.op (with algebra.ask / algebra.count
+    for the ASK and count modes): the per-activity ASK patterns, the
+    :project BGP queries, disease-list's three-way :union, and the
+    count mode."""
 
     GV_BGP = [
         ["?validity_proposition", ":sepio/has-subject", "?gene"],
@@ -609,11 +610,8 @@ class TestAlgebraDataForms:
             (self.DOSAGE_DISEASE_BGP, "urn:geneH", False),
             (self.GV_BGP, "urn:geneZ", False),
         ]:
-            got = A.data_query(
-                curation_graph,
-                [":bgp", *bgp_form],
-                params={"gene": gene},
-                mode="ask",
+            got = A.ask(
+                A.op(curation_graph, [":bgp", *bgp_form], params={"gene": gene})
             )
             assert got is expect, (bgp_form[0], gene)
 
@@ -649,13 +647,13 @@ class TestAlgebraDataForms:
         # once despite matching all three branches
         out = sorted(r.disease for r in A.op(curation_graph, form).collect())
         assert out == ["urn:diseaseD", "urn:diseaseE"]
-        assert A.data_query(curation_graph, form, mode="count") == 2
+        assert A.count(A.op(curation_graph, form)) == 2
         # ::q/distinct false opt-out → bag semantics (3× via the union)
         bag = sorted(
             r.disease for r in A.op(curation_graph, form, distinct=False).collect()
         )
         assert bag == ["urn:diseaseD", "urn:diseaseD", "urn:diseaseD", "urn:diseaseE"]
-        assert A.data_query(curation_graph, form, mode="count", distinct=False) == 4
+        assert A.count(A.op(curation_graph, form, distinct=False)) == 4
 
 
 class TestActionabilityTransitional:

@@ -111,15 +111,15 @@ class TestConnectedComponentsLogRounds:
         assert all(r[1] - r[0] == 100000 or r[0] < r[1] for r in lsh)
 
     def test_cc_unconverged_raises(self, spark, monkeypatch):
-        from genegraph_spark.operators import algebra
-        from genegraph_spark.operators.canonicalize import connected_components
+        from genegraph_spark.operators import algebra, canonicalize
 
         monkeypatch.setattr(algebra, "LOCAL_ROWS", 0)
+        monkeypatch.setattr(canonicalize, "CC_ROUNDS", 1)
         df = spark.createDataFrame(
             [(f"a{i}", f"a{i+1}") for i in range(40)], "src string, dst string"
         )
         with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(df, max_iter=1)
+            canonicalize.connected_components(df)
 
 
 class TestShapeRegistry:

@@ -303,72 +303,6 @@ class TestIvfDriftTelemetry:
 
 
 # ---------------------------------------------------------------------------
-# Store-diff-driven cache invalidation
-# ---------------------------------------------------------------------------
-
-
-class TestCacheInvalidation:
-    @pytest.fixture()
-    def store2(self, spark, tmp_path):
-        """A store with two commits: commit 1 rewrites graph g1 (entity
-        urn:e1 dropped, urn:e3 added) and leaves g2 untouched."""
-        from genegraph_spark.sinks.named_graph import TRIPLE_SCHEMA, NamedGraphStore
-
-        store = NamedGraphStore(spark, str(tmp_path / "store"), n_buckets=4)
-        v1 = spark.createDataFrame(
-            [
-                ("g1", "urn:s1", ":mentions", "urn:e1", True, None),
-                ("g1", "urn:s1", ":lang", "en", False, None),
-                ("g2", "urn:s2", ":mentions", "urn:e2", True, None),
-            ],
-            TRIPLE_SCHEMA,
-        )
-        store.merge(v1)
-        v2_g1 = spark.createDataFrame(
-            [("g1", "urn:s1", ":mentions", "urn:e3", True, None)], TRIPLE_SCHEMA
-        )
-        store.merge(v2_g1)
-        return store
-
-    def test_changed_resources_is_diff_scoped(self, spark, store2):
-        from genegraph_spark.plans.invalidation import changed_resources
-
-        got = {r.resource for r in changed_resources(store2, 0, 1).collect()}
-        # g1's resources across both versions; nothing from untouched g2
-        assert got == {"g1", "urn:s1", "urn:e1", "urn:e3"}
-
-    def test_resolver_cache_modes(self, spark, store2):
-        from genegraph_spark.plans.invalidation import ResolverCache
-
-        c = ResolverCache()
-        c.register("statistics", mode="always")
-        c.register("entity_card", mode="by_entity")
-        c.register("prefix_table", mode="never")
-        c.put("statistics", "_", {"n": 3})
-        c.put("entity_card", "urn:e1", {"label": "E1"})
-        c.put("entity_card", "urn:e2", {"label": "E2"})
-        c.put("prefix_table", "_", {"kgp": "..."})
-        out = c.expire_for_commit(store2, 0, 1)
-        assert out["dropped"] == 2  # statistics + urn:e1 card
-        assert c.get("statistics", "_") is None
-        assert c.get("entity_card", "urn:e1") is None
-        assert c.get("entity_card", "urn:e2") == {"label": "E2"}  # untouched
-        assert c.get("prefix_table", "_") == {"kgp": "..."}
-        with pytest.raises(KeyError):
-            c.get("unregistered", "x")
-
-    def test_response_cache_clears_on_new_commit(self):
-        from genegraph_spark.plans.invalidation import ResponseCache
-
-        rc = ResponseCache()
-        rc.put("query A", "resp@0", current_commit=0)
-        assert rc.get("query A", current_commit=0) == "resp@0"
-        assert rc.get("query A", current_commit=1) is None  # cleared
-        rc.put("query A", "resp@1", current_commit=1)
-        assert rc.get("query A", current_commit=1) == "resp@1"
-
-
-# ---------------------------------------------------------------------------
 # Substring-level duplicate spans
 # ---------------------------------------------------------------------------
 
@@ -513,42 +447,3 @@ class TestRound4PlanShapes:
         total = out.agg(F.round(F.sum("rank"), 2)).collect()[0][0]
         # dangling-mass-leaking variant: total <= 1, > teleport floor
         assert 0.1 < total <= 1.001
-
-
-# ---------------------------------------------------------------------------
-# Binary transport docs (RDF-Thrift role)
-# ---------------------------------------------------------------------------
-
-
-class TestBinaryDocs:
-    def test_round_trip_and_determinism(self, spark):
-        from genegraph_spark.functions import serialize as SER
-
-        rows = [
-            ("g1", "urn:s", ":p", "v " * 200, False, None),
-            ("g1", "urn:s", ":q", "urn:o", True, None),
-            ("g2", "urn:z", ":p", "x", False, "xsd:string"),
-        ]
-        t = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-        docs = SER.binary_docs(t)
-        got = docs.collect()
-        assert len(got) == 2
-        # compression actually compresses the repetitive doc
-        doc_len = len(
-            SER.graph_documents(t).where("graph = 'g1'").collect()[0].doc
-        )
-        blob_len = len([r for r in got if r.graph == "g1"][0].blob)
-        assert blob_len < doc_len / 2
-        # byte determinism across partitionings
-        other = SER.binary_docs(
-            spark.createDataFrame(list(reversed(rows)), TRIPLE_SCHEMA).repartition(7)
-        ).collect()
-        assert {r.graph: bytes(r.blob) for r in got} == {
-            r.graph: bytes(r.blob) for r in other
-        }
-        # round trip
-        back = SER.parse_binary_docs(docs)
-        orig = {tuple(r) for r in t.collect()}
-        # parse_documents round-trips datatype '' -> null like the JSON path
-        got_back = {tuple(r) for r in back.select(*t.columns).collect()}
-        assert got_back == orig

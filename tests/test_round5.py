@@ -1601,44 +1601,6 @@ class TestGciMisc:
         chars = [r for r in ro if r.predicate == ":cnt/chars"]
         assert chars[0].object == '{"s":1}' and not chars[0].object_is_iri
 
-    def test_legacy_report_only_gate_and_animal_model(self, spark):
-        from genegraph_spark.sources import gci_misc as GM
-
-        reports = spark.createDataFrame(
-            [("r1", '{"iri":"r1"}', "true"),
-             ("r2", '{"iri":"r2"}', None),
-             (None, '{"noiri":1}', "false")],
-            "id string, payload string, animal_model string",
-        )
-        out = GM.gci_legacy_report_only_triples(reports).collect()
-        by_graph = {}
-        for r in out:
-            by_graph.setdefault(r.graph, []).append(r)
-        # the spec gate drops the iri-less row entirely
-        assert len(by_graph) == 2
-        g1 = by_graph["http://dataexchange.clinicalgenome.org/gci/r1_report"]
-        g2 = by_graph["http://dataexchange.clinicalgenome.org/gci/r2_report"]
-        # animal-model triple only where the flag is present
-        assert any(r.predicate == ":cg/is-animal-model-only" for r in g1)
-        assert not any(r.predicate == ":cg/is-animal-model-only" for r in g2)
-        # the content node keeps the ORIGINAL payload bytes
-        assert [r.object for r in g1 if r.predicate == ":cnt/chars"] == [
-            '{"iri":"r1"}'
-        ]
-
-    def test_gdi_stub(self, spark):
-        from genegraph_spark.sources import gci_misc as GM
-
-        docs = spark.createDataFrame([("urn:gdi1",)], "report_id string")
-        out = {(r.subject, r.predicate, r.object)
-               for r in GM.gdi_report_triples(docs).collect()}
-        assert ("urn:gdi1", "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
-                ":sepio/GeneValidityReport") in out
-        assert ("urn:gdi1", ":bfo/has-part", "/assertionurn:gdi1") in out
-        assert ("/assertionurn:gdi1",
-                "http://www.w3.org/1999/02/22-rdf-syntax-ns#type",
-                ":sepio/GeneValidityEvidenceLevelAssertion") in out
-
     def test_submitter_extensions(self, spark):
         from genegraph_spark.sources import gci_misc as GM
 

@@ -270,6 +270,15 @@ class TestCompiler:
         ).collect()
         assert [r.n for r in out] == ["bob", "alice"]
 
+    def test_offset_without_limit(self, spark, graph):
+        out = S.sparql(
+            graph, "SELECT ?x WHERE { ?x :name ?n } ORDER BY ?x OFFSET 1"
+        ).collect()
+        assert [r.x for r in out] == ["urn:b", "urn:c"]
+        # no ORDER BY: which rows are skipped is unspecified, how many is not
+        assert S.sparql(graph, "SELECT ?x WHERE { ?x :name ?n } OFFSET 1").count() == 2
+        assert S.sparql(graph, "SELECT ?x WHERE { ?x :name ?n } LIMIT 1 OFFSET 1").count() == 1
+
     def test_prebound_params(self, spark, graph):
         out = S.sparql(
             graph,
