@@ -1175,7 +1175,7 @@ def q_graph_comention_pmi(spark, sf_dir):
 def q_join_salted_topk(spark, sf_dir):
     # head-heavy entity skew (north-star BRCA1-class hot keys): half of
     # all events map to ONE hot entity; salted_top_k spreads that key's
-    # sort over n_salts tasks and must be row-identical to the direct
+    # sort over N_SALTS tasks and must be row-identical to the direct
     # window (the oracle computes the direct window)
     from genegraph_spark.operators.skew import salted_top_k
 

@@ -137,7 +137,7 @@ def scaling_worker(cores: int) -> None:
     os.environ["SPARK_GRAFT_CPUS"] = str(cores)
     from genegraph_spark.session import get_spark
 
-    spark = get_spark(f"bench_scale_{cores}", master=f"local[{cores}]", shuffle_partitions=cores)
+    spark = get_spark(f"bench_scale_{cores}", master=f"local[{cores}]")
     pages_dir = f"/dev/shm/gg_bench_pages_{SCALE_REPL}x{SCALE_FILES}"
     if not os.path.exists(pages_dir + "/_SUCCESS"):
         materialize_pages(spark, SF_DIR, SCALE_REPL, pages_dir)  # untimed input prep

@@ -73,9 +73,6 @@ ENTITIES: list[tuple[str, str, str, list[str], list[str], list[str]]] = [
     (f"{KG}/entity/QUERYOSIS", "disease", "queryosis", [], ["query"], [f"{KG}/xref/D105"]),
 ]
 
-# words never linked (stopword analog)
-STOPWORDS = ["a", "the", "data", "line", "table", "order", "part", "customer", "group", "agg"]
-
 # Disease hierarchy (child, parent) — skos:broader edges. The reference's
 # disease-descendant resolvers walk a MONDO ``rdfs:subClassOf*`` tree
 # (``src/genegraph/source/graphql/common/curation.clj:303-314``); no
@@ -322,11 +319,10 @@ def _html_col():
     return F.encode(html_str, "UTF-8")
 
 
-def pages_sql(with_html: bool = False) -> str:
+def pages_sql() -> str:
     """DuckDB CTE body producing the same pages rows (sans html) from the
     pre-registered ``documents`` view. Golden side of the extraction check.
     """
-    assert not with_html, "oracle never needs html"
     base = (
         "SELECT 'https://ex' || CAST(doc_id % 97 AS VARCHAR) || '.example.org/p/' || CAST(doc_id AS VARCHAR) AS url, "
         "TIMESTAMP '{epoch}' + INTERVAL ({day}) DAY + to_seconds(CAST(doc_id AS BIGINT)) AS warc_ts, "

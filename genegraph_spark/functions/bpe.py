@@ -40,16 +40,11 @@ END_OF_WORD = "</w>"
 SEP = "  "  # double-space symbol boundary (see module docstring)
 
 
-def word_counts(
-    df: DataFrame, text_col: str = "text", lowercase: bool = True,
-) -> DataFrame:
+def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One corpus pass → (word, n). Whitespace pre-tokenization (the
-    repo-wide portable convention); empty tokens drop."""
-    tok = F.explode(F.split(F.col(text_col), r"\s+")).alias("word")
-    out = df.select(tok).where(F.col("word") != "")
-    if lowercase:
-        out = out.select(F.lower(F.col("word")).alias("word"))
-    return out.groupBy("word").agg(F.count("*").alias("n"))
+    repo-wide portable convention), lowercased; empty tokens drop."""
+    tok = F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word")
+    return df.select(tok).where(F.col("word") != "").groupBy("word").agg(F.count("*").alias("n"))
 
 
 def symbolize(words: DataFrame) -> DataFrame:
@@ -92,15 +87,12 @@ def _apply_merge(seq: Column, a: str, b: str) -> Column:
     return F.trim(merged)
 
 
-def bpe_merges(
-    df: DataFrame, n_merges: int, text_col: str = "text",
-    lowercase: bool = True,
-) -> DataFrame:
+def bpe_merges(df: DataFrame, n_merges: int, text_col: str = "text") -> DataFrame:
     """Learn ``n_merges`` BPE merges; returns the ordered merge table
     (rank, left, right, merged, pair_count) — the artifact a tokenizer
     ships. The corpus is read once; each iteration is vocab-scale."""
     spark = df.sparkSession
-    seqs = symbolize(word_counts(df, text_col, lowercase))
+    seqs = symbolize(word_counts(df, text_col))
     # the loop re-reads seqs once per iteration — pin the (vocab-scale)
     # frame and cut lineage so iteration i doesn't replay 0..i-1
     seqs = seqs.localCheckpoint(eager=True)

@@ -40,7 +40,6 @@ IS_REPLACED_BY = _PREFIX_MAP["dc"] + "isReplacedBy"
 P_MENTIONS = _PREFIX_MAP["kgp"] + "mentions"
 P_HAS_MENTION = _PREFIX_MAP["kgp"] + "hasMention"
 P_POSITION = _PREFIX_MAP["kgp"] + "position"
-P_SURFACE = _PREFIX_MAP["kgp"] + "surfaceForm"
 P_CANONICAL = _PREFIX_MAP["kgp"] + "canonicalEntity"
 P_LANG = _PREFIX_MAP["kgp"] + "language"
 C_WEBPAGE = _PREFIX_MAP["kgp"] + "WebPage"

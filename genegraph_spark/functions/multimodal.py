@@ -19,9 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, mime string, width int, height int"
-)
 FEATURE_DIM = 8
 DECODED_SCHEMA = f"media_id long, kind string, n_bytes int, feature array<float>"
 

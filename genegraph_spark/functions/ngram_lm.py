@@ -34,24 +34,20 @@ BOS = "<s>"  # sentence/document start token
 BACKOFF = 0.4  # Brants et al.'s fixed backoff weight
 
 
-def _tokens(text_col: str, lowercase: bool) -> Column:
+def _tokens(text_col: str) -> Column:
     # the literal BOS marker is RESERVED: a corpus token spelled '<s>'
     # would otherwise collide with the synthetic context row and
     # double-join every document's first bigram
     t = F.split(F.col(text_col), r"\s+")
     t = F.filter(t, lambda x: (x != "") & (x != BOS))
-    if lowercase:
-        t = F.transform(t, F.lower)
-    return t
+    return F.transform(t, F.lower)
 
 
-def train_bigram_lm(
-    df: DataFrame, text_col: str = "text", lowercase: bool = True,
-) -> tuple[DataFrame, DataFrame]:
+def train_bigram_lm(df: DataFrame, text_col: str = "text") -> tuple[DataFrame, DataFrame]:
     """(unigrams, bigrams) count tables from one tokenized pass.
     Unigrams: (w, c). Bigrams: (a, b, c) with a BOS predecessor for
     each document's first token."""
-    toks = df.select(_tokens(text_col, lowercase).alias("t")).where(
+    toks = df.select(_tokens(text_col).alias("t")).where(
         F.size("t") > 0
     )
     uni = (
@@ -78,7 +74,6 @@ def train_bigram_lm(
 def score_documents(
     df: DataFrame, uni: DataFrame, bi: DataFrame,
     id_col: str = "doc_id", text_col: str = "text",
-    lowercase: bool = True,
 ) -> DataFrame:
     """Per document: integer LM-fit diagnostics + the stupid-backoff
     average log-score.
@@ -91,7 +86,7 @@ def score_documents(
     # total unigram mass for the backoff denominator (one scalar)
     total = uni.agg(F.sum("c").alias("_N"))
     toks = df.select(
-        F.col(id_col), _tokens(text_col, lowercase).alias("t")
+        F.col(id_col), _tokens(text_col).alias("t")
     ).where(F.size("t") > 0)
     with_bos = toks.select(
         id_col, F.concat(F.array(F.lit(BOS)), F.col("t")).alias("t")

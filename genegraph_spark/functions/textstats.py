@@ -40,11 +40,11 @@ def distinct_token_ratio(text: Column) -> Column:
     )
 
 
-def lang_id_en(text: Column, threshold: float = 0.05) -> Column:
+def lang_id_en(text: Column) -> Column:
     """N-gram-free heuristic language ID: 'en' when the English stopword
-    ratio clears the threshold, else 'unknown'. (A real model plugs in
+    ratio is at least 0.05, else 'unknown'. (A real model plugs in
     here; the pipeline contract is a deterministic string column.)"""
-    return F.when(stopword_ratio(text) >= threshold, F.lit("en")).otherwise(F.lit("unknown"))
+    return F.when(stopword_ratio(text) >= 0.05, F.lit("en")).otherwise(F.lit("unknown"))
 
 
 def quality_score(text: Column) -> Column:
@@ -154,14 +154,12 @@ def corpus_filter(
     df,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_tokens: int = 20,
-    min_quality: float = 0.75,
-    max_top_bigram: float = 0.2,
-    max_dup_trigram: float = 0.2,
 ):
     """The composed training-data curation pass: every document scored on
     length / quality / language / repetition / exact duplication in one
-    plan, returning keep/drop with machine-readable reasons — the filter
+    plan, returning keep/drop with machine-readable reasons (fewer than
+    20 tokens, quality below 0.75, non-English, top-bigram or
+    duplicate-trigram fraction above 0.2) — the filter
     chain a Common-Crawl-style pipeline runs before dedup+training
     (C4/Gopher-style rule filtering, all public heuristics).
 
@@ -193,11 +191,11 @@ def corpus_filter(
     reasons = F.array_sort(
         F.filter(
             F.array(
-                F.when(F.col("n_tokens") < min_tokens, F.lit("too_short")),
-                F.when(F.col("quality") < min_quality, F.lit("low_quality")),
+                F.when(F.col("n_tokens") < 20, F.lit("too_short")),
+                F.when(F.col("quality") < 0.75, F.lit("low_quality")),
                 F.when(F.col("lang_guess") != "en", F.lit("non_english")),
-                F.when(F.col("top_bigram_frac") > max_top_bigram, F.lit("repetitive_bigram")),
-                F.when(F.col("dup_trigram_frac") > max_dup_trigram, F.lit("repetitive_trigram")),
+                F.when(F.col("top_bigram_frac") > 0.2, F.lit("repetitive_bigram")),
+                F.when(F.col("dup_trigram_frac") > 0.2, F.lit("repetitive_trigram")),
                 F.when(F.col("doc_id") != F.col("_keep_id"), F.lit("exact_dup")),
             ),
             lambda x: x.isNotNull(),
@@ -251,28 +249,25 @@ def pii_counts(text: Column) -> Column:
     return F.struct(*counts)
 
 
-def split_assign(
-    id_col: Column,
-    salt: str = "split-v1",
-    train_pct: int = 90,
-    val_pct: int = 5,
-) -> Column:
-    """Deterministic train/val/test assignment: md5(id||salt) → bucket in
-    [0,100) → split label. The standard reproducible dataset-split
-    discipline — assignment is a pure function of the id and a versioned
-    salt, so it is stable across runs/engines/partitionings, documents
-    never migrate between splits when the corpus grows, and changing the
-    salt re-rolls every assignment at once. No sampling RNG anywhere
+def split_assign(id_col: Column) -> Column:
+    """Deterministic 90/5/5 train/val/test assignment: md5(id||salt) →
+    bucket in [0,100) → split label. The standard reproducible
+    dataset-split discipline — assignment is a pure function of the id
+    and the versioned salt "split-v1", so it is stable across
+    runs/engines/partitionings and documents never migrate between
+    splits when the corpus grows. No sampling RNG anywhere
     (Spark's sample() is partitioning-dependent — useless as an oracle
     or an audit trail)."""
     bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.concat(id_col.cast("string"), F.lit(salt))), 1, 8), 16, 10)
+        F.conv(
+            F.substring(F.md5(F.concat(id_col.cast("string"), F.lit("split-v1"))), 1, 8), 16, 10
+        )
         .cast("bigint"),
         F.lit(100),
     )
     return (
-        F.when(bucket < train_pct, "train")
-        .when(bucket < train_pct + val_pct, "val")
+        F.when(bucket < 90, "train")
+        .when(bucket < 95, "val")
         .otherwise("test")
     )
 
@@ -328,10 +323,9 @@ def domain_mix_sample(
     default_rate: float = 0.0,
     domain_col: str = "source",
     id_col: str = "doc_id",
-    salt: str = "mix",
 ) -> DataFrame:
     """Deterministic per-domain downsampling to a target mixture: keep a
-    document iff its md5(id‖salt) bucket falls under its domain's rate —
+    document iff its md5(id‖"|mix") bucket falls under its domain's rate —
     the domain-reweighting step that turns a raw crawl into a training
     mixture (per-source sampling weights).
 
@@ -341,7 +335,7 @@ def domain_mix_sample(
     division). The rate table is a literal CASE chain — no join, fully
     codegen'd; one filter pass over the corpus."""
     bucket = F.conv(
-        F.substring(F.md5(F.concat(F.col(id_col).cast("string"), F.lit("|" + salt))), 1, 8),
+        F.substring(F.md5(F.concat(F.col(id_col).cast("string"), F.lit("|mix"))), 1, 8),
         16,
         10,
     ).cast("bigint")
@@ -485,7 +479,6 @@ def boilerplate_lines(
     docs,
     domain_col: str = "domain",
     text_col: str = "text",
-    sep: str = "\n",
     min_ratio: float = 0.5,
     min_docs: int = 3,
 ):
@@ -503,7 +496,7 @@ def boilerplate_lines(
     lines = docs.select(
         dom.alias("domain"),
         F.col("doc_id"),
-        F.explode(F.split(txt, F.lit(sep), -1)).alias("line"),
+        F.explode(F.split(txt, F.lit("\n"), -1)).alias("line"),
     ).where(F.col("line") != "")
     per_line = lines.groupBy("domain", "line").agg(
         F.countDistinct("doc_id").alias("n_docs")
@@ -522,7 +515,6 @@ def strip_boilerplate(
     docs,
     domain_col: str = "domain",
     text_col: str = "text",
-    sep: str = "\n",
     min_ratio: float = 0.5,
     min_docs: int = 3,
 ):
@@ -535,12 +527,12 @@ def strip_boilerplate(
     (domain, line) left-anti join back (co-keyed with the detection
     output — no broadcast of a possibly-large boilerplate set), one
     doc_id groupBy with an in-group sort for reassembly."""
-    bl = boilerplate_lines(docs, domain_col, text_col, sep, min_ratio, min_docs)
+    bl = boilerplate_lines(docs, domain_col, text_col, min_ratio, min_docs)
     dom, txt = F.col(domain_col), F.col(text_col)
     pos_lines = docs.select(
         F.col("doc_id"),
         dom.alias("domain"),
-        F.posexplode(F.split(txt, F.lit(sep), -1)).alias("pos", "line"),
+        F.posexplode(F.split(txt, F.lit("\n"), -1)).alias("pos", "line"),
     ).where(F.col("line") != "")
     kept = pos_lines.join(
         bl.select("domain", "line"), ["domain", "line"], "left_anti"
@@ -551,7 +543,7 @@ def strip_boilerplate(
                 F.array_sort(F.collect_list(F.struct("pos", "line"))),
                 lambda s: s["line"],
             ),
-            sep,
+            "\n",
         ).alias("clean_text")
     )
     return (
@@ -592,9 +584,8 @@ def vocabulary(
     df,
     text_col: str = "text",
     min_count: int = 1,
-    lowercase: bool = True,
 ):
-    """Frequency-ranked vocabulary (tokenizer prep): whitespace tokens →
+    """Frequency-ranked vocabulary (tokenizer prep): lowercased whitespace tokens →
     (token, count, rank), rank 1 = most frequent, ties broken
     lexically so the id assignment is deterministic across runs and
     engines.
@@ -609,11 +600,8 @@ def vocabulary(
     where the sampled range boundaries fall."""
     from ..operators.ranking import global_row_number
 
-    txt = F.col(text_col)
-    if lowercase:
-        txt = F.lower(txt)
     tokens = df.select(
-        F.explode(F.split(txt, r"\s+", -1)).alias("token")
+        F.explode(F.split(F.lower(F.col(text_col)), r"\s+", -1)).alias("token")
     ).where(F.col("token") != "")
     counts = tokens.groupBy("token").agg(F.count("*").alias("count")).where(
         F.col("count") >= min_count

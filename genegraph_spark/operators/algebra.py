@@ -198,19 +198,10 @@ def count(df: DataFrame) -> int:
     return df.count()
 
 
-def bind_params(df: DataFrame, **params) -> DataFrame:
-    """Pre-bound query variables (QuerySolutionMap, resource.clj:86-92):
-    filter the bindings on constants."""
-    for k, v in params.items():
-        df = df.where(F.col(k.lstrip("?")) == v)
-    return df
-
-
 def values(df: DataFrame, rows: list[dict]) -> DataFrame:
     """SPARQL VALUES: join the solution sequence against an inline
     binding table (multi-variable, possibly partial rows — a UNDEF value
-    is an absent key and constrains nothing on that row). Differs from
-    :func:`bind_params` (single conjunctive constants): VALUES expresses
+    is an absent key and constrains nothing on that row). VALUES expresses
     a DISJUNCTION of binding tuples, compiled to a broadcast inner join
     — rows with UNDEF columns join on their defined columns only, so the
     result is the union of per-row matches, bag-semantics preserved."""
@@ -643,12 +634,7 @@ def compatible_join(
 # Algebra data forms — create-query on collection input
 # ---------------------------------------------------------------------------
 
-def op(
-    triples: DataFrame,
-    form,
-    params: dict | None = None,
-    distinct: bool = True,
-) -> DataFrame:
+def op(triples: DataFrame, form) -> DataFrame:
     """Compile a Clojure-style algebra DATA FORM to a bindings frame —
     the collection branch of the reference's ``create-query``
     (``query/resource.clj:228-229`` feeds it through
@@ -661,9 +647,7 @@ def op(
     head is the op keyword STRING (":project", ":bgp", ...); a ``:bgp``
     holds 3-element triples where Clojure SYMBOLS (variables) become
     ``?var`` strings and keywords/IRIs stay as-is (the module's scan
-    conventions). ``params`` pre-binds variables to constants BEFORE
-    compilation (QuerySolutionMap analog) so the constant reaches the
-    triple scans as a pushed filter rather than a post-hoc filter.
+    conventions).
 
     Op coverage mirrors algebra.clj: :bgp :project :distinct :reduced
     :join :sequence :conditional :union :disjunction :minus :diff
@@ -673,24 +657,11 @@ def op(
     passes a1 for both the sub-op and the offset (a latent bug there);
     this follows the documented OpSlice(sub, start, length) contract.
 
-    ``distinct`` mirrors ``::q/distinct`` (resource.clj:236-238):
-    ``create-query`` defaults it to TRUE and calls ``.setDistinct`` on
-    every non-ASK query, so reference data-form queries return SET
-    semantics unless the caller passes ``::q/distinct false`` —
-    pass ``distinct=False`` here for the same opt-out (bag semantics).
+    The result has SET semantics, like ``create-query``'s default
+    ``::q/distinct true`` (resource.clj:236-238), which calls
+    ``.setDistinct`` on every non-ASK query.
     """
-    if params:
-        form = _subst_form(form, {"?" + k.lstrip("?"): v for k, v in params.items()})
-    out = _op(triples, form)
-    return out.distinct() if distinct else out
-
-
-def _subst_form(form, mapping: dict):
-    if isinstance(form, str):
-        return mapping.get(form, form)
-    if isinstance(form, (list, tuple)):
-        return [_subst_form(x, mapping) for x in form]
-    return form
+    return _op(triples, form).distinct()
 
 
 def _op(triples: DataFrame, form) -> DataFrame:

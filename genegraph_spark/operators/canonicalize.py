@@ -1,5 +1,4 @@
-"""Entity canonicalization: connected components over same-as edges, with
-MinHash-LSH blocking for surface-form matching at scale.
+"""Entity canonicalization: connected components over same-as edges.
 
 Reference analog: genegraph's fixpoint traversal (transitive
 ``rdfs:subClassOf*`` property paths,
@@ -7,8 +6,8 @@ Reference analog: genegraph's fixpoint traversal (transitive
 external VRS normalizer + cache
 (``src/genegraph/transform/clinvar/cancervariants.clj:59-151``), replaced
 per the north rule by a deterministic local canonicalizer: same-as xref
-edges (``owl:sameAs``) union surface-form near-match edges → iterative
-join to fixpoint → canonical IRI = min entity IRI per component.
+edges (``owl:sameAs``) → iterative join to fixpoint → canonical IRI =
+min entity IRI per component.
 
 Scale notes: the distributed path is the alternating "large-star /
 small-star" contraction (Kiveris et al., "Connected Components in
@@ -42,7 +41,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    stats: dict | None = None,
 ) -> DataFrame:
     """Connected components. Returns (node, component) where ``component``
     is the lexicographic min node id in the component — fully
@@ -55,14 +53,9 @@ def connected_components(
     union-found on the driver in one pass; the output is bounded by the
     node count, so the input edge count budgets the driver. Bigger graphs
     take the distributed alternating-star contraction (module
-    docstring). Same result either way. ``stats`` (optional dict) is
-    filled with {"path", "rounds"} so tests can assert the logarithmic
-    round bound."""
-    if stats is None:
-        stats = {}
+    docstring). Same result either way."""
     probe = edges.select(src, dst).limit(A.LOCAL_ROWS + 1).collect()
     if len(probe) <= A.LOCAL_ROWS:
-        stats.update(path="local", rounds=0)
         rows = probe
         parent: dict[str, str] = {}
 
@@ -110,7 +103,7 @@ def connected_components(
     )
     prev_cnt = e.count()
     converged = False
-    for rnd in range(1, CC_ROUNDS + 1):
+    for _ in range(CC_ROUNDS):
         # large-star: every node u links its strictly-larger neighbors to
         # min(Γ(u) ∪ {u}); halves long chains by skipping over u.
         nbrs = e.select("u", "v").union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -139,7 +132,6 @@ def connected_components(
         # fixpoint ⟺ same edge SET: equal size + empty one-way difference
         if cnt == prev_cnt and small.exceptAll(e).limit(1).count() == 0:
             e = small
-            stats.update(path="distributed", rounds=rnd)
             converged = True
             break
         e, prev_cnt = small, cnt
@@ -155,76 +147,17 @@ def connected_components(
     ).select("node", F.coalesce("parent", "node").alias("component"))
 
 
-def surface_form_edges(
-    labels: DataFrame,
-    iri_col: str = "iri",
-    label_col: str = "label",
-    k: int = 3,
-    n_hashes: int = 16,
-    n_bands: int = 8,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Near-match edges between entities whose surface forms are
-    near-duplicates — the MinHash-LSH blocking half of canonicalization
-    (SURVEY §7 stage 4; replaces the reference's external VRS normalizer
-    lookups, cancervariants.clj:59-151, with a deterministic local
-    matcher).
-
-    Character-shingled labels → MinHash signatures → banded LSH buckets →
-    true-Jaccard verify ≥ threshold → (src, dst) entity edges. Feed the
-    union of these and the explicit same-as edges to
-    :func:`connected_components`. Scale: identical shape to
-    operators/dedup.py's document path — candidates come from bucket
-    joins, never all-pairs."""
-    from . import dedup as D
-
-    # one MinHash document per (iri, label) PAIR — pooling all of an
-    # entity's labels into one shingle set dilutes Jaccard (a shared
-    # surface form drowns under an unrelated synonym's shingles); the
-    # pair id carries the iri so edges project back after matching
-    # control-byte separator (cannot appear in IRIs), written as an
-    # escaped literal so the byte stays visible in diffs: an invisible
-    # raw \x01 here once rendered as sep = "" in review, and an empty
-    # delimiter would make substring_index return '' and silently drop
-    # every edge via the src != dst filter
-    sep = "\x01"
-    assert sep != ""
-    spaced = labels.select(
-        F.concat_ws(
-            sep, F.col(iri_col), F.md5(F.lower(F.col(label_col)))
-        ).alias("doc_id"),
-        F.concat_ws(" ", F.split(F.lower(F.col(label_col)), "")).alias("text"),
-    ).where(F.length("text") > 0).distinct()
-    pairs = D.minhash_near_duplicates(
-        spaced, id_col="doc_id", text_col="text", k=k,
-        n_hashes=n_hashes, n_bands=n_bands, threshold=threshold,
-    )
-    return (
-        pairs.select(
-            F.substring_index("id_a", sep, 1).alias("src"),
-            F.substring_index("id_b", sep, 1).alias("dst"),
-        )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
 def canonical_entity_map(
     dictionary: DataFrame,
     sameas: DataFrame,
-    surface_edges: DataFrame | None = None,
 ) -> DataFrame:
     """(iri, canonical_iri): canonical = min *entity* IRI per component.
 
     Singleton entities (no shared xref) map to themselves.
-    ``surface_edges``: optional (src, dst) near-match edges from
-    :func:`surface_form_edges`, unioned with the explicit same-as graph.
     Components come from :func:`connected_components`, solved on the
     driver when the edges fit in :data:`.algebra.LOCAL_ROWS`.
     """
     edges = sameas.select(F.col("iri").alias("src"), F.col("xref").alias("dst"))
-    if surface_edges is not None:
-        edges = edges.unionByName(surface_edges.select("src", "dst"))
     comps = connected_components(edges)
     entities = dictionary.select("iri").distinct()
     ent_comp = entities.join(comps, entities["iri"] == comps["node"], "left_outer").select(

@@ -271,16 +271,16 @@ def embedding_near_duplicates(
 
 # -- random-hyperplane (SimHash-for-vectors) LSH ------------------------------
 
-def hyperplane_weights(n_planes: int, dim: int, seed: str = "hp") -> list[list[int]]:
+def hyperplane_weights(n_planes: int, dim: int) -> list[list[int]]:
     """Deterministic integer hyperplane weights in [-1000, 1000], derived
-    from md5 of (seed, plane, dim index) — same discipline as every other
+    from md5 of ("hp", plane, dim index) — same discipline as every other
     hash in this module, so an independent engine (the DuckDB oracle)
     reproduces the planes exactly from the same literals."""
     import hashlib
 
     return [
         [
-            (int(hashlib.md5(f"{seed}:{p}:{i}".encode()).hexdigest()[:8], 16) % 2001)
+            (int(hashlib.md5(f"hp:{p}:{i}".encode()).hexdigest()[:8], 16) % 2001)
             - 1000
             for i in range(dim)
         ]
@@ -305,7 +305,6 @@ def hyperplane_lsh_buckets(
     dim: int = 64,
     n_planes: int = 12,
     n_bands: int = 3,
-    seed: str = "hp",
     carry: list[str] | None = None,
 ) -> DataFrame:
     """(id, band, bucket): banded random-hyperplane LSH assignment.
@@ -323,7 +322,7 @@ def hyperplane_lsh_buckets(
         f"n_bands={n_bands} must divide n_planes={n_planes} evenly"
     )
     per_band = n_planes // n_bands
-    w = hyperplane_weights(n_planes, dim, seed)
+    w = hyperplane_weights(n_planes, dim)
     q = _quantize_vec(vec_col)
     carry_cols = [c for c in (carry or []) if c != id_col]
     emb = emb.select(F.col(id_col), *[F.col(c) for c in carry_cols], q.alias("_q"))
@@ -364,7 +363,6 @@ def embedding_lsh_near_duplicates(
     n_planes: int = 12,
     n_bands: int = 3,
     threshold: float = 0.98,
-    seed: str = "hp",
 ) -> DataFrame:
     """Keyless embedding near-dup: random-hyperplane LSH buckets → bucket
     join candidates → exact-cosine verify ≥ threshold. The scale path when
@@ -398,7 +396,7 @@ def embedding_lsh_near_duplicates(
     # every rounded cosine is bit-identical to the inline form.
     emb = emb.withColumn("_gg_n", norm_expr(F.col(vec_col).cast("array<double>")))
     buckets = hyperplane_lsh_buckets(
-        emb, id_col, vec_col, dim, n_planes, n_bands, seed,
+        emb, id_col, vec_col, dim, n_planes, n_bands,
         carry=[vec_col, "_gg_n"],
     ).localCheckpoint(eager=False)
     a, b = buckets.alias("a"), buckets.alias("b")
@@ -717,7 +715,6 @@ class MinhashIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
         threshold: float = 0.5,
-        include_batch: bool = True,
     ) -> DataFrame:
         """Near-dup matches for a NEW batch: (id_a=new, id_b=match,
         est_jaccard, source) where source is 'index' (match already
@@ -739,16 +736,12 @@ class MinhashIndex:
             .distinct()
         )
         idx_sigs = self._read("sigs")
+        cand_new = lsh_candidates(new_sigs, id_col, self.n_hashes, self.n_bands)
         out = self.estimated_jaccard(cand_idx, new_sigs, idx_sigs).withColumn(
             "source", F.lit("index")
+        ).unionByName(
+            self.estimated_jaccard(cand_new, new_sigs, new_sigs).withColumn(
+                "source", F.lit("batch")
+            )
         )
-        if include_batch:
-            cand_new = lsh_candidates(
-                new_sigs, id_col, self.n_hashes, self.n_bands
-            )
-            out = out.unionByName(
-                self.estimated_jaccard(cand_new, new_sigs, new_sigs).withColumn(
-                    "source", F.lit("batch")
-                )
-            )
         return out.where(F.col("est_jaccard") >= threshold)

@@ -33,7 +33,6 @@ from .sparql import (
     load_query_dir,
     sparql,
     tag_iri,
-    tag_lit,
 )
 
 # Public bases, verbatim from the reference

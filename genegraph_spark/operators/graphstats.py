@@ -25,14 +25,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+DAMPING = 0.85
+# PageRank iterations between lineage cuts (see the loop below)
+CHECKPOINT_EVERY = 8
+
 
 def pagerank(
     edges: DataFrame,
     n_iter: int = 5,
-    damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge frame.
 
@@ -63,7 +65,7 @@ def pagerank(
     # both constants computed as the SAME double expressions the oracle
     # uses (Python round() is half-even; engine round is half-up — keep
     # all rounding engine-side)
-    teleport = F.round((F.lit(1.0) - F.lit(damping)) / F.lit(float(n)), 12)
+    teleport = F.round((F.lit(1.0) - F.lit(DAMPING)) / F.lit(float(n)), 12)
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     # (src, dst, outdeg) reused every iteration: checkpoint cuts lineage
     links = e.join(outdeg, "src").localCheckpoint(eager=False)
@@ -78,7 +80,7 @@ def pagerank(
         pr = nodes.join(contrib, nodes["node"] == contrib["dst"], "left_outer").select(
             "node",
             F.round(
-                teleport + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
+                teleport + F.lit(DAMPING) * F.coalesce("inflow", F.lit(0.0)),
                 9,
             ).alias("rank"),
         )
@@ -90,7 +92,7 @@ def pagerank(
         # scale). Lineage growth per round is linear (pr appears once in
         # the next round's plan), so a bounded chain of K rounds between
         # cuts is safe at any scale.
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < n_iter:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < n_iter:
             pr = pr.localCheckpoint(eager=False)
     return pr.select("node", F.round("rank", 6).alias("rank"))
 

@@ -23,19 +23,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:
-    """Repartition ``df`` up to ``target`` partitions (default: the
-    session's ``defaultParallelism``) when its current plan yields fewer
-    — otherwise return it unchanged.
+def fan_out(df: DataFrame, *keys: str) -> DataFrame:
+    """Repartition ``df`` up to the session's ``defaultParallelism``
+    partitions when its current plan yields fewer — otherwise return it
+    unchanged.
 
     Intended for SCANS and other cheap-to-shuffle frames feeding
     map-heavy stages; the partition probe forces physical planning of
     ``df`` (milliseconds for a scan — do not call it on frames with
     expensive plans, fan out their slim inputs instead).
     """
-    spark = df.sparkSession
-    if target is None:
-        target = spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, *keys) if keys else df.repartition(target)

@@ -488,7 +488,6 @@ class IvfIndex:
     def build(
         corpus: DataFrame,
         path: str,
-        centroids: DataFrame | None = None,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> "IvfIndex":
@@ -496,8 +495,7 @@ class IvfIndex:
         import os
 
         spark = corpus.sparkSession
-        if centroids is None:
-            centroids = default_centroids(corpus, id_col=id_col, vec_col=vec_col)
+        centroids = default_centroids(corpus, id_col=id_col, vec_col=vec_col)
         assigned = ivf_assign(corpus, centroids, id_col, vec_col)
         assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
             os.path.join(path, "corpus")

@@ -14,12 +14,11 @@ rand()) so retries and resume recompute identical partitions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _salt(col: Column, n_salts: int) -> Column:
-    return F.pmod(F.xxhash64(col), F.lit(n_salts)).cast("int")
+# Slices a hot key's top-k sort is spread over.
+N_SALTS = 8
 
 
 def salted_top_k(
@@ -27,20 +26,18 @@ def salted_top_k(
     key: str,
     order_col: str,
     k: int,
-    n_salts: int = 8,
-    salt_by: str | None = None,
-    descending: bool = True,
+    salt_by: str,
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """Top-k rows per key without a single-task sort of a hot key:
-    stage 1 takes the top-k within each (key, salt) slice, stage 2 merges
-    the ≤ k·n_salts survivors per key. Identical results to the direct
-    window; the hot key's sort spreads across ``n_salts`` tasks."""
-    assert salt_by is not None
-    order = [F.desc(order_col) if descending else F.asc(order_col)]
+    """Top-k rows per key (``order_col`` descending) without a single-task
+    sort of a hot key: stage 1 takes the top-k within each (key, salt)
+    slice, stage 2 merges the ≤ k·N_SALTS survivors per key. Identical
+    results to the direct window; the hot key's sort spreads across
+    :data:`N_SALTS` tasks."""
+    order = [F.desc(order_col)]
     if tiebreak:
         order.append(F.asc(tiebreak))
-    s = df.withColumn("_salt", _salt(F.col(salt_by), n_salts))
+    s = df.withColumn("_salt", F.pmod(F.xxhash64(salt_by), F.lit(N_SALTS)).cast("int"))
     w1 = Window.partitionBy(key, "_salt").orderBy(*order)
     stage1 = s.withColumn("_rn", F.row_number().over(w1)).where(F.col("_rn") <= k)
     w2 = Window.partitionBy(key).orderBy(*order)

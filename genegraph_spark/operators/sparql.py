@@ -96,11 +96,6 @@ def tag_iri(c: Column | str) -> Column:
     return F.concat(F.lit("I|"), F.col(c) if isinstance(c, str) else c)
 
 
-def tag_lit(c: Column | str, datatype: str | None = None) -> Column:
-    """Tag a raw value column as a (typed) literal term — the
-    ``per_graph`` counterpart of a plain-string pre-bound param."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.concat(F.lit(f"L|{datatype or ''}|"), col.cast("string"))
 _MAXLEN = 1 << 20  # effectively-unbounded substr length
 
 

@@ -27,8 +27,6 @@ from pyspark.sql import functions as F
 
 from ..functions import iri as I
 
-TRIPLE_COLS = ["graph", "subject", "predicate", "object", "object_is_iri", "object_datatype"]
-
 
 def tstruct(subject: Column, predicate, obj: Column, is_iri, datatype: str | None = None) -> Column:
     """One (s,p,o) as a struct; predicate/is_iri may be literals or Columns."""

@@ -70,15 +70,6 @@ def with_violations(df: DataFrame, shape: list[Constraint], out_col: str = "viol
 
 # -- per-root-type shape registry + dispatch ----------------------------------
 
-# formats.edn analog (annotate.clj:19,30-36 add-metadata): source format →
-# root type + graph-name rule. The pipeline's page events carry one format;
-# the tombstone action is inferred per row (annotate/action.clj analog).
-FORMATS: dict[str, dict[str, str]] = {
-    "webpage": {"root_type": "WebPage", "graph_name": "url"},
-    "webpage-tombstone": {"root_type": "TombstonePage", "graph_name": "url"},
-}
-
-
 @dataclass(frozen=True)
 class ShapeRegistry:
     """Root-type → shape table (shapes.edn analog, annotate.clj:72-132

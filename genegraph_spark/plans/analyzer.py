@@ -17,10 +17,8 @@ per-event helper becomes a corpus-wide co-keyed set operation:
   both sides — created/deleted/sizes/changed all derive from it, so the
   whole change report costs ONE full-row exchange plus one per-graph
   aggregate (not a dedup + exceptAll + count-join chain);
-- changed? — created+deleted counts per graph AFTER WL blank-node
-  canonicalization (``operators.model.canonical_bnode_triples``), which
-  makes count-zero equivalent to Jena's ``is-isomorphic?`` verdict for
-  the shapes the reference processes;
+- changed? — created+deleted counts per graph, compared as raw
+  triples (blank-node labels included);
 - type diffs — a plain full-outer count diff.
 
 At 100 TB the cost is the one presence exchange; nothing is per-event
@@ -33,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import iri as I
-from ..operators.model import canonical_bnode_triples
 
 _COLS = [
     "graph", "subject", "predicate", "object", "object_is_iri",
@@ -41,18 +38,13 @@ _COLS = [
 ]
 
 
-def _presence(
-    old: DataFrame, new: DataFrame, canonicalize: bool, rounds: int,
-) -> DataFrame:
+def _presence(old: DataFrame, new: DataFrame) -> DataFrame:
     """Per distinct triple: (in_old, in_new) membership flags — the one
     full-row shuffle everything else derives from. SET semantics like
     Jena come free from the groupBy (a re-emitted duplicate is the same
     statement)."""
     a = old.select(*_COLS)
     b = new.select(*_COLS)
-    if canonicalize:
-        a = canonical_bnode_triples(a, rounds)
-        b = canonical_bnode_triples(b, rounds)
     one, zero = F.lit(1), F.lit(0)
     tagged = a.select(*_COLS, one.alias("_o"), zero.alias("_n")).unionByName(
         b.select(*_COLS, zero.alias("_o"), one.alias("_n"))
@@ -62,31 +54,23 @@ def _presence(
     )
 
 
-def change_summary(
-    old: DataFrame, new: DataFrame, canonicalize: bool = False,
-    rounds: int = 3,
-) -> DataFrame:
+def change_summary(old: DataFrame, new: DataFrame) -> DataFrame:
     """Per-graph change report: created / deleted / previous / current
     counts + the ``model-changed?`` flag (event_analyzer.clj:41-55).
 
     Graphs present in only one side still report automatically (their
     triples carry the graph key through the presence frame): a
     brand-new model is all-created, a dropped one all-deleted. Sizes
-    are SET sizes of the RAW models (Jena ``.size`` counts the stored
-    statements — two distinct bnodes that WL-collapse to one signature
-    still count as two), so under ``canonicalize=True`` the sizes come
-    from a second, uncanonicalized presence pass while created/deleted/
-    changed use the canonical one. Cost: the presence exchange + one
-    per-graph aggregate (twice that when canonicalizing)."""
-    p = _presence(old, new, canonicalize, rounds)
+    are SET sizes (Jena ``.size`` counts the stored statements). Cost:
+    the presence exchange + one per-graph aggregate."""
+    p = _presence(old, new)
     created = ((F.col("in_new") == 1) & (F.col("in_old") == 0)).cast("long")
     deleted = ((F.col("in_old") == 1) & (F.col("in_new") == 0)).cast("long")
     diffs = p.groupBy("graph").agg(
         F.sum(created).alias("created"),
         F.sum(deleted).alias("deleted"),
     )
-    sizes_src = p if not canonicalize else _presence(old, new, False, rounds)
-    sizes = sizes_src.groupBy("graph").agg(
+    sizes = p.groupBy("graph").agg(
         F.sum(F.col("in_old").cast("long")).alias("previous"),
         F.sum(F.col("in_new").cast("long")).alias("current"),
     )

@@ -637,13 +637,12 @@ def condition_cards(events: DataFrame) -> DataFrame:
     )
 
 
-def modes_of_inheritance(
-    assertions: DataFrame, hierarchy: DataFrame, root: str = "urn:moi:root"
-) -> DataFrame:
+def modes_of_inheritance(assertions: DataFrame, hierarchy: DataFrame) -> DataFrame:
     """The ``modes-of-inheritance`` resolver
     (``source/graphql/mode_of_inheritance.clj:5-14``): the DISTINCT MOI
     qualifiers of gene-validity propositions restricted to the
-    ``rdfs:subClassOf* HP_0000005`` subtree.
+    ``rdfs:subClassOf* HP_0000005`` subtree (``urn:moi:root`` in the
+    fixture hierarchy).
 
     Spark-first: the closure runs over the DIMENSION-scale MOI forest
     (path-doubling fixpoint, :func:`~genegraph_spark.operators.algebra.
@@ -655,6 +654,7 @@ def modes_of_inheritance(
     from genegraph_spark.functions import iri as I
     from genegraph_spark.operators.algebra import transitive_closure
 
+    root = "urn:moi:root"
     reach = transitive_closure(hierarchy, I.BROADER)
     under = (
         reach.where(F.col("dst") == root)

@@ -236,7 +236,6 @@ def run_to_store(
     sf_dir: str,
     store_path: str,
     dry_run: bool = False,
-    resume: bool = False,
     incremental: bool = False,
     **kw,
 ):
@@ -247,36 +246,25 @@ def run_to_store(
     built and the would-be commit summarized (graphs / triples /
     deletes), but nothing is written — the store is untouched.
 
-    ``resume``: RESTART-OF-THE-SAME-INPUT ONLY — it skips any url with
-    ANY processed lineage row (the offset-file resume semantic at graph
-    granularity, stream.clj:221-236), so a restarted run only pays
-    extraction for the unprocessed remainder. It is NOT incremental
-    ingest: an input containing NEW versions of a previously-processed
-    url would be silently skipped — that is what ``incremental`` is for.
-
-    ``incremental``: TRUE INCREMENTAL INGEST — the skip-set is keyed on
-    (url, max processed version), not url alone: a url is reprocessed
+    ``incremental``: the skip-set is keyed on (url, max processed
+    version): a url is reprocessed
     when the incoming max ``version`` exceeds the lineage watermark
     (:meth:`NamedGraphStore.processed_versions`) or the watermark is
     null/absent (unknown → reprocess; whole-graph MERGE keeps that
     idempotent). Each merge records the watermark via
     ``graph_versions``, so successive incremental feeds pay extraction
     only for new or updated urls — the Kafka-consumer catch-up loop
-    (stream.clj:150-170) re-expressed as batch anti-join + MERGE."""
+    (stream.clj:150-170) re-expressed as batch anti-join + MERGE. A
+    restart of the same input therefore reprocesses only the pages the
+    killed run never committed (the offset-file resume semantic at graph
+    granularity, stream.clj:221-236)."""
     from ..sinks.named_graph import NamedGraphStore
 
-    assert not (resume and incremental), "resume and incremental are exclusive modes"
     store = NamedGraphStore(spark, store_path)
     pages = kw.pop("pages", None)
     if pages is None:
         pages = fixtures.pages_df(spark, sf_dir)
-    if resume and store.exists():
-        # processed set (publish OR unpublish — a tombstoned graph was
-        # handled too) is corpus-scale: shuffled anti-join on url, NOT a
-        # broadcast; AQE picks the strategy
-        done = store.processed_graphs().withColumnRenamed("graph", "url")
-        pages = pages.join(done, "url", "left_anti")
-    elif incremental and store.exists():
+    if incremental and store.exists():
         # stale = unseen urls + urls whose incoming max version advanced
         # past the processed watermark; one shuffled join on url
         incoming = pages.groupBy("url").agg(F.max("version").alias("_in_v"))

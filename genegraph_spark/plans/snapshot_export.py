@@ -25,13 +25,11 @@ def latest_versions(
     key: str = "is_version_of",
     version: str = "version",
     until=None,
-    filter_deleted: bool = True,
     deleted_col: str = "deleted",
 ) -> DataFrame:
     """The export row set: max ``version`` (≤ ``until`` if given) per
-    entity ``key``; when ``filter_deleted`` and the frame has
-    ``deleted_col``, entities whose LATEST in-window version is deleted
-    are dropped — ``latest-versions-seq-all``'s :filter-deleted
+    entity ``key``; when the frame has ``deleted_col``, entities whose
+    LATEST in-window version is deleted are dropped — ``latest-versions-seq-all``'s :filter-deleted
     (ga4gh.clj:190-199) composed with the as-of filters of
     ``variation_descriptor.clj:20-39`` (the NOT EXISTS over newer
     replacements ≡ "is the max"). One window, one shuffle on the key."""
@@ -43,6 +41,6 @@ def latest_versions(
         order.append(F.desc("snapshot"))
     w = Window.partitionBy(key).orderBy(*order)
     out = df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
-    if filter_deleted and deleted_col in df.columns:
+    if deleted_col in df.columns:
         out = out.where(~F.coalesce(F.col(deleted_col), F.lit(False)))
     return out

@@ -13,13 +13,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def get_spark(
     app_name: str = "genegraph_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
@@ -37,15 +33,12 @@ def get_spark(
         # an explicit `master` arg wins; else a submitted --master (cluster
         # deploys); else the local sandbox default
         master = f"local[{cpus}]"
-    if shuffle_partitions is None and not submitted.contains(
-        "spark.sql.shuffle.partitions"
-    ):
+
+    defaults = {
         # local mode: one shuffle partition per core is the sweet spot;
         # at cluster scale this is set per-job from input size / target
         # 128MB partitions, and AQE coalesces the rest.
-        shuffle_partitions = cpus
-
-    defaults = {
+        "spark.sql.shuffle.partitions": str(cpus),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -89,8 +82,6 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in defaults.items():
         if not submitted.contains(k):
             builder = builder.config(k, v)

@@ -42,7 +42,7 @@ import time
 from contextlib import contextmanager
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TRIPLE_SCHEMA = (
@@ -187,7 +187,7 @@ class NamedGraphStore:
         ``commit`` selects a historical snapshot (time travel)."""
         return self.read(commit).drop("bucket")
 
-    def graphs(self, graph_iris: list[str], commit: int | None = None) -> DataFrame:
+    def graphs(self, graph_iris: list[str]) -> DataFrame:
         """Point lookup of specific named graphs (``getNamedModel``,
         load.clj:72-87 read side) — reads ONLY the buckets those graphs
         hash to, so a k-graph lookup scans ~k/n_buckets of the store
@@ -195,8 +195,7 @@ class NamedGraphStore:
         (:func:`graph_bucket`, the writer's pmod(xxhash64)), so building
         the lookup runs no Spark job. The graph filter on top is pushed
         into the parquet scan."""
-        if commit is None:
-            commit = self.last_commit()
+        commit = self.last_commit()
         if commit is None:
             return self.spark.createDataFrame([], TRIPLE_SCHEMA)
         wanted = {graph_bucket(g, self.n_buckets) for g in graph_iris}
@@ -554,26 +553,6 @@ class NamedGraphStore:
             "mergeSchema", "true"
         ).parquet(os.path.join(self._lineage, "commit=*"))
 
-    def committed_graphs(self) -> DataFrame:
-        """Graphs whose latest lineage action is publish — the resume set:
-        a restarted run anti-joins its input against this before
-        reprocessing (offset-file analog, stream.clj:221-236).
-
-        Only manifested commits count: lineage is written before the
-        manifest, so a run killed between them leaves orphan lineage rows
-        for a commit that never became visible — those must not be
-        claimed as committed."""
-        last = self.last_commit()
-        if last is None:
-            return self.spark.createDataFrame([], "graph string")
-        lin = self.lineage().where(F.col("commit") <= last)
-        w = Window.partitionBy("graph").orderBy(F.desc("commit"))
-        return (
-            lin.withColumn("_rn", F.row_number().over(w))
-            .where((F.col("_rn") == 1) & (F.col("action") == "publish"))
-            .select("graph")
-        )
-
     def diff(self, commit_a: int, commit_b: int) -> DataFrame:
         """Build-to-build regression diff: (graph, n_added, n_removed)
         for every graph whose triple content differs between two commits
@@ -598,17 +577,6 @@ class NamedGraphStore:
             "graph",
             F.coalesce("n_added", zero).alias("n_added"),
             F.coalesce("n_removed", zero).alias("n_removed"),
-        )
-
-    def processed_graphs(self) -> DataFrame:
-        """Graphs with ANY manifested lineage row (publish OR unpublish) —
-        the resume skip-set: a tombstoned graph was processed even though
-        it is not live, and reprocessing it would only re-delete it."""
-        last = self.last_commit()
-        if last is None:
-            return self.spark.createDataFrame([], "graph string")
-        return (
-            self.lineage().where(F.col("commit") <= last).select("graph").distinct()
         )
 
     def processed_versions(self) -> DataFrame:

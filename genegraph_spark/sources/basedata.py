@@ -2,8 +2,8 @@
 
 Re-expresses the reference's remaining ``transform/`` namespaces — the
 flat-file → model loaders for HGNC genes, UCSC cytobands, NCBI gene
-features, DECIPHER/gnomAD gene scores, the OMIM genemap, ClinGen
-affiliations, and the RxNorm drug typing rewrite:
+features, DECIPHER/gnomAD gene scores, the OMIM genemap and ClinGen
+affiliations:
 
 - ``transform/gene.clj:42-88``        → :func:`hgnc_gene_triples`
 - ``transform/ucsc_cytoband.clj:62-86`` → :func:`cytoband_triples`
@@ -13,7 +13,6 @@ affiliations, and the RxNorm drug typing rewrite:
 - ``transform/omim.clj:12-57``        → :func:`genemap2_pairs` +
   :func:`omim_genetic_condition_triples`
 - ``transform/affiliations.clj:8-30`` → :func:`affiliation_triples`
-- ``transform/rxnorm.clj:7-16``       → :func:`rxnorm_drug_types`
 
 Spark-first / 100 TB: every loader is column expressions + ONE explode
 to triples; the only joins are broadcast dimension joins (the gene
@@ -67,10 +66,10 @@ LOCUS_TYPES: dict[str, str] = {
 
 
 
-def hgnc_gene_triples(genes: DataFrame, graph: str = HGNC_DATASET + "/") -> DataFrame:
+def hgnc_gene_triples(genes: DataFrame) -> DataFrame:
     """HGNC gene records → the searchable gene dictionary model
-    (transform/gene.clj:42-72): symbol → skos preferred label, name →
-    alternative label, aliases/previous names/symbols → hidden labels,
+    (transform/gene.clj:42-72), in the ``HGNC_DATASET + "/"`` graph:
+    symbol → skos preferred label, name → alternative label, aliases/previous names/symbols → hidden labels,
     chromosome band, SO locus-type class (known types only), the three
     ``owl:same-as`` bridges (HGNC CURIE, HGNC identifiers.org IRI,
     Ensembl RDF IRI) and their dataset provenance.
@@ -114,6 +113,7 @@ def hgnc_gene_triples(genes: DataFrame, graph: str = HGNC_DATASET + "/") -> Data
         hidden("prev_name"),
         hidden("prev_symbol"),
     )
+    graph = HGNC_DATASET + "/"
     out = explode_triples_arr(genes, F.lit(graph), arr)
     # gene.clj:69-72 conj's the dataset-provenance statement onto every
     # per-document model; in the batch frame that collapses to ONE
@@ -126,12 +126,11 @@ def hgnc_gene_triples(genes: DataFrame, graph: str = HGNC_DATASET + "/") -> Data
     return out.unionByName(dataset_row)
 
 
-def cytoband_triples(
-    bands: DataFrame, assembly: str, graph: str = CYTOBAND_ROOT
-) -> DataFrame:
+def cytoband_triples(bands: DataFrame, assembly: str) -> DataFrame:
     """UCSC cytoband rows (chrom, start, end, cytoband) for one
     assembly (``hg19`` / ``hg38``) → chromosome-band features with
-    located intervals (transform/ucsc_cytoband.clj:62-86)."""
+    located intervals in the ``CYTOBAND_ROOT`` graph
+    (transform/ucsc_cytoband.clj:62-86)."""
     build = {"hg19": "grch37", "hg38": "grch38"}[assembly]
     chr_short = F.regexp_extract(F.col("chrom"), r"\d+|X|Y", 0)
     label = F.concat(chr_short, F.col("cytoband"))
@@ -153,7 +152,7 @@ def cytoband_triples(
         _t(int_b, ":geno/end-position",
            F.col("end").cast("long").cast("string"), False, I.XSD_INTEGER),
     )
-    return explode_triples_arr(bands, F.lit(graph), arr)
+    return explode_triples_arr(bands, F.lit(CYTOBAND_ROOT), arr)
 
 
 def feature_triples(rows: DataFrame, graph: str) -> DataFrame:
@@ -321,21 +320,3 @@ def affiliation_triples(rows: DataFrame, graph: str) -> DataFrame:
         _t(iri_c, I.RDF_TYPE, ":cg/Affiliation", True),
     )
     return explode_triples_arr(exploded, F.lit(graph), arr)
-
-
-def rxnorm_drug_types(triples: DataFrame) -> DataFrame:
-    """The RxNorm post-load rewrite (transform/rxnorm.clj:7-16):
-    every ``owl:Class`` subject in the drug model gains a
-    ``:chebi/Drug`` type triple (the reference runs a CONSTRUCT over
-    the loaded model; this is the same one-pass projection)."""
-    classes = triples.where(
-        (F.col("predicate") == I.RDF_TYPE) & (F.col("object") == ":owl/Class")
-    )
-    extra = classes.select(
-        "graph", "subject",
-        F.lit(I.RDF_TYPE).alias("predicate"),
-        F.lit(":chebi/Drug").alias("object"),
-        F.lit(True).alias("object_is_iri"),
-        F.lit(None).cast("string").alias("object_datatype"),
-    ).distinct()
-    return triples.unionByName(extra)

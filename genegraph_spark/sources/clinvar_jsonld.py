@@ -330,9 +330,8 @@ def parse_gene_versions(df: DataFrame, col: str = "value") -> DataFrame:
     )
 
 
-def cancer_gene_ids(spark, resources_dir: str = REF_RESOURCES,
-                    min_evidence: int = 2) -> DataFrame:
-    """consensus_cancer_genes.csv ids with num >= min_evidence
+def cancer_gene_ids(spark, resources_dir: str = REF_RESOURCES) -> DataFrame:
+    """consensus_cancer_genes.csv ids with num >= 2
     (``filtered-cancer-gene-ids``, jsonld/clinical_assertion.clj:96-98;
     CSV loader common.clj:65-79). Dictionary-scale → broadcast side."""
     path = os.path.join(resources_dir, "consensus_cancer_genes.csv")
@@ -345,7 +344,7 @@ def cancer_gene_ids(spark, resources_dir: str = REF_RESOURCES,
             F.col(cols[0]).alias("cancer_hgnc_id"),
             F.col(cols[2]).cast("int").alias("num"),
         )
-        .where(F.col("num") >= min_evidence)
+        .where(F.col("num") >= 2)
         .select("cancer_hgnc_id")
         .distinct()
     )

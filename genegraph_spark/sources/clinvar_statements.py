@@ -15,7 +15,6 @@ Reference crosswalk (``transform/clinvar/clinical_assertion.clj``):
 - clinsig→direction map (:60-76)                      → ``_DIRECTION``
 - normalize term/code via the CSVs (:78-98)           → ``sources.clinsig``
 - classification Coding (:100-110)                    → classification cols
-- trait normalization + xref CURIE fix (:128-161)     → ``parse_trait_messages``
 - trait-set normalization + members (:194-222)        → ``parse_trait_set_messages``
 - single-member condition compaction (:183-189)       → ``n_members``/``compact``
 - statement-type group map (:350-360)                 → ``_STMT_TYPE``
@@ -81,12 +80,6 @@ _PATH_RISK = [
     "Established risk allele", "Likely risk allele", "Uncertain risk allele",
 ]
 
-TRAIT_SCHEMA = """
-    release_date string, event_type string,
-    content struct<id: string, name: string, type: string,
-                   medgen_id: string, xrefs: array<string>,
-                   alternate_names: array<string>>
-"""
 TRAIT_SET_SCHEMA = """
     release_date string, event_type string,
     content struct<id: string, type: string, trait_ids: array<string>>
@@ -99,35 +92,6 @@ ASSERTION_SCHEMA = """
                    date_last_updated: string,
                    interpretation_comments: array<string>>
 """
-
-
-def parse_trait_messages(df: DataFrame, col: str = "value") -> DataFrame:
-    """Trait messages → versioned trait descriptor rows
-    (``add-data-for-trait``, clinical_assertion.clj:128-161): versioned
-    id, Disease/Phenotype type fold, the xref CURIE normalization
-    (``db:id`` unless the id already starts with the db), delete
-    tombstones in record metadata."""
-    d = F.from_json(F.col(col), TRAIT_SCHEMA)
-    c = d["content"]
-    vof = F.concat(F.lit(CGTERMS + "trait"), F.lit("_"), c["id"])
-    xref = lambda x: F.from_json(x, "id string, db string")
-    return df.select(
-        F.concat(vof, F.lit("."), d["release_date"]).alias("id"),
-        vof.alias("is_version_of"),
-        d["release_date"].alias("version"),
-        F.when(c["type"] == "Disease", "Disease")
-        .otherwise("Phenotype").alias("type"),
-        c["name"].alias("label"),
-        c["medgen_id"].alias("medgen_id"),
-        F.transform(
-            F.coalesce(c["xrefs"], F.array()),
-            lambda x: F.when(
-                F.startswith(xref(x)["id"], xref(x)["db"]), xref(x)["id"]
-            ).otherwise(F.concat(xref(x)["db"], F.lit(":"), xref(x)["id"])),
-        ).alias("xrefs"),
-        F.coalesce(c["alternate_names"], F.array()).alias("alternate_labels"),
-        (d["event_type"] == "delete").alias("deleted"),
-    )
 
 
 def parse_trait_set_messages(df: DataFrame, col: str = "value") -> DataFrame:

@@ -7,9 +7,6 @@ column expressions:
   report + score-string content node + the full evidence-level assertion
   tree (old-score and SOP concept maps, proposition, approver
   contribution with the kb-agents → affiliation IRI rewrite).
-- ``transform/gci_neo4j_report_only.clj`` — the same export reduced to
-  the report skeleton + content node (different IRI scheme: no date
-  suffix).
 - ``transform/clinvar/submitter.clj:23-41`` — submitter snapshot →
   GA4GH ``Agent`` rows (versioned ``clinvar_submitter_<id>.<date>`` id,
   ``fields-to-extension-maps`` over the selected fields — including the
@@ -61,61 +58,48 @@ def _map_expr(mapping: dict[str, str], col) -> F.Column:
     return out
 
 
-def gci_neo4j_triples(reports: DataFrame, report_only: bool = False) -> DataFrame:
+def gci_neo4j_triples(reports: DataFrame) -> DataFrame:
     """Neo4j-export rows → gene-validity report triples
-    (``gci_neo4j.clj:73-85`` full tree; ``gci_neo4j_report_only.clj``
-    skeleton when ``report_only``).
+    (``gci_neo4j.clj:73-85`` full tree).
 
     ``reports`` columns: id, date, title, gene, disease, moi, gcep,
     score (CG_0000xx IRI), sop_version, score_string."""
-    if report_only:
-        # report-only IRI scheme: no date suffix (gci_neo4j_report_only.clj:14-19)
-        iri = F.concat(F.lit(GCI_ROOT), F.col("id"), F.lit("_report"))
-        assertion = F.concat(F.lit(GCI_ROOT), F.col("id"))
-    else:
-        id2 = F.concat(
-            F.col("id"), F.lit("-"), F.regexp_replace(F.col("date"), ":", "")
-        )
-        iri = F.concat(F.lit(GCI_ROOT), F.lit("report_"), id2)
-        assertion = F.concat(F.lit(GCI_ROOT), F.lit("assertion_"), id2)
+    id2 = F.concat(F.col("id"), F.lit("-"), F.regexp_replace(F.col("date"), ":", ""))
+    iri = F.concat(F.lit(GCI_ROOT), F.lit("report_"), id2)
+    assertion = F.concat(F.lit(GCI_ROOT), F.lit("assertion_"), id2)
     content = bnode(iri, F.lit("content"))
+    prop = F.concat(F.lit(GCI_ROOT), F.lit("proposition_"), F.col("id"))
+    contrib = bnode(assertion, F.lit("contribution"))
+    agent = F.regexp_replace(F.col("gcep"), KB_AGENTS.replace(".", r"\."), AFFILIATION_ROOT)
     base = [
         _t(iri, RDF_TYPE, ":sepio/GeneValidityReport", True),
         _t(iri, ":bfo/has-part", content, True),
         _t(iri, ":bfo/has-part", assertion, True),
         _t(content, RDF_TYPE, ":cnt/ContentAsText", True),
         _t(content, ":cnt/chars", F.col("score_string"), False),
+        _t(iri, ":rdfs/label", F.col("title"), False),
+        # evidence-level-assertion (gci_neo4j.clj:55-67)
+        _t(assertion, RDF_TYPE, ":sepio/GeneValidityEvidenceLevelAssertion", True),
+        _t(assertion, ":sepio/has-subject", prop, True),
+        _t(assertion, ":sepio/has-predicate", ":sepio/HasEvidenceLevel", True),
+        _t(assertion, ":sepio/has-object",
+           _map_expr(OLD_SCORE_TO_NEW, F.col("score")), True),
+        _t(assertion, ":sepio/qualified-contribution", contrib, True),
+        _t(assertion, ":sepio/is-specified-by",
+           _map_expr(GCI_SOP_VERSION, F.col("sop_version")), True),
+        _t(assertion, ":dc/has-format",
+           _map_expr(GCI_SOP_VERSION, F.col("sop_version")), True),
+        # validity-proposition (gci_neo4j.clj:10-15)
+        _t(prop, RDF_TYPE, ":sepio/GeneValidityProposition", True),
+        _t(prop, ":sepio/has-subject", F.col("gene"), True),
+        _t(prop, ":sepio/has-predicate", ":ro/IsCausalGermlineMutationIn", True),
+        _t(prop, ":sepio/has-object", F.col("disease"), True),
+        _t(prop, ":sepio/has-qualifier", F.col("moi"), True),
+        # approver contribution (gci_neo4j.clj:48-52)
+        _t(contrib, ":bfo/realizes", ":sepio/ApproverRole", True),
+        _t(contrib, ":sepio/has-agent", agent, True),
+        _t(contrib, ":sepio/activity-date", F.col("date"), False),
     ]
-    if not report_only:
-        prop = F.concat(F.lit(GCI_ROOT), F.lit("proposition_"), F.col("id"))
-        contrib = bnode(assertion, F.lit("contribution"))
-        agent = F.regexp_replace(
-            F.col("gcep"), KB_AGENTS.replace(".", r"\."), AFFILIATION_ROOT
-        )
-        base += [
-            _t(iri, ":rdfs/label", F.col("title"), False),
-            # evidence-level-assertion (gci_neo4j.clj:55-67)
-            _t(assertion, RDF_TYPE, ":sepio/GeneValidityEvidenceLevelAssertion", True),
-            _t(assertion, ":sepio/has-subject", prop, True),
-            _t(assertion, ":sepio/has-predicate", ":sepio/HasEvidenceLevel", True),
-            _t(assertion, ":sepio/has-object",
-               _map_expr(OLD_SCORE_TO_NEW, F.col("score")), True),
-            _t(assertion, ":sepio/qualified-contribution", contrib, True),
-            _t(assertion, ":sepio/is-specified-by",
-               _map_expr(GCI_SOP_VERSION, F.col("sop_version")), True),
-            _t(assertion, ":dc/has-format",
-               _map_expr(GCI_SOP_VERSION, F.col("sop_version")), True),
-            # validity-proposition (gci_neo4j.clj:10-15)
-            _t(prop, RDF_TYPE, ":sepio/GeneValidityProposition", True),
-            _t(prop, ":sepio/has-subject", F.col("gene"), True),
-            _t(prop, ":sepio/has-predicate", ":ro/IsCausalGermlineMutationIn", True),
-            _t(prop, ":sepio/has-object", F.col("disease"), True),
-            _t(prop, ":sepio/has-qualifier", F.col("moi"), True),
-            # approver contribution (gci_neo4j.clj:48-52)
-            _t(contrib, ":bfo/realizes", ":sepio/ApproverRole", True),
-            _t(contrib, ":sepio/has-agent", agent, True),
-            _t(contrib, ":sepio/activity-date", F.col("date"), False),
-        ]
     return (
         reports.select(iri.alias("graph"), F.explode(F.array(*base)).alias("t"))
         .select("graph", "t.subject", "t.predicate", "t.object",

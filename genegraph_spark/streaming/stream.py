@@ -18,10 +18,8 @@ exactly-once results. Nothing materializes on the driver (round 1 used
 ``outputMode("complete")`` + a memory sink — a driver-side collect of
 the full aggregate every batch; gone).
 
-In the sandbox the source is a file stream over a parquet directory
-(no Kafka broker); :func:`kafka_reader` / :func:`kafka_writer` build the
-equivalent ``format("kafka")`` plans for a cluster (untestable here —
-no broker in the container).
+The source is a file stream over a parquet directory; a Kafka
+deployment replaces it with a ``format("kafka")`` reader.
 """
 
 from __future__ import annotations
@@ -179,25 +177,23 @@ def stream_dedup_events(
     source_dir: str,
     checkpoint_dir: str,
     out_dir: str | None = None,
-    watermark_delay: str = "35 days",
-    max_files_per_trigger: int = 2,
 ) -> DataFrame:
     """Streaming exactly-once dedup: ``dropDuplicatesWithinWatermark``
     keyed on event_id — duplicate deliveries from an at-least-once
     source (offset replay after a crash) collapse to ONE emission, and
     the dedup state is EVICTED once the watermark passes an event's
     time, instead of growing forever (the unbounded ``dropDuplicates``
-    state trap at 100 TB). ``watermark_delay`` must cover the source's
-    redelivery horizon (Kafka retention / replay window); here it spans
-    the whole fixture so the assertion is deterministic regardless of
-    how files split into micro-batches."""
+    state trap at 100 TB). The 35-day watermark delay must cover the
+    source's redelivery horizon (Kafka retention / replay window); here
+    it spans the whole fixture so the assertion is deterministic
+    regardless of how files split into micro-batches (two per trigger)."""
     out_dir = out_dir or checkpoint_dir + "_out"
     src = (
         spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 2)
         .parquet(source_dir)
     )
-    dd = src.withWatermark("ts", watermark_delay).dropDuplicatesWithinWatermark(
+    dd = src.withWatermark("ts", "35 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
     q = (
@@ -277,33 +273,6 @@ def stream_user_running_totals(
     )
 
 
-# -- Kafka plan builders (cluster path; no broker in the sandbox) ------------
-
-def kafka_reader(spark: SparkSession, brokers: str, topic: str, starting_offsets: str = "earliest"):
-    """The cluster-mode source: ``format("kafka")`` with the page payload
-    in ``value`` (the reference's event envelope, stream.clj:59-73).
-    Returns the un-started reader plan; call ``.load()`` where a broker
-    exists."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-
-
-def kafka_writer(df: DataFrame, brokers: str, topic: str, checkpoint_dir: str):
-    """Producer sink: JSON-serialized rows to an output topic
-    (sink/event.clj:78-98 produce step). Returns the un-started writer."""
-    payload = df.select(F.to_json(F.struct(*df.columns)).alias("value"))
-    return (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-
-
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
     "version int, doc_id long"
@@ -336,7 +305,7 @@ def stream_pages_to_store(
     Returns {"batches": n, "last_commit": id}. availableNow trigger:
     drains everything present, then stops — rerunning with the same
     checkpoint processes only NEW source files (catch-up semantics)."""
-    from ..plans.pipeline import construct_kg
+    from ..plans.pipeline import run_to_store
     from ..sinks.named_graph import NamedGraphStore
 
     n_batches = {"n": 0}
@@ -344,16 +313,7 @@ def stream_pages_to_store(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        res = construct_kg(spark, sf_dir, pages=batch_df)
-        store = NamedGraphStore(spark, store_path)
-        versions = res.accepted_versions.select(
-            F.col("url").alias("graph"), "version"
-        )
-        store.merge(
-            res.triples,
-            delete_graphs=res.deleted_graphs,
-            graph_versions=versions,
-        )
+        run_to_store(spark, sf_dir, store_path, pages=batch_df)
         n_batches["n"] += 1
 
     q = (

@@ -4,9 +4,10 @@ scripts/submit_pipeline.py ...``).
 
 Runs the full KG construction batch against a pages table and MERGEs
 into the named-graph store, with the operational modes a scheduled
-pipeline needs: plain run, cheap restart (``--resume``), version-
-watermarked incremental feed (``--incremental``), ``--dry-run`` plan
-audit, and post-run maintenance (``--compact`` / ``--expire-keep N``).
+pipeline needs: plain run, version-watermarked incremental feed
+(``--incremental``, which is also the cheap restart: a rerun of the same
+input skips every page already committed), ``--dry-run`` plan audit,
+and post-run maintenance (``--compact`` / ``--expire-keep N``).
 
 On a cluster the session comes from spark-submit's conf (master,
 executors, shuffle partitions); ``get_spark`` only fills in defaults
@@ -17,7 +18,7 @@ unchanged. Package the library with
 Usage:
     spark-submit --py-files genegraph_spark.zip scripts/submit_pipeline.py \
         --sf-dir /data/sf0.1 --store /lake/kg-store [--incremental] \
-        [--resume] [--dry-run] [--compact] [--expire-keep 3]
+        [--dry-run] [--compact] [--expire-keep 3]
 """
 
 from __future__ import annotations
@@ -36,10 +37,9 @@ def main() -> None:
     p.add_argument("--sf-dir", required=True, help="input tables directory")
     p.add_argument("--store", required=True, help="named-graph store path")
     mode = p.add_mutually_exclusive_group()
-    mode.add_argument("--resume", action="store_true",
-                      help="restart-of-same-input: skip already-processed urls")
     mode.add_argument("--incremental", action="store_true",
-                      help="version-watermarked feed: process only new/updated urls")
+                      help="version-watermarked feed: process only new/updated urls "
+                           "(a restart of the same input reprocesses nothing)")
     mode.add_argument("--stream-source", metavar="DIR",
                       help="streamed primary loop: drain this file-stream pages "
                            "source into the store, one commit per micro-batch "
@@ -78,11 +78,10 @@ def main() -> None:
         return
     res, store, outcome = run_to_store(
         spark, args.sf_dir, args.store,
-        dry_run=args.dry_run, resume=args.resume, incremental=args.incremental,
+        dry_run=args.dry_run, incremental=args.incremental,
     )
     report: dict = {"mode": ("dry_run" if args.dry_run else
-                            "incremental" if args.incremental else
-                            "resume" if args.resume else "full"),
+                            "incremental" if args.incremental else "full"),
                     "outcome": {k: v for k, v in outcome.items() if k != "buckets"}}
     if not args.dry_run:
         if args.compact:

@@ -67,7 +67,7 @@ def test_exists_ask_count_bind(triples):
     )
     assert {r["x"] for r in A.exists(genes, diseased).collect()} == {"gene1"}
     assert A.ask(diseased) is True
-    assert A.ask(A.bind_params(genes, x="nope")) is False
+    assert A.ask(genes.where("x = 'nope'")) is False
     assert A.count(genes) == 2
 
 

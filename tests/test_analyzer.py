@@ -57,24 +57,6 @@ class TestChangeSummary:
         assert (g4.previous, g4.current, g4.created, g4.changed) == (
             0, 1, 1, True)
 
-    def test_bnode_rename_is_not_a_change(self, spark):
-        """A re-transform that only regenerated blank-node ids must read
-        as UNCHANGED with canonicalize=True (the is-isomorphic? verdict,
-        event_analyzer.clj:41-47) — and as noise without it."""
-        old = _df(spark, [
-            ("g", "s", ":mention", "_:a1", True, None),
-            ("g", "_:a1", ":pos", "3", False, I.XSD_INTEGER),
-        ])
-        new = _df(spark, [
-            ("g", "s", ":mention", "_:zz9", True, None),
-            ("g", "_:zz9", ":pos", "3", False, I.XSD_INTEGER),
-        ])
-        naive = AN.change_summary(old, new).collect()[0]
-        assert naive.changed is True  # lexical diff sees bnode churn
-        canon = AN.change_summary(old, new, canonicalize=True).collect()[0]
-        assert canon.changed is False
-        assert (canon.created, canon.deleted) == (0, 0)
-
     def test_duplicate_emission_is_not_a_change(self, spark):
         """Jena models are statement SETS: a transform that re-emits an
         existing triple twice must NOT read as a change."""
@@ -100,21 +82,3 @@ class TestTypeCountDiff:
         assert got[("g3", ":Order")] == (1, 0, -1)
         assert got[("g4", ":Order")] == (0, 1, 1)
         assert ("g1", ":Order") not in got  # unchanged → no row
-
-
-class TestCanonicalizedSizes:
-    def test_sizes_stay_raw_under_canonicalization(self, spark):
-        """model-sizes reports Jena .size of the RAW models: two
-        distinct bnodes that WL-collapse to one signature still count
-        as two statements even when canonicalize=True."""
-        old = _df(spark, [
-            ("g", "s", ":m", "_:a", True, None),
-            ("g", "s", ":m", "_:b", True, None),  # same WL signature
-        ])
-        new = _df(spark, [
-            ("g", "s", ":m", "_:z", True, None),
-            ("g", "s", ":m", "_:w", True, None),
-        ])
-        got = AN.change_summary(old, new, canonicalize=True).collect()[0]
-        assert (got.previous, got.current) == (2, 2)
-        assert got.changed is False  # isomorphic up to bnode renaming

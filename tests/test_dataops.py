@@ -239,14 +239,6 @@ class TestMinhashIndex:
         out = ix.query(docs.where("doc_id in (1, 2)"), threshold=0.5).collect()
         got = {(r.id_a, r.id_b, r.source) for r in out}
         assert got == {(1, 2, "batch")}
-        # include_batch=False suppresses within-batch pairs
-        assert (
-            ix.query(
-                docs.where("doc_id in (1, 2)"), threshold=0.5,
-                include_batch=False,
-            ).count()
-            == 0
-        )
 
     def test_param_mismatch_rejected(self, spark, docs, tmp_path):
         dedup.MinhashIndex(spark, str(tmp_path / "mh3")).build(docs)

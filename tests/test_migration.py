@@ -40,6 +40,3 @@ class TestSnapshotExport:
             for r in SE.latest_versions(docs, until="2020-07-01").collect()
         }
         assert out == {"urn:v1": "v1 r2", "urn:v2": "v2 r1"}
-        # filter_deleted=False keeps the tombstoned latest
-        out = SE.latest_versions(docs, filter_deleted=False).count()
-        assert out == 3

@@ -1,45 +1,157 @@
-"""Every top-level def and class in ``genegraph_spark/`` is used by the
-program: its name appears in the package, ``__spark_entry__.py``,
-``scripts/`` or ``perfbench/`` outside its own definition. Code that only
-tests reach is deleted, not kept."""
+"""The package carries no code and no setting the program does not use.
+
+``test_every_package_def_is_used_by_the_program``: every top-level def,
+class and module constant in ``genegraph_spark/`` is named by program code
+(the package, ``__spark_entry__.py``, ``scripts/`` or ``perfbench/``)
+outside its own definition. Comments and docstrings are not uses.
+
+``test_every_defaulted_parameter_is_set_by_the_program``: every defaulted
+parameter of a ``genegraph_spark/`` function is passed, by keyword or by
+position, by some program call. A default no caller overrides is a
+constant, and the branches only its other values reach are dead.
+"""
 
 from __future__ import annotations
 
 import ast
+import io
 import re
+import tokenize
 from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 
+PROGRAM = [
+    *sorted(ROOT.glob("genegraph_spark/**/*.py")),
+    ROOT / "__spark_entry__.py",
+    *sorted(ROOT.glob("scripts/**/*.py")),
+    *sorted(p for p in ROOT.glob("perfbench/**/*.py") if "tests" not in p.parts),
+]
+
 # Kept although no program path uses them:
 ALLOWED = {
     # reference implementations the Spark paths are tested against
     "link_entities", "mention_counts", "cosine_expr", "unparse_cnv_py", "unparse_hgvs_py",
+    # round-trip inverses of the serializers: tests compare the program's
+    # output against its parse, and blank-node graphs up to isomorphism
+    "parse_turtle", "parse_documents", "parse_rdfxml", "is_isomorphic",
     # the GDM corpus chain: its tests and oracle need the reference
     # source tree, so it stays until that tree is in the repository
     "transform_gdm", "find_hgnc_gene", "transform_chain", "stream_gdm_to_store",
+    # package metadata
+    "__version__",
 }
+
+# Defaulted parameters kept although no program call passes them:
+ALLOWED_PARAMS = {
+    # deployment paths
+    "stream_mention_counts(out_dir)", "stream_windowed_events(out_dir)",
+    "stream_dedup_events(out_dir)", "stream_user_running_totals(out_dir)",
+    "clinsig_tables(resources_dir)", "clinvar_jsonld_model(resources_dir)",
+    # the GDM corpus chain (see ALLOWED)
+    "add_proband_scores(cap)", "transform_gdm_corpus(affiliations)",
+    # physical layout of an on-disk index or store: recorded in its
+    # metadata and checked (or adopted) when it is reopened
+    "NamedGraphStore(n_buckets)",
+    "MinhashIndex(k)", "MinhashIndex(n_hashes)", "MinhashIndex(n_bands)",
+    # resolver arguments: resolve(name, triples, **args) forwards them
+    # through the RESOLVERS table, which no call site names
+    "entity_list(entity_type)", "entity_list(text)", "entity_list(limit)",
+    "entity_list(offset)",
+}
+
+# Parameters that name an input column select no branch.
+COLUMN = re.compile(r"(.*_)?cols?|src|dst|key|version")
+
+
+def _code_words(text: str) -> list[tuple[int, str]]:
+    """(line, word) for every word in the code tokens of ``text``: names and
+    non-docstring strings, without comments and docstrings."""
+    docstrings = {
+        (node.body[0].lineno, node.body[0].col_offset)
+        for node in ast.walk(ast.parse(text))
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+        and isinstance(node.body[0].value.value, str)
+    }
+    words = []
+    for tok in tokenize.generate_tokens(io.StringIO(text).readline):
+        if tok.type == tokenize.NAME or (tok.type == tokenize.STRING and tok.start not in docstrings):
+            words += [(tok.start[0], w) for w in re.findall(r"\w+", tok.string)]
+    return words
+
+
+def _definitions(tree: ast.Module):
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield node.name, node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            for target in node.targets if isinstance(node, ast.Assign) else [node.target]:
+                for name in ast.walk(target):
+                    if isinstance(name, ast.Name):
+                        yield name.id, node
 
 
 def test_every_package_def_is_used_by_the_program():
-    program = [
-        *ROOT.glob("genegraph_spark/**/*.py"),
-        ROOT / "__spark_entry__.py",
-        *ROOT.glob("scripts/**/*.py"),
-        *(p for p in ROOT.glob("perfbench/**/*.py") if "tests" not in p.parts),
-    ]
-    texts = {p: p.read_text() for p in program}
-    uses = Counter(w for text in texts.values() for w in re.findall(r"\w+", text))
+    words = {p: _code_words(p.read_text()) for p in PROGRAM}
+    uses = Counter(w for ws in words.values() for _, w in ws)
     unused = []
-    for path, text in texts.items():
+    for path in PROGRAM:
         if path.parts[len(ROOT.parts)] != "genegraph_spark":
             continue
-        lines = text.splitlines()
-        for node in ast.parse(text).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
-            own = "\n".join(lines[node.lineno - 1 : node.end_lineno])
-            if node.name not in ALLOWED and uses[node.name] == re.findall(r"\w+", own).count(node.name):
-                unused.append(f"{path.relative_to(ROOT)}:{node.lineno} {node.name}")
+        for name, node in _definitions(ast.parse(path.read_text())):
+            own = sum(1 for line, w in words[path] if w == name and node.lineno <= line <= node.end_lineno)
+            if name not in ALLOWED and uses[name] == own:
+                unused.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}")
     assert not unused, "defined but used by no program code:\n" + "\n".join(unused)
+
+
+def _defaulted(tree: ast.Module):
+    """(call name, positional index or None, parameter, def) for every
+    defaulted parameter of every def in ``tree``. Methods are matched by
+    attribute name with ``self`` dropped; ``__init__`` by its class name."""
+    owner = {node: cls for cls in ast.walk(tree) if isinstance(cls, ast.ClassDef) for node in cls.body}
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        cls = owner.get(node)
+        bound = cls is not None and not any(
+            isinstance(d, ast.Name) and d.id == "staticmethod" for d in node.decorator_list
+        )
+        name = cls.name if cls is not None and node.name == "__init__" else node.name
+        a = node.args
+        positional = a.posonlyargs + a.args
+        first = len(positional) - len(a.defaults)
+        for i, arg in enumerate(positional[first:], first):
+            yield name, i - bound, arg.arg, node
+        for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+            if default is not None:
+                yield name, None, arg.arg, node
+
+
+def test_every_defaulted_parameter_is_set_by_the_program():
+    trees = {p: ast.parse(p.read_text()) for p in PROGRAM}
+    passed = set()  # (call name, position or keyword)
+    for tree in trees.values():
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            func = call.func
+            name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+                passed.add((name, "*"))
+            passed.update((name, i) for i in range(len(call.args)))
+            passed.update((name, k.arg) for k in call.keywords)
+    unset = []
+    for path, tree in trees.items():
+        if path.parts[len(ROOT.parts)] != "genegraph_spark":
+            continue
+        for name, pos, param, node in _defaulted(tree):
+            used = passed & {(name, pos), (name, param), (name, "*")}
+            kept = name in ALLOWED or COLUMN.fullmatch(param) or f"{name}({param})" in ALLOWED_PARAMS
+            if not used and not kept:
+                unset.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}({param})")
+    assert not unset, "defaulted parameters no program call passes:\n" + "\n".join(unset)

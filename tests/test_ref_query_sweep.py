@@ -610,9 +610,8 @@ class TestAlgebraDataForms:
             (self.DOSAGE_DISEASE_BGP, "urn:geneH", False),
             (self.GV_BGP, "urn:geneZ", False),
         ]:
-            got = A.ask(
-                A.op(curation_graph, [":bgp", *bgp_form], params={"gene": gene})
-            )
+            bound = [[gene if x == "?gene" else x for x in t] for t in bgp_form]
+            got = A.ask(A.op(curation_graph, [":bgp", *bound]))
             assert got is expect, (bgp_form[0], gene)
 
     def test_project_bgp_queries(self, spark, curation_graph):
@@ -648,12 +647,6 @@ class TestAlgebraDataForms:
         out = sorted(r.disease for r in A.op(curation_graph, form).collect())
         assert out == ["urn:diseaseD", "urn:diseaseE"]
         assert A.count(A.op(curation_graph, form)) == 2
-        # ::q/distinct false opt-out → bag semantics (3× via the union)
-        bag = sorted(
-            r.disease for r in A.op(curation_graph, form, distinct=False).collect()
-        )
-        assert bag == ["urn:diseaseD", "urn:diseaseD", "urn:diseaseD", "urn:diseaseE"]
-        assert A.count(A.op(curation_graph, form, distinct=False)) == 4
 
 
 class TestActionabilityTransitional:

@@ -250,8 +250,8 @@ def test_kill_between_data_and_manifest_then_resume(spark, tmp_path):
     assert store.last_commit() == 0
     assert os.path.exists(os.path.join(path, "data", "c00000001"))  # orphan exists
     assert {r_["object"] for r_ in store.triples().where("graph = 'g1'").collect()} == {"o1"}
-    committed = {r_["graph"] for r_ in store.committed_graphs().collect()}
-    assert committed == {f"g{i}" for i in range(20)}  # orphan lineage ignored
+    processed = {r_["graph"] for r_ in store.processed_versions().collect()}
+    assert processed == {f"g{i}" for i in range(20)}  # orphan lineage ignored
     # ...and the replayed merge converges over the orphan dir
     rows2 = triples_df(spark, [("g1", "s", "p", "NEW", True, None)])
     store.merge(rows2)
@@ -278,14 +278,6 @@ def test_snapshot_store_versions_and_asof(spark, tmp_path):
     assert asof1 == {("e1", "a"), ("e2", "b")}
     asof2 = {(r["is_version_of"], r["doc"]) for r in store.latest_as_of("trait", 2).collect()}
     assert asof2 == {("e1", "a2"), ("e2", "b")}
-
-
-def test_bind_params_filters_bindings(spark):
-    rows = [("g", "a", ":p", "b", True, None), ("g", "c", ":p", "d", True, None)]
-    t = triples_df(spark, rows)
-    b = A.bgp(t, [("?s", ":p", "?o")])
-    got = A.bind_params(b, s="a").collect()
-    assert [(r["s"], r["o"]) for r in got] == [("a", "b")]
 
 
 def test_fix_offset_colon_repair():
@@ -388,7 +380,7 @@ def test_salted_aggregate_and_topk_match_direct(spark):
         F.col("id").alias("rid"),
         (F.col("id") * 7 % 101).cast("double").alias("score"),
     )
-    topk = SK.salted_top_k(df, "k", "score", k=5, n_salts=4, salt_by="rid", tiebreak="rid")
+    topk = SK.salted_top_k(df, "k", "score", k=5, salt_by="rid", tiebreak="rid")
     w = Window.partitionBy("k").orderBy(F.desc("score"), F.asc("rid"))
     directk = df.withColumn("rank", F.row_number().over(w)).where("rank <= 5")
     assert {tuple(r) for r in topk.select("k", "rid", "rank").collect()} == {
@@ -427,7 +419,7 @@ def test_resume_skips_committed_graphs(spark, sf_dir, tmp_path):
     path = str(tmp_path / "kg_resume")
     res1, store1, _ = run_to_store(spark, sf_dir, path, use_golden_text=True)
     n1 = store1.triples().count()
-    res2, store2, _ = run_to_store(spark, sf_dir, path, resume=True, use_golden_text=True)
+    res2, store2, _ = run_to_store(spark, sf_dir, path, incremental=True, use_golden_text=True)
     # all page graphs already committed -> the resumed run reprocesses none
     assert res2.pages.count() == 0
     assert store2.triples().count() == n1  # state unchanged
@@ -449,31 +441,7 @@ def test_curation_views_shape(spark, sf_dir):
     assert 0 < len(sug) <= 4 and all(r["label"].startswith("s") for r in sug)
 
 
-# -- surface-form canonicalization, ANN recall, bucketed co-located join ---------
-
-def test_surface_form_edges_merge_near_duplicate_labels(spark):
-    from genegraph_spark.operators import canonicalize as C
-
-    labels = spark.createDataFrame(
-        [
-            ("e:1", "spark protein one"),
-            ("e:2", "spark protein one!"),   # near-dup of e:1's label
-            ("e:3", "completely different"),
-        ],
-        "iri string, label string",
-    )
-    edges = C.surface_form_edges(labels, threshold=0.6)
-    got = {(r["src"], r["dst"]) for r in edges.collect()}
-    assert ("e:1", "e:2") in got
-    assert not any("e:3" in e for pair in got for e in pair)
-
-    # feeds CC: e1/e2 merge, e3 singleton
-    dictionary = labels.select("iri")
-    sameas = spark.createDataFrame([], "iri string, xref string")
-    cmap = {r["iri"]: r["canonical_iri"] for r in C.canonical_entity_map(
-        dictionary, sameas, surface_edges=edges).collect()}
-    assert cmap["e:1"] == cmap["e:2"] == "e:1" and cmap["e:3"] == "e:3"
-
+# -- ANN recall, bucketed co-located join ----------------------------------------
 
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
     from genegraph_spark.operators import similarity as SIM
@@ -559,8 +527,8 @@ def test_merge_delete_wins_over_publish(spark, tmp_path):
     store.merge(both, delete_graphs=dels)
     graphs = {r["graph"] for r in store.triples().select("graph").distinct().collect()}
     assert graphs == {"g2"}  # g1 deleted deterministically
-    committed = {r["graph"] for r in store.committed_graphs().collect()}
-    assert committed == {"g2"}
+    actions = {(r["graph"], r["action"]) for r in store.lineage().where("commit = 1").collect()}
+    assert actions == {("g1", "unpublish"), ("g2", "publish")}
 
 
 def test_alias_from_dictionary_unique_label_iri(spark):

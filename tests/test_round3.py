@@ -39,32 +39,30 @@ class TestConnectedComponentsLogRounds:
         from genegraph_spark.operators import algebra
         from genegraph_spark.operators.canonicalize import connected_components
 
-        monkeypatch.setattr(algebra, "LOCAL_ROWS", 10)
+        monkeypatch.setattr(algebra, "LOCAL_ROWS", 10)  # forces the distributed path
         df = spark.createDataFrame(pairs, "src string, dst string")
-        stats: dict = {}
-        got = sorted(map(tuple, connected_components(df, stats=stats).collect()))
-        assert stats["path"] == "distributed"
+        got = sorted(map(tuple, connected_components(df).collect()))
         assert got == _union_find(pairs)
 
-    def test_cc_chain_rounds_logarithmic(self, spark):
+    def test_cc_chain_rounds_logarithmic(self, spark, monkeypatch):
         """The judge-requested evidence (VERDICT r2 item 2): a 300k-edge
         chain with shuffled ids — the same-as-xref-chain adversarial shape —
         must exceed the 200k local threshold (forcing the distributed
         path) and converge in ~log₂(n) alternating-star rounds, where the
         old min-label propagation needed diameter ≈ 300k rounds."""
-        from genegraph_spark.operators.canonicalize import connected_components
+        from genegraph_spark.operators import algebra, canonicalize
 
         n = 300_001
+        assert n - 1 > algebra.LOCAL_ROWS
+        # more rounds than this raise instead of returning
+        monkeypatch.setattr(canonicalize, "CC_ROUNDS", 20)
         ids = list(range(n))
         random.seed(42)
         random.shuffle(ids)
         names = [f"x{v:07d}" for v in ids]
         chain = [(names[i], names[i + 1]) for i in range(n - 1)]
         cdf = spark.createDataFrame(chain, "src string, dst string").repartition(32)
-        stats: dict = {}
-        res = connected_components(cdf, stats=stats)
-        assert stats["path"] == "distributed"
-        assert stats["rounds"] <= 20
+        res = canonicalize.connected_components(cdf)
         mn = min(names)
         assert res.where(F.col("component") != mn).count() == 0
         assert res.count() == n
@@ -854,9 +852,6 @@ class TestResolverEdges:
         assert set(counts) == {"train", "val", "test"}
         # ~90/5/5 within generous tolerance on 2000 ids
         assert 0.85 <= counts["train"] / 2000 <= 0.95
-        # different salt re-rolls assignments
-        c = ids.select("doc_id", TS.split_assign(F.col("doc_id"), salt="v2").alias("s"))
-        assert a.exceptAll(c).count() > 0
 
 
 class TestStreamDedupRestart:

@@ -353,13 +353,16 @@ class TestDuplicateSpans:
 
 
 class TestStreamToStore:
-    def test_streamed_merges_converge_to_batch_content(self, spark, sf_dir, tmp_path):
+    def test_streamed_merges_converge_to_batch_content(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
         """The primary loop streamed end to end: two source deliveries →
-        per-micro-batch construct_kg + store MERGE; final store content
-        must equal the one-shot batch pipeline over the same pages, and
-        the second run must only process the NEW files (checkpoint
-        catch-up)."""
+        per-micro-batch run_to_store commit; final store content must
+        equal the one-shot batch pipeline over the same pages, the second
+        run must only process the NEW files (checkpoint catch-up), and
+        every delivered page goes through the page mapper exactly once."""
         from genegraph_spark import fixtures
+        from genegraph_spark.operators import mentions
         from genegraph_spark.plans.pipeline import construct_kg
         from genegraph_spark.sinks.named_graph import NamedGraphStore
         from genegraph_spark.streaming.stream import stream_pages_to_store
@@ -368,6 +371,21 @@ class TestStreamToStore:
         store_path = str(tmp_path / "store")
         ckpt = str(tmp_path / "ckpt")
         pages = fixtures.pages_df(spark, sf_dir)
+
+        emitted = spark.sparkContext.accumulator(0)
+        make_mapper = mentions.make_page_mapper
+
+        def counting_mapper(*args, **kwargs):
+            inner = make_mapper(*args, **kwargs)
+
+            def mapper(batches):
+                for pdf in inner(batches):
+                    emitted.add(len(pdf))
+                    yield pdf
+
+            return mapper
+
+        monkeypatch.setattr(mentions, "make_page_mapper", counting_mapper)
         # delivery 1: even doc_ids (all versions of a url share a doc_id,
         # so url families stay within one delivery)
         pages.where("doc_id % 2 = 0").repartition(2).write.mode("overwrite").parquet(src)
@@ -379,6 +397,7 @@ class TestStreamToStore:
         pages.where("doc_id % 2 = 1").repartition(2).write.mode("append").parquet(src)
         r2 = stream_pages_to_store(spark, sf_dir, src, store_path, ckpt)
         assert r2["last_commit"] > c1  # new commits for the new files only
+        assert emitted.value == pages.count()
 
         store = NamedGraphStore(spark, store_path)
         got = store.triples().select(

@@ -1439,60 +1439,10 @@ class TestClinvarStatements:
         assert out["SCV2"].predicate == "causes_mendelian_condition"
         assert out["SCV2"].direction == "supports"
 
-    def test_trait_xref_normalization(self, spark):
-        import json
-
-        from genegraph_spark.sources import clinvar_statements as CS
-
-        df = spark.createDataFrame([
-            (json.dumps({
-                "release_date": "2024-01-01", "event_type": "create",
-                "content": {
-                    "id": "7", "type": "Disease", "name": "Some disease",
-                    "medgen_id": "C123",
-                    "xrefs": [
-                        json.dumps({"id": "D000123", "db": "MeSH"}),
-                        # id already starts with db → kept as-is
-                        json.dumps({"id": "OMIM:600123", "db": "OMIM"}),
-                    ],
-                    "alternate_names": ["alt"]}}),),
-            (json.dumps({
-                "release_date": "2024-02-01", "event_type": "delete",
-                "content": {"id": "7", "type": "Phenotype"}}),),
-        ], "value string")
-        rows = {r.id: r for r in CS.parse_trait_messages(df).collect()}
-        t1 = rows[self.CG + "trait_7.2024-01-01"]
-        assert t1.type == "Disease"
-        assert t1.xrefs == ["MeSH:D000123", "OMIM:600123"]
-        assert t1.deleted is False
-        t2 = rows[self.CG + "trait_7.2024-02-01"]
-        assert t2.type == "Phenotype"
-        assert t2.deleted is True
-        assert t2.is_version_of == t1.is_version_of
-
 
 class TestBasedata:
     """Base-data flat-file loaders (sources/basedata.py) — the corners
     the oracled queries don't pin down individually."""
-
-    def test_rxnorm_drug_types(self, spark):
-        from genegraph_spark.sources.basedata import rxnorm_drug_types
-
-        RT = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-        t = spark.createDataFrame(
-            [
-                ("g", "urn:d1", RT, ":owl/Class", True, None),
-                ("g", "urn:d1", RT, ":owl/Class", True, None),  # dup stays 1
-                ("g", "urn:d2", ":rdfs/label", "aspirin", False, "xsd:string"),
-                ("g", "urn:d3", RT, ":owl/Thing", True, None),
-            ],
-            "graph string, subject string, predicate string, object string, "
-            "object_is_iri boolean, object_datatype string",
-        )
-        out = rxnorm_drug_types(t).collect()
-        drugs = [r.subject for r in out if r.object == ":chebi/Drug"]
-        assert drugs == ["urn:d1"]  # distinct; only owl:Class subjects
-        assert len(out) == len(t.collect()) + 1
 
     def test_score_hidden_label_lookup(self, spark):
         """common_score.clj's symbol-query unions preferred AND hidden
@@ -1571,11 +1521,11 @@ class TestActionabilityAssertionCards:
 
 
 class TestGciMisc:
-    """The small GCI ingest variants (gci_neo4j_report_only,
-    gci_legacy_report_only, the gci.clj GDI stub) and the ClinVar
+    """The small GCI ingest variants (gci_neo4j, gci_legacy_report_only,
+    the gci.clj GDI stub) and the ClinVar
     submitter Agent transform — the remaining transform/ namespaces."""
 
-    def test_neo4j_report_only_scheme(self, spark):
+    def test_neo4j_report_scheme(self, spark):
         from genegraph_spark.sources import gci_misc as GM
 
         reports = spark.createDataFrame(
@@ -1586,19 +1536,10 @@ class TestGciMisc:
             "score_string string",
         )
         full = GM.gci_neo4j_triples(reports).collect()
-        ro = GM.gci_neo4j_triples(reports, report_only=True).collect()
-        # full: 21 triples, report IRI carries the colon-stripped date
+        # 21 triples, report IRI carries the colon-stripped date
         assert len(full) == 21
-        assert full[0].graph.endswith("report_abc-2020-01-01T100000")
-        # report-only: 5 triples (skeleton + content), undated IRI
-        # scheme, assertion = bare id
-        assert len(ro) == 5
-        assert all(r.graph.endswith("gci/abc_report") for r in ro)
-        parts = sorted(
-            r.object for r in ro if r.predicate == ":bfo/has-part"
-        )
-        assert parts[1].endswith("gci/abc")
-        chars = [r for r in ro if r.predicate == ":cnt/chars"]
+        assert all(r.graph.endswith("report_abc-2020-01-01T100000") for r in full)
+        chars = [r for r in full if r.predicate == ":cnt/chars"]
         assert chars[0].object == '{"s":1}' and not chars[0].object_is_iri
 
     def test_submitter_extensions(self, spark):

@@ -43,11 +43,9 @@ def test_create_update_delete_sequence(spark, tmp_path):
     got3 = {(r["graph"], r["object"]) for r in store.triples().collect()}
     assert got3 == {("g2", "o1")}
 
-    # lineage shows the full history; resume set excludes unpublished g1
+    # lineage shows the full history
     lin = store.lineage()
     assert lin.where("graph = 'g1'").count() == 4  # publish, publish, publish, unpublish
-    committed = {r["graph"] for r in store.committed_graphs().collect()}
-    assert committed == {"g2"}
 
 
 def test_merge_only_rewrites_touched_buckets(spark, tmp_path):
@@ -71,7 +69,7 @@ def test_pipeline_to_store_and_resume(spark, sf_dir, tmp_path):
     res, store, commit = run_to_store(spark, sf_dir, path, use_golden_text=True)
     n1 = store.triples().count()
     assert n1 > 0
-    live_graphs = {r["graph"] for r in store.committed_graphs().collect()}
+    live_graphs = {r["graph"] for r in store.triples().select("graph").distinct().collect()}
     deleted = {r["graph"] for r in res.deleted_graphs.collect()}
     assert deleted and not (live_graphs & deleted)
 
@@ -108,10 +106,10 @@ def test_compact_and_expire_snapshots(spark, tmp_path):
     assert removed  # old commit dirs reclaimed
     data_dirs = set(os.listdir(os.path.join(str(tmp_path / "store3"), "data")))
     assert data_dirs == {f"c{meta['commit']:08d}"}
-    # …until expiry; latest snapshot unaffected, resume set survives
+    # …until expiry; latest snapshot unaffected
     assert {(r["graph"], r["object"]) for r in store.triples().collect()} == before
-    committed = {r["graph"] for r in store.committed_graphs().collect()}
-    assert "g5" not in committed and "g3" in committed
+    live = {r["graph"] for r in store.triples().select("graph").distinct().collect()}
+    assert "g5" not in live and "g3" in live
 
     # writes continue normally after maintenance
     store.merge(make(spark, [t("g100", "s", "p", "o100")]))
