@@ -1025,15 +1025,24 @@ def _kg_triples_df(spark, sf_dir):
 
 
 def clear_query_caches() -> None:
-    """Unpersist the shared triples frames and forget cached IVF index
-    paths. The caches are sized for a ONE-SHOT driver/bench process
-    (documented intent); a long-lived server embedding queries() must
-    call this between corpora or the persisted frames pin CacheManager
-    entries forever (VERDICT r4 'what's wrong' #3)."""
-    for key, val in list(_KG_TRIPLES_CACHE.items()):
-        if hasattr(val, "unpersist"):
+    """Unpersist the shared triples frames and delete the on-disk dirs the
+    caches made (the IVF index, the stream sources). The caches are sized
+    for a ONE-SHOT driver/bench process (documented intent); a long-lived
+    server embedding queries() must call this between corpora or the
+    persisted frames pin CacheManager entries forever (VERDICT r4 'what's
+    wrong' #3) and the temp dirs pile up."""
+    import shutil
+
+    for val in _KG_TRIPLES_CACHE.values():
+        if isinstance(val, str):  # an IVF index dir
+            shutil.rmtree(val, ignore_errors=True)
+        else:
             val.unpersist()
-        del _KG_TRIPLES_CACHE[key]
+    _KG_TRIPLES_CACHE.clear()
+    for src in _STREAM_SRC_CACHE.values():
+        # src is <mkdtemp dir>/src; the temp dir itself goes
+        shutil.rmtree(os.path.dirname(src), ignore_errors=True)
+    _STREAM_SRC_CACHE.clear()
 
 
 def q_cur_gene_disease_pairs(spark, sf_dir):

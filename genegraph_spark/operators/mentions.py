@@ -13,11 +13,12 @@ One linking semantics, two engines:
   broadcast gazetteer (compiled driver-side by :func:`gazetteer_payload`)
   and disambiguates in one pass per page, emitting slim per-page int
   arrays. ``construct_kg`` and every KG leaf use it.
-* **Fallback** — the JVM-side composition :func:`detect_mentions` →
+* **Reference** — the JVM-side composition :func:`detect_mentions` →
   :func:`link_entities` → :func:`mention_counts` (broadcast hash join of
-  the exploded token stream against the exploded alias table), for
-  gazetteers above the broadcast caps that :func:`assert_gazetteer_scale`
-  enforces. A test pins it to the mapper's output.
+  the exploded token stream against the exploded alias table). It is the
+  reference the mapper is tested against (a test pins the two outputs
+  equal); ``kg_mentions_preferred`` and the streaming mention counts use
+  its detection step.
 
 Disambiguation (two entities sharing a surface form): label-kind weight
 (:data:`KIND_WEIGHT`, preferred > alt > hidden — the skos ranking of
@@ -25,9 +26,9 @@ transform/gene.clj:51-67) plus document-context support (how many
 *distinct* surface forms of the same entity occur in the document), then
 a deterministic argmax per (doc, position), ties on the smaller IRI.
 
-Scale notes (100 TB): the fallback's token explode multiplies rows ~200×
-but never shuffles — detection is explode → broadcast-join → local
-aggregation, and the only shuffles are the per-(doc,entity)
+Scale notes (100 TB): the join composition's token explode multiplies
+rows ~200× but never shuffles — detection is explode → broadcast-join →
+local aggregation, and the only shuffles are the per-(doc,entity)
 aggregations, keyed by doc so Zipf-skewed hot *entities* (BRCA1-class)
 do not create hot *keys*.
 """
@@ -38,7 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: skos label-kind ranking, strongest first; the single source for the
-#: mapper's gazetteer, the fallback's scoring and alias deduplication
+#: mapper's gazetteer and the join composition's scoring
 KIND_WEIGHT = {"preferred": 3, "alt": 2, "hidden": 1}
 
 
@@ -75,7 +76,7 @@ def link_entities(candidates: DataFrame, alias: DataFrame, id_col: str = "url") 
     """Resolve ambiguous candidates to one entity per (doc, position).
 
     Contract: the alias table feeding detect_mentions must be unique on
-    (label, iri) — alias_from_dictionary enforces it — because
+    (label, iri) — ``fixtures.alias_df`` is — because
     unambiguous-label candidates pass through without a per-(doc, pos)
     pick and duplicate alias rows would double-count mentions.
 
@@ -132,82 +133,6 @@ MAP_SCHEMA = (
 )
 
 
-def alias_from_dictionary(dictionary: DataFrame) -> DataFrame:
-    """Explode a normalized dictionary (iri, entity_type, preferred_label,
-    alt_labels, hidden_labels, same_as) into the gazetteer alias table
-    (iri, entity_type, label, label_kind) — the skos preferred/alt/hidden
-    ranking of transform/gene.clj:51-67."""
-    # NULL label arrays (external dictionaries often use NULL, not []):
-    # concat() of arrays is NULL if ANY argument is NULL, and
-    # explode(NULL) drops the whole row — coalesce each to empty first
-    alts = F.coalesce(F.col("alt_labels"), F.array().cast("array<string>"))
-    hiddens = F.coalesce(F.col("hidden_labels"), F.array().cast("array<string>"))
-    lk = F.explode(
-        F.concat(
-            F.array(F.struct(F.col("preferred_label").alias("label"), F.lit("preferred").alias("label_kind"))),
-            F.transform(alts, lambda a: F.struct(a.alias("label"), F.lit("alt").alias("label_kind"))),
-            F.transform(hiddens, lambda h: F.struct(h.alias("label"), F.lit("hidden").alias("label_kind"))),
-        )
-    )
-    exploded = dictionary.select("iri", "entity_type", lk.alias("lk")).select(
-        "iri", "entity_type", "lk.label", "lk.label_kind"
-    )
-    # (label, iri) must be UNIQUE in a gazetteer: a label listed both as
-    # preferred and alt for the same entity would double-count every
-    # occurrence in the unambiguous fast path (which passes candidate
-    # rows through without a per-(doc,pos) pick). Keep the strongest kind.
-    w = Window.partitionBy("iri", "label").orderBy(_kind_weight().desc())
-    return (
-        exploded.withColumn("_rn", F.row_number().over(w))
-        .where("_rn = 1")
-        .drop("_rn")
-    )
-
-
-def sameas_from_dictionary(dictionary: DataFrame) -> DataFrame:
-    """Explode the dictionary's same_as xref arrays into (iri, xref) edges."""
-    return dictionary.select("iri", F.explode("same_as").alias("xref"))
-
-
-# The gazetteer is curated-dictionary-scale by contract (names.edn is
-# O(10^3) entries in the reference); the pipeline collects it to the
-# driver to compile the broadcast matcher. Guard that contract — in rows
-# AND bytes (2M string rows would be multi-GB on the driver; the byte cap
-# is what actually protects the heap) — instead of silently collecting
-# whatever arrives.
-MAX_GAZETTEER_ROWS = 100_000
-MAX_GAZETTEER_BYTES = 64 * 1024 * 1024
-
-
-def assert_gazetteer_scale(alias: DataFrame) -> int:
-    """Enforce the curated-dictionary contract BEFORE any driver collect:
-    one aggregation job measures the alias table (rows + payload bytes)
-    and raises if it exceeds broadcast scale, directing callers to the
-    join-based detect_mentions/link_entities path (identical results,
-    tested). Returns the row count."""
-    # octet_length, not length: the cap protects the JVM heap in BYTES, and
-    # F.length counts characters — multi-byte UTF-8 labels (CJK etc.) would
-    # under-count up to 4x against the byte budget (ADVICE r3)
-    row = alias.agg(
-        F.count("*").alias("n"),
-        F.sum(
-            F.octet_length("label")
-            + F.octet_length("iri")
-            + F.octet_length("label_kind")
-        ).alias("b"),
-    ).collect()[0]
-    n, nbytes = row[0], row[1] or 0
-    if n > MAX_GAZETTEER_ROWS or nbytes > MAX_GAZETTEER_BYTES:
-        raise ValueError(
-            f"gazetteer has {n} aliases / ~{nbytes >> 20} MiB "
-            f"(caps: {MAX_GAZETTEER_ROWS} rows, {MAX_GAZETTEER_BYTES >> 20} MiB); "
-            "the driver-side broadcast-matcher compile assumes a curated "
-            "dictionary — shard the dictionary or use the join-based "
-            "detect_mentions/link_entities path instead"
-        )
-    return n
-
-
 def gazetteer_payload(alias_rows, canon_of: dict[str, str]):
     """Driver-side gazetteer compilation for the fused pandas stage.
 
@@ -221,8 +146,8 @@ def gazetteer_payload(alias_rows, canon_of: dict[str, str]):
     cidx = {iri: i for i, iri in enumerate(canon_iris)}
     by_label: dict[str, dict[int, int]] = {}
     for r in alias_rows:
-        # (label, entity) unique, strongest kind wins (same contract as
-        # alias_from_dictionary — duplicates would double-count mentions)
+        # (label, entity) unique, strongest kind wins (the link_entities
+        # contract — duplicates would double-count mentions)
         ents = by_label.setdefault(r["label"], {})
         e = eidx[r["iri"]]
         ents[e] = max(ents.get(e, 0), KIND_WEIGHT[r["label_kind"]])
@@ -242,7 +167,7 @@ def make_page_mapper(by_label, e_to_c, use_golden_text: bool):
     Disambiguation = argmax(10*kind_weight + context_support) per surface
     form with min-entity-index tie-break; context_support = number of the
     entity's distinct surface forms present in the document (identical to
-    the detect_mentions → link_entities → mention_counts fallback)."""
+    the detect_mentions → link_entities → mention_counts reference)."""
     import pandas as pd
 
     from ..functions.text import extract_text_py

@@ -501,72 +501,9 @@ class IvfIndex:
             os.path.join(path, "corpus")
         )
         centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-        # drift telemetry: per-centroid row counts live in meta.json so the
-        # documented "rebuild when imbalance crosses a threshold" has a
-        # number without scanning the corpus (bounded by n_centroids)
-        counts = {
-            str(r["centroid_id"]): r["n"]
-            for r in assigned.groupBy("centroid_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
         with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(
-                {"id_col": id_col, "vec_col": vec_col, "centroid_counts": counts}, f
-            )
+            json.dump({"id_col": id_col, "vec_col": vec_col}, f)
         return IvfIndex(spark, path)
-
-
-    def upsert(self, new_vectors: DataFrame) -> None:
-        """Append-assign new vectors into the existing index: assign
-        against the STORED centroids (never refit — queries stay
-        consistent with the original coarse quantizer) and append to the
-        partitioned corpus. Existing files are untouched (parquet append
-        writes new files into the bucket dirs), so concurrent readers
-        keep a consistent view mid-append and the write cost is
-        proportional to the NEW vectors only.
-
-        Centroid drift note (documented trade): heavy appends degrade
-        partition balance/recall over time — rebuild with :meth:`build`
-        when imbalance crosses a threshold (the ANN analog of store
-        compaction)."""
-        import os
-
-        import json
-
-        assigned = ivf_assign(
-            new_vectors, self.centroids, self.meta["id_col"], self.meta["vec_col"]
-        )
-        # one extra pass over the NEW vectors only (they are about to be
-        # written anyway); keeps the drift stat current per upsert
-        new_counts = {
-            str(r["centroid_id"]): r["n"]
-            for r in assigned.groupBy("centroid_id")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        assigned.write.mode("append").partitionBy("centroid_id").parquet(
-            os.path.join(self.path, "corpus")
-        )
-        counts = dict(self.meta.get("centroid_counts", {}))
-        for cid, n in new_counts.items():
-            counts[cid] = counts.get(cid, 0) + n
-        self.meta["centroid_counts"] = counts
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump(self.meta, f)
-
-    def imbalance(self) -> float:
-        """Partition-balance drift stat: max per-centroid count over the
-        MEAN count across all centroids (empty centroids count as zero).
-        1.0 = perfectly balanced; the build docstring's "rebuild when
-        imbalance crosses a threshold" is a check against this number —
-        read from meta.json, no corpus scan."""
-        counts = self.meta.get("centroid_counts", {})
-        n_centroids = self.centroids.count()
-        total = sum(counts.values())
-        if n_centroids == 0 or total == 0:
-            return 1.0
-        return max(counts.values()) / (total / n_centroids)
 
     def topk(
         self,

@@ -72,62 +72,27 @@ def triple(
     ]
 
 
-def page_triples(pages: DataFrame) -> DataFrame:
-    """Per-page skeleton triples; graph = page IRI (= url)."""
-    g = F.col("url")
-    return explode_triples(
-        pages,
-        g,
-        [
-            tstruct(g, I.RDF_TYPE, F.lit(I.C_WEBPAGE), True),
-            tstruct(g, I.P_LANG, F.col("lang"), False, I.XSD_STRING),
-        ],
-    )
-
-
-def mention_triples(linked_canonical: DataFrame) -> DataFrame:
-    """Triples for linked mentions aggregated per (url, entity).
-
-    Input: (url, canonical_iri, n_mentions, first_pos). Emits per graph=url:
-      (url,  kgp:mentions,   canonical_iri)                [IRI]
-      (url,  kgp:hasMention, _:b)                          [deterministic bnode]
-      (_:b,  rdf:type,       kgp:Mention)
-      (_:b,  kgp:canonicalEntity, canonical_iri)           [IRI]
-      (_:b,  kgp:position,   first_pos)                    [xsd:integer]
-    """
-    g = F.col("url")
-    b = I.bnode(g, F.col("canonical_iri"))
-    return explode_triples(
-        linked_canonical,
-        g,
-        [
-            tstruct(g, I.P_MENTIONS, F.col("canonical_iri"), True),
-            tstruct(g, I.P_HAS_MENTION, b, True),
-            tstruct(b, I.RDF_TYPE, F.lit(I.C_MENTION), True),
-            tstruct(b, I.P_CANONICAL, F.col("canonical_iri"), True),
-            tstruct(b, I.P_POSITION, F.col("first_pos"), False, I.XSD_INTEGER),
-        ],
-    )
-
-
-def page_and_mention_triples(live_slim: DataFrame, canon_iris: list[str]) -> DataFrame:
+def page_and_mention_triples(live_slim: DataFrame, canon_lookup: Column) -> DataFrame:
     """Page skeleton + mention triples in ONE explode over the slim
     mapInPandas output (url, lang, m_cidx[], m_cnt[], m_pos[]).
 
-    Fuses :func:`page_triples` + :func:`mention_triples` so the expensive
-    upstream (extraction mapInPandas → version-head window) has exactly
-    ONE consumer: a union of two branches re-executes the whole Python
-    stage per branch (exchange reuse is not reliable across AQE query
-    stages with Python nodes — measured 2× extraction cost in round 1's
-    shape). Canonical IRIs resolve via a literal-array lookup instead of
-    a broadcast join — valid at curated-dictionary scale (the gazetteer
-    is O(10^3) entries by contract; callers with bigger vocabularies take
-    the join path in plans/pipeline.py)."""
+    Per graph = url: (url, rdf:type, kgp:WebPage), (url, kgp:lang, lang),
+    and per linked canonical entity ``c`` with blank node ``_:b``:
+    (url, kgp:mentions, c), (url, kgp:hasMention, _:b),
+    (_:b, rdf:type, kgp:Mention), (_:b, kgp:canonicalEntity, c),
+    (_:b, kgp:position, first_pos).
+
+    One explode keeps ONE consumer of the expensive upstream (extraction
+    mapInPandas → version-head window): a union of per-family branches
+    re-executes the whole Python stage per branch (exchange reuse is not
+    reliable across AQE query stages with Python nodes — measured 2×
+    extraction cost in round 1's shape). ``canon_lookup`` is the
+    literal array of canonical IRIs indexed by ``m_cidx``; the curated
+    gazetteer keeps it small."""
     g = F.col("url")
-    lookup = F.array(*[F.lit(c) for c in canon_iris])
 
     def mention_structs(m):
-        ciri = F.element_at(lookup, m["m_cidx"] + 1)
+        ciri = F.element_at(canon_lookup, m["m_cidx"] + 1)
         b = I.bnode(g, ciri)
         return F.array(
             tstruct(g, I.P_MENTIONS, ciri, True),

@@ -6,12 +6,12 @@ The reference processes each event through a Pedestal interceptor chain
 → infer action → write named graph → snapshot. Re-expressed as a linear
 DataFrame plan (SURVEY §3.1):
 
-    dictionary ──same-as CC──▶ canonical map ──▶ broadcast gazetteer
+    fixture vocabulary ──driver compile──▶ broadcast gazetteer + canonical map
     pages ──fused Arrow mapper (extract, tokenize, match, link, count)──▶
       slim rows (flags + per-page canonical mention arrays)
       slim ──quarantine split──▶ valid
-      valid ──compact versions──▶ live pages (latest non-tombstone per url)
-      live ──explode──▶ triples
+      valid ──compact versions──▶ live slim rows (latest non-tombstone per url)
+      live ──explode──▶ triples (+ the dictionary graph)
       triples ──MERGE by graph──▶ named-graph store (+ lineage)
 
 Every stage is JVM-side except the single fused mapper
@@ -26,17 +26,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fixtures
-from ..functions.text import extract_text, is_tombstone
-from ..operators import canonicalize, mentions, triples as T, validate, versioned
+from ..operators import mentions, triples as T, validate, versioned
 
 
 @dataclass
 class PipelineResult:
     pages: DataFrame
     quarantine: DataFrame
-    live_pages: DataFrame
     linked: DataFrame
-    canonical_map: DataFrame
     triples: DataFrame
     deleted_graphs: DataFrame
     #: (url, version): max version per url among rows that PASSED shape
@@ -54,7 +51,6 @@ def construct_kg(
     spark: SparkSession,
     sf_dir: str,
     pages: DataFrame | None = None,
-    dictionary: DataFrame | None = None,
     use_golden_text: bool = False,
 ) -> PipelineResult:
     """Build the KG from the pages table (synthesized from sf_dir unless
@@ -66,37 +62,25 @@ def construct_kg(
     if pages is None:
         pages = fixtures.pages_df(spark, sf_dir)
 
-    # 0. canonicalize the dictionary (same-as CC: driver union-find fast
-    #    path or the distributed large-star/small-star contraction), then
-    #    compile the broadcast gazetteer.
-    #    With the constant fixture dictionary the whole gazetteer compiles
-    #    driver-side with zero Spark jobs (it IS the broadcast dictionary);
-    #    a caller-supplied dictionary goes through the CC operator.
-    if dictionary is None:
-        dictionary = fixtures.dictionary_df(spark)
-        canon_of = fixtures.canonical_map_py()
-        alias_rows = [
-            {"iri": iri, "label": lbl, "label_kind": kind}
-            for iri, _, pref, alts, hiddens, _ in fixtures.ENTITIES
-            for lbl, kind in (
-                [(pref, "preferred")]
-                + [(a, "alt") for a in alts]
-                + [(h, "hidden") for h in hiddens]
-            )
-        ]
-        canon = spark.createDataFrame(
-            sorted(canon_of.items()), "iri string, canonical_iri string"
+    # 0. compile the broadcast gazetteer on the driver from the fixture
+    #    vocabulary (zero Spark jobs). ``canon`` stays a Python-list frame,
+    #    not a pandas-built LocalRelation: with both constant frames as
+    #    LocalRelations, two construct_kg calls build equal plans and the
+    #    cache manager swaps a persisted triples view into an uncached one.
+    dictionary = fixtures.dictionary_df(spark)
+    canon_of = fixtures.canonical_map_py()
+    alias_rows = [
+        {"iri": iri, "label": lbl, "label_kind": kind}
+        for iri, _, pref, alts, hiddens, _ in fixtures.ENTITIES
+        for lbl, kind in (
+            [(pref, "preferred")]
+            + [(a, "alt") for a in alts]
+            + [(h, "hidden") for h in hiddens]
         )
-    else:
-        # derive the gazetteer and same-as graph from the SUPPLIED
-        # dictionary (not the fixture vocabulary)
-        alias = mentions.alias_from_dictionary(dictionary)
-        # guard BEFORE canonicalization or any collect: rows + bytes
-        mentions.assert_gazetteer_scale(alias)
-        sameas = mentions.sameas_from_dictionary(dictionary)
-        canon = canonicalize.canonical_entity_map(dictionary, sameas)
-        alias_rows = alias.collect()
-        canon_of = {r["iri"]: r["canonical_iri"] for r in canon.collect()}
+    ]
+    canon = spark.createDataFrame(
+        sorted(canon_of.items()), "iri string, canonical_iri string"
+    )
     by_label, e_to_c, canon_iris = mentions.gazetteer_payload(alias_rows, canon_of)
 
     # 1. the fused hot path (north-star shape): ONE Arrow-batched pass per
@@ -156,7 +140,7 @@ def construct_kg(
         F.max("version").alias("version")
     )
     heads = versioned.latest_version(
-        validated.where(F.size("violations") == 0).drop("violations", "root_type"),
+        accepted.drop("violations", "root_type"),
         key="url",
         version="version",
     )
@@ -165,27 +149,19 @@ def construct_kg(
 
     # 3. per-(page, canonical entity) mention records (lazy — only built
     #    if a consumer reads .linked): explode the int arrays, resolve the
-    #    canonical IRI. Small vocabularies resolve via a literal array
-    #    (zero joins/broadcasts); larger ones via a broadcast join.
-    small_vocab = len(canon_iris) <= 10_000
-    if small_vocab:
-        lk = F.array(*[F.lit(c) for c in canon_iris])
-        resolve = lambda df: df.withColumn(  # noqa: E731
-            "canonical_iri", F.element_at(lk, F.col("m_cidx") + 1)
-        ).drop("m_cidx")
-    else:
-        cent = spark.createDataFrame(
-            list(enumerate(canon_iris)), "m_cidx int, canonical_iri string"
-        )
-        resolve = lambda df: df.join(F.broadcast(cent), "m_cidx").drop("m_cidx")  # noqa: E731
-    linked_canon = resolve(
+    #    canonical IRI through a literal array (zero joins/broadcasts; the
+    #    gazetteer is the curated fixture vocabulary). The triples share
+    #    the same lookup Column.
+    canon_lookup = F.array(*[F.lit(c) for c in canon_iris])
+    linked_canon = (
         live_slim.select(
             "url", F.explode(F.arrays_zip("m_cidx", "m_cnt", "m_pos")).alias("m")
-        ).select(
+        )
+        .select(
             "url",
-            F.col("m.m_cidx").alias("m_cidx"),
             F.col("m.m_cnt").cast("long").alias("n_mentions"),
             F.col("m.m_pos").alias("first_pos"),
+            F.element_at(canon_lookup, F.col("m.m_cidx") + 1).alias("canonical_iri"),
         )
     )
 
@@ -193,37 +169,17 @@ def construct_kg(
     #    live_slim (single consumer of the Python stage — a branch per
     #    family re-executes extraction, measured 2× in the round-1 plan),
     #    then the (tiny) dictionary graph unioned on top.
-    if small_vocab:
-        corpus_triples = T.page_and_mention_triples(live_slim, canon_iris)
-    else:
-        corpus_triples = T.union_all(
-            [T.page_triples(live_slim), T.mention_triples(linked_canon)]
-        )
     all_triples = T.union_all(
-        [corpus_triples, T.dictionary_triples(dictionary, canon)]
-    )
-
-    # live pages with text, for golden tests / downstream consumers that
-    # need the extracted text: a lazy second derivation, only evaluated if
-    # a consumer reads it (the triples hot path never does)
-    if use_golden_text:
-        extracted = pages.withColumn("etext", F.col("text"))
-    else:
-        extracted = pages.withColumn("etext", extract_text(F.col("html")))
-    extracted = extracted.withColumn("is_del", is_tombstone(F.col("html")))
-    valid = extracted.where(F.col("etext").isNotNull() | F.col("is_del"))
-    live_pages = (
-        versioned.latest_version(valid, key="url", version="version")
-        .where(~F.col("is_del"))
-        .select("url", "warc_ts", F.col("etext").alias("text"), "lang", "version", "doc_id")
+        [
+            T.page_and_mention_triples(live_slim, canon_lookup),
+            T.dictionary_triples(dictionary, canon),
+        ]
     )
 
     return PipelineResult(
         pages=pages,
         quarantine=quarantine,
-        live_pages=live_pages,
         linked=linked_canon,
-        canonical_map=canon,
         triples=all_triples,
         deleted_graphs=deleted_graphs,
         accepted_versions=accepted_versions,

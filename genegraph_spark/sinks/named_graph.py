@@ -27,10 +27,12 @@ t.graph = n.graph`` over a table partitioned by ``bucket(graph, N)``):
   after a crash converges — the reference's idempotence story, kept.
 
 Scale notes: a merge shuffles only the touched buckets' rows once (the
-anti-join on ``graph`` is co-partitioned with the bucket layout); the
-incoming side determines the touched set, so a small incremental batch
-rewrites a small fraction of a 100 TB table. Skewed graphs are bounded
-by page size; bucket counts are chosen so a bucket ≈ one task.
+anti-join on ``graph`` is co-partitioned with the bucket layout). Its
+cost is copy-on-write of every touched bucket, whole: the incoming and
+deleted graphs hash uniformly, so a feed of k graphs touches
+1 − (63/64)^k of the 64 buckets — 20% at k = 14, 79% at k = 100 — and
+rewrites that share of the table. Skewed graphs are bounded by page
+size; bucket counts are chosen so a bucket ≈ one task.
 """
 
 from __future__ import annotations
@@ -69,9 +71,10 @@ def _le(b: bytes, k: int, width: int = 8) -> int:
     return int.from_bytes(b[k:k + width], "little")
 
 
-def xxhash64(s: str, seed: int = 42) -> int:
+def xxhash64(s: str) -> int:
     """Spark's ``xxhash64(<string column>)`` on the driver: XXH64 over the
     UTF-8 bytes with Spark's default seed 42, as a signed 64-bit value."""
+    seed = 42
     b = s.encode("utf-8")
     n, i = len(b), 0
     if n >= 32:

@@ -99,21 +99,39 @@ def result(spark, sf_dir):
 
 def test_live_pages_and_tombstones(result, sf_dir):
     pages = golden_state(sf_dir)
-    live = {r["url"]: r["text"] for r in result.live_pages.collect()}
-    expected_live = {u: p[0] for u, p in pages.items() if p is not None}
-    assert live == expected_live
+    expected_live = {u: p[1] for u, p in pages.items() if p is not None}
+    webpages = {
+        r["graph"]
+        for r in result.triples.where(
+            (F.col("predicate") == I.RDF_TYPE) & (F.col("object") == I.C_WEBPAGE)
+        ).collect()
+    }
+    assert webpages == set(expected_live)
+    langs = {
+        r["graph"]: r["object"]
+        for r in result.triples.where(F.col("predicate") == I.P_LANG).collect()
+    }
+    assert langs == expected_live
     deleted = {r["graph"] for r in result.deleted_graphs.collect()}
     assert deleted == {u for u, p in pages.items() if p is None}
 
 
 def test_canonical_map(result):
-    got = {r["iri"]: r["canonical_iri"] for r in result.canonical_map.collect()}
+    got = fixtures.canonical_map_py()
     assert got == golden_canonical()
     # the designed components
     assert got[f"{fixtures.KG}/entity/STREAM"] == f"{fixtures.KG}/entity/SPARK"
     assert got[f"{fixtures.KG}/entity/MERGE"] == f"{fixtures.KG}/entity/HASH"
     assert got[f"{fixtures.KG}/entity/JOIN"] == f"{fixtures.KG}/entity/HASH"
     assert got[f"{fixtures.KG}/entity/SCAN"] == f"{fixtures.KG}/entity/SCAN"
+    # and the dictionary graph the pipeline emits carries it
+    emitted = {
+        r["subject"]: r["object"]
+        for r in result.triples.where(
+            (F.col("graph") == I.DICTIONARY_GRAPH) & (F.col("predicate") == I.P_CANONICAL)
+        ).collect()
+    }
+    assert emitted == got
 
 
 def test_mention_triples_match_golden(result, sf_dir):
@@ -163,7 +181,7 @@ def test_quarantine_catches_malformed(spark, sf_dir):
     )
     res = construct_kg(spark, sf_dir, pages=bad)
     assert res.quarantine.count() == 2
-    assert res.live_pages.count() == 0
+    assert res.triples.where(F.col("graph").isin("u1", "u2")).count() == 0
 
 
 def test_cc_distributed_path_matches_local(spark, monkeypatch):

@@ -1,14 +1,18 @@
 """The package carries no code and no setting the program does not use.
 
 ``test_every_package_def_is_used_by_the_program``: every top-level def,
-class and module constant in ``genegraph_spark/`` is named by program code
-(the package, ``__spark_entry__.py``, ``scripts/`` or ``perfbench/``)
-outside its own definition. Comments and docstrings are not uses.
+class, module constant and (non-dunder) method of a top-level class in
+``genegraph_spark/`` is named by program code (the package,
+``__spark_entry__.py``, ``scripts/`` or ``perfbench/``) outside its own
+definition; methods are matched by attribute name. Comments and
+docstrings are not uses.
 
 ``test_every_defaulted_parameter_is_set_by_the_program``: every defaulted
 parameter of a ``genegraph_spark/`` function is passed, by keyword or by
 position, by some program call. A default no caller overrides is a
-constant, and the branches only its other values reach are dead.
+constant, and the branches only its other values reach are dead. A call
+``g(**kw)`` inside ``def f(..., **kw)`` passes to ``g`` only the keywords
+program calls pass to ``f``.
 """
 
 from __future__ import annotations
@@ -88,6 +92,11 @@ def _definitions(tree: ast.Module):
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             yield node.name, node
+            for method in node.body if isinstance(node, ast.ClassDef) else []:
+                if isinstance(method, (ast.FunctionDef, ast.AsyncFunctionDef)) and not (
+                    method.name.startswith("__") and method.name.endswith("__")
+                ):
+                    yield method.name, method
         elif isinstance(node, (ast.Assign, ast.AnnAssign)):
             for target in node.targets if isinstance(node, ast.Assign) else [node.target]:
                 for name in ast.walk(target):
@@ -132,19 +141,57 @@ def _defaulted(tree: ast.Module):
                 yield name, None, arg.arg, node
 
 
+def _call_name(call: ast.Call) -> str | None:
+    func = call.func
+    return func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+
+
+def _calls_by_def(tree: ast.Module):
+    """(innermost enclosing def or None, call) for every call in ``tree``."""
+
+    def visit(node, owner):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                yield owner, child
+            inner = child if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else owner
+            yield from visit(child, inner)
+
+    yield from visit(tree, None)
+
+
 def test_every_defaulted_parameter_is_set_by_the_program():
     trees = {p: ast.parse(p.read_text()) for p in PROGRAM}
     passed = set()  # (call name, position or keyword)
+    forwards = set()  # (g, f): g(**kw) inside def f(..., **kw)
+    params = {}  # def name -> its named parameters
     for tree in trees.values():
-        for call in ast.walk(tree):
-            if not isinstance(call, ast.Call):
-                continue
-            func = call.func
-            name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
-            if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+        for owner, call in _calls_by_def(tree):
+            name = _call_name(call)
+            own_kw = owner.args.kwarg.arg if owner is not None and owner.args.kwarg else None
+            for k in call.keywords:
+                if k.arg is not None:
+                    passed.add((name, k.arg))
+                elif isinstance(k.value, ast.Name) and k.value.id == own_kw:
+                    forwards.add((name, owner.name))
+                    a = owner.args
+                    params[owner.name] = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                else:
+                    passed.add((name, "*"))
+            if any(isinstance(a, ast.Starred) for a in call.args):
                 passed.add((name, "*"))
             passed.update((name, i) for i in range(len(call.args)))
-            passed.update((name, k.arg) for k in call.keywords)
+    # the keywords f's **kw collects reach g (and "*", a call of f with
+    # unknown keywords, passes on as such); repeat for forwarding chains
+    while True:
+        more = {
+            (g, kw)
+            for g, f in forwards
+            for name, kw in passed
+            if name == f and isinstance(kw, str) and kw not in params[f]
+        } - passed
+        if not more:
+            break
+        passed |= more
     unset = []
     for path, tree in trees.items():
         if path.parts[len(ROOT.parts)] != "genegraph_spark":

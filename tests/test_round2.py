@@ -529,17 +529,3 @@ def test_merge_delete_wins_over_publish(spark, tmp_path):
     assert graphs == {"g2"}  # g1 deleted deterministically
     actions = {(r["graph"], r["action"]) for r in store.lineage().where("commit = 1").collect()}
     assert actions == {("g1", "unpublish"), ("g2", "publish")}
-
-
-def test_alias_from_dictionary_unique_label_iri(spark):
-    from genegraph_spark.operators import mentions as M
-
-    d = spark.createDataFrame(
-        [("e:1", "gene", "tp53", ["tp53", "p53"], None, [])],
-        "iri string, entity_type string, preferred_label string, "
-        "alt_labels array<string>, hidden_labels array<string>, same_as array<string>",
-    )
-    rows = M.alias_from_dictionary(d).collect()
-    # 'tp53' appears once (preferred wins over its alt duplicate)
-    labels = [(r["label"], r["label_kind"]) for r in rows]
-    assert sorted(labels) == [("p53", "alt"), ("tp53", "preferred")]

@@ -340,42 +340,13 @@ class TestModelWlLiteralGuard:
 
 
 class TestGazetteerGuard:
-    def test_oversized_row_count_raises_before_collect(self, spark, sf_dir):
-        from genegraph_spark.operators import mentions
-        from genegraph_spark.plans.pipeline import construct_kg
-
-        n = mentions.MAX_GAZETTEER_ROWS + 1
-        big = spark.range(n).select(
-            F.concat(F.lit("urn:e"), F.col("id")).alias("iri"),
-            F.lit("gene").alias("entity_type"),
-            F.concat(F.lit("label"), F.col("id")).alias("preferred_label"),
-            F.array().cast("array<string>").alias("alt_labels"),
-            F.array().cast("array<string>").alias("hidden_labels"),
-            F.array().cast("array<string>").alias("same_as"),
-        )
-        with pytest.raises(ValueError, match="detect_mentions"):
-            construct_kg(spark, sf_dir, dictionary=big, use_golden_text=True)
-
-    def test_oversized_bytes_raise_even_with_few_rows(self, spark):
-        """The byte cap is the real heap guard: 100 × 1 MiB labels blow
-        the 64 MiB cap at a row count the old 2M-row guard waved through."""
-        from genegraph_spark.operators import mentions
-
-        alias = spark.range(100).select(
-            F.concat(F.lit("urn:e"), F.col("id")).alias("iri"),
-            F.repeat(F.lit("x"), 1_000_000).alias("label"),
-            F.lit("preferred").alias("label_kind"),
-        )
-        with pytest.raises(ValueError, match="MiB"):
-            mentions.assert_gazetteer_scale(alias)
-
     def test_join_path_matches_fused_pipeline(self, spark, sf_dir):
-        """The guard's escape hatch must be real: the public join-based
-        detect_mentions → link_entities → mention_counts composition
-        produces exactly the fused mapInPandas pipeline's linked-mention
-        table."""
+        """The join composition is the reference the fused mapper is
+        tested against: detect_mentions → link_entities → mention_counts
+        over the golden live pages (latest non-tombstone version per url)
+        produces exactly the fused pipeline's linked-mention table."""
         from genegraph_spark import fixtures
-        from genegraph_spark.operators import mentions
+        from genegraph_spark.operators import mentions, versioned
         from genegraph_spark.plans.pipeline import construct_kg
 
         cols = ["url", "canonical_iri", "n_mentions", "first_pos"]
@@ -387,7 +358,11 @@ class TestGazetteerGuard:
             sorted(fixtures.canonical_map_py().items()),
             "iri string, canonical_iri string",
         )
-        toks = mentions.tokenize(res.live_pages)
+        pages = fixtures.pages_df(spark, sf_dir, with_html=False)
+        live = versioned.latest_version(pages, key="url", version="version").where(
+            ~F.col("tombstone")
+        )
+        toks = mentions.tokenize(live)
         picked = mentions.link_entities(mentions.detect_mentions(toks, alias), alias)
         counts = mentions.mention_counts(picked.join(canon, "iri"), entity_col="canonical_iri")
         composed = {tuple(r) for r in counts.select(cols).collect()}
@@ -731,6 +706,22 @@ class TestIvfIndexPersistence:
         assert touched == {"0", "1"}
 
 
+class TestQueryCaches:
+    def test_clear_removes_the_dirs_the_caches_made(self, spark, sf_dir):
+        """clear_query_caches deletes the on-disk IVF index and stream
+        source it cached, not only the in-memory entries."""
+        import os
+
+        import __spark_entry__ as E
+
+        E.q_sim_ivf_index(spark, sf_dir)
+        src = E._stream_source(spark, sf_dir, "events")
+        made = [E._KG_TRIPLES_CACHE[("ivf_index", sf_dir)], os.path.dirname(src)]
+        assert all(os.path.isdir(d) for d in made)
+        E.clear_query_caches()
+        assert [d for d in made if os.path.exists(d)] == []
+
+
 class TestResolverRegistry:
     """Resolver-map analog (core.clj:42-150): string-dispatched read
     resolvers over the triples view."""
@@ -876,37 +867,6 @@ class TestStreamDedupRestart:
         ev.where(F.col("event_id") % 10 == 0).coalesce(1).write.mode("append").parquet(src)
         second = S.stream_dedup_events(spark, src, ckpt)
         assert second.count() == n_distinct  # replay produced ZERO new emissions
-
-
-class TestIvfIndexUpsert:
-    def test_upsert_assigns_against_stored_centroids(self, spark, sf_dir, tmp_path):
-        from genegraph_spark.operators import similarity as SIM
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        base = emb.where("vec_id >= 10")
-        extra = emb.where("vec_id < 10").select(
-            (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
-        )
-        path = str(tmp_path / "ivf_up")
-        idx = SIM.IvfIndex.build(base, path)
-        n_before = spark.read.parquet(path + "/corpus").count()
-
-        idx.upsert(extra)
-        n_after = spark.read.parquet(path + "/corpus").count()
-        assert n_after == n_before + extra.count()
-
-        # new vectors are findable: query WITH one of the new ids' vector
-        q = extra.limit(1).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        hits = idx.topk(q, k=3, n_probe=2)
-        assert hits.count() > 0
-        # centroids unchanged on disk (no refit)
-        reloaded = SIM.IvfIndex(spark, path)
-        key = lambda r: (r["centroid_id"], tuple(r["embedding"]))
-        a = sorted(key(r) for r in idx.centroids.collect())
-        b = sorted(key(r) for r in reloaded.centroids.collect())
-        assert a == b
 
 
 def test_sessionize_property_matches_python_reference(spark):

@@ -268,41 +268,6 @@ class TestAssertionResolvers:
 
 
 # ---------------------------------------------------------------------------
-# IVF index drift telemetry
-# ---------------------------------------------------------------------------
-
-
-class TestIvfDriftTelemetry:
-    def test_counts_and_imbalance_track_build_and_upsert(self, spark, sf_dir, tmp_path):
-        import json
-
-        from genegraph_spark.operators import similarity as SIM
-
-        emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        base = emb.where("vec_id >= 10")
-        path = str(tmp_path / "ivf_tel")
-        idx = SIM.IvfIndex.build(base, path)
-        counts = idx.meta["centroid_counts"]
-        assert sum(counts.values()) == base.count()
-        imb0 = idx.imbalance()
-        assert imb0 >= 1.0
-
-        # skewed upsert: every new vector pushed through assignment; the
-        # stat must change and persist to meta.json
-        extra = emb.where("vec_id < 10").select(
-            (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
-        )
-        idx.upsert(extra)
-        assert sum(idx.meta["centroid_counts"].values()) == base.count() + extra.count()
-        on_disk = json.load(open(os.path.join(path, "meta.json")))
-        assert on_disk["centroid_counts"] == idx.meta["centroid_counts"]
-        # a reloaded index sees the same telemetry without scanning corpus
-        reloaded = SIM.IvfIndex(spark, path)
-        assert reloaded.imbalance() == reloaded.imbalance()
-        assert sum(reloaded.meta["centroid_counts"].values()) == base.count() + extra.count()
-
-
-# ---------------------------------------------------------------------------
 # Substring-level duplicate spans
 # ---------------------------------------------------------------------------
 
