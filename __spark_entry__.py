@@ -664,12 +664,10 @@ def q_dedup_incremental(spark, sf_dir):
     # the version-1 corpus once, then dedup the version-2 "new crawl"
     # batch against it via one (band, bucket) co-keyed join + the
     # MinHash estimator — old text is never re-read or re-shingled
-    import tempfile
-
     from genegraph_spark.operators.dedup import MinhashIndex
 
     vdocs = _versioned_docs(spark, sf_dir)
-    ix = MinhashIndex(spark, tempfile.mkdtemp(prefix="gg_mhidx_"))
+    ix = MinhashIndex(spark, _temp_dir("gg_mhidx_"))
     ix.build(vdocs.where(F.col("doc_id") % 10 == 1))
     return ix.query(vdocs.where(F.col("doc_id") % 10 == 2), threshold=0.5)
 
@@ -738,13 +736,11 @@ def q_sim_ivf_index(spark, sf_dir):
     index on disk, query through partition-pruned probes — must answer
     exactly like the inline ivf_topk (same default centroids), so it
     shares that oracle."""
-    import tempfile
-
     emb = _read(spark, sf_dir, "embeddings")
     q = emb.where("vec_id < 5").select(F.col("vec_id").alias("query_id"), "embedding")
     key = ("ivf_index", sf_dir)
     if key not in _KG_TRIPLES_CACHE:
-        path = tempfile.mkdtemp(prefix="gg_ivf_idx_")
+        path = _temp_dir("gg_ivf_idx_")
         _KG_TRIPLES_CACHE[key] = SIM.IvfIndex.build(emb, path).path
     idx = SIM.IvfIndex(spark, _KG_TRIPLES_CACHE[key])
     return idx.topk(q, k=5, n_probe=2).select(
@@ -1024,25 +1020,37 @@ def _kg_triples_df(spark, sf_dir):
     return _KG_TRIPLES_CACHE[key]
 
 
+#: temp dirs the query builders made (index, snapshot and archive dirs,
+#: stream sources and checkpoints); clear_query_caches deletes them
+_TEMP_DIRS: list[str] = []
+
+
+def _temp_dir(prefix: str) -> str:
+    import tempfile
+
+    path = tempfile.mkdtemp(prefix=prefix)
+    _TEMP_DIRS.append(path)
+    return path
+
+
 def clear_query_caches() -> None:
-    """Unpersist the shared triples frames and delete the on-disk dirs the
-    caches made (the IVF index, the stream sources). The caches are sized
-    for a ONE-SHOT driver/bench process (documented intent); a long-lived
-    server embedding queries() must call this between corpora or the
-    persisted frames pin CacheManager entries forever (VERDICT r4 'what's
-    wrong' #3) and the temp dirs pile up."""
+    """Unpersist the shared triples frames and delete the temp dirs the
+    query builders made (index, snapshot and archive dirs, stream sources
+    and checkpoints). The caches are sized for a ONE-SHOT driver/bench
+    process (documented intent); a long-lived server embedding queries()
+    must call this between corpora or the persisted frames pin
+    CacheManager entries forever (VERDICT r4 'what's wrong' #3) and the
+    temp dirs pile up."""
     import shutil
 
     for val in _KG_TRIPLES_CACHE.values():
-        if isinstance(val, str):  # an IVF index dir
-            shutil.rmtree(val, ignore_errors=True)
-        else:
+        if not isinstance(val, str):  # a str is an IVF index dir
             val.unpersist()
     _KG_TRIPLES_CACHE.clear()
-    for src in _STREAM_SRC_CACHE.values():
-        # src is <mkdtemp dir>/src; the temp dir itself goes
-        shutil.rmtree(os.path.dirname(src), ignore_errors=True)
     _STREAM_SRC_CACHE.clear()
+    for path in _TEMP_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+    _TEMP_DIRS.clear()
 
 
 def q_cur_gene_disease_pairs(spark, sf_dir):
@@ -1089,11 +1097,9 @@ def q_cur_suggest_labels(spark, sf_dir):
 def q_snap_latest_asof(spark, sf_dir):
     # per-entity-type versioned snapshot table (RocksDB doc-store analog,
     # document_store.clj:6-48): write page docs, read latest-as-of
-    import tempfile
-
     from genegraph_spark.sinks.snapshots import SnapshotStore
 
-    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="gg_snap_"))
+    store = SnapshotStore(spark, _temp_dir("gg_snap_"))
     pages = fixtures.pages_df(spark, sf_dir, with_html=False)
     docs = pages.select(F.col("url").alias("is_version_of"), "version", "text", "lang")
     store.write("page", docs.where("version = 1"), snapshot=0)
@@ -1267,8 +1273,6 @@ def q_src_json_nested(spark, sf_dir):
 def q_src_event_archive(spark, sf_dir):
     # batch event-archive replay (sink/batch.clj:24-67): dump envelope
     # JSONL, read with the explicit envelope schema, parse the payload
-    import tempfile
-
     from genegraph_spark.sources import payload as PL
 
     ev = _read(spark, sf_dir, "events")
@@ -1282,7 +1286,7 @@ def q_src_event_archive(spark, sf_dir):
         (F.col("event_id") % 4).cast("int").alias("partition"),
         F.col("event_id").alias("offset"),
     )
-    base = tempfile.mkdtemp(prefix="gg_archive_")
+    base = _temp_dir("gg_archive_")
     PL.write_event_archive(env, base)
     arch = PL.read_event_archive(spark, base)
     payload_schema = "event_id long, user_id long, event_type string, value double, props string"
@@ -2393,9 +2397,7 @@ def _stream_source(spark, sf_dir: str, kind: str) -> str:
 
     key = (sf_dir, kind)
     if key not in _STREAM_SRC_CACHE:
-        import tempfile
-
-        base = tempfile.mkdtemp(prefix=f"gg_src_{kind}_")
+        base = _temp_dir(f"gg_src_{kind}_")
         writer = {
             "pages": S.write_pages_source,
             "events": S.write_events_source,
@@ -2406,12 +2408,10 @@ def _stream_source(spark, sf_dir: str, kind: str) -> str:
 
 
 def q_stream_mentions(spark, sf_dir):
-    import tempfile
-
     from genegraph_spark.streaming import stream as S
 
     src = _stream_source(spark, sf_dir, "pages")
-    ckpt = tempfile.mkdtemp(prefix="gg_stream_")
+    ckpt = _temp_dir("gg_stream_")
     return S.stream_mention_counts(spark, src, os.path.join(ckpt, "ckpt"))
 
 
@@ -2419,22 +2419,18 @@ def q_stream_dedup(spark, sf_dir):
     # exactly-once over at-least-once delivery: dropDuplicatesWithinWatermark
     # collapses the replayed events (every 10th id delivered twice, in a
     # later micro-batch) back to the distinct event set
-    import tempfile
-
     from genegraph_spark.streaming import stream as S
 
     src = _stream_source(spark, sf_dir, "events_dupes")
-    ckpt = tempfile.mkdtemp(prefix="gg_stream_dd_")
+    ckpt = _temp_dir("gg_stream_dd_")
     return S.stream_dedup_events(spark, src, os.path.join(ckpt, "ckpt"))
 
 
 def q_stream_windows(spark, sf_dir):
-    import tempfile
-
     from genegraph_spark.streaming import stream as S
 
     src = _stream_source(spark, sf_dir, "events")
-    ckpt = tempfile.mkdtemp(prefix="gg_streamw_")
+    ckpt = _temp_dir("gg_streamw_")
     return (
         S.stream_windowed_events(spark, src, os.path.join(ckpt, "ckpt"))
         .select("window_start", "event_type", "n", F.round("total", 4).alias("total"))
@@ -2442,12 +2438,10 @@ def q_stream_windows(spark, sf_dir):
 
 
 def q_stream_stateful_totals(spark, sf_dir):
-    import tempfile
-
     from genegraph_spark.streaming import stream as S
 
     src = _stream_source(spark, sf_dir, "events")
-    ckpt = tempfile.mkdtemp(prefix="gg_streams_")
+    ckpt = _temp_dir("gg_streams_")
     # 2 files per trigger over 4 files → state must carry across batches
     return S.stream_user_running_totals(
         spark, src, os.path.join(ckpt, "ckpt"), max_files_per_trigger=2

@@ -10,9 +10,13 @@ DataFrame plan (SURVEY §3.1):
     pages ──fused Arrow mapper (extract, tokenize, match, link, count)──▶
       slim rows (flags + per-page canonical mention arrays)
       slim ──quarantine split──▶ valid
-      valid ──compact versions──▶ live slim rows (latest non-tombstone per url)
-      live ──explode──▶ triples (+ the dictionary graph)
-      triples ──MERGE by graph──▶ named-graph store (+ lineage)
+      valid ──compact versions──▶ version heads (latest accepted row per url;
+                                   run_to_store caches these)
+      heads ──▶ live rows ──explode──▶ page triples
+            ──▶ tombstone heads ──▶ deleted graphs
+            ──▶ (url, version) ──▶ watermark
+      page triples (+ the dictionary graph, only when the store lacks
+        this version of it) ──MERGE by graph──▶ named-graph store (+ lineage)
 
 Every stage is JVM-side except the single fused mapper
 (:func:`..operators.mentions.make_page_mapper`).
@@ -20,12 +24,17 @@ Every stage is JVM-side except the single fused mapper
 
 from __future__ import annotations
 
+import hashlib
+import inspect
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fixtures
+from ..functions import iri as I
 from ..operators import mentions, triples as T, validate, versioned
 
 
@@ -34,17 +43,32 @@ class PipelineResult:
     pages: DataFrame
     quarantine: DataFrame
     linked: DataFrame
-    triples: DataFrame
+    #: page skeleton + mention triples, one named graph per live url
+    page_triples: DataFrame
     deleted_graphs: DataFrame
-    #: (url, version): max version per url among rows that PASSED shape
-    #: validation — the incremental-ingest watermark. Derived from accepted
-    #: rows, not raw input: a feed carrying v1 (valid) + v2 (quarantined)
-    #: must record watermark 1 so a corrected redelivery of v2 reprocesses.
-    accepted_versions: DataFrame | None = None
-    #: the mapper's slim rows after shape validation, the one frame every
-    #: output above derives from; :func:`run_to_store` persists it so a
-    #: commit runs extraction once
-    slim: DataFrame | None = None
+    #: (url, version) of each url's version head among rows that PASSED
+    #: shape validation — the incremental-ingest watermark. Derived from
+    #: accepted rows, not raw input: a feed carrying v1 (valid) + v2
+    #: (quarantined) must record watermark 1 so a corrected redelivery of
+    #: v2 reprocesses.
+    accepted_versions: DataFrame
+    #: the accepted version heads (latest accepted row per url, tombstones
+    #: included), the one frame the triples, deletes and watermark above
+    #: derive from; :func:`run_to_store` persists it so a commit runs
+    #: extraction once
+    heads: DataFrame
+    #: builds :attr:`dictionary`; a commit onto a store that holds the
+    #: current dictionary never calls it
+    build_dictionary: Callable[[], DataFrame]
+
+    @cached_property
+    def dictionary(self) -> DataFrame:
+        """The dictionary graph: the curated vocabulary's triples."""
+        return self.build_dictionary()
+
+    @property
+    def triples(self) -> DataFrame:
+        return T.union_all([self.page_triples, self.dictionary])
 
 
 def construct_kg(
@@ -63,11 +87,7 @@ def construct_kg(
         pages = fixtures.pages_df(spark, sf_dir)
 
     # 0. compile the broadcast gazetteer on the driver from the fixture
-    #    vocabulary (zero Spark jobs). ``canon`` stays a Python-list frame,
-    #    not a pandas-built LocalRelation: with both constant frames as
-    #    LocalRelations, two construct_kg calls build equal plans and the
-    #    cache manager swaps a persisted triples view into an uncached one.
-    dictionary = fixtures.dictionary_df(spark)
+    #    vocabulary (zero Spark jobs)
     canon_of = fixtures.canonical_map_py()
     alias_rows = [
         {"iri": iri, "label": lbl, "label_kind": kind}
@@ -78,9 +98,6 @@ def construct_kg(
             + [(h, "hidden") for h in hiddens]
         )
     ]
-    canon = spark.createDataFrame(
-        sorted(canon_of.items()), "iri string, canonical_iri string"
-    )
     by_label, e_to_c, canon_iris = mentions.gazetteer_payload(alias_rows, canon_of)
 
     # 1. the fused hot path (north-star shape): ONE Arrow-batched pass per
@@ -136,9 +153,6 @@ def construct_kg(
     validated = validate.page_shape_registry().dispatch(typed)
     quarantine = validated.where(F.size("violations") > 0)
     accepted = validated.where(F.size("violations") == 0)
-    accepted_versions = accepted.groupBy("url").agg(
-        F.max("version").alias("version")
-    )
     heads = versioned.latest_version(
         accepted.drop("violations", "root_type"),
         key="url",
@@ -167,24 +181,41 @@ def construct_kg(
 
     # 4. triple materialization: page + mention triples in ONE explode off
     #    live_slim (single consumer of the Python stage — a branch per
-    #    family re-executes extraction, measured 2× in the round-1 plan),
-    #    then the (tiny) dictionary graph unioned on top.
-    all_triples = T.union_all(
-        [
-            T.page_and_mention_triples(live_slim, canon_lookup),
-            T.dictionary_triples(dictionary, canon),
-        ]
-    )
+    #    family re-executes extraction, measured 2× in the round-1 plan);
+    #    the (tiny) dictionary graph is unioned on top by ``triples``.
+    def build_dictionary() -> DataFrame:
+        # ``canon`` stays a Python-list frame, not a pandas-built
+        # LocalRelation: with both constant frames as LocalRelations, two
+        # construct_kg calls build equal plans and the cache manager swaps
+        # a persisted triples view into an uncached one.
+        canon = spark.createDataFrame(
+            sorted(canon_of.items()), "iri string, canonical_iri string"
+        )
+        return T.dictionary_triples(fixtures.dictionary_df(spark), canon)
 
     return PipelineResult(
         pages=pages,
         quarantine=quarantine,
         linked=linked_canon,
-        triples=all_triples,
+        page_triples=T.page_and_mention_triples(live_slim, canon_lookup),
         deleted_graphs=deleted_graphs,
-        accepted_versions=accepted_versions,
-        slim=validated,
+        # the head's version is the max accepted version by construction
+        accepted_versions=heads.select("url", "version"),
+        heads=heads,
+        build_dictionary=build_dictionary,
     )
+
+
+def dictionary_content_version() -> int:
+    """Content version of the dictionary graph: a 63-bit digest of the
+    sources its triples are derived from — the vocabulary and canonical
+    map (``fixtures``), the triple templates and the IRIs. Computed on
+    the driver without a Spark job; any edit to those modules changes it
+    and republishes the graph once."""
+    h = hashlib.sha256()
+    for module in (fixtures, T, I):
+        h.update(inspect.getsource(module).encode())
+    return int.from_bytes(h.digest()[:8], "big") >> 1
 
 
 def run_to_store(
@@ -202,18 +233,25 @@ def run_to_store(
     built and the would-be commit summarized (graphs / triples /
     deletes), but nothing is written — the store is untouched.
 
-    ``incremental``: the skip-set is keyed on (url, max processed
-    version): a url is reprocessed
-    when the incoming max ``version`` exceeds the lineage watermark
-    (:meth:`NamedGraphStore.processed_versions`) or the watermark is
-    null/absent (unknown → reprocess; whole-graph MERGE keeps that
-    idempotent). Each merge records the watermark via
-    ``graph_versions``, so successive incremental feeds pay extraction
-    only for new or updated urls — the Kafka-consumer catch-up loop
+    ``incremental``: a page row is processed only when its ``version``
+    exceeds its url's lineage watermark, the highest version a commit
+    processed the url at (:meth:`NamedGraphStore.processed_versions`),
+    or the watermark is null/absent (unknown → reprocess; whole-graph
+    MERGE keeps that idempotent). Rows at or below the watermark are
+    never re-extracted, so a feed cannot regress a graph to an older
+    version. Each merge records the watermark via ``graph_versions``, so
+    successive incremental feeds pay extraction only for new or updated
+    urls — the Kafka-consumer catch-up loop
     (stream.clj:150-170) re-expressed as batch anti-join + MERGE. A
     restart of the same input therefore reprocesses only the pages the
     killed run never committed (the offset-file resume semantic at graph
-    granularity, stream.clj:221-236)."""
+    granularity, stream.clj:221-236).
+
+    The commit persists the version heads (latest accepted row per url),
+    not the validated rows: triples, deleted graphs and the watermark are
+    narrow projections of that cache, and the merge's first action fills
+    it. The dictionary graph is merged only when the store's manifest does
+    not record the current :func:`dictionary_content_version`."""
     from ..sinks.named_graph import NamedGraphStore
 
     store = NamedGraphStore(spark, store_path)
@@ -221,47 +259,51 @@ def run_to_store(
     if pages is None:
         pages = fixtures.pages_df(spark, sf_dir)
     if incremental and store.exists():
-        # stale = unseen urls + urls whose incoming max version advanced
-        # past the processed watermark; one shuffled join on url
-        incoming = pages.groupBy("url").agg(F.max("version").alias("_in_v"))
-        wm = store.processed_versions().select(
-            F.col("graph").alias("url"), F.col("version").alias("_done_v")
+        # skip a page row iff its url was already processed at this
+        # version or a later one: one broadcast anti-join against the
+        # processed versions, with no aggregation on either side
+        done = store.processed_versions().select(
+            F.col("graph").alias("_done_url"), F.col("version").alias("_done_v")
         )
-        stale = (
-            incoming.join(wm, "url", "left_outer")
-            .where(F.col("_done_v").isNull() | (F.col("_in_v") > F.col("_done_v")))
-            .select("url")
+        pages = pages.join(
+            done,
+            (F.col("url") == F.col("_done_url")) & (F.col("version") <= F.col("_done_v")),
+            "left_anti",
         )
-        pages = pages.join(stale, "url", "left_semi")
     kw["pages"] = pages
     res = construct_kg(spark, sf_dir, **kw)
+    # Watermark from ACCEPTED rows, not raw input: recording the raw max
+    # would let a feed with v1-valid + v2-quarantined stamp watermark 2
+    # while the store holds v1 content, silently skipping a later
+    # corrected redelivery of v2 in incremental mode.
+    versions = res.accepted_versions.select(F.col("url").alias("graph"), "version")
+    # The dictionary graph is published only when the store does not hold
+    # this version of it: a new store, a changed vocabulary, or a commit
+    # since that deleted or replaced the graph.
+    triples = res.page_triples
+    if store.dictionary_version() != (dict_version := dictionary_content_version()):
+        triples = res.triples
+        versions = versions.unionByName(spark.createDataFrame(
+            [(I.DICTIONARY_GRAPH, dict_version)], "graph string, version bigint"
+        ))
     # Extract the feed once: triples, deletes and the watermark (or the
-    # dry-run counts) all read the cached slim rows instead of re-running
-    # the stale-set join and the mapper each.
-    slim = res.slim.persist()
+    # dry-run counts) all read the cached version heads instead of
+    # re-running the watermark anti-join and the mapper each; the first
+    # action below fills the cache.
+    heads = res.heads.persist()
     try:
-        slim.count()
         if dry_run:
             summary = {
                 "dry_run": True,
                 "would_commit": (
                     lc + 1 if (lc := store.last_commit()) is not None else 0
                 ),
-                "n_triples": res.triples.count(),
-                "n_graphs": res.triples.select("graph").distinct().count(),
+                "n_triples": triples.count(),
+                "n_graphs": triples.select("graph").distinct().count(),
                 "n_deleted_graphs": res.deleted_graphs.count(),
             }
             return res, store, summary
-        # Watermark from ACCEPTED rows, not raw input: recording the raw
-        # max would let a feed with v1-valid + v2-quarantined stamp
-        # watermark 2 while the store holds v1 content, silently skipping
-        # a later corrected redelivery of v2 in incremental mode.
-        versions = res.accepted_versions.select(
-            F.col("url").alias("graph"), "version"
-        )
-        commit = store.merge(
-            res.triples, delete_graphs=res.deleted_graphs, graph_versions=versions
-        )
+        commit = store.merge(triples, delete_graphs=res.deleted_graphs, graph_versions=versions)
     finally:
-        slim.unpersist()
+        heads.unpersist()
     return res, store, commit

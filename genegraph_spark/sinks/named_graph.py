@@ -24,10 +24,19 @@ t.graph = n.graph`` over a table partitioned by ``bucket(graph, N)``):
   invisible (the manifest is written last);
 - whole-graph replace (not row upsert) keeps merges idempotent: the
   incoming graph's rows fully determine the graph, so replaying a batch
-  after a crash converges — the reference's idempotence story, kept.
+  after a crash converges — the reference's idempotence story, kept;
+- a merge derives ONE small per-graph frame ``(graph, bucket, action,
+  n_triples, version)`` from its inputs; it alone gives the touched
+  buckets (one collect of at most ``n_buckets`` rows), the keys of the
+  data write's one join and the commit's lineage rows;
+- per-bucket metrics are not written: :meth:`NamedGraphStore.metrics`
+  derives them on read from each commit's own data dir;
+- the manifest carries the content version the dictionary graph was
+  published with, so ``run_to_store`` republishes that graph only when
+  its content changes or a commit deleted or replaced it.
 
 Scale notes: a merge shuffles only the touched buckets' rows once (the
-anti-join on ``graph`` is co-partitioned with the bucket layout). Its
+join on ``graph`` broadcasts the small per-graph frame). Its
 cost is copy-on-write of every touched bucket, whole: the incoming and
 deleted graphs hash uniformly, so a feed of k graphs touches
 1 − (63/64)^k of the 64 buckets — 20% at k = 14, 79% at k = 100 — and
@@ -47,10 +56,13 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.iri import DICTIONARY_GRAPH
+
 TRIPLE_SCHEMA = (
     "graph string, subject string, predicate string, object string, "
     "object_is_iri boolean, object_datatype string"
 )
+LINEAGE_SCHEMA = "graph string, n_triples bigint, action string, version bigint, commit int"
 
 _M64 = (1 << 64) - 1
 _P1, _P2, _P3, _P4, _P5 = (
@@ -147,35 +159,32 @@ class NamedGraphStore:
         return self.last_commit() is not None
 
     def _bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn("bucket", F.pmod(F.xxhash64("graph"), F.lit(self.n_buckets)))
+        return df.withColumn("bucket", F.expr(f"pmod(xxhash64(graph), {self.n_buckets})"))
 
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], TRIPLE_SCHEMA + ", bucket bigint")
 
     def _read_segments(self, manifest: dict, buckets: set[int] | None = None) -> DataFrame:
-        """Union the manifest's segments, optionally restricted to buckets.
+        """The manifest's segments as ONE scan, optionally restricted to
+        buckets.
 
-        Each commit dir is read through the ``bucket=K`` directories the
-        manifest assigns to it (``basePath`` keeps ``bucket`` a partition
-        column), so a keep-side read lists only the touched buckets'
-        directories, on the driver; listing a whole 64-bucket dir crosses
-        Spark's parallel-listing threshold and runs a listing job. A
-        bucket whose rows were all deleted has no directory and is
-        skipped."""
-        by_dir: dict[str, list[str]] = {}
-        for b_str, d in manifest["buckets"].items():
-            if buckets is None or int(b_str) in buckets:
-                path = os.path.join(self.path, d, f"bucket={b_str}")
-                if os.path.isdir(path):
-                    by_dir.setdefault(d, []).append(path)
-        parts = [
-            # explicit schema: no inference pass over the footers
-            self.spark.read.schema(TRIPLE_SCHEMA + ", bucket bigint")
-            .option("basePath", os.path.join(self.path, d))
-            .parquet(*paths)
-            for d, paths in by_dir.items()
+        The ``bucket=K`` directories the manifest assigns are listed on the
+        driver and read together, whichever commit dirs they live in; the
+        bucket column is recomputed from ``graph`` (the writer's partition
+        transform). One scan keeps a merge's keep-side anti-join a single
+        join: a union of per-dir reads gets the join pushed into every
+        branch, one broadcast each. A bucket whose rows were all deleted
+        has no directory and is skipped."""
+        paths = [
+            path
+            for b_str, d in manifest["buckets"].items()
+            if (buckets is None or int(b_str) in buckets)
+            and os.path.isdir(path := os.path.join(self.path, d, f"bucket={b_str}"))
         ]
-        return reduce(lambda a, b: a.unionByName(b), parts) if parts else self._empty()
+        if not paths:
+            return self._empty()
+        # explicit schema: no inference pass over the footers
+        return self._bucket(self.spark.read.schema(TRIPLE_SCHEMA).parquet(*paths))
 
     # -- read paths ----------------------------------------------------------
     def read(self, commit: int | None = None) -> DataFrame:
@@ -219,6 +228,10 @@ class NamedGraphStore:
         graphs. A graph in BOTH inputs is deleted (delete wins — one
         deterministic outcome instead of publish/unpublish racing in the
         same commit's lineage).
+
+        The merge reads ``triples`` twice (the per-graph frame, the data
+        write); a caller whose plan is expensive caches it first, as
+        ``run_to_store`` caches the version heads.
 
         SINGLE-WRITER contract: exactly one writer may merge at a time
         (matching the reference's single-writer TDB transaction,
@@ -329,34 +342,59 @@ class NamedGraphStore:
         commit: int,
         graph_versions: DataFrame | None = None,
     ) -> dict:
+        # ONE small per-graph frame (graph, bucket, action, n_triples,
+        # version) is the only source of the touched buckets, the write's
+        # join keys and the lineage rows. One aggregation over the tagged
+        # inputs builds it; 'unpublish' sorts after 'publish', so max()
+        # makes a graph in both inputs an unpublish (delete wins).
+        parts = [triples.selectExpr("graph", "1 AS n", "'publish' AS action", "NULL AS version")]
         if delete_graphs is not None:
-            triples = triples.join(delete_graphs.select("graph"), "graph", "left_anti")
-        # the incoming plan may be expensive (pandas-UDF extraction) and
-        # is consumed 3× below (touched-bucket collect, data write,
-        # lineage counts) — persist it once; at cluster scale this is a
-        # checkpoint to the lake
-        new = self._bucket(triples).persist()
-        affected = new.select("graph").distinct()
-        if delete_graphs is not None:
-            affected = affected.union(delete_graphs.select("graph")).distinct()
-        affected = self._bucket(affected).cache()
-        # unpersist on every exit: a write that raises must not leave both
-        # frames pinned in the session's cache manager
+            parts.append(delete_graphs.selectExpr(
+                "graph", "0 AS n", "'unpublish' AS action", "NULL AS version"))
+        if graph_versions is not None:
+            # per-graph source version (the incremental-ingest watermark);
+            # graphs without one record null
+            parts.append(graph_versions.selectExpr("graph", "0 AS n", "NULL AS action", "version"))
+        graphs = self._bucket(
+            reduce(lambda a, b: a.unionByName(b), parts)
+            .groupBy("graph")
+            .agg(F.expr("max(action) AS action"), F.expr("sum(n) AS n"),
+                 F.expr("max(CAST(version AS BIGINT)) AS version"))
+            .where("action IS NOT NULL")
+            .selectExpr("graph", "IF(action = 'publish', n, 0) AS n_triples", "action", "version")
+        ).persist()
+        # unpersist on every exit: a write that raises must not leave the
+        # frame pinned in the session's cache manager
         try:
-            touched = {r["bucket"] for r in affected.select("bucket").distinct().collect()}
+            is_dict = f"graph = '{DICTIONARY_GRAPH}'"
+            per_bucket = graphs.groupBy("bucket").agg(
+                F.expr(f"max({is_dict}) AS has_dict"),
+                F.expr(f"max(IF({is_dict} AND action = 'publish', version, NULL)) AS dict_version"),
+            ).collect()
+            touched = {r["bucket"] for r in per_bucket}
 
             data_dir = f"data/c{commit:08d}"
-            if last is not None:
-                prev = self._read_manifest(last)
-                keep = self._read_segments(prev, touched).join(
-                    affected.select("graph"), "graph", "left_anti"
-                )
-                out = keep.unionByName(new.where(F.col("bucket").isin(list(touched))))
-                buckets_map = dict(prev["buckets"])
-            else:
-                out = new
+            prev = self._read_manifest(last) if last is not None else {"buckets": {}}
+            # ONE join against the per-graph frame: a touched bucket's old
+            # row stays iff its graph is not in this commit, an incoming row
+            # iff its graph is published (not deleted)
+            out = (
+                self._read_segments(prev, touched).withColumn("_new", F.lit(False))
+                .unionByName(self._bucket(triples).withColumn("_new", F.lit(True)))
+                .join(graphs.select("graph", "action"), "graph", "left_outer")
+                .where("IF(_new, action = 'publish', action IS NULL)")
+                .drop("_new", "action")
+            )
+            buckets_map = dict(prev["buckets"])
+            if last is None:
                 touched = set(range(self.n_buckets))
-                buckets_map = {}
+            # the dictionary graph's content version survives every commit
+            # that does not touch that graph; a commit that replaces it
+            # records the version it came with, one that deletes it none
+            dict_version = prev.get("dictionary_version")
+            for r in per_bucket:
+                if r["has_dict"]:
+                    dict_version = r["dict_version"]
             # mode=overwrite: the commit id is derived from manifests only, so
             # a run killed after this write but before the manifest write
             # leaves an orphan data/cNNNNNNNN dir; the replayed merge computes
@@ -382,9 +420,10 @@ class NamedGraphStore:
                 os._exit(17)
 
             t0 = time.monotonic()
-            self._write_lineage(commit, new, delete_graphs, graph_versions)
+            graphs.select("graph", "n_triples", "action", "version").coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(self._lineage, f"commit={commit}"))
             lineage_s = time.monotonic() - t0
-            self._write_metrics(commit, data_dir)
             meta = {
                 "commit": commit,
                 "buckets": buckets_map,
@@ -392,12 +431,13 @@ class NamedGraphStore:
                 "wall_ts": time.time(),
                 "timings": {"write_s": round(write_s, 3), "lineage_s": round(lineage_s, 3)},
             }
+            if dict_version is not None:
+                meta["dictionary_version"] = dict_version
             with open(self._manifest_path(commit), "w") as f:
                 json.dump(meta, f)
             return meta
         finally:
-            affected.unpersist()
-            new.unpersist()
+            graphs.unpersist()
 
     def delete_graphs(self, graphs: DataFrame) -> dict:
         """Unpublish: remove graphs entirely (sink/event.clj:41-46)."""
@@ -440,7 +480,6 @@ class NamedGraphStore:
             ).write.mode("overwrite").partitionBy("bucket").parquet(
                 os.path.join(self.path, data_dir)
             )
-            self._write_metrics(commit, data_dir)
             meta = {
                 "commit": commit,
                 "buckets": {str(b): data_dir for b in range(self.n_buckets)},
@@ -448,6 +487,8 @@ class NamedGraphStore:
                 "wall_ts": time.time(),
                 "compaction_of": last,
             }
+            if (v := self.dictionary_version()) is not None:
+                meta["dictionary_version"] = v
             with open(self._manifest_path(commit), "w") as f:
                 json.dump(meta, f)
             return meta
@@ -492,69 +533,48 @@ class NamedGraphStore:
             return removed
 
     # -- per-partition metrics ----------------------------------------------
-    def _write_metrics(self, commit: int, data_dir: str) -> None:
-        """Per-partition (bucket) row counts + file sizes for the rows this
-        commit wrote — the north rule's 'every partition writes lineage
-        records and row-count/latency metrics'. Ground truth comes from
-        reading BACK the freshly written files (cheap: they are still in
-        page cache), so the metric can never disagree with the data; commit
-        latencies live in the manifest's ``timings``."""
-        written = self.spark.read.schema(TRIPLE_SCHEMA + ", bucket bigint").parquet(
-            os.path.join(self.path, data_dir)
-        )
-        m = written.groupBy("bucket").agg(
+    def metrics(self) -> DataFrame:
+        """(commit, bucket, n_rows, n_graphs): the rows and graphs each
+        commit wrote per bucket — the north rule's 'every partition writes
+        row-count metrics'. Derived on read from each commit's own
+        immutable ``data/cNNNNNNNN`` dir, so a metric can never disagree
+        with the data; an expired snapshot's metrics go with its data dir.
+        Commit latencies live in the manifest's ``timings``."""
+        last = self.last_commit()
+        data = os.path.join(self.path, "data")
+        paths = [
+            path
+            for d in (sorted(os.listdir(data)) if os.path.isdir(data) else [])
+            # a dir past the last commit is an interrupted commit's orphan
+            if last is not None and d.startswith("c") and int(d[1:]) <= last
+            for b in range(self.n_buckets)
+            if os.path.isdir(path := os.path.join(data, d, f"bucket={b}"))
+        ]
+        if not paths:
+            return self.spark.createDataFrame(
+                [], "commit int, bucket bigint, n_rows bigint, n_graphs bigint"
+            )
+        written = self._bucket(self.spark.read.schema(TRIPLE_SCHEMA).parquet(*paths))
+        commit = F.regexp_extract(F.input_file_name(), r"/c(\d+)/bucket=", 1).cast("int")
+        return written.groupBy(commit.alias("commit"), "bucket").agg(
             F.count("*").alias("n_rows"),
             F.countDistinct("graph").alias("n_graphs"),
         )
-        m.write.mode("overwrite").parquet(
-            os.path.join(self.path, "metrics", f"commit={commit}")
-        )
-
-    def metrics(self) -> DataFrame:
-        """(commit, bucket, n_rows, n_graphs) across all commits."""
-        base = os.path.join(self.path, "metrics")
-        return self.spark.read.option("basePath", base).parquet(
-            os.path.join(base, "commit=*")
-        )
 
     # -- lineage / resume ---------------------------------------------------
-    def _write_lineage(
-        self,
-        commit: int,
-        triples: DataFrame,
-        delete_graphs: DataFrame | None,
-        graph_versions: DataFrame | None = None,
-    ):
-        lin = (
-            triples.groupBy("graph")
-            .agg(F.count("*").alias("n_triples"))
-            .withColumn("action", F.lit("publish"))
-        )
-        if delete_graphs is not None:
-            lin = lin.unionByName(
-                delete_graphs.select("graph")
-                .distinct()
-                .withColumn("n_triples", F.lit(0).cast("long"))
-                .withColumn("action", F.lit("unpublish"))
-            )
-        # optional per-graph source version (incremental-ingest watermark);
-        # graphs without one (e.g. the dictionary graph) record null
-        if graph_versions is not None:
-            lin = lin.join(
-                graph_versions.select("graph", F.col("version").cast("long")),
-                "graph",
-                "left_outer",
-            )
-        else:
-            lin = lin.withColumn("version", F.lit(None).cast("long"))
-        lin.write.mode("overwrite").parquet(os.path.join(self._lineage, f"commit={commit}"))
-
     def lineage(self) -> DataFrame:
-        # mergeSchema: commits written before the version column existed
-        # surface it as null instead of failing the union
-        return self.spark.read.option("basePath", self._lineage).option(
-            "mergeSchema", "true"
-        ).parquet(os.path.join(self._lineage, "commit=*"))
+        """(graph, n_triples, action, version, commit): one row per graph
+        each commit published or unpublished. The explicit schema reads
+        the directory without a schema-merge job; commits written before
+        ``version`` existed read it as null."""
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self._lineage)
+
+    def dictionary_version(self) -> int | None:
+        """The content version the current snapshot's dictionary graph was
+        published with (see :meth:`merge`); None when the store holds no
+        such graph or it came without a version."""
+        last = self.last_commit()
+        return None if last is None else self._read_manifest(last).get("dictionary_version")
 
     def diff(self, commit_a: int, commit_b: int) -> DataFrame:
         """Build-to-build regression diff: (graph, n_added, n_removed)
@@ -583,17 +603,13 @@ class NamedGraphStore:
         )
 
     def processed_versions(self) -> DataFrame:
-        """(graph, version) — the highest source version each graph was
-        processed at (publish or unpublish), the incremental-ingest
-        watermark. ``version`` is null for graphs only ever merged
-        without ``graph_versions`` (callers must treat null as unknown
-        and reprocess; the whole-graph MERGE makes that safe)."""
+        """(graph, version) for every source version a visible commit
+        processed a graph at (publish or unpublish); a graph's highest
+        version here is its incremental-ingest watermark. Not aggregated,
+        so a consumer joins it without a shuffle. ``version`` is null for
+        graphs merged without ``graph_versions`` (callers must treat null
+        as unknown and reprocess; the whole-graph MERGE makes that safe)."""
         last = self.last_commit()
         if last is None:
             return self.spark.createDataFrame([], "graph string, version bigint")
-        return (
-            self.lineage()
-            .where(F.col("commit") <= last)
-            .groupBy("graph")
-            .agg(F.max("version").alias("version"))
-        )
+        return self.lineage().where(F.col("commit") <= last).select("graph", "version")

@@ -377,7 +377,12 @@ def stream_gdm_to_store(
             entrez_map=entrez_map,
             constructs=constructs,
         )
-        NamedGraphStore(spark, store_path).merge(out)
+        # the merge reads its triples twice: run the chain once
+        out = out.persist()
+        try:
+            NamedGraphStore(spark, store_path).merge(out)
+        finally:
+            out.unpersist()
         n_batches["n"] += 1
 
     q = (

@@ -708,18 +708,30 @@ class TestIvfIndexPersistence:
 
 class TestQueryCaches:
     def test_clear_removes_the_dirs_the_caches_made(self, spark, sf_dir):
-        """clear_query_caches deletes the on-disk IVF index and stream
-        source it cached, not only the in-memory entries."""
+        """clear_query_caches deletes every temp dir the query builders
+        made — the cached IVF index and stream sources, and the per-call
+        MinHash index, snapshot store, event archive and stream
+        checkpoints — not only the in-memory entries."""
+        import glob
         import os
+        import tempfile
 
         import __spark_entry__ as E
 
-        E.q_sim_ivf_index(spark, sf_dir)
-        src = E._stream_source(spark, sf_dir, "events")
-        made = [E._KG_TRIPLES_CACHE[("ivf_index", sf_dir)], os.path.dirname(src)]
-        assert all(os.path.isdir(d) for d in made)
+        def gg_dirs():
+            return set(glob.glob(os.path.join(tempfile.gettempdir(), "gg_*")))
+
+        E.clear_query_caches()  # the caches start empty, so every dir is made here
+        before = gg_dirs()
+        for q in (
+            "sim_ivf_index", "dedup_incremental", "snap_latest_asof", "src_event_archive",
+            "stream_mentions", "stream_dedup", "stream_windows", "stream_stateful_totals",
+        ):
+            getattr(E, f"q_{q}")(spark, sf_dir)
+        made = gg_dirs() - before
+        assert len(made) == 11  # IVF index, 3 stream sources, 7 per-call dirs
         E.clear_query_caches()
-        assert [d for d in made if os.path.exists(d)] == []
+        assert sorted(d for d in made if os.path.exists(d)) == []
 
 
 class TestResolverRegistry:

@@ -128,8 +128,8 @@ def test_incremental_ingest_processes_only_updated_urls(spark, sf_dir, tmp_path)
     _, store, c0 = run_to_store(spark, sf_dir, path, pages=base, use_golden_text=True)
     n0 = store.triples().count()
 
-    # identical feed: zero stale pages; only the (unversioned) dictionary
-    # graph republishes, with identical content
+    # identical feed: zero stale pages, and the store already holds the
+    # current dictionary graph: the commit changes nothing
     res2, store, c1 = run_to_store(
         spark, sf_dir, path, pages=base, incremental=True, use_golden_text=True
     )
@@ -349,3 +349,129 @@ def test_incremental_commit_runs_the_mapper_once(spark, sf_dir, tmp_path, monkey
     assert n_emitted == stale
     changed = {r.graph for r in store.diff(store.last_commit() - 1, store.last_commit()).collect()}
     assert changed == set(urls)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a job group; return (its result, the jobs it ran)."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lineage_reads_without_a_job(spark, tmp_path):
+    """Building ``processed_versions()`` submits no Spark job (no schema
+    merge over every commit's lineage), and a commit written before the
+    ``version`` column existed reads it as null."""
+    path = str(tmp_path / "lin")
+    store = NamedGraphStore(spark, path, n_buckets=4)
+    store.merge(
+        make(spark, [t("g1", "s", "p", "o")]),
+        graph_versions=spark.createDataFrame([("g1", 3)], "graph string, version bigint"),
+    )
+    # an older commit's lineage: no version column
+    spark.createDataFrame([("g0", 5, "publish")], "graph string, n_triples bigint, action string") \
+        .write.parquet(str(tmp_path / "lin" / "lineage" / "commit=-1"))
+    wm, jobs = _jobs_in_group(spark, "wm-build", store.processed_versions)
+    assert jobs == 0
+    assert {(r.graph, r.version) for r in wm.collect()} == {("g0", None), ("g1", 3)}
+    assert store.lineage().columns == ["graph", "n_triples", "action", "version", "commit"]
+
+
+def _feed_onto_base(spark, sf_dir, tmp_path):
+    """A base store over the sf_dir pages, and a 14-url feed onto it:
+    10 live urls advanced to a new version, 2 live urls tombstoned and 2
+    new urls — written to parquet, as a feed arrives."""
+    from genegraph_spark import fixtures
+    from genegraph_spark.plans.pipeline import run_to_store
+
+    path = str(tmp_path / "base")
+    base = fixtures.pages_df(spark, sf_dir)
+    run_to_store(spark, sf_dir, path, pages=base, use_golden_text=True)
+    heads = base.groupBy("url").agg(F.max("version").alias("v"))
+    live = [r.url for r in heads.where(F.col("v") == 1).orderBy("url").limit(12).collect()]
+    upd = base.where(F.col("url").isin(live[:10])).withColumn("text", F.lit("spark big slow"))
+    tomb = base.where(F.col("url").isin(live[10:])).withColumn(
+        "html", F.encode(F.lit('<html><head><meta name="status" content="unpublished"/></head></html>'),
+                         "UTF-8"))
+    docs = spark.createDataFrame([(90001, "join hash new", "en"), (90002, "sort scan new", "en")],
+                                 "doc_id long, text string, lang string")
+    new = fixtures.pages_from_docs(docs).where(F.col("version") == 1)
+    feed = upd.unionByName(tomb).withColumn("version", F.col("version") + 1).unionByName(new)
+    feed.write.parquet(str(tmp_path / "feed"))
+    return path, spark.read.parquet(str(tmp_path / "feed")), live
+
+
+def test_incremental_commit_job_budget(spark, sf_dir, tmp_path):
+    """A 14-url incremental commit onto a 64-bucket store stays within a
+    Spark job budget: the version heads are cached once, one per-graph
+    frame feeds the touched-bucket collect, the keep-side join and the
+    lineage, and the unchanged dictionary graph is not republished."""
+    from genegraph_spark.plans.pipeline import run_to_store
+
+    path, feed, live = _feed_onto_base(spark, sf_dir, tmp_path)
+    (res, store, meta), jobs = _jobs_in_group(spark, "commit", lambda: run_to_store(
+        spark, sf_dir, path, pages=feed, incremental=True, use_golden_text=True))
+    assert store.n_buckets == 64
+    assert jobs <= 20, jobs
+    lin = {r.graph: r.action for r in store.lineage().where(F.col("commit") == meta["commit"]).collect()}
+    assert len(lin) == 14
+    assert {g for g, a in lin.items() if a == "unpublish"} == set(live[10:])
+
+
+def test_dictionary_graph_published_only_when_it_changes(spark, sf_dir, tmp_path):
+    """A commit onto a store that holds the current dictionary writes no
+    dictionary triples and no dictionary lineage row; deleting the graph
+    makes the next run_to_store publish it again, equal to a fresh
+    build's."""
+    import os
+
+    from genegraph_spark.functions.iri import DICTIONARY_GRAPH
+    from genegraph_spark.plans.pipeline import construct_kg, run_to_store
+
+    path, feed, _ = _feed_onto_base(spark, sf_dir, tmp_path)
+    store = NamedGraphStore(spark, path)
+    fresh = {tuple(r) for r in store.graphs([DICTIONARY_GRAPH]).collect()}
+    want = {tuple(r) for r in construct_kg(spark, sf_dir, use_golden_text=True).dictionary.collect()}
+    assert fresh == want and want
+
+    def commit_wrote_dictionary(commit):
+        lin = store.lineage().where((F.col("commit") == commit) & (F.col("graph") == DICTIONARY_GRAPH))
+        rows = spark.read.parquet(os.path.join(path, "data", f"c{commit:08d}")).where(
+            F.col("graph") == DICTIONARY_GRAPH)
+        return lin.count(), rows.count()
+
+    _, _, c1 = run_to_store(spark, sf_dir, path, pages=feed, incremental=True, use_golden_text=True)
+    assert commit_wrote_dictionary(c1["commit"]) == (0, 0)
+    assert {tuple(r) for r in store.graphs([DICTIONARY_GRAPH]).collect()} == want
+
+    store.delete_graphs(spark.createDataFrame([(DICTIONARY_GRAPH,)], "graph string"))
+    assert store.graphs([DICTIONARY_GRAPH]).count() == 0
+    _, _, c3 = run_to_store(spark, sf_dir, path, pages=feed, incremental=True, use_golden_text=True)
+    assert commit_wrote_dictionary(c3["commit"]) == (1, len(want))
+    assert {tuple(r) for r in store.graphs([DICTIONARY_GRAPH]).collect()} == want
+
+
+def test_lineage_counts_equal_the_rows_written(spark, sf_dir, tmp_path):
+    """For every graph in a commit's lineage, ``n_triples`` equals the rows
+    that commit wrote for the graph (0 for an unpublished graph), and the
+    per-bucket metrics add up to the commit's data dir."""
+    import os
+
+    from genegraph_spark.plans.pipeline import run_to_store
+
+    path, feed, _ = _feed_onto_base(spark, sf_dir, tmp_path)
+    _, store, meta = run_to_store(spark, sf_dir, path, pages=feed, incremental=True,
+                                  use_golden_text=True)
+    c = meta["commit"]
+    written = spark.read.parquet(os.path.join(path, "data", f"c{c:08d}"))
+    per_graph = {r.graph: r["count"] for r in written.groupBy("graph").count().collect()}
+    lin = store.lineage().where(F.col("commit") == c).collect()
+    assert lin
+    assert {r.graph: r.n_triples for r in lin} == {r.graph: per_graph.get(r.graph, 0) for r in lin}
+    n_rows = store.metrics().where(F.col("commit") == c).agg(F.sum("n_rows")).collect()[0][0]
+    assert n_rows == written.count()
