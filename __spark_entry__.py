@@ -2261,11 +2261,11 @@ def q_cur_disease_subtree(spark, sf_dir):
 
 
 def q_cur_statistics(spark, sf_dir):
-    # single-row KG totals via the resolver registry (tot-* /
+    # single-row KG totals (tot-* /
     # server-status resolvers, core.clj:86-90) — one conditional-agg scan
     from genegraph_spark.plans import resolvers as R
 
-    return R.resolve("statistics", _kg_triples_df(spark, sf_dir))
+    return R.statistics(_kg_triples_df(spark, sf_dir))
 
 
 def q_kg_jsonld_compact(spark, sf_dir):

@@ -628,73 +628,3 @@ def compatible_join(
             )
             out = branch if out is None else out.unionByName(branch)
     return out
-
-
-# ---------------------------------------------------------------------------
-# Algebra data forms — create-query on collection input
-# ---------------------------------------------------------------------------
-
-def op(triples: DataFrame, form) -> DataFrame:
-    """Compile a Clojure-style algebra DATA FORM to a bindings frame —
-    the collection branch of the reference's ``create-query``
-    (``query/resource.clj:228-229`` feeds it through
-    ``query/algebra.clj:67-95`` ``op``). The curation resolver tier
-    builds all its queries this way (``common/curation.clj``:
-    ``(create-query [:project ['ac_report] (cons :bgp actionability-bgp)])``,
-    the per-activity ASK patterns, disease-list's three-way ``:union``).
-
-    Transliteration from the Clojure forms: an op is a list/tuple whose
-    head is the op keyword STRING (":project", ":bgp", ...); a ``:bgp``
-    holds 3-element triples where Clojure SYMBOLS (variables) become
-    ``?var`` strings and keywords/IRIs stay as-is (the module's scan
-    conventions).
-
-    Op coverage mirrors algebra.clj: :bgp :project :distinct :reduced
-    :join :sequence :conditional :union :disjunction :minus :diff
-    :label :list :null :slice. (:filter/:extend/:group/:order/:top-n are
-    commented out in the reference too.) :slice takes
-    ``(":slice", sub, offset, length)`` — the reference's OpSlice call
-    passes a1 for both the sub-op and the offset (a latent bug there);
-    this follows the documented OpSlice(sub, start, length) contract.
-
-    The result has SET semantics, like ``create-query``'s default
-    ``::q/distinct true`` (resource.clj:236-238), which calls
-    ``.setDistinct`` on every non-ASK query.
-    """
-    return _op(triples, form).distinct()
-
-
-def _op(triples: DataFrame, form) -> DataFrame:
-    head, *args = form
-    if head == ":bgp":
-        return bgp(triples, [tuple(t) for t in args])
-    if head == ":project":
-        return project(_op(triples, args[1]), list(args[0]))
-    if head in (":distinct", ":reduced"):
-        # OpReduced only permits eliminating adjacent duplicates; doing
-        # the full elimination is a conforming implementation
-        return distinct(_op(triples, args[0]))
-    if head in (":join", ":sequence"):
-        # OpSequence is n-ary join with left-to-right visibility; the
-        # natural join chain implements both
-        return reduce(join, (_op(triples, a) for a in args))
-    if head == ":conditional":
-        return optional(_op(triples, args[0]), _op(triples, args[1]))
-    if head in (":union", ":disjunction"):
-        # op-union / OpDisjunction: n-ary bag union
-        return reduce(union, (_op(triples, a) for a in args))
-    if head == ":minus":
-        return minus(_op(triples, args[0]), _op(triples, args[1]))
-    if head == ":diff":
-        return diff(_op(triples, args[0]), _op(triples, args[1]))
-    if head == ":label":
-        # OpLabel: annotation only — evaluates its sub-op unchanged
-        return _op(triples, args[1])
-    if head == ":list":
-        return _op(triples, args[0])
-    if head == ":null":
-        return triples.sparkSession.range(0).select(F.lit(1).alias("_const"))
-    if head == ":slice":
-        sub, start, length = args
-        return slice(_op(triples, sub), limit=length, offset=start)
-    raise ValueError(f"Unknown operation {head}")

@@ -13,10 +13,11 @@ DataFrame plan (SURVEY §3.1):
       valid ──compact versions──▶ version heads (latest accepted row per url;
                                    run_to_store caches these)
       heads ──▶ live rows ──explode──▶ page triples
-            ──▶ tombstone heads ──▶ deleted graphs
-            ──▶ (url, version) ──▶ watermark
-      page triples (+ the dictionary graph, only when the store lacks
-        this version of it) ──MERGE by graph──▶ named-graph store (+ lineage)
+            ──▶ (graph, deleted, version) ──▶ per-graph facts
+                                               (tombstones + watermark)
+      page triples + per-graph facts (+ the dictionary graph and its row,
+        only when the store lacks this version of it)
+        ──MERGE by graph──▶ named-graph store (+ lineage)
 
 Every stage is JVM-side except the single fused mapper
 (:func:`..operators.mentions.make_page_mapper`).
@@ -26,9 +27,7 @@ from __future__ import annotations
 
 import hashlib
 import inspect
-from collections.abc import Callable
 from dataclasses import dataclass
-from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,30 +44,24 @@ class PipelineResult:
     linked: DataFrame
     #: page skeleton + mention triples, one named graph per live url
     page_triples: DataFrame
-    deleted_graphs: DataFrame
-    #: (url, version) of each url's version head among rows that PASSED
-    #: shape validation — the incremental-ingest watermark. Derived from
-    #: accepted rows, not raw input: a feed carrying v1 (valid) + v2
-    #: (quarantined) must record watermark 1 so a corrected redelivery of
-    #: v2 reprocesses.
-    accepted_versions: DataFrame
+    #: (graph, deleted, version): one row per url's version head, the
+    #: commit's per-graph facts — tombstoned graphs are deleted, and
+    #: ``version`` is the incremental-ingest watermark. Derived from rows
+    #: that PASSED shape validation, not raw input: recording the raw max
+    #: would let a feed carrying v1 (valid) + v2 (quarantined) stamp
+    #: watermark 2 while the store holds v1 content, silently skipping a
+    #: later corrected redelivery of v2 in incremental mode.
+    per_graph: DataFrame
     #: the accepted version heads (latest accepted row per url, tombstones
-    #: included), the one frame the triples, deletes and watermark above
+    #: included), the one frame the page triples and per-graph facts above
     #: derive from; :func:`run_to_store` persists it so a commit runs
     #: extraction once
     heads: DataFrame
-    #: builds :attr:`dictionary`; a commit onto a store that holds the
-    #: current dictionary never calls it
-    build_dictionary: Callable[[], DataFrame]
-
-    @cached_property
-    def dictionary(self) -> DataFrame:
-        """The dictionary graph: the curated vocabulary's triples."""
-        return self.build_dictionary()
 
     @property
     def triples(self) -> DataFrame:
-        return T.union_all([self.page_triples, self.dictionary])
+        """The page triples and the dictionary graph."""
+        return T.union_all([self.page_triples, dictionary_graph(self.pages.sparkSession)])
 
 
 def construct_kg(
@@ -114,15 +107,7 @@ def construct_kg(
     # pass; do it on the scan-side frame once, never on post-shuffle
     # frames — see operators.partitioning.)
     dp = spark.sparkContext.defaultParallelism
-    # inputFiles() short-circuit first: one gateway call against the
-    # (cached) file index, vs the .rdd probe's full physical-planning
-    # pass — a lake-scale input with >= dp files skips planning
-    # entirely and never pays either branch below
-    try:
-        many_files = len(pages.inputFiles()) >= dp
-    except Exception:
-        many_files = False
-    low_split = not many_files and pages.rdd.getNumPartitions() < dp
+    low_split = pages.rdd.getNumPartitions() < dp
     if low_split and not use_golden_text:
         # real html extraction is the expensive per-row stage; a single-
         # row-group fixture scan would run it in ONE Python worker. The
@@ -159,7 +144,6 @@ def construct_kg(
         version="version",
     )
     live_slim = heads.where(~F.col("is_del"))
-    deleted_graphs = heads.where(F.col("is_del")).select(F.col("url").alias("graph"))
 
     # 3. per-(page, canonical entity) mention records (lazy — only built
     #    if a consumer reads .linked): explode the int arrays, resolve the
@@ -183,27 +167,28 @@ def construct_kg(
     #    live_slim (single consumer of the Python stage — a branch per
     #    family re-executes extraction, measured 2× in the round-1 plan);
     #    the (tiny) dictionary graph is unioned on top by ``triples``.
-    def build_dictionary() -> DataFrame:
-        # ``canon`` stays a Python-list frame, not a pandas-built
-        # LocalRelation: with both constant frames as LocalRelations, two
-        # construct_kg calls build equal plans and the cache manager swaps
-        # a persisted triples view into an uncached one.
-        canon = spark.createDataFrame(
-            sorted(canon_of.items()), "iri string, canonical_iri string"
-        )
-        return T.dictionary_triples(fixtures.dictionary_df(spark), canon)
-
     return PipelineResult(
         pages=pages,
         quarantine=quarantine,
         linked=linked_canon,
         page_triples=T.page_and_mention_triples(live_slim, canon_lookup),
-        deleted_graphs=deleted_graphs,
         # the head's version is the max accepted version by construction
-        accepted_versions=heads.select("url", "version"),
+        per_graph=heads.selectExpr("url AS graph", "is_del AS deleted", "version"),
         heads=heads,
-        build_dictionary=build_dictionary,
     )
+
+
+def dictionary_graph(spark: SparkSession) -> DataFrame:
+    """The dictionary graph: the curated vocabulary's triples. It does not
+    depend on the pages; :func:`dictionary_content_version` versions it."""
+    # ``canon`` stays a Python-list frame, not a pandas-built
+    # LocalRelation: with both constant frames as LocalRelations, two
+    # construct_kg calls build equal plans and the cache manager swaps
+    # a persisted triples view into an uncached one.
+    canon = spark.createDataFrame(
+        sorted(fixtures.canonical_map_py().items()), "iri string, canonical_iri string"
+    )
+    return T.dictionary_triples(fixtures.dictionary_df(spark), canon)
 
 
 def dictionary_content_version() -> int:
@@ -239,7 +224,7 @@ def run_to_store(
     or the watermark is null/absent (unknown → reprocess; whole-graph
     MERGE keeps that idempotent). Rows at or below the watermark are
     never re-extracted, so a feed cannot regress a graph to an older
-    version. Each merge records the watermark via ``graph_versions``, so
+    version. Each merge records the watermark via ``per_graph``, so
     successive incremental feeds pay extraction only for new or updated
     urls — the Kafka-consumer catch-up loop
     (stream.clj:150-170) re-expressed as batch anti-join + MERGE. A
@@ -248,10 +233,11 @@ def run_to_store(
     granularity, stream.clj:221-236).
 
     The commit persists the version heads (latest accepted row per url),
-    not the validated rows: triples, deleted graphs and the watermark are
-    narrow projections of that cache, and the merge's first action fills
-    it. The dictionary graph is merged only when the store's manifest does
-    not record the current :func:`dictionary_content_version`."""
+    not the validated rows: the page triples and the per-graph facts
+    ``(graph, deleted, version)`` are narrow projections of that cache,
+    and the merge's first action fills it. The dictionary graph (and its
+    per-graph row) is merged only when the store's manifest does not
+    record the current :func:`dictionary_content_version`."""
     from ..sinks.named_graph import NamedGraphStore
 
     store = NamedGraphStore(spark, store_path)
@@ -272,21 +258,17 @@ def run_to_store(
         )
     kw["pages"] = pages
     res = construct_kg(spark, sf_dir, **kw)
-    # Watermark from ACCEPTED rows, not raw input: recording the raw max
-    # would let a feed with v1-valid + v2-quarantined stamp watermark 2
-    # while the store holds v1 content, silently skipping a later
-    # corrected redelivery of v2 in incremental mode.
-    versions = res.accepted_versions.select(F.col("url").alias("graph"), "version")
     # The dictionary graph is published only when the store does not hold
     # this version of it: a new store, a changed vocabulary, or a commit
     # since that deleted or replaced the graph.
-    triples = res.page_triples
+    triples, per_graph = res.page_triples, res.per_graph
     if store.dictionary_version() != (dict_version := dictionary_content_version()):
         triples = res.triples
-        versions = versions.unionByName(spark.createDataFrame(
-            [(I.DICTIONARY_GRAPH, dict_version)], "graph string, version bigint"
+        per_graph = per_graph.unionByName(spark.createDataFrame(
+            [(I.DICTIONARY_GRAPH, False, dict_version)],
+            "graph string, deleted boolean, version bigint",
         ))
-    # Extract the feed once: triples, deletes and the watermark (or the
+    # Extract the feed once: the triples and the per-graph facts (or the
     # dry-run counts) all read the cached version heads instead of
     # re-running the watermark anti-join and the mapper each; the first
     # action below fills the cache.
@@ -300,10 +282,10 @@ def run_to_store(
                 ),
                 "n_triples": triples.count(),
                 "n_graphs": triples.select("graph").distinct().count(),
-                "n_deleted_graphs": res.deleted_graphs.count(),
+                "n_deleted_graphs": res.per_graph.where("deleted").count(),
             }
             return res, store, summary
-        commit = store.merge(triples, delete_graphs=res.deleted_graphs, graph_versions=versions)
+        commit = store.merge(triples, per_graph=per_graph)
     finally:
         heads.unpersist()
     return res, store, commit

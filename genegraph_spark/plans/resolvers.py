@@ -1,20 +1,17 @@
-"""Named resolver registry — the reference's GraphQL public surface
-re-expressed as a flat name → function map over the triples view.
+"""Resolvers — the reference's GraphQL public surface re-expressed as
+DataFrame functions over the triples view or a source model.
 
 Reference analogs: ``resolver-map``
 (``src/genegraph/source/graphql/core.clj:42-150``) registers keyword →
-``(fn [context args value])`` resolvers; per-resolver modifiers
-limit/offset/sort/text come from
-``source/graphql/common/curation.clj:151-170``; the totals resolvers
+``(fn [context args value])`` resolvers; the totals resolvers
 (``tot-*``, ``core.clj:86-90``; ``server_status.clj``) are the
 ``statistics`` view here.
 
-Spark-first shape: a resolver is ``fn(triples, **args) -> DataFrame``.
+Spark-first shape: a resolver is ``fn(frame, **args) -> DataFrame``.
 Every resolver composes predicate-filtered scans + broadcast joins the
-same way the curation views do; the registry only names them so an API
-tier (GraphQL/REST) can dispatch by string — resolution itself stays a
-deferred DataFrame plan, so a serving layer can batch, cache, or push
-further filters before collecting.
+same way the curation views do; resolution stays a deferred DataFrame
+plan, so a serving layer can batch, cache, or push further filters
+before collecting.
 """
 
 from __future__ import annotations
@@ -23,52 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import iri as I
-from ..operators import algebra as A
-from . import curation as CUR
-
-
-def entity_card(triples: DataFrame, iri: str) -> DataFrame:
-    """Point lookup (resource.clj single-entity resolvers): one row with
-    type, preferred label, alias count, supporting-page count."""
-    t = triples.where(F.col("subject") == iri)
-    return t.groupBy(F.col("subject").alias("entity")).agg(
-        F.max(F.when(F.col("predicate") == I.RDF_TYPE, F.col("object"))).alias("type"),
-        F.max(F.when(F.col("predicate") == I.PREF_LABEL, F.col("object"))).alias(
-            "preferred_label"
-        ),
-        F.count(
-            F.when(F.col("predicate").isin(I.ALT_LABEL, I.HIDDEN_LABEL), True)
-        ).alias("n_aliases"),
-    ).join(
-        triples.where(
-            (F.col("predicate") == I.P_MENTIONS) & (F.col("object") == iri)
-        )
-        .agg(F.countDistinct("subject").alias("n_pages"))
-        .select(F.lit(iri).alias("entity"), "n_pages"),
-        "entity",
-        "left_outer",
-    ).withColumn("n_pages", F.coalesce("n_pages", F.lit(0).cast("long")))
-
-
-def entity_list(
-    triples: DataFrame,
-    entity_type: str | None = None,
-    text: str | None = None,
-    limit: int = 10,
-    offset: int = 0,
-) -> DataFrame:
-    """List resolver with the standard modifiers (curation.clj:151-170):
-    optional type filter, optional label text filter, deterministic
-    sort + limit/offset pagination via A.slice."""
-    pats = [("?entity", I.PREF_LABEL, "?label")]
-    if entity_type:
-        pats.append(("?entity", I.RDF_TYPE, I.TYPE_IRIS[entity_type]))
-    rows = A.bgp(triples, pats).dropDuplicates(["entity", "label"])
-    if text:
-        rows = rows.where(F.lower(F.col("label")).contains(text.lower()))
-    return A.slice(
-        rows, limit=limit, offset=offset, order=[("?label", "asc"), ("?entity", "asc")]
-    )
 
 
 def statistics(triples: DataFrame) -> DataFrame:
@@ -217,33 +168,6 @@ def evidence_cards(model: DataFrame, max_depth: int = 4) -> DataFrame:
         "agent",
         "activity_date",
     )
-
-
-RESOLVERS = {
-    "entity": entity_card,
-    "entities": entity_list,
-    # assertion-backed resolvers (take the curation_assertions frame,
-    # not triples — affiliation.clj / genetic_condition.clj analogs)
-    "affiliations": CUR.affiliations,
-    "genetic_conditions": CUR.genetic_conditions,
-    "gene_disease_pairs": CUR.gene_disease_pairs,
-    "entity_page_counts": CUR.entity_page_counts,
-    "activities": CUR.curation_activities,
-    "suggest": CUR.suggest_infix,
-    "suggest_prefix": CUR.suggest_labels,
-    "disease_subtree": CUR.disease_subtree_counts,
-    "describe": A.describe,
-    "statistics": statistics,
-    "evidence_cards": evidence_cards,
-}
-
-
-def resolve(name: str, triples: DataFrame, **args) -> DataFrame:
-    """Dispatch by resolver name (the lacinia field-resolver call analog,
-    core.clj:42). Unknown names fail fast with the known surface."""
-    if name not in RESOLVERS:
-        raise KeyError(f"unknown resolver {name!r}; known: {sorted(RESOLVERS)}")
-    return RESOLVERS[name](triples, **args)
 
 
 def region_model(part: DataFrame) -> DataFrame:
@@ -671,14 +595,3 @@ def recursive_evidence_model(events: DataFrame) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.unionByName(class_edge)
-
-
-RESOLVERS.update(
-    {
-        "resource_cards": resource_cards,
-        "gene_features": gene_features,
-        "drugs": drugs,
-        "gene_validity_reports": gene_validity_reports,
-        "region_features": region_feature_cards,
-    }
-)

@@ -52,7 +52,7 @@ def get_spark(
         # round-1 scaling bottleneck). At 100 TB the defaults are right —
         # there, files are 100s of MB and splits outnumber cores anyway;
         # a cluster deploy overrides via --conf, which always wins here.
-        "spark.sql.files.maxPartitionBytes": os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", "4m"),
+        "spark.sql.files.maxPartitionBytes": "4m",
         "spark.sql.files.openCostInBytes": "1m",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # per-DataFrame-call Python call-site capture (enriched error

@@ -25,10 +25,14 @@ t.graph = n.graph`` over a table partitioned by ``bucket(graph, N)``):
 - whole-graph replace (not row upsert) keeps merges idempotent: the
   incoming graph's rows fully determine the graph, so replaying a batch
   after a crash converges — the reference's idempotence story, kept;
-- a merge derives ONE small per-graph frame ``(graph, bucket, action,
-  n_triples, version)`` from its inputs; it alone gives the touched
-  buckets (one collect of at most ``n_buckets`` rows), the keys of the
-  data write's one join and the commit's lineage rows;
+- a merge takes the incoming triples and one per-graph frame ``(graph,
+  deleted, version)`` — one fact per named graph, as the reference
+  replaces or removes each graph once; from both it derives ONE small
+  frame ``(graph, bucket, action, n_triples, version)``, which alone gives
+  the touched buckets (one collect of at most ``n_buckets`` rows), the
+  keys of the data write's one join and the commit's lineage rows;
+- merge, compact and expiry commit the same way: under the next commit's
+  lock, after checking that no commit landed since they read the head;
 - per-bucket metrics are not written: :meth:`NamedGraphStore.metrics`
   derives them on read from each commit's own data dir;
 - the manifest carries the content version the dictionary graph was
@@ -51,7 +55,6 @@ import os
 import shutil
 import time
 from contextlib import contextmanager
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -187,17 +190,14 @@ class NamedGraphStore:
         return self._bucket(self.spark.read.schema(TRIPLE_SCHEMA).parquet(*paths))
 
     # -- read paths ----------------------------------------------------------
-    def read(self, commit: int | None = None) -> DataFrame:
-        if commit is None:
-            commit = self.last_commit()
-        if commit is None:
-            return self._empty()
-        return self._read_segments(self._read_manifest(commit))
-
     def triples(self, commit: int | None = None) -> DataFrame:
         """The union model: all named graphs (query.clj:15-16 analog).
         ``commit`` selects a historical snapshot (time travel)."""
-        return self.read(commit).drop("bucket")
+        if commit is None:
+            commit = self.last_commit()
+        if commit is None:
+            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
+        return self._read_segments(self._read_manifest(commit)).drop("bucket")
 
     def graphs(self, graph_iris: list[str]) -> DataFrame:
         """Point lookup of specific named graphs (``getNamedModel``,
@@ -218,16 +218,15 @@ class NamedGraphStore:
         )
 
     # -- write path ------------------------------------------------------------
-    def merge(
-        self,
-        triples: DataFrame,
-        delete_graphs: DataFrame | None = None,
-        graph_versions: DataFrame | None = None,
-    ) -> dict:
-        """Replace every incoming graph's content; optionally delete
-        graphs. A graph in BOTH inputs is deleted (delete wins — one
-        deterministic outcome instead of publish/unpublish racing in the
-        same commit's lineage).
+    def merge(self, triples: DataFrame, per_graph: DataFrame | None = None) -> dict:
+        """Replace every graph ``triples`` carries, and apply ``per_graph``:
+        ``(graph string, deleted boolean, version bigint)``, the commit's
+        facts about each graph. A deleted graph is removed, also when
+        ``triples`` carries it (delete wins — one deterministic outcome
+        instead of publish/unpublish racing in the same commit's lineage);
+        ``version`` is the graph's source version, recorded in lineage (the
+        incremental-ingest watermark). A row for a graph that is neither
+        deleted nor carried by ``triples`` changes nothing.
 
         The merge reads ``triples`` twice (the per-graph frame, the data
         write); a caller whose plan is expensive caches it first, as
@@ -242,18 +241,92 @@ class NamedGraphStore:
         lock file (O_EXCL manifest create) fails fast on the second
         writer."""
         last = self.last_commit()
+        with self._locked_commit(last) as commit:
+            # ONE small per-graph frame (graph, bucket, action, n_triples,
+            # version) is the only source of the touched buckets, the
+            # write's join keys and the lineage rows. One aggregation over
+            # the two inputs builds it: max(deleted) makes a graph any row
+            # deletes an unpublish (delete wins), and a graph with neither
+            # a delete nor a triple drops out.
+            graphs = triples.selectExpr("graph", "1 AS n", "false AS deleted", "NULL AS version")
+            if per_graph is not None:
+                graphs = graphs.unionByName(per_graph.selectExpr("graph", "0 AS n", "deleted", "version"))
+            graphs = self._bucket(
+                graphs.groupBy("graph")
+                .agg(F.expr("sum(n) AS n"), F.expr("max(deleted) AS deleted"),
+                     F.expr("max(CAST(version AS BIGINT)) AS version"))
+                .where("deleted OR n > 0")
+                .selectExpr("graph", "IF(deleted, 0, n) AS n_triples",
+                            "IF(deleted, 'unpublish', 'publish') AS action", "version")
+            ).persist()
+            # unpersist on every exit: a write that raises must not leave
+            # the frame pinned in the session's cache manager
+            try:
+                is_dict = f"graph = '{DICTIONARY_GRAPH}'"
+                per_bucket = graphs.groupBy("bucket").agg(
+                    F.expr(f"max({is_dict}) AS has_dict"),
+                    F.expr(f"max(IF({is_dict} AND action = 'publish', version, NULL)) AS dict_version"),
+                ).collect()
+                touched = {r["bucket"] for r in per_bucket}
+                prev = self._read_manifest(last) if last is not None else {"buckets": {}}
+                # ONE join against the per-graph frame: a touched bucket's
+                # old row stays iff its graph is not in this commit, an
+                # incoming row iff its graph is published (not deleted)
+                out = (
+                    self._read_segments(prev, touched).withColumn("_new", F.lit(False))
+                    .unionByName(self._bucket(triples).withColumn("_new", F.lit(True)))
+                    .join(graphs.select("graph", "action"), "graph", "left_outer")
+                    .where("IF(_new, action = 'publish', action IS NULL)")
+                    .drop("_new", "action")
+                )
+                # the dictionary graph's content version survives every
+                # commit that does not touch that graph; a commit that
+                # replaces it records the version it came with, one that
+                # deletes it none
+                dict_version = prev.get("dictionary_version")
+                for r in per_bucket:
+                    if r["has_dict"]:
+                        dict_version = r["dict_version"]
+                t0 = time.monotonic()
+                data_dir = self._write_data(commit, out)
+                write_s = time.monotonic() - t0
+                buckets = dict(prev["buckets"])
+                for b in range(self.n_buckets) if last is None else touched:
+                    buckets[str(b)] = data_dir
+
+                if os.environ.get("GG_CRASH_AFTER_DATA_WRITE"):
+                    # test hook: simulate a hard kill between the data write
+                    # and the manifest write (tests/test_store.py kill/resume)
+                    os._exit(17)
+
+                t0 = time.monotonic()
+                graphs.select("graph", "n_triples", "action", "version").coalesce(1).write.mode(
+                    "overwrite"
+                ).parquet(os.path.join(self._lineage, f"commit={commit}"))
+                lineage_s = time.monotonic() - t0
+                return self._write_manifest(
+                    commit, buckets, dict_version,
+                    timings={"write_s": round(write_s, 3), "lineage_s": round(lineage_s, 3)},
+                )
+            finally:
+                graphs.unpersist()
+
+    @contextmanager
+    def _locked_commit(self, last: int | None):
+        """Hold the lock of the commit after ``last`` and yield its id,
+        once a re-read under the lock shows no commit landed since ``last``
+        was read: a commit built from snapshot ``last`` would otherwise
+        take a landed commit's id and overwrite it, and an expiry would
+        reclaim its data dir. A crash-REPLAY is unaffected (the orphan
+        commit has no manifest, so the head is unchanged)."""
         commit = 0 if last is None else last + 1
         with self._commit_lock(commit):
-            # TOCTOU guard (same as compact/expire): another writer may have
-            # committed between reading `last` and acquiring the lock; a
-            # crash-REPLAY is unaffected (the orphan commit has no manifest,
-            # so last_commit() is unchanged and the replay proceeds).
             if self.last_commit() != last:
                 raise RuntimeError(
                     f"store advanced past commit {last!r} while acquiring the "
-                    "merge lock; re-run merge() against the new head"
+                    "commit lock; retry against the new head"
                 )
-            return self._merge_locked(triples, delete_graphs, last, commit, graph_versions)
+            yield commit
 
     @contextmanager
     def _commit_lock(self, commit: int):
@@ -334,115 +407,46 @@ class NamedGraphStore:
             except OSError:
                 pass
 
-    def _merge_locked(
-        self,
-        triples: DataFrame,
-        delete_graphs: DataFrame | None,
-        last: int | None,
-        commit: int,
-        graph_versions: DataFrame | None = None,
+    def _write_data(self, commit: int, rows: DataFrame) -> str:
+        """Write bucketed ``rows`` to the commit's data dir and return it,
+        relative to the store.
+
+        One ``bucket=K`` subdirectory per bucket, rows sorted by graph:
+        point lookups (:meth:`graphs`) and the next merge's keep-side read
+        prune at the FILE level, not just via a row filter — the
+        partitioned-table layout the Iceberg mapping prescribes
+        (``bucket(graph, N)`` partition transform).
+
+        mode=overwrite: the commit id is derived from manifests only, so a
+        run killed after this write but before the manifest write leaves
+        an orphan ``data/cNNNNNNNN`` dir; the replayed commit computes the
+        same id and must clobber the orphan (the manifest written last is
+        what makes a commit visible — an interrupted commit is invisible
+        and replay converges, load.clj:72-87 idempotence kept)."""
+        data_dir = f"data/c{commit:08d}"
+        rows.repartition("bucket").sortWithinPartitions("bucket", "graph").write.mode(
+            "overwrite"
+        ).partitionBy("bucket").parquet(os.path.join(self.path, data_dir))
+        return data_dir
+
+    def _write_manifest(
+        self, commit: int, buckets: dict, dictionary_version: int | None, **fields
     ) -> dict:
-        # ONE small per-graph frame (graph, bucket, action, n_triples,
-        # version) is the only source of the touched buckets, the write's
-        # join keys and the lineage rows. One aggregation over the tagged
-        # inputs builds it; 'unpublish' sorts after 'publish', so max()
-        # makes a graph in both inputs an unpublish (delete wins).
-        parts = [triples.selectExpr("graph", "1 AS n", "'publish' AS action", "NULL AS version")]
-        if delete_graphs is not None:
-            parts.append(delete_graphs.selectExpr(
-                "graph", "0 AS n", "'unpublish' AS action", "NULL AS version"))
-        if graph_versions is not None:
-            # per-graph source version (the incremental-ingest watermark);
-            # graphs without one record null
-            parts.append(graph_versions.selectExpr("graph", "0 AS n", "NULL AS action", "version"))
-        graphs = self._bucket(
-            reduce(lambda a, b: a.unionByName(b), parts)
-            .groupBy("graph")
-            .agg(F.expr("max(action) AS action"), F.expr("sum(n) AS n"),
-                 F.expr("max(CAST(version AS BIGINT)) AS version"))
-            .where("action IS NOT NULL")
-            .selectExpr("graph", "IF(action = 'publish', n, 0) AS n_triples", "action", "version")
-        ).persist()
-        # unpersist on every exit: a write that raises must not leave the
-        # frame pinned in the session's cache manager
-        try:
-            is_dict = f"graph = '{DICTIONARY_GRAPH}'"
-            per_bucket = graphs.groupBy("bucket").agg(
-                F.expr(f"max({is_dict}) AS has_dict"),
-                F.expr(f"max(IF({is_dict} AND action = 'publish', version, NULL)) AS dict_version"),
-            ).collect()
-            touched = {r["bucket"] for r in per_bucket}
-
-            data_dir = f"data/c{commit:08d}"
-            prev = self._read_manifest(last) if last is not None else {"buckets": {}}
-            # ONE join against the per-graph frame: a touched bucket's old
-            # row stays iff its graph is not in this commit, an incoming row
-            # iff its graph is published (not deleted)
-            out = (
-                self._read_segments(prev, touched).withColumn("_new", F.lit(False))
-                .unionByName(self._bucket(triples).withColumn("_new", F.lit(True)))
-                .join(graphs.select("graph", "action"), "graph", "left_outer")
-                .where("IF(_new, action = 'publish', action IS NULL)")
-                .drop("_new", "action")
-            )
-            buckets_map = dict(prev["buckets"])
-            if last is None:
-                touched = set(range(self.n_buckets))
-            # the dictionary graph's content version survives every commit
-            # that does not touch that graph; a commit that replaces it
-            # records the version it came with, one that deletes it none
-            dict_version = prev.get("dictionary_version")
-            for r in per_bucket:
-                if r["has_dict"]:
-                    dict_version = r["dict_version"]
-            # mode=overwrite: the commit id is derived from manifests only, so
-            # a run killed after this write but before the manifest write
-            # leaves an orphan data/cNNNNNNNN dir; the replayed merge computes
-            # the same commit id and must clobber the orphan (the manifest
-            # written last is what makes a commit visible — an interrupted
-            # commit is invisible and replay converges, load.clj:72-87
-            # idempotence kept)
-            t0 = time.monotonic()
-            # bucket=K subdirectories: point lookups (graphs()) and the next
-            # merge's keep-side read prune at the FILE level, not just via a
-            # row filter — the partitioned-table layout the Iceberg mapping
-            # prescribes (bucket(graph, N) partition transform)
-            out.repartition("bucket").sortWithinPartitions("bucket", "graph").write.mode(
-                "overwrite"
-            ).partitionBy("bucket").parquet(os.path.join(self.path, data_dir))
-            write_s = time.monotonic() - t0
-            for b in touched:
-                buckets_map[str(b)] = data_dir
-
-            if os.environ.get("GG_CRASH_AFTER_DATA_WRITE"):
-                # test hook: simulate a hard kill between the data write and
-                # the manifest write (tests/test_store.py kill/resume)
-                os._exit(17)
-
-            t0 = time.monotonic()
-            graphs.select("graph", "n_triples", "action", "version").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(self._lineage, f"commit={commit}"))
-            lineage_s = time.monotonic() - t0
-            meta = {
-                "commit": commit,
-                "buckets": buckets_map,
-                "n_buckets": self.n_buckets,
-                "wall_ts": time.time(),
-                "timings": {"write_s": round(write_s, 3), "lineage_s": round(lineage_s, 3)},
-            }
-            if dict_version is not None:
-                meta["dictionary_version"] = dict_version
-            with open(self._manifest_path(commit), "w") as f:
-                json.dump(meta, f)
-            return meta
-        finally:
-            graphs.unpersist()
-
-    def delete_graphs(self, graphs: DataFrame) -> dict:
-        """Unpublish: remove graphs entirely (sink/event.clj:41-46)."""
-        empty = self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        return self.merge(empty, delete_graphs=graphs)
+        """Publish ``commit``: write its manifest (bucket → data dir, the
+        layout, ``fields`` and the dictionary graph's content version, if
+        any) and return it."""
+        meta = {
+            "commit": commit,
+            "buckets": buckets,
+            "n_buckets": self.n_buckets,
+            "wall_ts": time.time(),
+            **fields,
+        }
+        if dictionary_version is not None:
+            meta["dictionary_version"] = dictionary_version
+        with open(self._manifest_path(commit), "w") as f:
+            json.dump(meta, f)
+        return meta
 
     # -- maintenance ---------------------------------------------------------
     def compact(self) -> dict:
@@ -462,36 +466,15 @@ class NamedGraphStore:
         last = self.last_commit()
         if last is None:
             raise ValueError("nothing to compact: store has no commits")
-        commit = last + 1
-        with self._commit_lock(commit):
-            # TOCTOU guard: a merge may have landed between reading `last`
-            # and acquiring the lock; its commit id would equal ours and
-            # this compaction (built from snapshot `last`) would silently
-            # overwrite it. Re-read under the lock and fail fast.
-            if self.last_commit() != last:
-                raise RuntimeError(
-                    f"store advanced past commit {last} while acquiring the "
-                    "compaction lock; retry compact()"
-                )
-            live = self._read_segments(self._read_manifest(last))
-            data_dir = f"data/c{commit:08d}"
-            live.repartition("bucket").sortWithinPartitions(
-                "bucket", "graph"
-            ).write.mode("overwrite").partitionBy("bucket").parquet(
-                os.path.join(self.path, data_dir)
+        with self._locked_commit(last) as commit:
+            prev = self._read_manifest(last)
+            data_dir = self._write_data(commit, self._read_segments(prev))
+            return self._write_manifest(
+                commit,
+                {str(b): data_dir for b in range(self.n_buckets)},
+                prev.get("dictionary_version"),
+                compaction_of=last,
             )
-            meta = {
-                "commit": commit,
-                "buckets": {str(b): data_dir for b in range(self.n_buckets)},
-                "n_buckets": self.n_buckets,
-                "wall_ts": time.time(),
-                "compaction_of": last,
-            }
-            if (v := self.dictionary_version()) is not None:
-                meta["dictionary_version"] = v
-            with open(self._manifest_path(commit), "w") as f:
-                json.dump(meta, f)
-            return meta
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:
         """Drop all but the newest ``keep_last`` manifests and delete data
@@ -507,17 +490,9 @@ class NamedGraphStore:
         drop, keep = commits[:-keep_last], commits[-keep_last:]
         if not drop:
             return []
-        # guard the newest commit's lock so expiry never races a writer
-        with self._commit_lock(commits[-1] + 1):
-            # TOCTOU guard: a merge finishing between the listdir above and
-            # the lock acquisition would add a manifest this expiry did not
-            # account for — its data dir must not be reclaimed. Re-read
-            # under the lock and fail fast if the store advanced.
-            if self.last_commit() != commits[-1]:
-                raise RuntimeError(
-                    "store advanced while acquiring the expiry lock; "
-                    "retry expire_snapshots()"
-                )
+        # a merge landing after the listdir above would add a manifest this
+        # expiry did not account for, whose data dir must not be reclaimed
+        with self._locked_commit(commits[-1]):
             live_dirs = {
                 d for c in keep for d in self._read_manifest(c)["buckets"].values()
             }
@@ -607,8 +582,9 @@ class NamedGraphStore:
         processed a graph at (publish or unpublish); a graph's highest
         version here is its incremental-ingest watermark. Not aggregated,
         so a consumer joins it without a shuffle. ``version`` is null for
-        graphs merged without ``graph_versions`` (callers must treat null
-        as unknown and reprocess; the whole-graph MERGE makes that safe)."""
+        graphs merged without a ``per_graph`` version (callers must treat
+        null as unknown and reprocess; the whole-graph MERGE makes that
+        safe)."""
         last = self.last_commit()
         if last is None:
             return self.spark.createDataFrame([], "graph string, version bigint")

@@ -112,7 +112,7 @@ def test_live_pages_and_tombstones(result, sf_dir):
         for r in result.triples.where(F.col("predicate") == I.P_LANG).collect()
     }
     assert langs == expected_live
-    deleted = {r["graph"] for r in result.deleted_graphs.collect()}
+    deleted = {r["graph"] for r in result.per_graph.where("deleted").collect()}
     assert deleted == {u for u, p in pages.items() if p is None}
 
 

@@ -2,10 +2,13 @@
 
 ``test_every_package_def_is_used_by_the_program``: every top-level def,
 class, module constant and (non-dunder) method of a top-level class in
-``genegraph_spark/`` is named by program code (the package,
-``__spark_entry__.py``, ``scripts/`` or ``perfbench/``) outside its own
-definition; methods are matched by attribute name. Comments and
-docstrings are not uses.
+``genegraph_spark/`` is used by program code (the package,
+``__spark_entry__.py``, ``scripts/`` or ``perfbench/``). A top-level name
+is matched per module: its own module names it outside its definition, a
+file imports it from that module, or a file reads it as ``alias.name``
+with ``alias`` bound to that module (an alias a file binds to several
+modules counts for each). Methods are matched by attribute name anywhere.
+Comments and docstrings are not uses.
 
 ``test_every_defaulted_parameter_is_set_by_the_program``: every defaulted
 parameter of a ``genegraph_spark/`` function is passed, by keyword or by
@@ -59,10 +62,6 @@ ALLOWED_PARAMS = {
     # metadata and checked (or adopted) when it is reopened
     "NamedGraphStore(n_buckets)",
     "MinhashIndex(k)", "MinhashIndex(n_hashes)", "MinhashIndex(n_bands)",
-    # resolver arguments: resolve(name, triples, **args) forwards them
-    # through the RESOLVERS table, which no call site names
-    "entity_list(entity_type)", "entity_list(text)", "entity_list(limit)",
-    "entity_list(offset)",
 }
 
 # Parameters that name an input column select no branch.
@@ -89,31 +88,73 @@ def _code_words(text: str) -> list[tuple[int, str]]:
 
 
 def _definitions(tree: ast.Module):
+    """(name, node, is_method) for every top-level def, class, module
+    constant and non-dunder method of a top-level class."""
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            yield node.name, node
+            yield node.name, node, False
             for method in node.body if isinstance(node, ast.ClassDef) else []:
                 if isinstance(method, (ast.FunctionDef, ast.AsyncFunctionDef)) and not (
                     method.name.startswith("__") and method.name.endswith("__")
                 ):
-                    yield method.name, method
+                    yield method.name, method, True
         elif isinstance(node, (ast.Assign, ast.AnnAssign)):
             for target in node.targets if isinstance(node, ast.Assign) else [node.target]:
                 for name in ast.walk(target):
                     if isinstance(name, ast.Name):
-                        yield name.id, node
+                        yield name.id, node, False
+
+
+def _module(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _module_uses(trees: dict[Path, ast.Module]) -> set[tuple[str, str]]:
+    """(module, name) for every name a file imports from a module or reads
+    as ``alias.name`` with ``alias`` bound to that module."""
+    modules = {_module(p) for p in trees}
+    uses = set()
+    for path, tree in trees.items():
+        package = _module(path) if path.name == "__init__.py" else _module(path).rpartition(".")[0]
+        aliases: dict[str, set[str]] = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.asname and a.name in modules:
+                        aliases.setdefault(a.asname, set()).add(a.name)
+            elif isinstance(node, ast.ImportFrom):
+                source = node.module or ""
+                if node.level:
+                    base = package.rsplit(".", node.level - 1)[0]
+                    source = f"{base}.{source}" if source else base
+                for a in node.names:
+                    if f"{source}.{a.name}" in modules:
+                        aliases.setdefault(a.asname or a.name, set()).add(f"{source}.{a.name}")
+                    else:
+                        uses.add((source, a.name))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                uses.update((m, node.attr) for m in aliases.get(node.value.id, ()))
+    return uses
 
 
 def test_every_package_def_is_used_by_the_program():
+    trees = {p: ast.parse(p.read_text()) for p in PROGRAM}
     words = {p: _code_words(p.read_text()) for p in PROGRAM}
     uses = Counter(w for ws in words.values() for _, w in ws)
+    imported = _module_uses(trees)
     unused = []
     for path in PROGRAM:
         if path.parts[len(ROOT.parts)] != "genegraph_spark":
             continue
-        for name, node in _definitions(ast.parse(path.read_text())):
-            own = sum(1 for line, w in words[path] if w == name and node.lineno <= line <= node.end_lineno)
-            if name not in ALLOWED and uses[name] == own:
+        for name, node, is_method in _definitions(trees[path]):
+            own = [node.lineno <= line <= node.end_lineno for line, w in words[path] if w == name]
+            if is_method:
+                used = uses[name] > sum(own)
+            else:
+                used = (_module(path), name) in imported or not all(own)
+            if name not in ALLOWED and not used:
                 unused.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}")
     assert not unused, "defined but used by no program code:\n" + "\n".join(unused)
 

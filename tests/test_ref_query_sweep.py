@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import re
+from functools import reduce
 
 import pytest
 
@@ -538,14 +539,12 @@ class TestRemainingEmbeddedQueries:
 
 
 class TestAlgebraDataForms:
-    """create-query on COLLECTION input (query/resource.clj:228-229 →
-    query/algebra.clj op) — the way the whole curation resolver tier
-    builds its queries. The reference's actual data forms
-    (common/curation.clj) transliterated 1:1 (Clojure symbols → ?vars)
-    and executed through algebra.op (with algebra.ask / algebra.count
-    for the ASK and count modes): the per-activity ASK patterns, the
-    :project BGP queries, disease-list's three-way :union, and the
-    count mode."""
+    """The reference curation tier's query data forms
+    (common/curation.clj, query/algebra.clj ops) transliterated 1:1
+    (Clojure symbols → ?vars) and executed through the algebra operators
+    the curation tier calls: the per-activity ASK patterns, the :project
+    BGP queries, disease-list's three-way :union (set semantics, as
+    create-query's default ``::q/distinct true``), and the count mode."""
 
     GV_BGP = [
         ["?validity_proposition", ":sepio/has-subject", "?gene"],
@@ -611,18 +610,17 @@ class TestAlgebraDataForms:
             (self.GV_BGP, "urn:geneZ", False),
         ]:
             bound = [[gene if x == "?gene" else x for x in t] for t in bgp_form]
-            got = A.ask(A.op(curation_graph, [":bgp", *bound]))
+            got = A.ask(A.bgp(curation_graph, bound))
             assert got is expect, (bgp_form[0], gene)
 
     def test_project_bgp_queries(self, spark, curation_graph):
         # curation.clj:78-83,116-117: [:project ['x] (cons :bgp bgp)]
         from genegraph_spark.operators import algebra as A
 
-        out = A.op(curation_graph, [":project", ["ac_report"], [":bgp", *self.ACT_BGP]])
+        out = A.distinct(A.project(A.bgp(curation_graph, self.ACT_BGP), ["ac_report"]))
         assert [r.ac_report for r in out.collect()] == ["urn:acr"]
-        out = A.op(
-            curation_graph,
-            [":project", ["dosage_assertion"], [":bgp", *self.DOSAGE_DISEASE_BGP]],
+        out = A.distinct(
+            A.project(A.bgp(curation_graph, self.DOSAGE_DISEASE_BGP), ["dosage_assertion"])
         )
         assert [r.dosage_assertion for r in out.collect()] == ["urn:da"]
 
@@ -631,22 +629,17 @@ class TestAlgebraDataForms:
         # (cons :bgp dosage)] projected to ?disease
         from genegraph_spark.operators import algebra as A
 
-        form = [
-            ":project",
-            ["disease"],
-            [
-                ":union",
-                [":bgp", *self.GV_BGP],
-                [":bgp", *self.ACT_BGP],
-                [":bgp", *self.DOSAGE_DISEASE_BGP],
-            ],
-        ]
+        union = reduce(A.union, (
+            A.bgp(curation_graph, bgp)
+            for bgp in (self.GV_BGP, self.ACT_BGP, self.DOSAGE_DISEASE_BGP)
+        ))
         # create-query defaults ::q/distinct true (resource.clj:236-238),
         # so the reference's disease-list returns SET semantics: diseaseD
         # once despite matching all three branches
-        out = sorted(r.disease for r in A.op(curation_graph, form).collect())
+        diseases = A.distinct(A.project(union, ["disease"]))
+        out = sorted(r.disease for r in diseases.collect())
         assert out == ["urn:diseaseD", "urn:diseaseE"]
-        assert A.count(A.op(curation_graph, form)) == 2
+        assert A.count(diseases) == 2
 
 
 class TestActionabilityTransitional:

@@ -523,8 +523,8 @@ def test_merge_delete_wins_over_publish(spark, tmp_path):
     store = NamedGraphStore(spark, str(tmp_path / "store_dw"), n_buckets=4)
     store.merge(triples_df(spark, [("g1", "s", "p", "o", True, None)]))
     both = triples_df(spark, [("g1", "s", "p", "o2", True, None), ("g2", "s", "p", "o", True, None)])
-    dels = spark.createDataFrame([("g1",)], "graph string")
-    store.merge(both, delete_graphs=dels)
+    dels = spark.createDataFrame([("g1", True, None)], "graph string, deleted boolean, version bigint")
+    store.merge(both, per_graph=dels)
     graphs = {r["graph"] for r in store.triples().select("graph").distinct().collect()}
     assert graphs == {"g2"}  # g1 deleted deterministically
     actions = {(r["graph"], r["action"]) for r in store.lineage().where("commit = 1").collect()}

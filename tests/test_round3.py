@@ -204,7 +204,10 @@ class TestStoreDiff:
         rows = [("g1", "a", "p", "x", True, None), ("g2", "b", "p", "y", True, None)]
         store.merge(spark.createDataFrame(rows, TRIPLE_SCHEMA))
         c0 = store.last_commit()
-        store.delete_graphs(spark.createDataFrame([("g2",)], "graph string"))
+        store.merge(
+            spark.createDataFrame([], TRIPLE_SCHEMA),
+            per_graph=spark.createDataFrame([("g2", True, None)], "graph string, deleted boolean, version bigint"),
+        )
         c1 = store.last_commit()
         diff = {r.graph: (r.n_added, r.n_removed) for r in store.diff(c0, c1).collect()}
         assert diff == {"g2": (0, 1)}
@@ -735,8 +738,8 @@ class TestQueryCaches:
 
 
 class TestResolverRegistry:
-    """Resolver-map analog (core.clj:42-150): string-dispatched read
-    resolvers over the triples view."""
+    """Resolver-map analog (core.clj:42-150): the totals resolver
+    over the triples view."""
 
     @pytest.fixture(scope="class")
     def triples(self, spark, sf_dir):
@@ -746,42 +749,12 @@ class TestResolverRegistry:
         t.cache().count()
         return t
 
-    def test_entity_card_point_lookup(self, spark, triples):
-        from genegraph_spark import fixtures
-        from genegraph_spark.plans import resolvers as R
-
-        iri = f"{fixtures.KG}/entity/SPARK"
-        [row] = R.resolve("entity", triples, iri=iri).collect()
-        assert row.type.endswith("Gene")
-        assert row.preferred_label == "spark"
-        assert row.n_aliases == 1       # 'spark protein'
-        assert row.n_pages > 0
-
-    def test_entity_list_modifiers(self, spark, triples):
-        from genegraph_spark.plans import resolvers as R
-
-        page1 = R.resolve("entities", triples, entity_type="gene", limit=3).collect()
-        page2 = R.resolve(
-            "entities", triples, entity_type="gene", limit=3, offset=3
-        ).collect()
-        labels = [r.label for r in page1 + page2]
-        assert len(labels) == 6 and labels == sorted(labels)
-        assert not (set(r.entity for r in page1) & set(r.entity for r in page2))
-        hits = R.resolve("entities", triples, text="spar", limit=10).collect()
-        assert {r.label for r in hits} == {"spark"}
-
     def test_statistics_totals(self, spark, triples):
         from genegraph_spark.plans import resolvers as R
 
-        [row] = R.resolve("statistics", triples).collect()
+        [row] = R.statistics(triples).collect()
         assert row.n_genes == 10 and row.n_diseases == 6 and row.n_variants == 6
         assert row.n_triples > row.n_mentions > 0
-
-    def test_unknown_resolver_fails_fast(self, spark, triples):
-        from genegraph_spark.plans import resolvers as R
-
-        with pytest.raises(KeyError, match="unknown resolver"):
-            R.resolve("nope", triples)
 
 
 class TestPlanShapes:
@@ -836,13 +809,6 @@ class TestSessionize:
 
 
 class TestResolverEdges:
-    def test_entity_card_missing_entity_empty(self, spark, sf_dir):
-        from genegraph_spark.plans import resolvers as R
-        from genegraph_spark.plans.pipeline import construct_kg
-
-        t = construct_kg(spark, sf_dir, use_golden_text=True).triples
-        assert R.resolve("entity", t, iri="https://example.org/kg/entity/NOPE").count() == 0
-
     def test_split_assignment_deterministic_and_exhaustive(self, spark):
         from genegraph_spark.functions import textstats as TS
 

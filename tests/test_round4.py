@@ -260,11 +260,10 @@ class TestAssertionResolvers:
 
     def test_resolver_registry_dispatch(self, spark, sf_dir):
         from genegraph_spark.plans import curation as CUR
-        from genegraph_spark.plans.resolvers import resolve
 
         ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         a = CUR.curation_assertions(ev)
-        assert resolve("affiliations", a).count() == 10
+        assert CUR.affiliations(a).count() == 10
 
 
 # ---------------------------------------------------------------------------
