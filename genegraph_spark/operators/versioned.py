@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def latest_version(df: DataFrame, key: str, version: str) -> DataFrame:
+def latest_version(df: DataFrame, key: str | list[str], version: str) -> DataFrame:
     """Top-1-per-key: the newest version of each entity."""
     w = Window.partitionBy(key).orderBy(F.desc(version))
     return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")

@@ -226,7 +226,8 @@ def run_to_store(
     never re-extracted, so a feed cannot regress a graph to an older
     version. Each merge records the watermark via ``per_graph``, so
     successive incremental feeds pay extraction only for new or updated
-    urls — the Kafka-consumer catch-up loop
+    urls, and a feed the watermark skips entirely writes no commit — the
+    Kafka-consumer catch-up loop
     (stream.clj:150-170) re-expressed as batch anti-join + MERGE. A
     restart of the same input therefore reprocesses only the pages the
     killed run never committed (the offset-file resume semantic at graph

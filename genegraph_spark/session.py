@@ -20,7 +20,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default: the
+    cores this process may run on).
     On a real cluster the caller passes no master and spark-submit decides.
     """
     from pyspark import SparkConf
@@ -28,7 +29,7 @@ def get_spark(
     # conf spark-submit/--conf already provided — NEVER overridden below.
     # Precedence: explicit function args > submitted conf > these defaults.
     submitted = SparkConf()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None and not submitted.contains("spark.master"):
         # an explicit `master` arg wins; else a submitted --master (cluster
         # deploys); else the local sandbox default

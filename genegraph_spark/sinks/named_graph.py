@@ -31,8 +31,14 @@ t.graph = n.graph`` over a table partitioned by ``bucket(graph, N)``):
   frame ``(graph, bucket, action, n_triples, version)``, which alone gives
   the touched buckets (one collect of at most ``n_buckets`` rows), the
   keys of the data write's one join and the commit's lineage rows;
+- a merge that touches no bucket (every graph it names is skipped or
+  unknown) writes nothing and returns the head's manifest, so a replayed
+  or fully watermarked feed adds no commit;
 - merge, compact and expiry commit the same way: under the next commit's
-  lock, after checking that no commit landed since they read the head;
+  lock, after checking that no commit landed since they read the head
+  and deleting any lineage an interrupted commit left under that id;
+  the manifest, published by an atomic rename, is the only thing that
+  makes a commit visible;
 - per-bucket metrics are not written: :meth:`NamedGraphStore.metrics`
   derives them on read from each commit's own data dir;
 - the manifest carries the content version the dictionary graph was
@@ -226,7 +232,9 @@ class NamedGraphStore:
         instead of publish/unpublish racing in the same commit's lineage);
         ``version`` is the graph's source version, recorded in lineage (the
         incremental-ingest watermark). A row for a graph that is neither
-        deleted nor carried by ``triples`` changes nothing.
+        deleted nor carried by ``triples`` changes nothing; a merge that
+        changes nothing on a store with a head writes nothing and returns
+        the head's manifest.
 
         The merge reads ``triples`` twice (the per-graph frame, the data
         write); a caller whose plan is expensive caches it first, as
@@ -269,6 +277,8 @@ class NamedGraphStore:
                 ).collect()
                 touched = {r["bucket"] for r in per_bucket}
                 prev = self._read_manifest(last) if last is not None else {"buckets": {}}
+                if last is not None and not touched:
+                    return prev
                 # ONE join against the per-graph frame: a touched bucket's
                 # old row stays iff its graph is not in this commit, an
                 # incoming row iff its graph is published (not deleted)
@@ -293,12 +303,6 @@ class NamedGraphStore:
                 buckets = dict(prev["buckets"])
                 for b in range(self.n_buckets) if last is None else touched:
                     buckets[str(b)] = data_dir
-
-                if os.environ.get("GG_CRASH_AFTER_DATA_WRITE"):
-                    # test hook: simulate a hard kill between the data write
-                    # and the manifest write (tests/test_store.py kill/resume)
-                    os._exit(17)
-
                 t0 = time.monotonic()
                 graphs.select("graph", "n_triples", "action", "version").coalesce(1).write.mode(
                     "overwrite"
@@ -318,7 +322,12 @@ class NamedGraphStore:
         was read: a commit built from snapshot ``last`` would otherwise
         take a landed commit's id and overwrite it, and an expiry would
         reclaim its data dir. A crash-REPLAY is unaffected (the orphan
-        commit has no manifest, so the head is unchanged)."""
+        commit has no manifest, so the head is unchanged).
+
+        A writer killed before its manifest may have left lineage under
+        this id; it is deleted here, so whichever operation takes the id
+        next (a compaction writes no lineage of its own) never publishes
+        the dead commit's graph versions."""
         commit = 0 if last is None else last + 1
         with self._commit_lock(commit):
             if self.last_commit() != last:
@@ -326,6 +335,7 @@ class NamedGraphStore:
                     f"store advanced past commit {last!r} while acquiring the "
                     "commit lock; retry against the new head"
                 )
+            shutil.rmtree(os.path.join(self._lineage, f"commit={commit}"), ignore_errors=True)
             yield commit
 
     @contextmanager
@@ -434,7 +444,9 @@ class NamedGraphStore:
     ) -> dict:
         """Publish ``commit``: write its manifest (bucket → data dir, the
         layout, ``fields`` and the dictionary graph's content version, if
-        any) and return it."""
+        any) and return it. The manifest is written to a temp file and
+        renamed into place, so a writer killed mid-write leaves no
+        truncated manifest for :meth:`last_commit` to list."""
         meta = {
             "commit": commit,
             "buckets": buckets,
@@ -444,8 +456,10 @@ class NamedGraphStore:
         }
         if dictionary_version is not None:
             meta["dictionary_version"] = dictionary_version
-        with open(self._manifest_path(commit), "w") as f:
+        path = self._manifest_path(commit)
+        with open(path + ".tmp", "w") as f:
             json.dump(meta, f)
+        os.replace(path + ".tmp", path)
         return meta
 
     # -- maintenance ---------------------------------------------------------

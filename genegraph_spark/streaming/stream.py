@@ -9,6 +9,12 @@ offset file (``stream.clj:221-236``); each micro-batch lands via
 reference wraps each poll batch in one write tx,
 ``sink/event.clj:172-178``); ``Trigger.AvailableNow`` reproduces the
 "consume to end offsets then stop" catch-up loop (``stream.clj:190-219``).
+Every stream runs through one driver, :func:`_drain`.
+
+The page stream commits to the named-graph store by the batch rule,
+``run_to_store(incremental=True)``: a page at or below its url's
+processed version is skipped, so late data never regresses a graph and a
+replayed micro-batch adds no commit.
 
 Scale shape: the streaming query itself is stateless or
 bounded-state (watermarked windows); per-batch results are appended to
@@ -32,6 +38,8 @@ from pyspark.sql import functions as F
 from .. import fixtures
 from ..functions.text import extract_text, is_tombstone
 from ..operators import mentions
+from ..operators.versioned import latest_version
+from ..sinks.named_graph import TRIPLE_SCHEMA, NamedGraphStore
 
 PAGE_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string, "
@@ -68,6 +76,16 @@ def write_events_source_with_dupes(spark: SparkSession, sf_dir: str, out_dir: st
     ev.repartition(4).write.mode("overwrite").parquet(out_dir)
     ev.where(F.col("event_id") % 10 == 0).coalesce(1).write.mode("append").parquet(out_dir)
     return out_dir
+
+
+def _drain(stream: DataFrame, batch_fn, checkpoint_dir: str, output_mode: str) -> None:
+    """Run ``stream`` through ``batch_fn`` (foreachBatch) until every
+    source file present at start is consumed, then stop (availableNow).
+    Rerunning with the same checkpoint processes only NEW source files
+    and runs no batch when none arrived."""
+    stream.writeStream.outputMode(output_mode).foreachBatch(batch_fn).option(
+        "checkpointLocation", checkpoint_dir
+    ).trigger(availableNow=True).start().awaitTermination()
 
 
 def _batch_dir_writer(out_dir: str):
@@ -112,17 +130,12 @@ def stream_mention_counts(
     alias = fixtures.alias_df(spark).where(F.col("label_kind") == "preferred")
     hits = mentions.detect_mentions(mentions.tokenize(extracted, text_col="etext"), alias)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partial = batch_df.groupBy("iri").agg(F.count("*").alias("n_part"))
-        partial.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
+    write = _batch_dir_writer(out_dir)
 
-    q = (
-        hits.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        write(batch_df.groupBy("iri").agg(F.count("*").alias("n_part")), batch_id)
+
+    _drain(hits, write_batch, checkpoint_dir, "append")
     return (
         _read_batches(spark, out_dir, "iri string, n_part long, batch int")
         .groupBy("iri")
@@ -150,26 +163,15 @@ def stream_windowed_events(
         .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "total")
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_batch_dir_writer(out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("window_start", "event_type").orderBy(F.desc("batch"))
-    return (
+    _drain(agg, _batch_dir_writer(out_dir), checkpoint_dir, "update")
+    return latest_version(
         _read_batches(
             spark, out_dir,
             "window_start timestamp, event_type string, n long, total double, batch int",
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .where("_rn = 1")
-        .select("window_start", "event_type", "n", "total")
-    )
+        ),
+        ["window_start", "event_type"],
+        "batch",
+    ).select("window_start", "event_type", "n", "total")
 
 
 def stream_dedup_events(
@@ -196,14 +198,7 @@ def stream_dedup_events(
     dd = src.withWatermark("ts", "35 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    q = (
-        dd.writeStream.outputMode("append")
-        .foreachBatch(_batch_dir_writer(out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(dd, _batch_dir_writer(out_dir), checkpoint_dir, "append")
     return _read_batches(spark, out_dir, EVENT_SCHEMA + ", batch int").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -254,29 +249,12 @@ def stream_user_running_totals(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        updated.writeStream.outputMode("update")
-        .foreachBatch(_batch_dir_writer(out_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("batch"))
-    return (
-        _read_batches(spark, out_dir, "user_id long, n_events long, total double, batch int")
-        .withColumn("_rn", F.row_number().over(w))
-        .where("_rn = 1")
-        .select("user_id", "n_events", F.round("total", 4).alias("total"))
-    )
-
-
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string, "
-    "version int, doc_id long"
-)
+    _drain(updated, _batch_dir_writer(out_dir), checkpoint_dir, "update")
+    return latest_version(
+        _read_batches(spark, out_dir, "user_id long, n_events long, total double, batch int"),
+        ["user_id"],
+        "batch",
+    ).select("user_id", "n_events", F.round("total", 4).alias("total"))
 
 
 def stream_pages_to_store(
@@ -296,42 +274,30 @@ def stream_pages_to_store(
 
     Delivery semantics (matches the reference's offset-commit window):
     the streaming checkpoint advances AFTER the batch function returns,
-    so a crash between merge and checkpoint replays the batch —
-    re-merging the same graphs with the same content. Because the store
-    MERGE is whole-graph replace, the replay CONVERGES on identical
-    store content (content-idempotent); only the commit counter and
-    lineage record the retry, exactly like a reprocessed Kafka offset.
+    so a crash between merge and checkpoint replays the batch. Each
+    micro-batch commits by the batch rule, ``run_to_store(incremental=True)``:
+    a page at or below the version its url was last processed at is
+    skipped, so a replayed batch — or committed pages delivered again as
+    new source files — adds no commit, and a late older version never
+    regresses a url (a v1 arriving after the v3 tombstone leaves the url
+    deleted). Which micro-batch a page lands in therefore does not
+    change the final store.
 
     Returns {"batches": n, "last_commit": id}. availableNow trigger:
     drains everything present, then stops — rerunning with the same
     checkpoint processes only NEW source files (catch-up semantics)."""
     from ..plans.pipeline import run_to_store
-    from ..sinks.named_graph import NamedGraphStore
 
-    n_batches = {"n": 0}
+    batches = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        run_to_store(spark, sf_dir, store_path, pages=batch_df)
-        n_batches["n"] += 1
+        run_to_store(spark, sf_dir, store_path, pages=batch_df, incremental=True)
+        batches.append(batch_id)
 
-    q = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .parquet(source_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
-    q.awaitTermination()
+    pages = spark.readStream.schema(PAGE_SCHEMA).parquet(source_dir)
+    _drain(pages, sink, checkpoint_dir, "append")
     store = NamedGraphStore(spark, store_path)
-    return {"batches": n_batches["n"], "last_commit": store.last_commit()}
-
-
-# single-sourced with the store sink (review-caught: a third copy of
-# the 6-column schema string risks silent divergence)
-from ..sinks.named_graph import TRIPLE_SCHEMA as TRIPLES_SCHEMA  # noqa: E402
+    return {"batches": len(batches), "last_commit": store.last_commit()}
 
 
 def stream_gdm_to_store(
@@ -354,21 +320,20 @@ def stream_gdm_to_store(
     time, stream.clj:150-236 + transform-gdm) → NamedGraphStore MERGE,
     one commit per micro-batch.
 
-    Same delivery contract as :func:`stream_pages_to_store`: checkpoint
-    advances after the batch function, whole-graph-replace MERGE makes
-    replays content-idempotent.
+    The checkpoint advances after the batch function, as in
+    :func:`stream_pages_to_store`, but curation models carry no version,
+    so the merge has no watermark to apply: a curation's LAST delivery
+    wins, and a replayed batch rewrites the same graphs with the same
+    content in one more commit.
 
     ``constructs`` narrows the chain to a subset of CONSTRUCT_ORDER for
     wiring diagnostics/tests — production callers leave it None (the
     full chain; its correctness is pinned by the batch-mode tests)."""
     from ..operators.gdm_chain import transform_gdm_corpus
-    from ..sinks.named_graph import NamedGraphStore
 
-    n_batches = {"n": 0}
+    batches = []
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         out = transform_gdm_corpus(
             batch_df,
             query_dir,
@@ -383,16 +348,9 @@ def stream_gdm_to_store(
             NamedGraphStore(spark, store_path).merge(out)
         finally:
             out.unpersist()
-        n_batches["n"] += 1
+        batches.append(batch_id)
 
-    q = (
-        spark.readStream.schema(TRIPLES_SCHEMA)
-        .parquet(source_dir)
-        .writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-    )
-    q.awaitTermination()
+    events = spark.readStream.schema(TRIPLE_SCHEMA).parquet(source_dir)
+    _drain(events, sink, checkpoint_dir, "append")
     store = NamedGraphStore(spark, store_path)
-    return {"batches": n_batches["n"], "last_commit": store.last_commit()}
+    return {"batches": len(batches), "last_commit": store.last_commit()}

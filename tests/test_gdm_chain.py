@@ -1713,10 +1713,7 @@ class TestStreamGdmToStore:
 
         from genegraph_spark.operators.gdm_chain import transform_gdm_corpus
         from genegraph_spark.sinks.named_graph import NamedGraphStore
-        from genegraph_spark.streaming.stream import (
-            TRIPLES_SCHEMA,
-            stream_gdm_to_store,
-        )
+        from genegraph_spark.streaming.stream import stream_gdm_to_store
 
         src = str(tmp_path / "events")
         os.makedirs(src, exist_ok=True)
@@ -1724,7 +1721,7 @@ class TestStreamGdmToStore:
         def frame(i, x):
             return spark.createDataFrame(
                 [(f"urn:cur{i}", *r) for r in gdm_fixture_rows(x)],
-                TRIPLES_SCHEMA,
+                TRIPLE_SCHEMA,
             )
 
         entrez = spark.createDataFrame(

@@ -226,10 +226,34 @@ spark = get_spark("crash_drill", extra_conf={{"spark.driver.memory": "4g"}})
 store = NamedGraphStore(spark, {path!r}, n_buckets=4)
 rows = [(f"g{{i}}", "s", "p", f"o{{i}}", True, None) for i in range(20)]
 store.merge(spark.createDataFrame(rows, TRIPLE_SCHEMA))
-os.environ["GG_CRASH_AFTER_DATA_WRITE"] = "1"
-rows2 = [("g1", "s", "p", "NEW", True, None)]
-store.merge(spark.createDataFrame(rows2, TRIPLE_SCHEMA))  # dies mid-commit
+step = getattr(NamedGraphStore, {step!r})
+
+def crash(self, *args, **kwargs):
+    # a hard kill: after the step's write, or on entry to the step
+    if {after!r}:
+        step(self, *args, **kwargs)
+    os._exit(17)
+
+setattr(NamedGraphStore, {step!r}, crash)
+store.merge(  # dies mid-commit
+    spark.createDataFrame([({graph!r}, "s", "p", "NEW", True, None)], TRIPLE_SCHEMA),
+    per_graph=spark.createDataFrame(
+        [({graph!r}, False, {version!r})], "graph string, deleted boolean, version bigint"
+    ),
+)
 """
+
+
+def _crash_merge(path, step, after, graph="g1", version=None):
+    """Commit 20 graphs to a 4-bucket store at ``path``, then hard-kill a
+    second merge (of ``graph`` at ``version``) in ``step``, in a
+    subprocess: after the step's real call when ``after``, else on entry."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = CRASH_SCRIPT.format(
+        repo=repo, path=path, step=step, after=after, graph=graph, version=version
+    )
+    r = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True, timeout=300)
+    assert r.returncode == 17, r.stderr[-2000:]
 
 
 @pytest.mark.slow
@@ -239,11 +263,7 @@ def test_kill_between_data_and_manifest_then_resume(spark, tmp_path):
     store at commit 0, and replaying the merge must converge (the orphan
     data dir is clobbered, not a path-exists error)."""
     path = str(tmp_path / "crash_store")
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    script = CRASH_SCRIPT.format(repo=repo, path=path)
-    env = {k: v for k, v in os.environ.items() if k != "GG_CRASH_AFTER_DATA_WRITE"}
-    r = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True, env=env, timeout=300)
-    assert r.returncode == 17, r.stderr[-2000:]
+    _crash_merge(path, "_write_data", after=True)
 
     store = NamedGraphStore(spark, path, n_buckets=4)
     # the interrupted commit is invisible...
@@ -257,6 +277,34 @@ def test_kill_between_data_and_manifest_then_resume(spark, tmp_path):
     store.merge(rows2)
     assert {r_["object"] for r_ in store.triples().where("graph = 'g1'").collect()} == {"NEW"}
     assert store.triples().count() == 20
+
+
+@pytest.mark.slow
+def test_kill_before_manifest_then_compact_publishes_no_orphan_lineage(spark, sf_dir, tmp_path):
+    """A merge killed on entry to its manifest write leaves its data dir
+    AND its lineage dir under commit id 1. A compaction then takes id 1:
+    it must not publish the dead commit's lineage, or the orphan's graph
+    version becomes a watermark for a graph the store does not hold, and
+    an incremental feed of that graph is skipped for good."""
+    from genegraph_spark import fixtures
+    from genegraph_spark.plans.pipeline import run_to_store
+
+    page = fixtures.pages_df(spark, sf_dir).where("doc_id = 1 AND version = 1")
+    url = page.first().url
+    path = str(tmp_path / "crash_store")
+    _crash_merge(path, "_write_manifest", after=False, graph=url, version=7)
+    assert os.path.isdir(os.path.join(path, "lineage", "commit=1"))  # the orphan
+
+    store = NamedGraphStore(spark, path)
+    assert store.compact()["commit"] == 1
+    processed = {r_["graph"] for r_ in store.processed_versions().collect()}
+    assert processed == {f"g{i}" for i in range(20)}
+    assert store.graphs([url]).count() == 0
+    # the graph's page at a version below the orphan's is processed
+    res, store, _ = run_to_store(spark, sf_dir, path, pages=page, incremental=True,
+                                 use_golden_text=True)
+    assert res.pages.count() == 1
+    assert store.graphs([url]).count() > 0
 
 
 # -- snapshot tables + params + dates -------------------------------

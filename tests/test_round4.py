@@ -378,6 +378,73 @@ class TestStreamToStore:
         assert r3["batches"] == 0
         assert r3["last_commit"] == r2["last_commit"]
 
+    @staticmethod
+    def _stream(spark, sf_dir, deliveries, root):
+        """Deliver each frame of ``deliveries`` as new source files, one
+        ``stream_pages_to_store`` run per delivery onto one store under
+        ``root``; return the store and the runs' reports."""
+        from genegraph_spark.sinks.named_graph import NamedGraphStore
+        from genegraph_spark.streaming.stream import stream_pages_to_store
+
+        src, store_path, ckpt = (str(root / d) for d in ("src", "store", "ckpt"))
+        reports = []
+        for pages in deliveries:
+            pages.coalesce(1).write.mode("append").parquet(src)
+            reports.append(stream_pages_to_store(spark, sf_dir, src, store_path, ckpt))
+        return NamedGraphStore(spark, store_path), reports
+
+    @staticmethod
+    def _rows(store, graphs=None):
+        df = store.triples() if graphs is None else store.graphs(graphs)
+        return {tuple(r) for r in df.collect()}
+
+    def test_late_older_versions_do_not_regress_urls(self, spark, sf_dir, tmp_path):
+        """Micro-batch 1 carries url A's v3 tombstone and url B's v2,
+        micro-batch 2 the v1 of both: A stays deleted and B keeps its v2
+        triples, as the one-shot batch run over the same pages has it."""
+        from genegraph_spark import fixtures
+        from genegraph_spark.plans.pipeline import run_to_store
+
+        pages = fixtures.pages_df(spark, sf_dir).where("doc_id IN (0, 10)")
+        url_a, url_b = (pages.where(f"doc_id = {d}").first().url for d in (0, 10))
+        first = pages.where("(doc_id = 0 AND version = 3) OR (doc_id = 10 AND version = 2)")
+        store, _ = self._stream(spark, sf_dir, [first, pages.where("version = 1")], tmp_path)
+        assert store.graphs([url_a]).count() == 0
+        _, oneshot, _ = run_to_store(spark, sf_dir, str(tmp_path / "oneshot"), pages=first)
+        assert self._rows(store, [url_b]) == self._rows(oneshot, [url_b]) != set()
+        versions = {(r.graph, r.version) for r in store.processed_versions().collect()}
+        assert {(g, v) for g, v in versions if g in (url_a, url_b)} == {(url_a, 3), (url_b, 2)}
+
+    def test_any_split_into_deliveries_equals_the_one_shot_run(self, spark, sf_dir, tmp_path):
+        """However a small url subset splits into deliveries, in version
+        order, reversed, or mixed, the streamed store equals the one-shot
+        run_to_store store."""
+        from genegraph_spark import fixtures
+        from genegraph_spark.plans.pipeline import run_to_store
+
+        # doc 0: v1, v2, v3 tombstone; docs 10 and 20: v1, v2; doc 1: v1
+        pages = fixtures.pages_df(spark, sf_dir).where("doc_id IN (0, 1, 10, 20)")
+        _, oneshot, _ = run_to_store(spark, sf_dir, str(tmp_path / "oneshot"), pages=pages)
+        want = self._rows(oneshot)
+        splits = {
+            "ascending": ["version = 1", "version = 2", "version = 3"],
+            "reversed": ["version = 3", "version = 2", "version = 1"],
+            "mixed": ["version = 2 OR doc_id = 1", "version <> 2 AND doc_id <> 1"],
+        }
+        for name, parts in splits.items():
+            store, _ = self._stream(spark, sf_dir, [pages.where(p) for p in parts], tmp_path / name)
+            assert self._rows(store) == want, name
+
+    def test_redelivered_pages_add_no_commit(self, spark, sf_dir, tmp_path):
+        """Pages already committed, delivered again as new source files,
+        run a micro-batch that commits nothing."""
+        from genegraph_spark import fixtures
+
+        pages = fixtures.pages_df(spark, sf_dir).where("doc_id IN (0, 1, 10)")
+        store, (r1, r2) = self._stream(spark, sf_dir, [pages, pages], tmp_path)
+        assert r2["batches"] == 1
+        assert r2["last_commit"] == r1["last_commit"] == store.last_commit()
+
 
 # ---------------------------------------------------------------------------
 # Plan shapes for the round-4 training-data operators

@@ -210,11 +210,12 @@ def test_incremental_ingest_processes_only_updated_urls(spark, sf_dir, tmp_path)
     n0 = store.triples().count()
 
     # identical feed: zero stale pages, and the store already holds the
-    # current dictionary graph: the commit changes nothing
+    # current dictionary graph: nothing is committed
     res2, store, c1 = run_to_store(
         spark, sf_dir, path, pages=base, incremental=True, use_golden_text=True
     )
     assert res2.pages.count() == 0
+    assert c1["commit"] == c0["commit"]
     assert store.triples().count() == n0
     assert store.diff(c0["commit"], c1["commit"]).count() == 0
 
@@ -384,6 +385,48 @@ def test_failed_merge_leaves_no_cached_frames(spark, tmp_path):
     assert store.last_commit() == 0
     store.merge(make(spark, [t("g2", "s", "p", "o2")]))
     assert {r.graph for r in store.triples().collect()} == {"g1", "g2"}
+
+
+def test_merge_that_changes_nothing_writes_nothing(spark, tmp_path):
+    """On a store with a head, a merge whose triples and per-graph facts
+    touch no graph returns the head's manifest and writes no data dir,
+    lineage or manifest; on an empty store it still creates commit 0."""
+    import os
+
+    path = str(tmp_path / "noop")
+    store = NamedGraphStore(spark, path, n_buckets=4)
+    assert store.merge(make(spark, []))["commit"] == 0
+    head = store.merge(make(spark, [t("g1", "s", "p", "o1")]))
+    untouched = spark.createDataFrame([("g2", False, 5)], "graph string, deleted boolean, version bigint")
+    assert store.merge(make(spark, [])) == head
+    assert store.merge(make(spark, []), per_graph=untouched) == head
+    assert store.last_commit() == 1
+    assert sorted(os.listdir(os.path.join(path, "data"))) == ["c00000000", "c00000001"]
+    assert sorted(os.listdir(os.path.join(path, "lineage"))) == ["commit=0", "commit=1"]
+
+
+def test_manifest_write_killed_midway_leaves_the_head(spark, tmp_path, monkeypatch):
+    """A manifest write that stops partway leaves no truncated manifest:
+    the head stays the previous commit and reads as before, and the next
+    merge takes the interrupted commit's id."""
+    from genegraph_spark.sinks import named_graph
+
+    store = NamedGraphStore(spark, str(tmp_path / "torn"), n_buckets=4)
+    store.merge(make(spark, [t("g1", "s", "p", "o1")]))
+
+    def torn_dump(obj, f):
+        f.write('{"commit": 1, "buck')
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(named_graph.json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            store.merge(make(spark, [t("g2", "s", "p", "o2")]))
+    reopened = NamedGraphStore(spark, str(tmp_path / "torn"))
+    assert reopened.last_commit() == 0 and reopened.n_buckets == 4
+    assert {r.graph for r in reopened.triples().collect()} == {"g1"}
+    assert reopened.merge(make(spark, [t("g2", "s", "p", "o2")]))["commit"] == 1
+    assert {r.graph for r in reopened.triples().collect()} == {"g1", "g2"}
 
 
 def test_incremental_commit_runs_the_mapper_once(spark, sf_dir, tmp_path, monkeypatch):
