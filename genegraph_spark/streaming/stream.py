@@ -9,7 +9,6 @@ offset file (``stream.clj:221-236``); each micro-batch lands via
 reference wraps each poll batch in one write tx,
 ``sink/event.clj:172-178``); ``Trigger.AvailableNow`` reproduces the
 "consume to end offsets then stop" catch-up loop (``stream.clj:190-219``).
-Every stream runs through one driver, :func:`_drain`.
 
 The page stream commits to the named-graph store by the batch rule,
 ``run_to_store(incremental=True)``: a page at or below its url's
