@@ -34,11 +34,12 @@ t.graph = n.graph`` over a table partitioned by ``bucket(graph, N)``):
 - a merge that touches no bucket (every graph it names is skipped or
   unknown) writes nothing and returns the head's manifest, so a replayed
   or fully watermarked feed adds no commit;
-- merge, compact and expiry commit the same way: under the next commit's
-  lock, after checking that no commit landed since they read the head
-  and deleting any lineage an interrupted commit left under that id;
-  the manifest, published by an atomic rename, is the only thing that
-  makes a commit visible;
+- merge, compact and expiry commit the same way: under the store's one
+  writer lock (a kernel ``flock`` held for the whole commit, which the
+  kernel releases when its holder dies), after checking that no commit
+  landed since they read the head and deleting any lineage an
+  interrupted commit left under the next id; the manifest, published by
+  an atomic rename, is the only thing that makes a commit visible;
 - per-bucket metrics are not written: :meth:`NamedGraphStore.metrics`
   derives them on read from each commit's own data dir;
 - the manifest carries the content version the dictionary graph was
@@ -153,12 +154,16 @@ class NamedGraphStore:
     def _manifest_path(self, commit: int) -> str:
         return os.path.join(self._manifests, f"c{commit:08d}.json")
 
-    def last_commit(self) -> int | None:
-        ms = sorted(
-            m for m in os.listdir(self._manifests)
+    def _commits(self) -> list[int]:
+        """The ids of the published manifests, oldest first."""
+        return sorted(
+            int(m[1:-5]) for m in os.listdir(self._manifests)
             if m.startswith("c") and m.endswith(".json")
         )
-        return int(ms[-1][1:-5]) if ms else None
+
+    def last_commit(self) -> int | None:
+        commits = self._commits()
+        return commits[-1] if commits else None
 
     def _read_manifest(self, commit: int) -> dict:
         with open(self._manifest_path(commit)) as f:
@@ -245,9 +250,9 @@ class NamedGraphStore:
         database/util.clj:29-42). The data write uses mode=overwrite so a
         crash-replay converges on the same commit id — which also means
         two CONCURRENT writers computing the same id would interleave
-        into the same data dir with last-manifest-wins over mixed data. A
-        lock file (O_EXCL manifest create) fails fast on the second
-        writer."""
+        into the same data dir with last-manifest-wins over mixed data. The
+        store's writer lock, a kernel ``flock`` held for the whole commit,
+        makes the second writer fail fast."""
         last = self.last_commit()
         with self._locked_commit(last) as commit:
             # ONE small per-graph frame (graph, bucket, action, n_triples,
@@ -317,19 +322,12 @@ class NamedGraphStore:
 
     @contextmanager
     def _locked_commit(self, last: int | None):
-        """Hold the lock of the commit after ``last`` and yield its id,
-        once a re-read under the lock shows no commit landed since ``last``
-        was read: a commit built from snapshot ``last`` would otherwise
-        take a landed commit's id and overwrite it, and an expiry would
-        reclaim its data dir. A crash-REPLAY is unaffected (the orphan
-        commit has no manifest, so the head is unchanged).
-
-        A writer killed before its manifest may have left lineage under
-        this id; it is deleted here, so whichever operation takes the id
-        next (a compaction writes no lineage of its own) never publishes
-        the dead commit's graph versions."""
+        """Under the writer lock, yield the id after ``last`` once a re-read
+        shows no commit landed since; a commit built on an older head would
+        overwrite it. First delete any lineage a killed writer left under
+        that id, so no later commit (say, a compaction) publishes it."""
         commit = 0 if last is None else last + 1
-        with self._commit_lock(commit):
+        with self._commit_lock():
             if self.last_commit() != last:
                 raise RuntimeError(
                     f"store advanced past commit {last!r} while acquiring the "
@@ -339,83 +337,24 @@ class NamedGraphStore:
             yield commit
 
     @contextmanager
-    def _commit_lock(self, commit: int):
-        """O_EXCL create with our pid: a LIVE concurrent writer holding the
-        same commit id fails fast; a lock left by a CRASHED writer (pid
-        dead — crash-replay is the documented resume path) is reclaimed,
-        and the overwrite below clobbers its orphan data dir so the
-        manifest write makes exactly one outcome visible. On a cluster
-        store the same role is played by an O_EXCL/conditional-put
-        manifest create on shared storage."""
+    def _commit_lock(self):
+        """A kernel ``flock`` on ``writer-mutex.lock`` for the whole commit: a
+        second writer (also another open of the file in this process) fails
+        fast, and a killed writer's lock dies with it. Never unlinked: a
+        holder of an unlinked file would no longer exclude the next writer."""
         import fcntl
 
-        lock = os.path.join(self.path, f"commit-{commit:08d}.lock")
-        os.makedirs(self.path, exist_ok=True)
-        # Reclaiming a dead writer's lock must itself be exclusive: two live
-        # writers that both observe a dead pid must not BOTH rewrite the lock
-        # and proceed (that reopens the interleaved-data corruption the lock
-        # exists to prevent), and a naive remove-then-recreate lets writer B
-        # unlink the lock writer A just created. So every mutation of the
-        # lock PATH (O_EXCL create, liveness check, stale unlink) runs under
-        # a kernel flock() on a per-store mutex file — held only for the
-        # acquisition instant, auto-released if the reclaimer itself dies.
-        # The pid-stamped lock file remains the real lock for the duration
-        # of the merge (it survives across processes and is what crash
-        # replay inspects); the flock only serializes acquire/reclaim.
-        mutex_fd = os.open(
-            os.path.join(self.path, "writer-mutex.lock"),
-            os.O_CREAT | os.O_WRONLY,
-        )
+        fd = os.open(os.path.join(self.path, "writer-mutex.lock"), os.O_CREAT | os.O_WRONLY)
         try:
-            fcntl.flock(mutex_fd, fcntl.LOCK_EX)
             try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(os.getpid()).encode())
-                os.close(fd)
-            except FileExistsError:
-                try:
-                    with open(lock) as f:
-                        holder = int(f.read().strip() or "0")
-                except (OSError, ValueError):
-                    holder = 0
-                alive = False
-                if holder > 0:
-                    try:
-                        os.kill(holder, 0)
-                        alive = True
-                    except ProcessLookupError:
-                        alive = False
-                    except PermissionError:
-                        # EPERM: the pid EXISTS but belongs to another
-                        # user — a live writer we may not signal. Treating
-                        # it as dead would delete a live writer's lock and
-                        # reopen concurrent-writer corruption (ADVICE r4).
-                        alive = True
-                    except OSError:
-                        alive = False
-                if alive:
-                    raise RuntimeError(
-                        f"concurrent writer (pid {holder}) detected for commit "
-                        f"{commit} (lock {lock}); the store is single-writer"
-                    ) from None
-                # stale lock from a dead writer: safe to replace, we hold
-                # the acquisition mutex so no other reclaimer can interleave
-                os.remove(lock)
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(os.getpid()).encode())
-                os.close(fd)
-        finally:
-            try:
-                fcntl.flock(mutex_fd, fcntl.LOCK_UN)
-            finally:
-                os.close(mutex_fd)
-        try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                raise RuntimeError(
+                    f"concurrent writer holds the lock of {self.path}; the store is single-writer"
+                ) from None
             yield
         finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
+            os.close(fd)
 
     def _write_data(self, commit: int, rows: DataFrame) -> str:
         """Write bucketed ``rows`` to the commit's data dir and return it,
@@ -495,21 +434,22 @@ class NamedGraphStore:
         dirs no retained manifest references — Iceberg's
         ``expire_snapshots`` analog. Time travel to expired commits stops
         working (that is the point: bounded storage); lineage history is
-        kept, only snapshot data is reclaimed. Returns removed data dirs."""
+        kept, only snapshot data is reclaimed. Returns removed data dirs.
+
+        Manifests go first, data dirs second: a crash at any point leaves
+        every listed manifest readable in full, at worst with orphan dirs,
+        which the next expiry reclaims."""
         assert keep_last >= 1, "must retain at least the latest snapshot"
-        commits = sorted(
-            int(m[1:-5]) for m in os.listdir(self._manifests)
-            if m.startswith("c") and m.endswith(".json")
-        )
+        commits = self._commits()
         drop, keep = commits[:-keep_last], commits[-keep_last:]
-        if not drop:
-            return []
-        # a merge landing after the listdir above would add a manifest this
+        # a merge landing after the listing above would add a manifest this
         # expiry did not account for, whose data dir must not be reclaimed
-        with self._locked_commit(commits[-1]):
+        with self._locked_commit(commits[-1] if commits else None):
             live_dirs = {
                 d for c in keep for d in self._read_manifest(c)["buckets"].values()
             }
+            for c in drop:
+                os.remove(self._manifest_path(c))
             removed = []
             data_root = os.path.join(self.path, "data")
             for d in sorted(os.listdir(data_root) if os.path.exists(data_root) else []):
@@ -517,8 +457,6 @@ class NamedGraphStore:
                 if rel not in live_dirs:
                     shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
                     removed.append(rel)
-            for c in drop:
-                os.remove(self._manifest_path(c))
             return removed
 
     # -- per-partition metrics ----------------------------------------------

@@ -55,11 +55,15 @@ class SnapshotStore:
         """All snapshots of a type (version history; dedup is the
         reader's window, like the reference's prefix scan + take-last).
         Raises a clear error for a never-written type (its doc schema is
-        caller-defined, so no empty frame can be synthesized)."""
-        if not self._snapshots(entity_type):
+        caller-defined, so no empty frame can be synthesized). The dirs are
+        listed on the driver: a ``snapshot=*`` glob makes Spark log a
+        warning while it looks for a streaming-sink metadata dir there."""
+        snapshots = self._snapshots(entity_type)
+        if not snapshots:
             raise ValueError(f"no snapshots written for entity type {entity_type!r}")
-        return self.spark.read.option("basePath", self._dir(entity_type)).parquet(
-            os.path.join(self._dir(entity_type), "snapshot=*")
+        d = self._dir(entity_type)
+        return self.spark.read.option("basePath", d).parquet(
+            *(os.path.join(d, f"snapshot={s}") for s in snapshots)
         )
 
     def latest_as_of(

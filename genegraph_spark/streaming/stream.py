@@ -100,13 +100,15 @@ def _batch_dir_writer(out_dir: str):
 
 def _read_batches(spark: SparkSession, out_dir: str, empty_schema: str) -> DataFrame:
     """Union of the committed batch dirs; a zero-batch run (empty source)
-    yields an empty typed frame rather than a path error."""
-    has_batches = os.path.isdir(out_dir) and any(
-        d.startswith("batch=") for d in os.listdir(out_dir)
-    )
-    if not has_batches:
+    yields an empty typed frame rather than a path error. The dirs are
+    listed on the driver: a ``batch=*`` glob makes Spark look for a
+    streaming-sink ``_spark_metadata`` dir at the glob path itself, which
+    logs a ``FileNotFoundException`` warning on every read."""
+    names = sorted(os.listdir(out_dir)) if os.path.isdir(out_dir) else []
+    paths = [os.path.join(out_dir, d) for d in names if d.startswith("batch=")]
+    if not paths:
         return spark.createDataFrame([], empty_schema)
-    return spark.read.option("basePath", out_dir).parquet(os.path.join(out_dir, "batch=*"))
+    return spark.read.option("basePath", out_dir).parquet(*paths)
 
 
 def stream_mention_counts(

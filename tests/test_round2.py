@@ -217,7 +217,7 @@ def test_run_to_store_dry_run_writes_nothing(spark, sf_dir, tmp_path):
 
 
 CRASH_SCRIPT = """
-import os, sys
+import os, shutil, sys
 sys.path.insert(0, {repo!r})
 os.environ["SPARK_GRAFT_CPUS"] = "4"
 from genegraph_spark.session import get_spark
@@ -226,31 +226,43 @@ spark = get_spark("crash_drill", extra_conf={{"spark.driver.memory": "4g"}})
 store = NamedGraphStore(spark, {path!r}, n_buckets=4)
 rows = [(f"g{{i}}", "s", "p", f"o{{i}}", True, None) for i in range(20)]
 store.merge(spark.createDataFrame(rows, TRIPLE_SCHEMA))
-step = getattr(NamedGraphStore, {step!r})
+if {op!r} == "expire_snapshots":
+    store.compact()  # commit 1: the expiry drops commit 0 and its data dir
+owner = shutil if {step!r} == "rmtree" else NamedGraphStore
+step = getattr(owner, {step!r})
 
-def crash(self, *args, **kwargs):
-    # a hard kill: after the step's write, or on entry to the step
+def crash(*args, **kwargs):
+    # a hard kill: after the step's write, or on entry to the step; of
+    # rmtree only the removal of a data dir counts (the commit's own
+    # lineage cleanup runs first)
+    if {step!r} == "rmtree" and os.path.basename(os.path.dirname(args[0])) != "data":
+        return step(*args, **kwargs)
     if {after!r}:
-        step(self, *args, **kwargs)
+        step(*args, **kwargs)
     os._exit(17)
 
-setattr(NamedGraphStore, {step!r}, crash)
-store.merge(  # dies mid-commit
-    spark.createDataFrame([({graph!r}, "s", "p", "NEW", True, None)], TRIPLE_SCHEMA),
-    per_graph=spark.createDataFrame(
-        [({graph!r}, False, {version!r})], "graph string, deleted boolean, version bigint"
-    ),
-)
+setattr(owner, {step!r}, crash)
+if {op!r} == "merge":  # dies mid-commit
+    store.merge(
+        spark.createDataFrame([({graph!r}, "s", "p", "NEW", True, None)], TRIPLE_SCHEMA),
+        per_graph=spark.createDataFrame(
+            [({graph!r}, False, {version!r})], "graph string, deleted boolean, version bigint"
+        ),
+    )
+else:
+    getattr(store, {op!r})()
 """
 
 
-def _crash_merge(path, step, after, graph="g1", version=None):
-    """Commit 20 graphs to a 4-bucket store at ``path``, then hard-kill a
-    second merge (of ``graph`` at ``version``) in ``step``, in a
-    subprocess: after the step's real call when ``after``, else on entry."""
+def _crash(path, op, step, after, graph="g1", version=None):
+    """Commit 20 graphs to a 4-bucket store at ``path`` (then compact it,
+    before an expiry), then hard-kill ``op`` in ``step``, in a subprocess:
+    after the step's real call when ``after``, else on entry. ``step`` is
+    a store method, or ``rmtree`` for the first data dir removal. A killed
+    ``merge`` merges ``graph`` at ``version``."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = CRASH_SCRIPT.format(
-        repo=repo, path=path, step=step, after=after, graph=graph, version=version
+        repo=repo, path=path, op=op, step=step, after=after, graph=graph, version=version
     )
     r = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True, timeout=300)
     assert r.returncode == 17, r.stderr[-2000:]
@@ -261,9 +273,13 @@ def test_kill_between_data_and_manifest_then_resume(spark, tmp_path):
     """The BASELINE resumability rule, for real: a run hard-killed after
     commit 1's data write but before its manifest write must leave the
     store at commit 0, and replaying the merge must converge (the orphan
-    data dir is clobbered, not a path-exists error)."""
+    data dir is clobbered, not a path-exists error). A lock file that
+    names a live process that is no writer (a killed writer's pid, reused)
+    does not block the replay."""
+    import glob
+
     path = str(tmp_path / "crash_store")
-    _crash_merge(path, "_write_data", after=True)
+    _crash(path, "merge", "_write_data", after=True)
 
     store = NamedGraphStore(spark, path, n_buckets=4)
     # the interrupted commit is invisible...
@@ -273,8 +289,18 @@ def test_kill_between_data_and_manifest_then_resume(spark, tmp_path):
     processed = {r_["graph"] for r_ in store.processed_versions().collect()}
     assert processed == {f"g{i}" for i in range(20)}  # orphan lineage ignored
     # ...and the replayed merge converges over the orphan dir
-    rows2 = triples_df(spark, [("g1", "s", "p", "NEW", True, None)])
-    store.merge(rows2)
+    locks = glob.glob(os.path.join(path, "**", "*.lock"), recursive=True)
+    assert locks
+    bystander = subprocess.Popen(["sleep", "60"])
+    try:
+        for lock in locks:
+            with open(lock, "w") as f:
+                f.write(str(bystander.pid))
+        rows2 = triples_df(spark, [("g1", "s", "p", "NEW", True, None)])
+        store.merge(rows2)
+    finally:
+        bystander.kill()
+        bystander.wait()
     assert {r_["object"] for r_ in store.triples().where("graph = 'g1'").collect()} == {"NEW"}
     assert store.triples().count() == 20
 
@@ -292,7 +318,7 @@ def test_kill_before_manifest_then_compact_publishes_no_orphan_lineage(spark, sf
     page = fixtures.pages_df(spark, sf_dir).where("doc_id = 1 AND version = 1")
     url = page.first().url
     path = str(tmp_path / "crash_store")
-    _crash_merge(path, "_write_manifest", after=False, graph=url, version=7)
+    _crash(path, "merge", "_write_manifest", after=False, graph=url, version=7)
     assert os.path.isdir(os.path.join(path, "lineage", "commit=1"))  # the orphan
 
     store = NamedGraphStore(spark, path)
@@ -305,6 +331,47 @@ def test_kill_before_manifest_then_compact_publishes_no_orphan_lineage(spark, sf
                                  use_golden_text=True)
     assert res.pages.count() == 1
     assert store.graphs([url]).count() > 0
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("op", ["compact", "expire_snapshots"])
+def test_killed_maintenance_leaves_a_whole_store(spark, tmp_path, op):
+    """A compaction killed after its data write, and an expiry killed
+    after its first data dir removal, leave a store whose head is the old
+    or the new commit, whose every listed snapshot reads in full (an
+    expiry that removed data before manifests left commit 0 listed with
+    none of its rows), and whose lineage lists only committed graphs. A
+    replay converges and reclaims the orphans, and a later merge revives
+    no orphan row."""
+    step, heads = {"compact": ("_write_data", {0, 1}), "expire_snapshots": ("rmtree", {1})}[op]
+    path = str(tmp_path / "crash_store")
+    _crash(path, op, step, after=True)
+
+    store = NamedGraphStore(spark, path, n_buckets=4)
+    content = {(f"g{i}", f"o{i}") for i in range(20)}
+    assert store.last_commit() in heads
+    assert {(r_["graph"], r_["object"]) for r_ in store.triples().collect()} == content
+    listed = sorted(int(m[1:-5]) for m in os.listdir(os.path.join(path, "manifests"))
+                    if m.endswith(".json"))
+    for c in listed:
+        assert store.triples(commit=c).count() == 20, c
+    assert {r_["graph"] for r_ in store.processed_versions().collect()} == {g for g, _ in content}
+
+    getattr(store, op)()  # the replay
+    assert {(r_["graph"], r_["object"]) for r_ in store.triples().collect()} == content
+    if op == "expire_snapshots":
+        live = set(store._read_manifest(store.last_commit())["buckets"].values())
+        assert os.listdir(os.path.join(path, "manifests")) == ["c00000001.json"]
+        assert {f"data/{d}" for d in os.listdir(os.path.join(path, "data"))} == live
+
+    store.merge(
+        triples_df(spark, [("g2", "s", "p", "LATER", True, None)]),
+        per_graph=spark.createDataFrame(
+            [("g3", True, None)], "graph string, deleted boolean, version bigint"
+        ),
+    )
+    want = {(g, "LATER" if g == "g2" else o) for g, o in content if g != "g3"}
+    assert {(r_["graph"], r_["object"]) for r_ in store.triples().collect()} == want
 
 
 # -- snapshot tables + params + dates -------------------------------

@@ -261,40 +261,47 @@ class TestTurtleSerialization:
 
 class TestSingleWriterLock:
     def test_live_concurrent_writer_fails_fast(self, spark, tmp_path):
-        """Two writers computing the same commit id must not interleave:
-        the second sees the first's live lock and raises."""
-        import os
+        """Two writers must not interleave: while one holds the store's
+        lock, a merge from another thread fails fast, and it proceeds once
+        the lock is released."""
+        from concurrent.futures import ThreadPoolExecutor
 
         from genegraph_spark.sinks.named_graph import TRIPLE_SCHEMA, NamedGraphStore
 
         store = NamedGraphStore(spark, str(tmp_path / "store"), n_buckets=4)
         rows = spark.createDataFrame([("g1", "a", "p", "x", True, None)], TRIPLE_SCHEMA)
         store.merge(rows)
-        # simulate a LIVE holder of the next commit's lock (our own pid)
-        commit = store.last_commit() + 1
-        lock = os.path.join(store.path, f"commit-{commit:08d}.lock")
-        with open(lock, "w") as f:
-            f.write(str(os.getpid()))
-        with pytest.raises(RuntimeError, match="single-writer"):
-            store.merge(rows)
-        os.remove(lock)
+        with store._commit_lock(), ThreadPoolExecutor(1) as pool:
+            with pytest.raises(RuntimeError, match="concurrent writer.*single-writer"):
+                pool.submit(store.merge, rows).result()
+        assert store.last_commit() == 0
+        store.merge(rows)
+        assert store.last_commit() == 1
 
     def test_stale_lock_from_dead_writer_is_reclaimed(self, spark, tmp_path):
-        """Crash-replay (the documented resume path) must proceed past a
-        lock whose holder pid is gone."""
+        """Crash-replay (the documented resume path) must proceed past the
+        lock of a writer that died holding it."""
         import os
+        import subprocess
+        import sys
 
         from genegraph_spark.sinks.named_graph import TRIPLE_SCHEMA, NamedGraphStore
 
         store = NamedGraphStore(spark, str(tmp_path / "store"), n_buckets=4)
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = (
+            f"import os, sys; sys.path.insert(0, {repo!r})\n"
+            "from genegraph_spark.sinks.named_graph import NamedGraphStore\n"
+            "store = NamedGraphStore.__new__(NamedGraphStore)\n"
+            f"store.path = {store.path!r}\n"
+            "with store._commit_lock():\n"
+            "    os._exit(17)\n"
+        )
+        r = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True)
+        assert r.returncode == 17, r.stderr[-2000:]
         rows = spark.createDataFrame([("g1", "a", "p", "x", True, None)], TRIPLE_SCHEMA)
-        lock = os.path.join(store.path, "commit-00000000.lock")
-        os.makedirs(store.path, exist_ok=True)
-        with open(lock, "w") as f:
-            f.write("999999999")  # no such pid
         store.merge(rows)
         assert store.last_commit() == 0
-        assert not os.path.exists(lock)
 
 
 class TestModelWlLiteralGuard:

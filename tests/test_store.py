@@ -137,10 +137,10 @@ def test_commit_fails_when_the_store_advances_while_locking(spark, tmp_path, mon
     lock = store._commit_lock
 
     @contextmanager
-    def racing_lock(commit):
+    def racing_lock():
         # another writer commits before this one holds the lock
         NamedGraphStore(spark, path).merge(make(spark, [t("g3", "s", "p", "o3")]))
-        with lock(commit):
+        with lock():
             yield
 
     monkeypatch.setattr(store, "_commit_lock", racing_lock)
@@ -309,6 +309,20 @@ def test_expire_keep_more_than_commits_is_noop(spark, tmp_path):
     store = NamedGraphStore(spark, str(tmp_path / "nk"), n_buckets=4)
     store.merge(make(spark, [t("g1", "s", "p", "o")]))
     assert store.expire_snapshots(keep_last=5) == []
+    assert store.triples().count() == 1
+
+
+def test_expire_with_nothing_to_drop_reclaims_orphan_dirs(spark, tmp_path):
+    """An expiry killed between its manifest and data removals leaves only
+    orphan dirs; the next expiry reclaims them, even with no manifest left
+    to drop."""
+    import os
+
+    store = NamedGraphStore(spark, str(tmp_path / "orphan"), n_buckets=4)
+    store.merge(make(spark, [t("g1", "s", "p", "o")]))
+    os.makedirs(os.path.join(store.path, "data", "c00000007", "bucket=0"))
+    assert store.expire_snapshots() == ["data/c00000007"]
+    assert os.listdir(os.path.join(store.path, "data")) == ["c00000000"]
     assert store.triples().count() == 1
 
 
