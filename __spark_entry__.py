@@ -14,10 +14,13 @@ same derivation written twice, Spark column expressions vs DuckDB SQL).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -136,36 +139,36 @@ def q_kg_replaces_triples(spark, sf_dir):
 
 
 # -- algebra over derived triple views ---------------------------------------
-# precompiled expression templates (Column trees are process-wide
-# immutable and input-independent — same pattern as sources/dosage_jira):
-# _geo_triples feeds ~8 queries and rebuilding its 7x6-column select
-# lists cost ~0.3s of py4j per construction
-_GEO_COLS: dict[str, list] = {}
+@functools.cache
+def _geo_selects():
+    """``_geo_triples``' (table, select list) pairs: an expression template
+    built once per process, like sources/dosage_jira's (a Column is bound
+    to the JVM gateway, not to a session). _geo_triples feeds ~8 queries,
+    and rebuilding its 7x6-column select lists cost ~0.3s of py4j per
+    construction."""
+    from genegraph_spark.operators.triples import triple
+
+    n_iri = F.concat(F.lit("urn:nation:"), F.col("n_nationkey").cast("string"))
+    r_iri = F.concat(F.lit("urn:region:"), F.col("r_regionkey").cast("string"))
+    nr_iri = F.concat(F.lit("urn:region:"), F.col("n_regionkey").cast("string"))
+    c_iri = F.concat(F.lit("urn:customer:"), F.col("c_custkey").cast("string"))
+    cn_iri = F.concat(F.lit("urn:nation:"), F.col("c_nationkey").cast("string"))
+    return (
+        ("nation", triple(F.lit("g"), n_iri, ":name", F.col("n_name"), False)),
+        ("nation", triple(F.lit("g"), n_iri, ":in-region", nr_iri, True)),
+        ("region", triple(F.lit("g"), r_iri, ":name", F.col("r_name"), False)),
+        ("customer", triple(F.lit("g"), c_iri, ":name", F.col("c_name"), False)),
+        ("customer", triple(F.lit("g"), c_iri, ":in-nation", cn_iri, True)),
+        ("customer", triple(F.lit("g"), c_iri, ":balance", F.col("c_acctbal"), False, I.XSD_STRING)),
+        ("customer", triple(F.lit("g"), c_iri, ":segment", F.col("c_mktsegment"), False, I.XSD_STRING)),
+    )
 
 
 def _geo_triples(spark, sf_dir):
-    nation = _read(spark, sf_dir, "nation")
-    region = _read(spark, sf_dir, "region")
-    customer = _read(spark, sf_dir, "customer")
-    from genegraph_spark.operators.triples import triple, union_all
+    from genegraph_spark.operators.triples import union_all
 
-    if not _GEO_COLS:
-        n_iri = F.concat(F.lit("urn:nation:"), F.col("n_nationkey").cast("string"))
-        r_iri = F.concat(F.lit("urn:region:"), F.col("r_regionkey").cast("string"))
-        nr_iri = F.concat(F.lit("urn:region:"), F.col("n_regionkey").cast("string"))
-        c_iri = F.concat(F.lit("urn:customer:"), F.col("c_custkey").cast("string"))
-        cn_iri = F.concat(F.lit("urn:nation:"), F.col("c_nationkey").cast("string"))
-        _GEO_COLS["sels"] = [
-            ("n", triple(F.lit("g"), n_iri, ":name", F.col("n_name"), False)),
-            ("n", triple(F.lit("g"), n_iri, ":in-region", nr_iri, True)),
-            ("r", triple(F.lit("g"), r_iri, ":name", F.col("r_name"), False)),
-            ("c", triple(F.lit("g"), c_iri, ":name", F.col("c_name"), False)),
-            ("c", triple(F.lit("g"), c_iri, ":in-nation", cn_iri, True)),
-            ("c", triple(F.lit("g"), c_iri, ":balance", F.col("c_acctbal"), False, I.XSD_STRING)),
-            ("c", triple(F.lit("g"), c_iri, ":segment", F.col("c_mktsegment"), False, I.XSD_STRING)),
-        ]
-    tabs = {"n": nation, "r": region, "c": customer}
-    return union_all([tabs[t].select(*cols) for t, cols in _GEO_COLS["sels"]])
+    tabs = {t: _read(spark, sf_dir, t) for t in ("nation", "region", "customer")}
+    return union_all([tabs[t].select(*cols) for t, cols in _geo_selects()])
 
 
 def _order_triples(spark, sf_dir):
@@ -667,7 +670,7 @@ def q_dedup_incremental(spark, sf_dir):
     from genegraph_spark.operators.dedup import MinhashIndex
 
     vdocs = _versioned_docs(spark, sf_dir)
-    ix = MinhashIndex(spark, _temp_dir("gg_mhidx_"))
+    ix = MinhashIndex(spark, _STATE.temp_dir("gg_mhidx_"))
     ix.build(vdocs.where(F.col("doc_id") % 10 == 1))
     return ix.query(vdocs.where(F.col("doc_id") % 10 == 2), threshold=0.5)
 
@@ -738,11 +741,9 @@ def q_sim_ivf_index(spark, sf_dir):
     shares that oracle."""
     emb = _read(spark, sf_dir, "embeddings")
     q = emb.where("vec_id < 5").select(F.col("vec_id").alias("query_id"), "embedding")
-    key = ("ivf_index", sf_dir)
-    if key not in _KG_TRIPLES_CACHE:
-        path = _temp_dir("gg_ivf_idx_")
-        _KG_TRIPLES_CACHE[key] = SIM.IvfIndex.build(emb, path).path
-    idx = SIM.IvfIndex(spark, _KG_TRIPLES_CACHE[key])
+    path = _STATE.path(("ivf_index", sf_dir), "gg_ivf_idx_",
+                       lambda p: SIM.IvfIndex.build(emb, p).path)
+    idx = SIM.IvfIndex(spark, path)
     return idx.topk(q, k=5, n_probe=2).select(
         "query_id", "vec_id", "rank", F.round("cosine", 4).alias("cosine")
     )
@@ -1002,55 +1003,74 @@ def q_multimodal_decode(spark, sf_dir):
     return dec.select("media_id", "kind", "n_bytes")
 
 
-_KG_TRIPLES_CACHE: dict = {}
+class _QueryState:
+    """The query layer's one piece of mutable module state (lifetimes in
+    :func:`clear_query_caches`). ``frame`` persists one frame per key for
+    the live SparkContext, and forgets a stopped context's frames without
+    calling into it; ``path`` writes one dir per key and ``temp_dir`` a
+    fresh one per call, each valid under any context."""
+
+    def __init__(self):
+        self.sc, self.frames, self.paths, self.dirs = None, {}, {}, []
+
+    def frame(self, spark, key, build: Callable[[], DataFrame]) -> DataFrame:
+        if spark.sparkContext is not self.sc:
+            self.sc, self.frames = spark.sparkContext, {}
+        if key not in self.frames:
+            self.frames[key] = build().persist()
+        return self.frames[key]
+
+    def path(self, key, prefix: str, write: Callable[[str], str]) -> str:
+        if key not in self.paths:
+            self.paths[key] = write(self.temp_dir(prefix))
+        return self.paths[key]
+
+    def temp_dir(self, prefix: str) -> str:
+        path = tempfile.mkdtemp(prefix=prefix)
+        self.dirs.append(path)
+        return path
+
+
+_STATE = _QueryState()
 
 
 def _kg_triples_df(spark, sf_dir):
     """Shared triples view for the resolver/curation/serialization
-    queries — persisted once per sf_dir so a time-budgeted driver run
+    queries — persisted once per SparkContext and sf_dir so a driver run
     pays the pandas-UDF pipeline once, not once per view query. This is
     the store-backed deployment shape (views run over the materialized
     triples table); the pipeline-cost queries (kg_triples etc.) still
     build their own uncached plan."""
-    key = (id(spark), sf_dir)
-    if key not in _KG_TRIPLES_CACHE:
-        _KG_TRIPLES_CACHE[key] = (
-            P.construct_kg(spark, sf_dir, use_golden_text=True).triples.persist()
-        )
-    return _KG_TRIPLES_CACHE[key]
-
-
-#: temp dirs the query builders made (index, snapshot and archive dirs,
-#: stream sources and checkpoints); clear_query_caches deletes them
-_TEMP_DIRS: list[str] = []
-
-
-def _temp_dir(prefix: str) -> str:
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix=prefix)
-    _TEMP_DIRS.append(path)
-    return path
+    return _STATE.frame(spark, ("kg_triples", sf_dir),
+                        lambda: P.construct_kg(spark, sf_dir, use_golden_text=True).triples)
 
 
 def clear_query_caches() -> None:
-    """Unpersist the shared triples frames and delete the temp dirs the
-    query builders made (index, snapshot and archive dirs, stream sources
-    and checkpoints). The caches are sized for a ONE-SHOT driver/bench
-    process (documented intent); a long-lived server embedding queries()
-    must call this between corpora or the persisted frames pin
-    CacheManager entries forever (VERDICT r4 'what's wrong' #3) and the
-    temp dirs pile up."""
-    import shutil
+    """Release what the query builders share. Query-layer state has two
+    lifetimes:
 
-    for val in _KG_TRIPLES_CACHE.values():
-        if not isinstance(val, str):  # a str is an IVF index dir
-            val.unpersist()
-    _KG_TRIPLES_CACHE.clear()
-    _STREAM_SRC_CACHE.clear()
-    for path in _TEMP_DIRS:
+    - the process: the Column templates, ``functools.cache``d builders
+      bound to the JVM gateway rather than to a session; this keeps them;
+    - the live SparkContext: the one registry, ``_STATE``, of the
+      persisted ``_kg_triples_df`` and ``_cv_jsonld_model`` frames and of
+      every dir the builders wrote (the IVF index, the stream sources and
+      each per-call snapshot, archive, index and checkpoint dir). A lookup
+      under a new context drops the old context's frames.
+
+    This unpersists the frames only if their context is live (a stopped
+    context's cache is gone already, and calling into it raises), deletes
+    every registered dir, and so never raises after a session restart. A
+    long-lived server embedding queries() calls it between corpora, or the
+    frames pin CacheManager entries and the dirs pile up."""
+    from pyspark import SparkContext
+
+    global _STATE
+    if _STATE.sc is SparkContext._active_spark_context:
+        for df in _STATE.frames.values():
+            df.unpersist()
+    for path in _STATE.dirs:
         shutil.rmtree(path, ignore_errors=True)
-    _TEMP_DIRS.clear()
+    _STATE = _QueryState()
 
 
 def q_cur_gene_disease_pairs(spark, sf_dir):
@@ -1099,7 +1119,7 @@ def q_snap_latest_asof(spark, sf_dir):
     # document_store.clj:6-48): write page docs, read latest-as-of
     from genegraph_spark.sinks.snapshots import SnapshotStore
 
-    store = SnapshotStore(spark, _temp_dir("gg_snap_"))
+    store = SnapshotStore(spark, _STATE.temp_dir("gg_snap_"))
     pages = fixtures.pages_df(spark, sf_dir, with_html=False)
     docs = pages.select(F.col("url").alias("is_version_of"), "version", "text", "lang")
     store.write("page", docs.where("version = 1"), snapshot=0)
@@ -1286,7 +1306,7 @@ def q_src_event_archive(spark, sf_dir):
         (F.col("event_id") % 4).cast("int").alias("partition"),
         F.col("event_id").alias("offset"),
     )
-    base = _temp_dir("gg_archive_")
+    base = _STATE.temp_dir("gg_archive_")
     PL.write_event_archive(env, base)
     arch = PL.read_event_archive(spark, base)
     payload_schema = "event_id long, user_id long, event_type string, value double, props string"
@@ -2386,32 +2406,26 @@ def q_alg_property_path_alt(spark, sf_dir):
     )
 
 
-# Stream-source parquet dirs are immutable once written; cache per
-# (sf_dir, kind) so the three stream queries materialize each source ONCE
-# per driver run instead of re-writing it per query.
-_STREAM_SRC_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _stream_source(spark, sf_dir: str, kind: str) -> str:
+    """A stream-source parquet dir, written once per (kind, sf_dir): the
+    stream queries replay the same immutable source, so it is
+    materialized once per process, not once per query."""
     from genegraph_spark.streaming import stream as S
 
-    key = (sf_dir, kind)
-    if key not in _STREAM_SRC_CACHE:
-        base = _temp_dir(f"gg_src_{kind}_")
-        writer = {
-            "pages": S.write_pages_source,
-            "events": S.write_events_source,
-            "events_dupes": S.write_events_source_with_dupes,
-        }[kind]
-        _STREAM_SRC_CACHE[key] = writer(spark, sf_dir, os.path.join(base, "src"))
-    return _STREAM_SRC_CACHE[key]
+    writer = {
+        "pages": S.write_pages_source,
+        "events": S.write_events_source,
+        "events_dupes": S.write_events_source_with_dupes,
+    }[kind]
+    return _STATE.path((kind, sf_dir), f"gg_src_{kind}_",
+                       lambda base: writer(spark, sf_dir, os.path.join(base, "src")))
 
 
 def q_stream_mentions(spark, sf_dir):
     from genegraph_spark.streaming import stream as S
 
     src = _stream_source(spark, sf_dir, "pages")
-    ckpt = _temp_dir("gg_stream_")
+    ckpt = _STATE.temp_dir("gg_stream_")
     return S.stream_mention_counts(spark, src, os.path.join(ckpt, "ckpt"))
 
 
@@ -2422,7 +2436,7 @@ def q_stream_dedup(spark, sf_dir):
     from genegraph_spark.streaming import stream as S
 
     src = _stream_source(spark, sf_dir, "events_dupes")
-    ckpt = _temp_dir("gg_stream_dd_")
+    ckpt = _STATE.temp_dir("gg_stream_dd_")
     return S.stream_dedup_events(spark, src, os.path.join(ckpt, "ckpt"))
 
 
@@ -2430,7 +2444,7 @@ def q_stream_windows(spark, sf_dir):
     from genegraph_spark.streaming import stream as S
 
     src = _stream_source(spark, sf_dir, "events")
-    ckpt = _temp_dir("gg_streamw_")
+    ckpt = _STATE.temp_dir("gg_streamw_")
     return (
         S.stream_windowed_events(spark, src, os.path.join(ckpt, "ckpt"))
         .select("window_start", "event_type", "n", F.round("total", 4).alias("total"))
@@ -2441,7 +2455,7 @@ def q_stream_stateful_totals(spark, sf_dir):
     from genegraph_spark.streaming import stream as S
 
     src = _stream_source(spark, sf_dir, "events")
-    ckpt = _temp_dir("gg_streams_")
+    ckpt = _STATE.temp_dir("gg_streams_")
     # 2 files per trigger over 4 files → state must carry across batches
     return S.stream_user_running_totals(
         spark, src, os.path.join(ckpt, "ckpt"), max_files_per_trigger=2
@@ -2455,21 +2469,21 @@ def q_stream_stateful_totals(spark, sf_dir):
 
 def _cv_jsonld_model(spark, sf_dir):
     """Shared clinvar-streams JSON-LD model (the Jena-union set-semantics
-    view) — persisted once per sf_dir like _kg_triples_df (one-shot
-    driver process; clear_query_caches releases it)."""
+    view) — persisted once per SparkContext and sf_dir, like
+    _kg_triples_df; clear_query_caches releases it."""
     from genegraph_spark.sources import clinvar_jsonld as CJ
 
-    key = ("cvjsonld", id(spark), sf_dir)
-    if key not in _KG_TRIPLES_CACHE:
+    def build():
         ev = _read(spark, sf_dir, "events")
-        _KG_TRIPLES_CACHE[key] = CJ.clinvar_jsonld_model(
+        return CJ.clinvar_jsonld_model(
             spark,
             fixtures.clinvar_gene_messages(ev),
             fixtures.clinvar_variation_messages(ev),
             fixtures.clinvar_archive_messages(ev),
             fixtures.clinvar_scv_messages(ev),
-        ).persist()
-    return _KG_TRIPLES_CACHE[key]
+        )
+
+    return _STATE.frame(spark, ("cv_jsonld", sf_dir), build)
 
 
 def q_kg_cv_jsonld_genes(spark, sf_dir):

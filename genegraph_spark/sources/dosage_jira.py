@@ -34,6 +34,8 @@ for idempotent named-graph MERGE and cross-engine oracles.
 """
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -186,23 +188,25 @@ def _arr(cond: Column, *structs: Column) -> Column:
     return F.when(cond, F.array(*structs)).otherwise(empty)
 
 
-# Precompiled expression templates. Column objects are immutable
-# expression trees bound to the JVM gateway (process-wide), not to a
-# session or a DataFrame, so the ~90-column scalar projection and the
-# ~35-struct pack array are built ONCE per process instead of re-issuing
-# thousands of py4j calls on every query construction (measured ~1.1s of
-# driver time per call). No data or results are cached — only the
-# equivalent of writing the expressions out at module import time.
-_SCALARS_CACHE: dict[tuple, list[Column]] = {}
-_PACK_CACHE: dict[str, Column] = {}
+# Expression templates, built once per PROCESS. A Column is an immutable
+# expression tree bound to the JVM gateway, which outlives every
+# SparkSession and SparkContext, so the ~90-column scalar projection and
+# the ~35-struct pack array below are cached builder results with no
+# session key: every query construction after the first skips thousands
+# of py4j calls (measured ~1.1s of driver time per call). No data or
+# results are cached — only the equivalent of writing the expressions
+# out at module import time.
 
 
-def _scalar_columns(omim_mondo: dict[str, str] | None) -> list[Column]:
+@functools.cache
+def _scalar_columns(omim_items: tuple[tuple[str, str], ...]) -> tuple[Column, ...]:
+    """The scalar projection for the OMIM→MONDO map given as its sorted
+    items (hashable, so the cache key)."""
     f = F.col("issue.fields")
     key = F.col("issue.key")
 
     ev_map = _lit_map(EVIDENCE_LEVELS)
-    omim_map = _lit_map(omim_mondo or {})
+    omim_map = _lit_map(dict(omim_items))
 
     updated_i = _instant(f["updated"])
     base_iri = F.concat(F.lit(CG_PREFIX), key)
@@ -290,7 +294,7 @@ def _scalar_columns(omim_mondo: dict[str, str] | None) -> list[Column]:
             )
             cols[f"fdesc_{dosage}_{i}"] = F.coalesce(f[fdesc_f], F.lit(""))
 
-    return [c.alias(n) for n, c in cols.items()]
+    return tuple(c.alias(n) for n, c in cols.items())
 
 
 def dosage_scalars(
@@ -311,10 +315,7 @@ def dosage_scalars(
     instead carried as the ``valid`` column and folded into every packed
     triple block by :func:`dosage_jira_triples`, so invalid rows emit an
     empty array and vanish at the explode — same rows out, ONE parse."""
-    key = tuple(sorted((omim_mondo or {}).items()))
-    if key not in _SCALARS_CACHE:
-        _SCALARS_CACHE[key] = _scalar_columns(omim_mondo)
-    return parsed.select(*_SCALARS_CACHE[key])
+    return parsed.select(*_scalar_columns(tuple(sorted((omim_mondo or {}).items()))))
 
 
 def dosage_jira_triples(
@@ -336,12 +337,15 @@ def dosage_jira_triples(
     blows the JVM's 64 KB method limit and drops the whole stage to
     interpreted mode (measured); the split keeps both stages inside
     whole-stage codegen."""
-    core = dosage_scalars(parsed, omim_mondo)
-    if "pack" in _PACK_CACHE:
-        return core.select(
-            F.col("base").alias("graph"), _PACK_CACHE["pack"]
-        ).select("graph", "t.*")
+    return dosage_scalars(parsed, omim_mondo).select(
+        F.col("base").alias("graph"), _pack_column()
+    ).select("graph", "t.*")
 
+
+@functools.cache
+def _pack_column() -> Column:
+    """Every triple block of a :func:`dosage_scalars` row, packed into one
+    array and exploded to ``t``."""
     C = F.col
     # spec gate: every block is conditioned on the row's validity (see
     # dosage_scalars — this replaces the former pre-filter without
@@ -461,8 +465,4 @@ def dosage_jira_triples(
                 )
             )
 
-    arr = F.concat(*blocks)
-    _PACK_CACHE["pack"] = F.explode(arr).alias("t")
-    return core.select(
-        C("base").alias("graph"), _PACK_CACHE["pack"]
-    ).select("graph", "t.*")
+    return F.explode(F.concat(*blocks)).alias("t")

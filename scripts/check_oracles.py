@@ -77,63 +77,66 @@ def main():
     qs = E.queries()
     oracles = E.oracle_sql()
     n_pass = n_fail = n_rows_only = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"rows- {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
-            n_rows_only += 1
-            continue
-        try:
-            # Fetch via .arrow(), not fetchall(): the Arrow export turns
-            # DuckDB HUGEINT into double exactly as the driver sees it
-            # (fetchall() returns Python ints and hides the typing drift —
-            # that masking is how the r3 agg_pivot_wide / ver_sessionize
-            # oracle bugs shipped), while DATE stays date and nullable
-            # BIGINT stays int (a pandas fetch would midnight-ify dates and
-            # float-ify nullable ints, which the driver demonstrably does
-            # NOT do — those five queries are driver-green).
-            otab = con.execute(oracles[name]).arrow()
-            ocols = list(otab.column_names)
-            ocells = [col.to_pylist() for col in otab.columns]
-            orows = list(zip(*ocells)) if ocells else []
-        except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {str(e)[:300]}")
-            n_fail += 1
-            continue
-        problems = []
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} duckdb={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols spark={sorted(scols)} duckdb={sorted(ocols)}")
-        if not problems:
-            hs, ho = table_hash(scols, srows), table_hash(ocols, orows)
-            if hs != ho:
-                problems.append("value-hash mismatch")
-                # show a sample diff
-                order_s = sorted(range(len(scols)), key=lambda i: scols[i])
-                order_o = sorted(range(len(ocols)), key=lambda i: ocols[i])
-                set_s = {tuple(canon_cell(r[i]) for i in order_s) for r in srows}
-                set_o = {tuple(canon_cell(r[i]) for i in order_o) for r in orows}
-                for x in list(set_s - set_o)[:3]:
-                    problems.append(f"  spark-only: {x}")
-                for x in list(set_o - set_s)[:3]:
-                    problems.append(f"  duck-only:  {x}")
-        if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems[:8]))
-            n_fail += 1
-        else:
-            print(f"pass  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
-            n_pass += 1
+    try:
+        for name, fn in qs.items():
+            if only and name not in only:
+                continue
+            t0 = time.time()
+            try:
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
+            except Exception as e:
+                print(f"FAIL  {name}: spark error: {e}")
+                n_fail += 1
+                continue
+            if name not in oracles:
+                print(f"rows- {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+                n_rows_only += 1
+                continue
+            try:
+                # Fetch via .arrow(), not fetchall(): the Arrow export turns
+                # DuckDB HUGEINT into double exactly as the driver sees it
+                # (fetchall() returns Python ints and hides the typing drift —
+                # that masking is how the r3 agg_pivot_wide / ver_sessionize
+                # oracle bugs shipped), while DATE stays date and nullable
+                # BIGINT stays int (a pandas fetch would midnight-ify dates and
+                # float-ify nullable ints, which the driver demonstrably does
+                # NOT do — those five queries are driver-green).
+                otab = con.execute(oracles[name]).arrow()
+                ocols = list(otab.column_names)
+                ocells = [col.to_pylist() for col in otab.columns]
+                orows = list(zip(*ocells)) if ocells else []
+            except Exception as e:
+                print(f"FAIL  {name}: duckdb error: {str(e)[:300]}")
+                n_fail += 1
+                continue
+            problems = []
+            if len(srows) != len(orows):
+                problems.append(f"rowcount spark={len(srows)} duckdb={len(orows)}")
+            if sorted(scols) != sorted(ocols):
+                problems.append(f"cols spark={sorted(scols)} duckdb={sorted(ocols)}")
+            if not problems:
+                hs, ho = table_hash(scols, srows), table_hash(ocols, orows)
+                if hs != ho:
+                    problems.append("value-hash mismatch")
+                    # show a sample diff
+                    order_s = sorted(range(len(scols)), key=lambda i: scols[i])
+                    order_o = sorted(range(len(ocols)), key=lambda i: ocols[i])
+                    set_s = {tuple(canon_cell(r[i]) for i in order_s) for r in srows}
+                    set_o = {tuple(canon_cell(r[i]) for i in order_o) for r in orows}
+                    for x in list(set_s - set_o)[:3]:
+                        problems.append(f"  spark-only: {x}")
+                    for x in list(set_o - set_s)[:3]:
+                        problems.append(f"  duck-only:  {x}")
+            if problems:
+                print(f"FAIL  {name}: " + "; ".join(problems[:8]))
+                n_fail += 1
+            else:
+                print(f"pass  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+                n_pass += 1
+    finally:
+        E.clear_query_caches()  # the index, snapshot and stream dirs the queries made
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     sys.exit(1 if n_fail else 0)
 

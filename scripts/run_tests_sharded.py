@@ -5,9 +5,10 @@ pytest-xdist is not installed in this container, so suite-level
 parallelism comes from plain process fan-out: test FILES are split into
 N shards balanced by their last recorded wall time (falling back to
 file size), and each shard runs its own pytest process with a smaller
-Spark session (``SPARK_GRAFT_CPUS = 32 / N``) so the shards share the
-box instead of oversubscribing it. Shards never split a file, so every
-module/session fixture behaves exactly as in a serial run.
+Spark session (``SPARK_GRAFT_CPUS`` = the cores this process may use / N,
+at least 2) so the shards share the box instead of oversubscribing it.
+Shards never split a file, so every module/session fixture behaves
+exactly as in a serial run.
 
 Usage:
     python scripts/run_tests_sharded.py            # 4 shards, all tests
@@ -138,7 +139,7 @@ def main() -> int:
     ap.add_argument("rest", nargs="*", help="extra pytest args after --")
     args = ap.parse_args()
     shards = shard_files(args.n)
-    total_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    total_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     per = max(2, total_cpus // max(len(shards), 1))
     t0 = time.time()
     # Ground truth for the completeness check below: what a serial run

@@ -334,18 +334,26 @@ def test_kill_before_manifest_then_compact_publishes_no_orphan_lineage(spark, sf
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("op", ["compact", "expire_snapshots"])
-def test_killed_maintenance_leaves_a_whole_store(spark, tmp_path, op):
-    """A compaction killed after its data write, and an expiry killed
-    after its first data dir removal, leave a store whose head is the old
-    or the new commit, whose every listed snapshot reads in full (an
-    expiry that removed data before manifests left commit 0 listed with
-    none of its rows), and whose lineage lists only committed graphs. A
-    replay converges and reclaims the orphans, and a later merge revives
-    no orphan row."""
-    step, heads = {"compact": ("_write_data", {0, 1}), "expire_snapshots": ("rmtree", {1})}[op]
+@pytest.mark.parametrize(
+    "op, step, after, heads",
+    [
+        ("compact", "_write_data", True, {0, 1}),
+        ("compact", "_write_manifest", False, {0}),
+        ("expire_snapshots", "rmtree", True, {1}),
+    ],
+    ids=["compact", "compact-before-manifest", "expire_snapshots"],
+)
+def test_killed_maintenance_leaves_a_whole_store(spark, tmp_path, op, step, after, heads):
+    """A compaction killed after its data write or on entry to its
+    manifest write, and an expiry killed after its first data dir
+    removal, leave a store whose head is the old or the new commit, whose
+    every listed snapshot reads in full (an expiry that removed data
+    before manifests left commit 0 listed with none of its rows), and
+    whose lineage lists only committed graphs. An expiry reclaims a dead
+    compaction's orphan data dir, a replay converges and reclaims the
+    orphans, and a later merge revives no orphan row."""
     path = str(tmp_path / "crash_store")
-    _crash(path, op, step, after=True)
+    _crash(path, op, step, after=after)
 
     store = NamedGraphStore(spark, path, n_buckets=4)
     content = {(f"g{i}", f"o{i}") for i in range(20)}
@@ -356,6 +364,8 @@ def test_killed_maintenance_leaves_a_whole_store(spark, tmp_path, op):
     for c in listed:
         assert store.triples(commit=c).count() == 20, c
     assert {r_["graph"] for r_ in store.processed_versions().collect()} == {g for g, _ in content}
+    if store.last_commit() == 0:  # the compaction died unpublished
+        assert store.expire_snapshots() == ["data/c00000001"]
 
     getattr(store, op)()  # the replay
     assert {(r_["graph"], r_["object"]) for r_ in store.triples().collect()} == content

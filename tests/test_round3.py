@@ -716,17 +716,54 @@ class TestIvfIndexPersistence:
         assert touched == {"0", "1"}
 
 
+RESTART_SCRIPT = """
+import glob, json, os, sys, tempfile
+sys.path.insert(0, {repo!r})
+os.environ["SPARK_GRAFT_CPUS"] = "2"
+import __spark_entry__ as E
+from genegraph_spark.session import get_spark
+
+def rows():
+    spark = get_spark("restart_drill", extra_conf={{"spark.driver.memory": "4g"}})
+    out = {{q: sorted(repr(tuple(r)) for r in getattr(E, "q_" + q)(spark, {sf_dir!r}).collect())
+           for q in ("cur_gene_disease_pairs", "sim_ivf_index", "stream_mentions")}}
+    return spark, out
+
+gg = lambda: set(glob.glob(os.path.join(tempfile.gettempdir(), "gg_*")))
+spark, first = rows()
+made = [sorted(gg())]
+spark.stop()
+spark, second = rows()
+made.append(sorted(gg() - set(made[0])))
+E.clear_query_caches()
+print(json.dumps({{"equal": first == second, "rows": {{q: len(v) for q, v in first.items()}},
+                  "made": made}}))
+"""
+
+
 class TestQueryCaches:
-    def test_clear_removes_the_dirs_the_caches_made(self, spark, sf_dir):
+    def test_clear_removes_the_dirs_the_caches_made(self, spark, sf_dir, monkeypatch):
         """clear_query_caches deletes every temp dir the query builders
         made — the cached IVF index and stream sources, and the per-call
         MinHash index, snapshot store, event archive and stream
-        checkpoints — not only the in-memory entries."""
+        checkpoints — not only the in-memory entries, and unpersists the
+        shared views: the triples the curation queries read and the
+        ClinVar JSON-LD model (stubbed: its build needs the reference's
+        resource CSVs)."""
         import glob
         import os
         import tempfile
 
+        from pyspark import StorageLevel
+
         import __spark_entry__ as E
+        from genegraph_spark.sinks.named_graph import TRIPLE_SCHEMA
+        from genegraph_spark.sources import clinvar_jsonld as CJ
+
+        stub = lambda spark, *msgs: spark.createDataFrame(  # noqa: E731
+            [("urn:clinvar-jsonld:stub", "s", "p", "o", True, None)], TRIPLE_SCHEMA
+        )
+        monkeypatch.setattr(CJ, "clinvar_jsonld_model", stub)
 
         def gg_dirs():
             return set(glob.glob(os.path.join(tempfile.gettempdir(), "gg_*")))
@@ -736,12 +773,41 @@ class TestQueryCaches:
         for q in (
             "sim_ivf_index", "dedup_incremental", "snap_latest_asof", "src_event_archive",
             "stream_mentions", "stream_dedup", "stream_windows", "stream_stateful_totals",
+            "cur_gene_disease_pairs",
         ):
             getattr(E, f"q_{q}")(spark, sf_dir)
         made = gg_dirs() - before
         assert len(made) == 11  # IVF index, 3 stream sources, 7 per-call dirs
+        views = [E._kg_triples_df(spark, sf_dir), E._cv_jsonld_model(spark, sf_dir)]
+        assert StorageLevel.NONE not in [v.storageLevel for v in views]
         E.clear_query_caches()
         assert sorted(d for d in made if os.path.exists(d)) == []
+        assert [v.storageLevel for v in views] == [StorageLevel.NONE] * 2
+
+    @pytest.mark.slow
+    def test_clear_after_a_session_restart(self, sf_dir, tmp_path):
+        """A persisted view, the IVF index dir and a stream source built in
+        one session answer alike in the next (after ``spark.stop()`` and
+        ``get_spark()``), and clear_query_caches then returns without
+        calling into the stopped context (which raised a
+        NullPointerException from the JVM) and deletes every dir either
+        session made. A subprocess, so the shared session stays up."""
+        import glob
+        import json
+        import os
+        import subprocess
+        import sys
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        r = subprocess.run(
+            [sys.executable, "-c", RESTART_SCRIPT.format(repo=repo, sf_dir=sf_dir)],
+            capture_output=True, text=True, timeout=300, env=dict(os.environ, TMPDIR=str(tmp_path)),
+        )
+        assert r.returncode == 0, r.stderr[-3000:]
+        out = json.loads(r.stdout.strip().splitlines()[-1])
+        assert out["equal"] and min(out["rows"].values()) > 0, out["rows"]
+        assert all(out["made"]), out["made"]  # each session made dirs
+        assert glob.glob(str(tmp_path / "gg_*")) == []
 
 
 class TestResolverRegistry:
