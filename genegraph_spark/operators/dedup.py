@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sinks.commit import CommitLog
+
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Groups of byte-identical documents: (content_hash, keep_id, n_dups).
@@ -535,15 +537,18 @@ class MinhashIndex:
 
     - ``bands/batch=N/`` parquet partitioned by ``band``: (id, band, bucket)
     - ``sigs/batch=N/``  parquet: (id, h0..h{n-1})
-    - ``meta.json``: shingle k, n_hashes, n_bands, id column, doc count,
-      and ``n_batches`` — the COMMIT POINT
+    - ``manifests/cNNNNNNNN.json``: shingle k, n_hashes, n_bands, id
+      column, doc count and the ``batches`` the index reads
 
-    Commit protocol (the store/snapshot convention): each build/append
-    writes its batch dirs first and rewrites ``meta.json`` LAST; readers
-    only read batches ``< n_batches``, so a run killed between the two
-    parquet writes leaves an invisible orphan batch, and the replayed
-    append (same batch number, mode=overwrite) clobbers it — no
-    half-indexed batch can silently eat candidates.
+    Commit protocol (the named-graph store's, :class:`sinks.commit.CommitLog`):
+    each build/append takes the index's writer lock, writes batch ``N`` =
+    the next commit id, and publishes the manifest naming its batches by
+    temp file and rename. Readers read only the batches the head names,
+    so a run killed anywhere leaves the index as it was and an invisible
+    orphan batch, which the replayed append (same id, mode=overwrite)
+    clobbers — no half-indexed batch can silently eat candidates. A
+    rebuild names only its own batch; the batches it supersedes stay
+    readable for ``commit.RETAIN_S``, then a later build reclaims them.
 
     Candidates verify with the MinHash ESTIMATOR (fraction of equal
     signature components — the standard unbiased Jaccard estimate), so
@@ -568,7 +573,10 @@ class MinhashIndex:
     ):
         self.spark = spark
         self.path = path
-        meta = self._meta()
+        roots = ("bands", "sigs")
+        self._log = CommitLog(path, roots,
+                              lambda meta: [f"{r}/batch={b}" for r in roots for b in meta["batches"]])
+        meta = self._log.latest()
         if meta is not None and (
             meta["k"], meta["n_hashes"], meta["n_bands"]
         ) != (k, n_hashes, n_bands):
@@ -580,27 +588,22 @@ class MinhashIndex:
         self.k, self.n_hashes, self.n_bands = k, n_hashes, n_bands
 
     # -- internals -----------------------------------------------------------
-    def _meta(self) -> dict | None:
-        import json
-        import os
-
-        meta_path = os.path.join(self.path, "meta.json")
-        if not os.path.exists(meta_path):
-            return None
-        with open(meta_path) as fh:
-            return json.load(fh)
-
     def _sig_frame(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
         sh = shingles(docs, id_col, text_col, self.k)
         return minhash_signatures(sh, id_col, self.n_hashes)
 
-    def _check_id_col(self, id_col: str) -> None:
-        meta = self._meta()
-        if meta is not None and meta["id_col"] != id_col:
+    def _head(self, id_col: str) -> dict:
+        """The published index a call reads from start to end, checked to
+        key on ``id_col``."""
+        meta = self._log.latest()
+        if meta is None:
+            raise ValueError(f"no committed index at {self.path}; build() first")
+        if meta["id_col"] != id_col:
             raise ValueError(
                 f"index at {self.path} keys on {meta['id_col']!r}; "
                 f"got id_col={id_col!r}"
             )
+        return meta
 
     def _store_batch(self, sigs: DataFrame, id_col: str, batch: int) -> int:
         import os
@@ -616,33 +619,23 @@ class MinhashIndex:
         )
         return sigs.count()
 
-    def _commit(self, id_col: str, n_docs: int, n_batches: int) -> None:
-        import json
+    def _commit(self, docs: DataFrame, id_col: str, text_col: str, last: int | None,
+                batches: list[int], n_docs: int):
+        """Index ``docs`` as the batch after ``last`` and publish it with
+        ``batches``; reclaim what a build superseded."""
+        with self._log.commit(last) as commit:
+            n = self._store_batch(self._sig_frame(docs, id_col, text_col), id_col, commit)
+            self._log.publish(commit, {
+                "k": self.k, "n_hashes": self.n_hashes, "n_bands": self.n_bands,
+                "id_col": id_col, "n_docs": n_docs + n, "batches": [*batches, commit],
+            })
+            self._log.expire(keep_last=1)
+        return self
+
+    def _read(self, name: str, meta: dict) -> DataFrame:
         import os
 
-        with open(os.path.join(self.path, "meta.json"), "w") as fh:
-            json.dump(
-                {
-                    "k": self.k,
-                    "n_hashes": self.n_hashes,
-                    "n_bands": self.n_bands,
-                    "id_col": id_col,
-                    "n_docs": n_docs,
-                    "n_batches": n_batches,
-                },
-                fh,
-            )
-
-    def _read(self, name: str) -> DataFrame:
-        import os
-
-        meta = self._meta()
-        if meta is None or meta["n_batches"] == 0:
-            raise ValueError(f"no committed index at {self.path}")
-        paths = [
-            os.path.join(self.path, name, f"batch={b}")
-            for b in range(meta["n_batches"])
-        ]
+        paths = [os.path.join(self.path, name, f"batch={b}") for b in meta["batches"]]
         return (
             self.spark.read.option(
                 "basePath", os.path.join(self.path, name)
@@ -653,27 +646,16 @@ class MinhashIndex:
 
     # -- public ---------------------------------------------------------------
     def build(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
-        """(Re)build the index from scratch (batch 0 + fresh commit)."""
-        import os
-
-        os.makedirs(self.path, exist_ok=True)
-        n = self._store_batch(self._sig_frame(docs, id_col, text_col), id_col, 0)
-        self._commit(id_col, n, 1)
-        return self
+        """(Re)build the index from scratch: one fresh batch, published as
+        the whole index."""
+        return self._commit(docs, id_col, text_col, self._log.head(), [], 0)
 
     def append(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
         """Add a batch (after the caller has dealt with its query()
-        matches). Ids must be new; the batch becomes visible only at the
-        meta.json commit."""
-        self._check_id_col(id_col)
-        meta = self._meta()
-        if meta is None:
-            raise ValueError(f"no committed index at {self.path}; build() first")
-        n = self._store_batch(
-            self._sig_frame(docs, id_col, text_col), id_col, meta["n_batches"]
-        )
-        self._commit(id_col, meta["n_docs"] + n, meta["n_batches"] + 1)
-        return self
+        matches). Ids must be new; the batch becomes visible only when its
+        manifest is published."""
+        meta = self._head(id_col)
+        return self._commit(docs, id_col, text_col, meta["commit"], meta["batches"], meta["n_docs"])
 
     def estimated_jaccard(
         self, pairs: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame
@@ -714,12 +696,12 @@ class MinhashIndex:
         est_jaccard, source) where source is 'index' (match already
         indexed) or 'batch' (within the new batch, id_a < id_b).
         Thresholds on the 6dp-rounded estimate."""
-        self._check_id_col(id_col)
+        meta = self._head(id_col)  # bands and sigs come from one commit
         new_sigs = self._sig_frame(docs, id_col, text_col).localCheckpoint(
             eager=True
         )
         new_bands = band_rows(new_sigs, id_col, self.n_hashes, self.n_bands)
-        idx_bands = self._read("bands")
+        idx_bands = self._read("bands", meta)
         cand_idx = (
             new_bands.select(F.col(id_col).alias("id_a"), "band", "bucket")
             .join(
@@ -729,7 +711,7 @@ class MinhashIndex:
             .select("id_a", "id_b")
             .distinct()
         )
-        idx_sigs = self._read("sigs")
+        idx_sigs = self._read("sigs", meta)
         cand_new = lsh_candidates(new_sigs, id_col, self.n_hashes, self.n_bands)
         out = self.estimated_jaccard(cand_idx, new_sigs, idx_sigs).withColumn(
             "source", F.lit("index")

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sinks.commit import CommitLog, tag
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -458,6 +460,11 @@ def pq_topk(
 
 # -- persisted IVF index (build once, query many) -----------------------------
 
+def _ivf_log(path: str) -> CommitLog:
+    roots = ("corpus", "centroids")
+    return CommitLog(path, roots, lambda meta: [f"{r}/{tag(meta['commit'])}" for r in roots])
+
+
 class IvfIndex:
     """IVF index persisted to the lake: the centroid-assigned corpus is
     written as parquet PARTITIONED BY centroid_id, so probing a query's
@@ -466,8 +473,12 @@ class IvfIndex:
     every vector per query batch, as the inline :func:`ivf_topk` does, is
     only right for one-shot jobs).
 
-    Layout: ``{path}/centroids`` (small, broadcast on load),
-    ``{path}/corpus/centroid_id=N/``, ``{path}/meta.json``.
+    Layout: build ``c`` writes ``{path}/corpus/c<c>/centroid_id=N/`` and
+    ``{path}/centroids/c<c>`` (small, broadcast on load), then publishes
+    its id and vector columns through :class:`sinks.commit.CommitLog`.
+    A rebuild never touches the files of the build readers hold: a fresh
+    index opens the newest published build, and a rebuild reclaims builds
+    superseded ``commit.RETAIN_S`` ago.
 
     The probe set is collected to the driver by design — it is bounded by
     n_queries × n_probe centroid ids (NOT corpus-scale), and inlining the
@@ -475,14 +486,15 @@ class IvfIndex:
     """
 
     def __init__(self, spark, path: str):
-        import json
         import os
 
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, "meta.json")) as f:
-            self.meta = json.load(f)
-        self.centroids = spark.read.parquet(os.path.join(path, "centroids"))
+        self.meta = _ivf_log(path).latest()
+        if self.meta is None:
+            raise ValueError(f"no IVF index built at {path}")
+        self._build = tag(self.meta["commit"])
+        self.centroids = spark.read.parquet(os.path.join(path, "centroids", self._build))
 
     @staticmethod
     def build(
@@ -491,18 +503,19 @@ class IvfIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> "IvfIndex":
-        import json
         import os
 
         spark = corpus.sparkSession
-        centroids = default_centroids(corpus, id_col=id_col, vec_col=vec_col)
-        assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-        assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
-            os.path.join(path, "corpus")
-        )
-        centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"id_col": id_col, "vec_col": vec_col}, f)
+        log = _ivf_log(path)
+        with log.commit(log.head()) as commit:
+            centroids = default_centroids(corpus, id_col=id_col, vec_col=vec_col)
+            assigned = ivf_assign(corpus, centroids, id_col, vec_col)
+            assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
+                os.path.join(path, "corpus", tag(commit))
+            )
+            centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids", tag(commit)))
+            log.publish(commit, {"id_col": id_col, "vec_col": vec_col})
+            log.expire(keep_last=1)
         return IvfIndex(spark, path)
 
     def topk(
@@ -541,7 +554,7 @@ class IvfIndex:
         )
         probe_ids = sorted({r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()})
         # partition-pruned scan: only the probed centroid dirs are read
-        part = self.spark.read.parquet(os.path.join(self.path, "corpus")).where(
+        part = self.spark.read.parquet(os.path.join(self.path, "corpus", self._build)).where(
             F.col("centroid_id").isin(probe_ids)
         )
         scored = (

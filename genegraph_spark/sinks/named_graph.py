@@ -20,8 +20,10 @@ t.graph = n.graph`` over a table partitioned by ``bucket(graph, N)``):
 - a JSON *manifest* per commit maps every bucket to the directory that
   currently holds it (untouched buckets keep pointing at older commit
   dirs) — never overwriting files in place gives snapshot isolation,
-  safe concurrent readers, time travel, and makes an interrupted commit
-  invisible (the manifest is written last);
+  time travel, and makes an interrupted commit invisible (the manifest is
+  written last); concurrent readers are safe within ``commit.RETAIN_S``:
+  expiry keeps a superseded commit's files that long after the next
+  commit, so a read planned against the old head still finds them;
 - whole-graph replace (not row upsert) keeps merges idempotent: the
   incoming graph's rows fully determine the graph, so replaying a batch
   after a crash converges — the reference's idempotence story, kept;
@@ -34,12 +36,12 @@ t.graph = n.graph`` over a table partitioned by ``bucket(graph, N)``):
 - a merge that touches no bucket (every graph it names is skipped or
   unknown) writes nothing and returns the head's manifest, so a replayed
   or fully watermarked feed adds no commit;
-- merge, compact and expiry commit the same way: under the store's one
+- merge, compact and expiry commit through :class:`commit.CommitLog`,
+  the primitive every persisted artifact shares: under the store's one
   writer lock (a kernel ``flock`` held for the whole commit, which the
   kernel releases when its holder dies), after checking that no commit
-  landed since they read the head and deleting any lineage an
-  interrupted commit left under the next id; the manifest, published by
-  an atomic rename, is the only thing that makes a commit visible;
+  landed since they read the head; the manifest, published by an atomic
+  rename, is the only thing that makes a commit visible;
 - per-bucket metrics are not written: :meth:`NamedGraphStore.metrics`
   derives them on read from each commit's own data dir;
 - the manifest carries the content version the dictionary graph was
@@ -57,16 +59,15 @@ size; bucket counts are chosen so a bucket ≈ one task.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.iri import DICTIONARY_GRAPH
+from .commit import CommitLog, tag
 
 TRIPLE_SCHEMA = (
     "graph string, subject string, predicate string, object string, "
@@ -136,38 +137,16 @@ class NamedGraphStore:
     def __init__(self, spark: SparkSession, path: str, n_buckets: int = 64):
         self.spark = spark
         self.path = path
-        self.n_buckets = n_buckets
         self._lineage = os.path.join(path, "lineage")
-        self._manifests = os.path.join(path, "manifests")
-        os.makedirs(self._manifests, exist_ok=True)
+        self._log = CommitLog(path, ("data",), lambda meta: meta["buckets"].values())
         # the bucket function is part of the PHYSICAL layout: reopening
         # with a different n_buckets would hash graphs into buckets the
         # merge never rewrites (stale rows of replaced graphs survive) —
         # the persisted value always wins
-        last = self.last_commit()
-        if last is not None:
-            persisted = self._read_manifest(last).get("n_buckets")
-            if persisted is not None:
-                self.n_buckets = persisted
-
-    # -- manifest helpers ---------------------------------------------------
-    def _manifest_path(self, commit: int) -> str:
-        return os.path.join(self._manifests, f"c{commit:08d}.json")
-
-    def _commits(self) -> list[int]:
-        """The ids of the published manifests, oldest first."""
-        return sorted(
-            int(m[1:-5]) for m in os.listdir(self._manifests)
-            if m.startswith("c") and m.endswith(".json")
-        )
+        self.n_buckets = (self._log.latest() or {}).get("n_buckets") or n_buckets
 
     def last_commit(self) -> int | None:
-        commits = self._commits()
-        return commits[-1] if commits else None
-
-    def _read_manifest(self, commit: int) -> dict:
-        with open(self._manifest_path(commit)) as f:
-            return json.load(f)
+        return self._log.head()
 
     def exists(self) -> bool:
         return self.last_commit() is not None
@@ -204,11 +183,8 @@ class NamedGraphStore:
     def triples(self, commit: int | None = None) -> DataFrame:
         """The union model: all named graphs (query.clj:15-16 analog).
         ``commit`` selects a historical snapshot (time travel)."""
-        if commit is None:
-            commit = self.last_commit()
-        if commit is None:
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        return self._read_segments(self._read_manifest(commit)).drop("bucket")
+        manifest = self._log.latest() if commit is None else self._log.read(commit)
+        return self._read_segments(manifest or {"buckets": {}}).drop("bucket")
 
     def graphs(self, graph_iris: list[str]) -> DataFrame:
         """Point lookup of specific named graphs (``getNamedModel``,
@@ -218,11 +194,8 @@ class NamedGraphStore:
         (:func:`graph_bucket`, the writer's pmod(xxhash64)), so building
         the lookup runs no Spark job. The graph filter on top is pushed
         into the parquet scan."""
-        commit = self.last_commit()
-        if commit is None:
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
         wanted = {graph_bucket(g, self.n_buckets) for g in graph_iris}
-        seg = self._read_segments(self._read_manifest(commit), wanted)
+        seg = self._read_segments(self._log.latest() or {"buckets": {}}, wanted)
         return (
             seg.where(F.col("graph").isin(graph_iris))
             .drop("bucket")
@@ -254,7 +227,7 @@ class NamedGraphStore:
         store's writer lock, a kernel ``flock`` held for the whole commit,
         makes the second writer fail fast."""
         last = self.last_commit()
-        with self._locked_commit(last) as commit:
+        with self._log.commit(last) as commit:
             # ONE small per-graph frame (graph, bucket, action, n_triples,
             # version) is the only source of the touched buckets, the
             # write's join keys and the lineage rows. One aggregation over
@@ -281,7 +254,7 @@ class NamedGraphStore:
                     F.expr(f"max(IF({is_dict} AND action = 'publish', version, NULL)) AS dict_version"),
                 ).collect()
                 touched = {r["bucket"] for r in per_bucket}
-                prev = self._read_manifest(last) if last is not None else {"buckets": {}}
+                prev = self._log.read(last) if last is not None else {"buckets": {}}
                 if last is not None and not touched:
                     return prev
                 # ONE join against the per-graph frame: a touched bucket's
@@ -313,48 +286,12 @@ class NamedGraphStore:
                     "overwrite"
                 ).parquet(os.path.join(self._lineage, f"commit={commit}"))
                 lineage_s = time.monotonic() - t0
-                return self._write_manifest(
-                    commit, buckets, dict_version,
-                    timings={"write_s": round(write_s, 3), "lineage_s": round(lineage_s, 3)},
-                )
+                return self._log.publish(commit, {
+                    "buckets": buckets, "n_buckets": self.n_buckets, "dictionary_version": dict_version,
+                    "timings": {"write_s": round(write_s, 3), "lineage_s": round(lineage_s, 3)},
+                })
             finally:
                 graphs.unpersist()
-
-    @contextmanager
-    def _locked_commit(self, last: int | None):
-        """Under the writer lock, yield the id after ``last`` once a re-read
-        shows no commit landed since; a commit built on an older head would
-        overwrite it. First delete any lineage a killed writer left under
-        that id, so no later commit (say, a compaction) publishes it."""
-        commit = 0 if last is None else last + 1
-        with self._commit_lock():
-            if self.last_commit() != last:
-                raise RuntimeError(
-                    f"store advanced past commit {last!r} while acquiring the "
-                    "commit lock; retry against the new head"
-                )
-            shutil.rmtree(os.path.join(self._lineage, f"commit={commit}"), ignore_errors=True)
-            yield commit
-
-    @contextmanager
-    def _commit_lock(self):
-        """A kernel ``flock`` on ``writer-mutex.lock`` for the whole commit: a
-        second writer (also another open of the file in this process) fails
-        fast, and a killed writer's lock dies with it. Never unlinked: a
-        holder of an unlinked file would no longer exclude the next writer."""
-        import fcntl
-
-        fd = os.open(os.path.join(self.path, "writer-mutex.lock"), os.O_CREAT | os.O_WRONLY)
-        try:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except BlockingIOError:
-                raise RuntimeError(
-                    f"concurrent writer holds the lock of {self.path}; the store is single-writer"
-                ) from None
-            yield
-        finally:
-            os.close(fd)
 
     def _write_data(self, commit: int, rows: DataFrame) -> str:
         """Write bucketed ``rows`` to the commit's data dir and return it,
@@ -372,34 +309,11 @@ class NamedGraphStore:
         same id and must clobber the orphan (the manifest written last is
         what makes a commit visible — an interrupted commit is invisible
         and replay converges, load.clj:72-87 idempotence kept)."""
-        data_dir = f"data/c{commit:08d}"
+        data_dir = f"data/{tag(commit)}"
         rows.repartition("bucket").sortWithinPartitions("bucket", "graph").write.mode(
             "overwrite"
         ).partitionBy("bucket").parquet(os.path.join(self.path, data_dir))
         return data_dir
-
-    def _write_manifest(
-        self, commit: int, buckets: dict, dictionary_version: int | None, **fields
-    ) -> dict:
-        """Publish ``commit``: write its manifest (bucket → data dir, the
-        layout, ``fields`` and the dictionary graph's content version, if
-        any) and return it. The manifest is written to a temp file and
-        renamed into place, so a writer killed mid-write leaves no
-        truncated manifest for :meth:`last_commit` to list."""
-        meta = {
-            "commit": commit,
-            "buckets": buckets,
-            "n_buckets": self.n_buckets,
-            "wall_ts": time.time(),
-            **fields,
-        }
-        if dictionary_version is not None:
-            meta["dictionary_version"] = dictionary_version
-        path = self._manifest_path(commit)
-        with open(path + ".tmp", "w") as f:
-            json.dump(meta, f)
-        os.replace(path + ".tmp", path)
-        return meta
 
     # -- maintenance ---------------------------------------------------------
     def compact(self) -> dict:
@@ -419,45 +333,32 @@ class NamedGraphStore:
         last = self.last_commit()
         if last is None:
             raise ValueError("nothing to compact: store has no commits")
-        with self._locked_commit(last) as commit:
-            prev = self._read_manifest(last)
+        with self._log.commit(last) as commit:
+            # a merge killed before its manifest may have left lineage under
+            # this id; a compaction writes none, so it must not publish that
+            shutil.rmtree(os.path.join(self._lineage, f"commit={commit}"), ignore_errors=True)
+            prev = self._log.read(last)
             data_dir = self._write_data(commit, self._read_segments(prev))
-            return self._write_manifest(
-                commit,
-                {str(b): data_dir for b in range(self.n_buckets)},
-                prev.get("dictionary_version"),
-                compaction_of=last,
-            )
+            return self._log.publish(commit, {
+                "buckets": {str(b): data_dir for b in range(self.n_buckets)}, "n_buckets": self.n_buckets,
+                "dictionary_version": prev.get("dictionary_version"), "compaction_of": last,
+            })
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:
-        """Drop all but the newest ``keep_last`` manifests and delete data
-        dirs no retained manifest references — Iceberg's
-        ``expire_snapshots`` analog. Time travel to expired commits stops
-        working (that is the point: bounded storage); lineage history is
-        kept, only snapshot data is reclaimed. Returns removed data dirs.
-
-        Manifests go first, data dirs second: a crash at any point leaves
-        every listed manifest readable in full, at worst with orphan dirs,
-        which the next expiry reclaims."""
-        assert keep_last >= 1, "must retain at least the latest snapshot"
-        commits = self._commits()
-        drop, keep = commits[:-keep_last], commits[-keep_last:]
-        # a merge landing after the listing above would add a manifest this
-        # expiry did not account for, whose data dir must not be reclaimed
-        with self._locked_commit(commits[-1] if commits else None):
-            live_dirs = {
-                d for c in keep for d in self._read_manifest(c)["buckets"].values()
-            }
-            for c in drop:
-                os.remove(self._manifest_path(c))
-            removed = []
-            data_root = os.path.join(self.path, "data")
-            for d in sorted(os.listdir(data_root) if os.path.exists(data_root) else []):
-                rel = os.path.join("data", d)
-                if rel not in live_dirs:
-                    shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
-                    removed.append(rel)
-            return removed
+        """Drop the manifests past the newest ``keep_last`` whose successor
+        was published at least ``commit.RETAIN_S`` seconds ago, and delete
+        the data dirs no retained manifest references — Iceberg's
+        ``expire_snapshots`` analog (its ``retain_last`` and
+        ``older_than``). Time travel to expired commits stops working (that
+        is the point: bounded storage); a read planned while a commit was
+        the head keeps its files for ``RETAIN_S`` after the next commit;
+        lineage history is kept, only snapshot data is reclaimed. Returns
+        removed data dirs. A crash at any point leaves every listed
+        manifest readable in full (:meth:`CommitLog.expire`)."""
+        # a merge landing after the head is read must not have its data dir
+        # reclaimed: the locked re-check makes this expiry fail instead
+        with self._log.commit(self.last_commit()):
+            return self._log.expire(keep_last)
 
     # -- per-partition metrics ----------------------------------------------
     def metrics(self) -> DataFrame:
@@ -465,17 +366,14 @@ class NamedGraphStore:
         commit wrote per bucket — the north rule's 'every partition writes
         row-count metrics'. Derived on read from each commit's own
         immutable ``data/cNNNNNNNN`` dir, so a metric can never disagree
-        with the data; an expired snapshot's metrics go with its data dir.
-        Commit latencies live in the manifest's ``timings``."""
-        last = self.last_commit()
-        data = os.path.join(self.path, "data")
+        with the data; an expired snapshot's metrics go with its manifest,
+        and an interrupted commit's orphan dir, which no manifest names, has
+        none. Commit latencies live in the manifest's ``timings``."""
         paths = [
             path
-            for d in (sorted(os.listdir(data)) if os.path.isdir(data) else [])
-            # a dir past the last commit is an interrupted commit's orphan
-            if last is not None and d.startswith("c") and int(d[1:]) <= last
+            for d in sorted({d for c in self._log.ids() for d in self._log.dirs(self._log.read(c))})
             for b in range(self.n_buckets)
-            if os.path.isdir(path := os.path.join(data, d, f"bucket={b}"))
+            if os.path.isdir(path := os.path.join(self.path, d, f"bucket={b}"))
         ]
         if not paths:
             return self.spark.createDataFrame(
@@ -500,8 +398,7 @@ class NamedGraphStore:
         """The content version the current snapshot's dictionary graph was
         published with (see :meth:`merge`); None when the store holds no
         such graph or it came without a version."""
-        last = self.last_commit()
-        return None if last is None else self._read_manifest(last).get("dictionary_version")
+        return (self._log.latest() or {}).get("dictionary_version")
 
     def diff(self, commit_a: int, commit_b: int) -> DataFrame:
         """Build-to-build regression diff: (graph, n_added, n_removed)

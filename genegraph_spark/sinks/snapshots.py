@@ -10,10 +10,13 @@ scans enumerate versions in order (``src/genegraph/rocksdb.clj:51-64``,
 Spark mapping: one table per entity type, rows keyed
 ``(is_version_of, version)``; the RocksDB prefix scan becomes a
 key-partitioned window, "latest as-of" is the top-1-per-key idiom
-(``transform/clinvar/common.clj:209-258``). Batches land under
-``snapshot=N`` dirs — replaying a snapshot id overwrites it (the same
-idempotent-commit contract as the named-graph store). At cluster
-scale each table is Iceberg with a sort order on (is_version_of,
+(``transform/clinvar/common.clj:209-258``). Each table commits through
+:class:`commit.CommitLog`, as the named-graph store does: a write lands
+in a fresh ``data/cNNNNNNNN/snapshot=N`` dir and publishes a manifest
+mapping every snapshot id to its dir, so a killed write lists no snapshot and replaying
+a snapshot id replaces it without touching the files readers hold. A
+table written before manifests existed reads its ``snapshot=N`` dirs. At
+cluster scale each table is Iceberg with a sort order on (is_version_of,
 version) so the as-of read is a merge-scan, not a full shuffle.
 """
 
@@ -24,46 +27,56 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .commit import CommitLog, tag
+
 
 class SnapshotStore:
     def __init__(self, spark: SparkSession, base_path: str):
         self.spark = spark
         self.base = base_path
-        os.makedirs(base_path, exist_ok=True)
 
-    def _dir(self, entity_type: str) -> str:
-        return os.path.join(self.base, entity_type)
+    def _log(self, entity_type: str) -> CommitLog:
+        return CommitLog(os.path.join(self.base, entity_type), ("data",),
+                         lambda meta: {os.path.dirname(d) for d in meta["snapshots"].values()})
 
-    def _snapshots(self, entity_type: str) -> list[int]:
-        d = self._dir(entity_type)
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(x.split("=")[1]) for x in os.listdir(d) if x.startswith("snapshot="))
+    def _snapshots(self, log: CommitLog) -> dict[str, str]:
+        """Snapshot id → data dir, as the head publishes them; a table
+        written before manifests existed lists its ``snapshot=N`` dirs."""
+        meta = log.latest()
+        if meta is not None:
+            return meta["snapshots"]
+        names = os.listdir(log.path) if os.path.isdir(log.path) else []
+        return {x.split("=")[1]: x for x in names if x.startswith("snapshot=")}
 
     def write(self, entity_type: str, docs: DataFrame, snapshot: int | None = None) -> int:
-        """Append one batch of versioned docs for an entity type.
-        Re-writing the same snapshot id overwrites (idempotent replay)."""
-        if snapshot is None:
-            existing = self._snapshots(entity_type)
-            snapshot = (existing[-1] + 1) if existing else 0
-        docs.write.mode("overwrite").parquet(
-            os.path.join(self._dir(entity_type), f"snapshot={snapshot}")
-        )
+        """Append one batch of versioned docs for an entity type as the
+        next free snapshot id, or as ``snapshot``: re-writing a snapshot id
+        replaces it (idempotent replay)."""
+        log = self._log(entity_type)
+        with log.commit(log.head()) as commit:
+            snapshots = self._snapshots(log)
+            if snapshot is None:
+                snapshot = max(map(int, snapshots), default=-1) + 1
+            data_dir = f"data/{tag(commit)}/snapshot={snapshot}"
+            docs.write.mode("overwrite").parquet(os.path.join(log.path, data_dir))
+            log.publish(commit, {"snapshots": {**snapshots, str(snapshot): data_dir}})
+            log.expire(keep_last=1)
         return snapshot
 
     def read(self, entity_type: str) -> DataFrame:
-        """All snapshots of a type (version history; dedup is the
+        """All snapshots of a type as one scan, each row tagged with the
+        ``snapshot`` id its dir is named for (version history; dedup is the
         reader's window, like the reference's prefix scan + take-last).
         Raises a clear error for a never-written type (its doc schema is
-        caller-defined, so no empty frame can be synthesized). The dirs are
-        listed on the driver: a ``snapshot=*`` glob makes Spark log a
-        warning while it looks for a streaming-sink metadata dir there."""
-        snapshots = self._snapshots(entity_type)
+        caller-defined, so no empty frame can be synthesized)."""
+        log = self._log(entity_type)
+        snapshots = self._snapshots(log)
         if not snapshots:
             raise ValueError(f"no snapshots written for entity type {entity_type!r}")
-        d = self._dir(entity_type)
-        return self.spark.read.option("basePath", d).parquet(
-            *(os.path.join(d, f"snapshot={s}") for s in snapshots)
+        df = self.spark.read.parquet(*(os.path.join(log.path, d) for d in snapshots.values()))
+        return df.withColumn(
+            "snapshot",
+            F.regexp_extract("_metadata.file_path", r"/snapshot=(\d+)/[^/]*$", 1).cast("int"),
         )
 
     def latest_as_of(

@@ -51,7 +51,9 @@ def main() -> None:
     p.add_argument("--compact", action="store_true",
                    help="after the run, rewrite live buckets into one data dir")
     p.add_argument("--expire-keep", type=int, default=0, metavar="N",
-                   help="after the run, keep only the newest N snapshots")
+                   help="after the run, keep only the newest N snapshots; a snapshot "
+                        "superseded less than commit.RETAIN_S seconds ago (one hour) is "
+                        "kept, so an expiry right after a commit keeps the one it superseded")
     args = p.parse_args()
 
     from genegraph_spark.plans.pipeline import run_to_store

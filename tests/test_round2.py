@@ -221,6 +221,7 @@ import os, shutil, sys
 sys.path.insert(0, {repo!r})
 os.environ["SPARK_GRAFT_CPUS"] = "4"
 from genegraph_spark.session import get_spark
+from genegraph_spark.sinks import commit
 from genegraph_spark.sinks.named_graph import NamedGraphStore, TRIPLE_SCHEMA
 spark = get_spark("crash_drill", extra_conf={{"spark.driver.memory": "4g"}})
 store = NamedGraphStore(spark, {path!r}, n_buckets=4)
@@ -228,7 +229,8 @@ rows = [(f"g{{i}}", "s", "p", f"o{{i}}", True, None) for i in range(20)]
 store.merge(spark.createDataFrame(rows, TRIPLE_SCHEMA))
 if {op!r} == "expire_snapshots":
     store.compact()  # commit 1: the expiry drops commit 0 and its data dir
-owner = shutil if {step!r} == "rmtree" else NamedGraphStore
+    commit.RETAIN_S = 0
+owner = {{"rmtree": shutil, "publish": commit.CommitLog}}.get({step!r}, NamedGraphStore)
 step = getattr(owner, {step!r})
 
 def crash(*args, **kwargs):
@@ -258,7 +260,8 @@ def _crash(path, op, step, after, graph="g1", version=None):
     """Commit 20 graphs to a 4-bucket store at ``path`` (then compact it,
     before an expiry), then hard-kill ``op`` in ``step``, in a subprocess:
     after the step's real call when ``after``, else on entry. ``step`` is
-    a store method, or ``rmtree`` for the first data dir removal. A killed
+    a store method, ``publish`` (the manifest write, a ``CommitLog``
+    method), or ``rmtree`` for the first data dir removal. A killed
     ``merge`` merges ``graph`` at ``version``."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = CRASH_SCRIPT.format(
@@ -318,7 +321,7 @@ def test_kill_before_manifest_then_compact_publishes_no_orphan_lineage(spark, sf
     page = fixtures.pages_df(spark, sf_dir).where("doc_id = 1 AND version = 1")
     url = page.first().url
     path = str(tmp_path / "crash_store")
-    _crash(path, "merge", "_write_manifest", after=False, graph=url, version=7)
+    _crash(path, "merge", "publish", after=False, graph=url, version=7)
     assert os.path.isdir(os.path.join(path, "lineage", "commit=1"))  # the orphan
 
     store = NamedGraphStore(spark, path)
@@ -338,12 +341,12 @@ def test_kill_before_manifest_then_compact_publishes_no_orphan_lineage(spark, sf
     "op, step, after, heads",
     [
         ("compact", "_write_data", True, {0, 1}),
-        ("compact", "_write_manifest", False, {0}),
+        ("compact", "publish", False, {0}),
         ("expire_snapshots", "rmtree", True, {1}),
     ],
     ids=["compact", "compact-before-manifest", "expire_snapshots"],
 )
-def test_killed_maintenance_leaves_a_whole_store(spark, tmp_path, op, step, after, heads):
+def test_killed_maintenance_leaves_a_whole_store(spark, tmp_path, monkeypatch, op, step, after, heads):
     """A compaction killed after its data write or on entry to its
     manifest write, and an expiry killed after its first data dir
     removal, leave a store whose head is the old or the new commit, whose
@@ -352,6 +355,9 @@ def test_killed_maintenance_leaves_a_whole_store(spark, tmp_path, op, step, afte
     whose lineage lists only committed graphs. An expiry reclaims a dead
     compaction's orphan data dir, a replay converges and reclaims the
     orphans, and a later merge revives no orphan row."""
+    from genegraph_spark.sinks import commit
+
+    monkeypatch.setattr(commit, "RETAIN_S", 0)
     path = str(tmp_path / "crash_store")
     _crash(path, op, step, after=after)
 
@@ -370,7 +376,7 @@ def test_killed_maintenance_leaves_a_whole_store(spark, tmp_path, op, step, afte
     getattr(store, op)()  # the replay
     assert {(r_["graph"], r_["object"]) for r_ in store.triples().collect()} == content
     if op == "expire_snapshots":
-        live = set(store._read_manifest(store.last_commit())["buckets"].values())
+        live = set(store._log.read(store.last_commit())["buckets"].values())
         assert os.listdir(os.path.join(path, "manifests")) == ["c00000001.json"]
         assert {f"data/{d}" for d in os.listdir(os.path.join(path, "data"))} == live
 

@@ -271,7 +271,7 @@ class TestSingleWriterLock:
         store = NamedGraphStore(spark, str(tmp_path / "store"), n_buckets=4)
         rows = spark.createDataFrame([("g1", "a", "p", "x", True, None)], TRIPLE_SCHEMA)
         store.merge(rows)
-        with store._commit_lock(), ThreadPoolExecutor(1) as pool:
+        with store._log.lock(), ThreadPoolExecutor(1) as pool:
             with pytest.raises(RuntimeError, match="concurrent writer.*single-writer"):
                 pool.submit(store.merge, rows).result()
         assert store.last_commit() == 0
@@ -291,10 +291,8 @@ class TestSingleWriterLock:
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         script = (
             f"import os, sys; sys.path.insert(0, {repo!r})\n"
-            "from genegraph_spark.sinks.named_graph import NamedGraphStore\n"
-            "store = NamedGraphStore.__new__(NamedGraphStore)\n"
-            f"store.path = {store.path!r}\n"
-            "with store._commit_lock():\n"
+            "from genegraph_spark.sinks.commit import CommitLog\n"
+            f"with CommitLog({store.path!r}).lock():\n"
             "    os._exit(17)\n"
         )
         r = subprocess.run([sys.executable, "-c", script], capture_output=True, text=True)

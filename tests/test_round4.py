@@ -18,13 +18,11 @@ from pyspark.sql import functions as F
 def _lock_worker(store_path, barrier, hold, results, idx):
     """Try to take the store's writer lock; the winner holds it until told
     to release, so the losers must observe a LIVE holder."""
-    from genegraph_spark.sinks.named_graph import NamedGraphStore
+    from genegraph_spark.sinks.commit import CommitLog
 
-    store = NamedGraphStore.__new__(NamedGraphStore)
-    store.path = store_path
     barrier.wait()
     try:
-        with store._commit_lock():
+        with CommitLog(store_path).lock():
             results[idx] = "won"
             hold.wait()
     except RuntimeError:
@@ -36,7 +34,7 @@ class TestLockReclaimRace:
         """Four live writers race for the lock: exactly one wins, the rest
         raise while it holds the lock, and the lock is free once the
         winner releases it."""
-        from genegraph_spark.sinks.named_graph import NamedGraphStore
+        from genegraph_spark.sinks.commit import CommitLog
 
         store_path = str(tmp_path / "store")
         os.makedirs(store_path)
@@ -65,9 +63,7 @@ class TestLockReclaimRace:
             p.join(timeout=30)
         outcomes = sorted(results.values())
         assert outcomes == ["lost", "lost", "lost", "won"], outcomes
-        store = NamedGraphStore.__new__(NamedGraphStore)
-        store.path = store_path
-        with store._commit_lock():
+        with CommitLog(store_path).lock():
             pass
 
 

@@ -88,9 +88,12 @@ def test_pipeline_to_store_and_resume(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_compact_and_expire_snapshots(spark, tmp_path):
+def test_compact_and_expire_snapshots(spark, tmp_path, monkeypatch):
     import os
 
+    from genegraph_spark.sinks import commit
+
+    monkeypatch.setattr(commit, "RETAIN_S", 0)
     store = NamedGraphStore(spark, str(tmp_path / "store3"), n_buckets=8)
     store.merge(make(spark, [t(f"g{i}", "s", "p", f"o{i}") for i in range(40)]))
     store.merge(make(spark, [t("g3", "s", "p", "NEW3")]))            # c1
@@ -123,27 +126,37 @@ def test_compact_and_expire_snapshots(spark, tmp_path):
     assert store.triples().where(F.col("graph") == "g100").count() == 1
 
 
+def race(monkeypatch, other_commit):
+    """Make the next writer lock taken run ``other_commit`` (another
+    writer committing) just before it is held."""
+    from contextlib import contextmanager
+
+    from genegraph_spark.sinks.commit import CommitLog
+
+    lock = CommitLog.lock
+    pending = [other_commit]
+
+    @contextmanager
+    def racing_lock(self):
+        if pending:
+            pending.pop()()
+        with lock(self):
+            yield
+
+    monkeypatch.setattr(CommitLog, "lock", racing_lock)
+
+
 @pytest.mark.parametrize("op", ["merge", "compact", "expire_snapshots"])
 def test_commit_fails_when_the_store_advances_while_locking(spark, tmp_path, monkeypatch, op):
     """merge, compact and expire_snapshots re-read the head under the
     commit lock: a commit that lands while the lock is being acquired
     makes them raise, and the landed commit and older snapshots stay."""
-    from contextlib import contextmanager
-
     path = str(tmp_path / "race")
     store = NamedGraphStore(spark, path, n_buckets=4)
     store.merge(make(spark, [t("g1", "s", "p", "o1")]))
     store.merge(make(spark, [t("g2", "s", "p", "o2")]))
-    lock = store._commit_lock
-
-    @contextmanager
-    def racing_lock():
-        # another writer commits before this one holds the lock
-        NamedGraphStore(spark, path).merge(make(spark, [t("g3", "s", "p", "o3")]))
-        with lock():
-            yield
-
-    monkeypatch.setattr(store, "_commit_lock", racing_lock)
+    # another writer commits before this one holds the lock
+    race(monkeypatch, lambda: NamedGraphStore(spark, path).merge(make(spark, [t("g3", "s", "p", "o3")])))
     run = {
         "merge": lambda: store.merge(make(spark, [t("g1", "s", "p", "NEW")])),
         "compact": store.compact,
@@ -155,6 +168,65 @@ def test_commit_fails_when_the_store_advances_while_locking(spark, tmp_path, mon
     got = {(r["graph"], r["object"]) for r in store.triples().collect()}
     assert got == {("g1", "o1"), ("g2", "o2"), ("g3", "o3")}
     assert store.triples(commit=0).count() == 1
+
+
+@pytest.mark.parametrize("artifact", ["snapshot_write", "minhash_append", "ivf_build"])
+def test_artifact_commit_fails_when_another_writer_commits_under_it(
+    spark, sf_dir, tmp_path, monkeypatch, artifact
+):
+    """The snapshot tables and the MinHash and IVF indexes commit like the
+    store: a writer that another writer's commit overtakes while it takes
+    the lock raises, and the other writer's commit is the head."""
+    from genegraph_spark.operators.dedup import MinhashIndex
+    from genegraph_spark.operators.similarity import IvfIndex
+    from genegraph_spark.sinks.commit import CommitLog
+    from genegraph_spark.sinks.snapshots import SnapshotStore
+
+    path = str(tmp_path / artifact)
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, "jumps over the lazy dog")], "doc_id long, text string"
+    )
+    if artifact == "snapshot_write":
+        write, log, head = lambda: SnapshotStore(spark, path).write("page", docs), f"{path}/page", 0
+    elif artifact == "minhash_append":
+        MinhashIndex(spark, path).build(docs)
+        write, log, head = lambda: MinhashIndex(spark, path).append(docs), path, 1
+    else:
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        write, log, head = lambda: IvfIndex.build(emb, path), path, 0
+    race(monkeypatch, write)
+    with pytest.raises(RuntimeError, match="store advanced past commit"):
+        write()
+    assert CommitLog(log).ids()[-1] == head
+
+
+def test_reads_planned_before_maintenance_survive_it(spark, tmp_path, monkeypatch):
+    """A read planned against the head keeps its files through a merge,
+    compact() and expire_snapshots(keep_last=1) run right after: expiry
+    keeps a superseded commit for ``RETAIN_S`` after its successor. Past
+    that, a read of a dropped commit names the oldest retained one."""
+    store = NamedGraphStore(spark, str(tmp_path / "readers"), n_buckets=4)
+    store.merge(make(spark, [t(f"g{i}", "s", "p", f"o{i}") for i in range(20)]))
+    everything = store.triples()
+    two = store.graphs(["g1", "g2"])
+    store.merge(make(spark, [t("g1", "s", "p", "NEW")]))
+    store.compact()
+    removed = store.expire_snapshots(keep_last=1)
+    assert {(r.graph, r.object) for r in everything.collect()} == {(f"g{i}", f"o{i}") for i in range(20)}
+    assert {(r.graph, r.object) for r in two.collect()} == {("g1", "o1"), ("g2", "o2")}
+    assert removed == []
+
+    from genegraph_spark.sinks import commit
+
+    monkeypatch.setattr(commit, "RETAIN_S", 0)
+    assert store.expire_snapshots(keep_last=1) == ["data/c00000000", "data/c00000001"]
+    with pytest.raises(ValueError, match="commit 0 is not retained.*oldest retained commit is 2"):
+        store.triples(commit=0)
+
+
+def test_expire_rejects_keep_last_below_one(spark, tmp_path):
+    with pytest.raises(ValueError, match="keep_last"):
+        NamedGraphStore(spark, str(tmp_path / "k0"), n_buckets=4).expire_snapshots(keep_last=0)
 
 
 def test_incremental_commit_plans_the_url_repartition_at_any_history(
@@ -423,7 +495,7 @@ def test_manifest_write_killed_midway_leaves_the_head(spark, tmp_path, monkeypat
     """A manifest write that stops partway leaves no truncated manifest:
     the head stays the previous commit and reads as before, and the next
     merge takes the interrupted commit's id."""
-    from genegraph_spark.sinks import named_graph
+    from genegraph_spark.sinks import commit
 
     store = NamedGraphStore(spark, str(tmp_path / "torn"), n_buckets=4)
     store.merge(make(spark, [t("g1", "s", "p", "o1")]))
@@ -433,7 +505,7 @@ def test_manifest_write_killed_midway_leaves_the_head(spark, tmp_path, monkeypat
         raise OSError("disk full")
 
     with monkeypatch.context() as m:
-        m.setattr(named_graph.json, "dump", torn_dump)
+        m.setattr(commit.json, "dump", torn_dump)
         with pytest.raises(OSError, match="disk full"):
             store.merge(make(spark, [t("g2", "s", "p", "o2")]))
     reopened = NamedGraphStore(spark, str(tmp_path / "torn"))
