@@ -2457,9 +2457,7 @@ def q_stream_stateful_totals(spark, sf_dir):
     src = _stream_source(spark, sf_dir, "events")
     ckpt = _STATE.temp_dir("gg_streams_")
     # 2 files per trigger over 4 files → state must carry across batches
-    return S.stream_user_running_totals(
-        spark, src, os.path.join(ckpt, "ckpt"), max_files_per_trigger=2
-    )
+    return S.stream_user_running_totals(spark, src, os.path.join(ckpt, "ckpt"))
 
 
 # The driver verifies the first ~50 queries() entries per round. The

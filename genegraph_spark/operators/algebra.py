@@ -498,6 +498,44 @@ def text_index(
     return toks.groupBy("node", "token").agg(F.count("*").alias("tf"))
 
 
+def _text_scores(idx: DataFrame, qtokens: list[str], scoring: str) -> DataFrame:
+    """(node, n_matched, score) over a :func:`text_index` for the nodes
+    that hold any of ``qtokens``: the ``scoring`` ("tfidf" or "bm25")
+    weight of each matched token, summed per node and rounded to 6dp.
+    The one scorer behind :func:`text_search_ranked` and SPARQL
+    ``text:query``."""
+    n_docs = idx.select("node").distinct().agg(F.count("*").alias("n"))
+    hits = idx.where(F.col("token").isin(qtokens))
+    dfreq = hits.groupBy("token").agg(F.countDistinct("node").alias("df"))
+    n, dfc, tf = (
+        F.col("n").cast("double"),
+        F.col("df").cast("double"),
+        F.col("tf").cast("double"),
+    )
+    if scoring == "bm25":
+        k1, b = 1.2, 0.75
+        doclen = idx.groupBy("node").agg(F.sum("tf").alias("dl"))
+        avgdl = doclen.agg(F.avg("dl").alias("avgdl"))
+        idf = F.log(F.lit(1.0) + (n - dfc + 0.5) / (dfc + 0.5))
+        norm = F.lit(k1) * (
+            F.lit(1 - b) + F.lit(b) * F.col("dl").cast("double") / F.col("avgdl")
+        )
+        weight = idf * (tf * (k1 + 1)) / (tf + norm)
+        hits = hits.join(doclen, "node").crossJoin(F.broadcast(avgdl))
+    else:
+        weight = tf * F.log(F.lit(1.0) + n / dfc)
+    return (
+        hits.join(F.broadcast(dfreq), "token")
+        .crossJoin(F.broadcast(n_docs))
+        .withColumn("w", weight)
+        .groupBy("node")
+        .agg(
+            F.countDistinct("token").alias("n_matched"),
+            F.round(F.sum("w"), 6).alias("score"),
+        )
+    )
+
+
 def text_search_ranked(
     triples: DataFrame,
     query: str,
@@ -543,40 +581,7 @@ def text_search_ranked(
     qtokens = [t for t in _re.split(r"[^a-z0-9]+", query.lower()) if t]
     if not qtokens:
         raise ValueError("text_search_ranked: query has no indexable tokens")
-    n_docs = idx.select("node").distinct().agg(F.count("*").alias("n"))
-    dfreq = (
-        idx.where(F.col("token").isin(qtokens))
-        .groupBy("token")
-        .agg(F.countDistinct("node").alias("df"))
-    )
-    hits = idx.where(F.col("token").isin(qtokens))
-    n, dfc, tf = (
-        F.col("n").cast("double"),
-        F.col("df").cast("double"),
-        F.col("tf").cast("double"),
-    )
-    if scoring == "bm25":
-        k1, b = 1.2, 0.75
-        doclen = idx.groupBy("node").agg(F.sum("tf").alias("dl"))
-        avgdl = doclen.agg(F.avg("dl").alias("avgdl"))
-        idf = F.log(F.lit(1.0) + (n - dfc + 0.5) / (dfc + 0.5))
-        norm = F.lit(k1) * (
-            F.lit(1 - b) + F.lit(b) * F.col("dl").cast("double") / F.col("avgdl")
-        )
-        weight = idf * (tf * (k1 + 1)) / (tf + norm)
-        hits = hits.join(doclen, "node").crossJoin(F.broadcast(avgdl))
-    else:
-        weight = tf * F.log(F.lit(1.0) + n / dfc)
-    scored = (
-        hits.join(F.broadcast(dfreq), "token")
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn("w", weight)
-        .groupBy("node")
-        .agg(
-            F.countDistinct("token").alias("n_matched"),
-            F.round(F.sum("w"), 6).alias("score"),
-        )
-    )
+    scored = _text_scores(idx, qtokens, scoring)
     w = Window.orderBy(F.desc("score"), F.asc("node"))
     return (
         scored.orderBy(F.desc("score"), F.asc("node"))

@@ -246,21 +246,16 @@ def embedding_near_duplicates(
             "for keyless corpora use embedding_lsh_near_duplicates, which "
             "derives random-hyperplane LSH buckets instead of a crossJoin"
         )
-    from .similarity import dot_expr, norm_expr
+    from .similarity import _cosine, _norm
 
-    # per-vector norm computed once per side, not per pair (same
-    # bit-identical factoring as embedding_lsh_near_duplicates)
     a = emb.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        norm_expr(F.col(vec_col)).alias("_na"), F.col(group_col),
+        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), _norm(vec_col, "_na"), F.col(group_col)
     )
     b = emb.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        norm_expr(F.col(vec_col)).alias("_nb"), F.col(group_col),
+        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), _norm(vec_col, "_nb"), F.col(group_col)
     )
     pairs = a.join(b, [group_col], "inner").where(F.col("id_a") < F.col("id_b"))
-    cos = dot_expr(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb"))
-    return pairs.select("id_a", "id_b", F.round(cos, 6).alias("cosine")).where(
+    return pairs.select("id_a", "id_b", _cosine("va", "vb", "_na", "_nb").alias("cosine")).where(
         F.col("cosine") >= threshold
     )
 
@@ -314,9 +309,8 @@ def hyperplane_lsh_buckets(
     collide in ≥1 band with high probability while the corpus spreads
     across 2^(planes/band) buckets per band. Map-only: one projection per
     row, one explode — the shuffle happens at the caller's bucket join."""
-    assert n_planes % n_bands == 0, (
-        f"n_bands={n_bands} must divide n_planes={n_planes} evenly"
-    )
+    if n_planes % n_bands:
+        raise ValueError(f"n_bands={n_bands} must divide n_planes={n_planes} evenly")
     per_band = n_planes // n_bands
     w = hyperplane_weights(n_planes, dim)
     q = _quantize_vec(vec_col)
@@ -381,22 +375,18 @@ def embedding_lsh_near_duplicates(
     # action, reclaimed by the ContextCleaner when dropped — repeated
     # calls don't accumulate pinned cache entries. At lake scale this
     # becomes a persisted intermediate.
-    from .similarity import dot_expr, norm_expr
+    from .similarity import _cosine, _norm
 
-    # Precompute each vector's norm ONCE and carry it on the band rows:
+    # Each vector's norm is computed ONCE and carried on the band rows:
     # the verify otherwise re-evaluates BOTH norms per candidate pair
     # inside the bucket join (3 interpreted 64-element higher-order
     # folds per pair instead of 1 — plan-audited; at 1.5M candidates
-    # that tripled the join's per-row work). The pair expression is
-    # dot/(na*nb) over the very same values sqrt(dot(v,v)) produces, so
-    # every rounded cosine is bit-identical to the inline form.
-    emb = emb.withColumn("_gg_n", norm_expr(F.col(vec_col).cast("array<double>")))
+    # that tripled the join's per-row work).
     buckets = hyperplane_lsh_buckets(
-        emb, id_col, vec_col, dim, n_planes, n_bands,
+        emb.select("*", _norm(vec_col, "_gg_n")), id_col, vec_col, dim, n_planes, n_bands,
         carry=[vec_col, "_gg_n"],
     ).localCheckpoint(eager=False)
     a, b = buckets.alias("a"), buckets.alias("b")
-    cos = dot_expr(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb"))
     # cosine + threshold BEFORE the pair dedup: the verify is a cheap
     # per-row fold computed map-side right out of the bucket join (at
     # worst n_bands times per true pair), while deduping first would
@@ -415,7 +405,7 @@ def embedding_lsh_near_duplicates(
             F.col("a._gg_n").alias("_na"),
             F.col("b._gg_n").alias("_nb"),
         )
-        .select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
+        .select("id_a", "id_b", _cosine("va", "vb", "_na", "_nb").alias("cosine"))
         .where(F.col("cosine") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
     )

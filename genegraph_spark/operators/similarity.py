@@ -1,10 +1,21 @@
 """Similarity search over embedding columns: brute-force cosine top-k
-(baseline) and an IVF-style partitioned variant (scale path).
+(baseline), an IVF-style partitioned variant (scale path), inline or
+persisted, and product quantization.
 
 Engine capability beyond the reference (its nearest analog is the Lucene
 suggester index, ``src/genegraph/suggest/``); required for training-data
 pipelines. Dot products run JVM-side via ``zip_with``/``aggregate`` —
 no Python in the scoring loop.
+
+One kernel serves every operator here and the embedding near-dup pair
+scorers in :mod:`.dedup`: :func:`_norm` selects a vector's norm once per
+side (not once per scored pair), :func:`_cosine` scores a pair as
+``round(dot/(na·nb), 6)`` — 6dp so rankings are engine-reproducible —
+and :func:`_top_k` keeps the first k per key by score descending, then
+id ascending. An IVF query is :func:`_ivf_probes` (each query's
+``n_probe`` nearest centroids) then :func:`_ivf_scan` (score the probed
+partitions, rank): :func:`ivf_topk` scans the freshly assigned corpus,
+:meth:`IvfIndex.topk` a partition-pruned read of the persisted one.
 
 Scale notes: brute-force broadcasts the (small) query set against the
 corpus — map-only, no shuffle, linear scan; right for reranking or small
@@ -36,6 +47,31 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
+def _norm(vec_col: str, norm_col: str) -> Column:
+    """The norm of ``vec_col`` as ``norm_col``, selected once per side:
+    folded once per row, where a pair score would fold it again for
+    every pair the row is in. ``dot/(na·nb)`` over it flows the same
+    values through the same sqrt, multiply and divide as
+    :func:`cosine_expr`, so rounded cosines are bit-identical to the
+    inline form."""
+    return norm_expr(F.col(vec_col)).alias(norm_col)
+
+
+def _cosine(a: str, b: str, norm_a: str, norm_b: str) -> Column:
+    """The cosine of vector columns ``a`` and ``b`` from their
+    :func:`_norm` norms, rounded to 6dp so scores, and the rankings
+    and thresholds over them, reproduce across engines."""
+    return F.round(dot_expr(F.col(a), F.col(b)) / (F.col(norm_a) * F.col(norm_b)), 6)
+
+
+def _top_k(scored: DataFrame, key: str, score: str, id_col: str, k: int, rank: str) -> DataFrame:
+    """The first ``k`` rows of ``scored`` per ``key`` by ``score``
+    descending, ties broken on ``id_col`` ascending, numbered 1..k in
+    ``rank``."""
+    w = Window.partitionBy(key).orderBy(F.desc(score), F.asc(id_col))
+    return scored.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -48,38 +84,12 @@ def cosine_topk(
 
     Self-matches (same id) are excluded. Deterministic tie-break on
     neighbor id. The query side is broadcast — corpus never shuffles."""
-    # norms factored out of the per-pair expression: a corpus vector's
-    # norm is otherwise re-evaluated once PER QUERY inside the join
-    # (n_queries interpreted folds instead of one). dot/(nc*nq) flows
-    # the same values through the same sqrt/multiply/divide, so rounded
-    # cosines are bit-identical to the inline form.
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("qvec"),
-        norm_expr(F.col(vec_col)).alias("_nq"),
+    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("qvec"), _norm(vec_col, "_nq"))
+    c = corpus.select(F.col(id_col), F.col(vec_col).alias("cvec"), _norm(vec_col, "_nc"))
+    scored = c.join(F.broadcast(q), F.col(id_col) != F.col(query_id_col)).select(
+        query_id_col, id_col, _cosine("qvec", "cvec", "_nq", "_nc").alias("cosine")
     )
-    c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).alias("cvec"),
-        norm_expr(F.col(vec_col)).alias("_nc"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                dot_expr(F.col("qvec"), F.col("cvec"))
-                / (F.col("_nq") * F.col("_nc")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, query_id_col, "cosine", id_col, k, "rank")
 
 
 def default_centroids(
@@ -183,32 +193,48 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign each vector to its max-cosine centroid (one broadcast join +
     window argmax; the 'coarse quantizer'). Returns corpus + centroid_id."""
-    # norms factored out of the per-pair score: a corpus vector's norm
-    # is otherwise re-evaluated once per CENTROID (K interpreted folds
-    # instead of one); same values through the same ops — rounded
-    # scores bit-identical (the discipline embedding-LSH established)
+    normed = corpus.select("*", _norm(vec_col, "_nv"))
+    return _nearest(normed, id_col, vec_col, "_nv", centroids, vec_col, centroid_id_col, 1).drop("_nv")
+
+
+def _nearest(
+    rows: DataFrame, key: str, vec: str, norm: str, centroids: DataFrame,
+    cen_vec_col: str, centroid_id_col: str, n: int,
+) -> DataFrame:
+    """``rows`` (carrying vector ``vec`` and its :func:`_norm` norm)
+    joined to their ``n`` max-cosine centroids per ``key``, ties on the
+    centroid id: the coarse quantizer's argmax (n = 1) and a query's
+    probe set. The centroids are broadcast; the 6dp score makes the pick
+    reproducible across engines and float-op orders."""
     cen = centroids.select(
-        F.col(centroid_id_col),
-        F.col(vec_col).alias("cenvec"),
-        norm_expr(F.col(vec_col)).alias("_ncen"),
+        F.col(centroid_id_col), F.col(cen_vec_col).alias("_cvec"), _norm(cen_vec_col, "_ncen")
     )
-    # 6dp-rounded score before the argmax so the assignment is
-    # reproducible across engines/float-op orders (ties break on id)
-    scored = corpus.withColumn("_nv", norm_expr(F.col(vec_col))).join(
-        F.broadcast(cen)
-    ).select(
-        "*",
-        F.round(
-            dot_expr(F.col(vec_col), F.col("cenvec")) / (F.col("_nv") * F.col("_ncen")),
-            6,
-        ).alias("_cscore"),
+    scored = rows.join(F.broadcast(cen)).withColumn("_s", _cosine(vec, "_cvec", norm, "_ncen"))
+    return _top_k(scored, key, "_s", centroid_id_col, n, "_rn").drop("_rn", "_s", "_cvec", "_ncen")
+
+
+def _ivf_probes(
+    queries: DataFrame, centroids: DataFrame, n_probe: int, vec_col: str, query_id_col: str
+) -> DataFrame:
+    """(query_id, qvec, _nq, centroid_id): each query, with its vector
+    and norm, once per centroid among its ``n_probe`` nearest."""
+    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("qvec"), _norm(vec_col, "_nq"))
+    return _nearest(q, query_id_col, "qvec", "_nq", centroids, vec_col, "centroid_id", n_probe)
+
+
+def _ivf_scan(
+    assigned: DataFrame, probes: DataFrame, k: int, id_col: str, vec_col: str, query_id_col: str
+) -> DataFrame:
+    """(query_id, id, cosine, rank): the top ``k`` of the ``assigned``
+    vectors in each query's probed partitions, self-matches excluded.
+    The probe set is broadcast and joined on ``centroid_id``."""
+    scored = (
+        assigned.select("*", _norm(vec_col, "_nv"))
+        .join(F.broadcast(probes), "centroid_id")
+        .where(F.col(id_col) != F.col(query_id_col))
+        .select(query_id_col, id_col, _cosine("qvec", vec_col, "_nq", "_nv").alias("cosine"))
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_cscore"), F.asc(centroid_id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_cscore", "cenvec", "_nv", "_ncen")
-    )
+    return _top_k(scored, query_id_col, "cosine", id_col, k, "rank")
 
 
 def ivf_topk(
@@ -229,46 +255,40 @@ def ivf_topk(
     """
     if centroids is None:
         centroids = default_centroids(corpus, id_col=id_col, vec_col=vec_col)
+    probes = _ivf_probes(queries, centroids, n_probe, vec_col, query_id_col)
     assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    # queries pick their n_probe nearest centroids (rounded score —
-    # same determinism contract as the assignment)
-    cen = centroids.select(
-        "centroid_id", F.col(vec_col).alias("cenvec"),
-        norm_expr(F.col(vec_col)).alias("_ncen"),
-    )
-    q = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("qvec"),
-        norm_expr(F.col(vec_col)).alias("_nq"),
-    )
-    qc = q.join(F.broadcast(cen)).select(
-        query_id_col, "qvec", "_nq", "centroid_id",
-        F.round(
-            dot_expr(F.col("qvec"), F.col("cenvec")) / (F.col("_nq") * F.col("_ncen")),
-            6,
-        ).alias("_s"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(F.desc("_s"), F.asc("centroid_id"))
-    probes = qc.withColumn("_rn", F.row_number().over(wq)).where(F.col("_rn") <= n_probe).drop(
-        "_rn", "_s"
-    )
-    scored = (
-        assigned.withColumn("_nv", norm_expr(F.col(vec_col)))
-        .join(F.broadcast(probes), "centroid_id")
-        .where(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                dot_expr(F.col("qvec"), F.col(vec_col)) / (F.col("_nq") * F.col("_nv")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _ivf_scan(assigned, probes, k, id_col, vec_col, query_id_col)
 
 
 # -- product quantization (ADC) ----------------------------------------------
+
+def _subspaces(
+    corpus: DataFrame, n_subspaces: int, dim: int | None, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, subspace, sv): every vector cut into ``n_subspaces``
+    contiguous slices ``sv`` of ``dim // n_subspaces`` doubles. ``dim``
+    is inferred from the corpus when None; a ``dim`` that
+    ``n_subspaces`` does not divide raises, since its trailing dims
+    would fall in no subspace."""
+    if dim is None:
+        dim = _infer_dim(corpus, vec_col)
+    if dim % n_subspaces:
+        raise ValueError(f"dim={dim} must be divisible by n_subspaces={n_subspaces}")
+    width = dim // n_subspaces
+    c = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
+    return c.select(
+        id_col,
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(s).alias("subspace"),
+                    F.slice("v", s * width + 1, width).alias("sv"),
+                )
+                for s in range(n_subspaces)
+            ])
+        ).alias("e"),
+    ).select(id_col, "e.subspace", "e.sv")
+
 
 def pq_codebooks(
     corpus: DataFrame,
@@ -290,25 +310,7 @@ def pq_codebooks(
     same (subspace, code, codeword) schema. Returns
     (subspace, code, codeword: array<double>). O(m·K) rows — always
     broadcastable."""
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
-    assert dim % n_subspaces == 0, (
-        f"dim={dim} must be divisible by n_subspaces={n_subspaces}"
-    )
-    width = dim // n_subspaces
-    c = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-    sub = c.select(
-        id_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(s).alias("subspace"),
-                    F.slice("v", s * width + 1, width).alias("sv"),
-                )
-                for s in range(n_subspaces)
-            ])
-        ).alias("e"),
-    ).select(id_col, "e.subspace", "e.sv")
+    sub = _subspaces(corpus, n_subspaces, dim, id_col, vec_col)
     code = (
         F.conv(
             F.substring(
@@ -351,22 +353,7 @@ def pq_encode(
     index actually stores: m bytes per vector instead of dim floats. The
     codebook is broadcast (O(m·K) rows); encoding is map-side except the
     final argmin window, keyed by (id, subspace) — no skew possible."""
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
-    width = dim // n_subspaces
-    c = corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-    sub = c.select(
-        id_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(s).alias("subspace"),
-                    F.slice("v", s * width + 1, width).alias("sv"),
-                )
-                for s in range(n_subspaces)
-            ])
-        ).alias("e"),
-    ).select(id_col, "e.subspace", "e.sv")
+    sub = _subspaces(corpus, n_subspaces, dim, id_col, vec_col)
     scored = sub.join(F.broadcast(codebooks), "subspace").select(
         id_col,
         "subspace",
@@ -408,9 +395,9 @@ def pq_topk(
     are order-independent and engine-reproducible."""
     if dim is None:
         dim = _infer_dim(corpus, vec_col)
-    width = dim // n_subspaces
     books = pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col)
     encoded = pq_encode(corpus, books, n_subspaces, dim, id_col, vec_col)
+    width = dim // n_subspaces
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).cast("array<double>").alias("qv")
     )
@@ -431,31 +418,16 @@ def pq_topk(
         .groupBy(query_id_col, id_col)
         .agg(F.round(F.sum("_pd"), 6).alias("adc"))
     )
-    wc = Window.partitionBy(query_id_col).orderBy(F.desc("adc"), F.asc(id_col))
-    cands = (
-        adc.withColumn("_rn", F.row_number().over(wc))
-        .where(F.col("_rn") <= k * refine)
-        .select(query_id_col, id_col, "adc")
-    )
+    cands = _top_k(adc, query_id_col, "adc", id_col, k * refine, "_rn").drop("_rn")
     full = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        norm_expr(F.col(vec_col).cast("array<double>")).alias("_nc"),
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("cv"), _norm(vec_col, "_nc")
     )
     exact = (
         cands.join(full, id_col)
-        .join(F.broadcast(q.withColumn("_nq", norm_expr(F.col("qv")))), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            "adc",
-            F.round(
-                dot_expr(F.col("qv"), F.col("cv")) / (F.col("_nq") * F.col("_nc")), 6
-            ).alias("cosine"),
-        )
+        .join(F.broadcast(q.select("*", _norm("qv", "_nq"))), query_id_col)
+        .select(query_id_col, id_col, "adc", _cosine("qv", "cv", "_nq", "_nc").alias("cosine"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return exact.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _top_k(exact, query_id_col, "cosine", id_col, k, "rank")
 
 
 # -- persisted IVF index (build once, query many) -----------------------------
@@ -529,48 +501,10 @@ class IvfIndex:
 
         id_col = self.meta["id_col"]
         vec_col = self.meta["vec_col"]
-        # norms factored out of probe and scan scoring (same
-        # bit-identity argument as ivf_topk)
-        cen = self.centroids.select(
-            "centroid_id", F.col(vec_col).alias("cenvec"),
-            norm_expr(F.col(vec_col)).alias("_ncen"),
-        )
-        q = queries.select(
-            F.col(query_id_col), F.col(vec_col).alias("qvec"),
-            norm_expr(F.col(vec_col)).alias("_nq"),
-        )
-        qc = q.join(F.broadcast(cen)).select(
-            query_id_col, "qvec", "_nq", "centroid_id",
-            F.round(
-                dot_expr(F.col("qvec"), F.col("cenvec")) / (F.col("_nq") * F.col("_ncen")),
-                6,
-            ).alias("_s"),
-        )
-        wq = Window.partitionBy(query_id_col).orderBy(F.desc("_s"), F.asc("centroid_id"))
-        probes = (
-            qc.withColumn("_rn", F.row_number().over(wq))
-            .where(F.col("_rn") <= n_probe)
-            .drop("_rn", "_s")
-        )
+        probes = _ivf_probes(queries, self.centroids, n_probe, vec_col, query_id_col)
         probe_ids = sorted({r["centroid_id"] for r in probes.select("centroid_id").distinct().collect()})
         # partition-pruned scan: only the probed centroid dirs are read
         part = self.spark.read.parquet(os.path.join(self.path, "corpus", self._build)).where(
             F.col("centroid_id").isin(probe_ids)
         )
-        scored = (
-            part.withColumn("_nv", norm_expr(F.col(vec_col)))
-            .join(F.broadcast(probes), "centroid_id")
-            .where(F.col(id_col) != F.col(query_id_col))
-            .select(
-                query_id_col,
-                id_col,
-                F.round(
-                    dot_expr(F.col("qvec"), F.col(vec_col))
-                    / (F.col("_nq") * F.col("_nv")),
-                    6,
-                ).alias("cosine"),
-            )
-        )
-        w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-        return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
+        return _ivf_scan(part, probes, k, id_col, vec_col, query_id_col)

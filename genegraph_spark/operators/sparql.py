@@ -1000,8 +1000,9 @@ class _Compiler:
         gene/region/disease filters embed (gene_dosage.clj:70-110).
         Subject may be ``(?s ?score)`` to also bind the relevance score
         (Jena text ext). Matching = any query token; scoring = the
-        tf·idf of :func:`.algebra.text_search_ranked` (6dp, engine-
-        portable); ``limit`` keeps the top-limit by (score desc, node).
+        tf·idf of :func:`.algebra._text_scores`, the scorer of
+        :func:`.algebra.text_search_ranked` (6dp, engine-portable);
+        ``limit`` keeps the top-limit by (score desc, node).
 
         Scale shape: delegates to the inverted-index view — query-token
         postings only, broadcast df/N scalars, one grouped sum."""
@@ -1044,23 +1045,7 @@ class _Compiler:
         qtokens = [t for t in _re.split(r"[^a-z0-9]+", qtext.lower()) if t]
         if not qtokens:
             raise SparqlSyntaxError("text:query needs at least one token")
-        n_docs = idx.select("node").distinct().agg(F.count("*").alias("n"))
-        hits = idx.where(F.col("token").isin(qtokens))
-        dfreq = hits.groupBy("token").agg(F.countDistinct("node").alias("df"))
-        scored = (
-            hits.join(F.broadcast(dfreq), "token")
-            .crossJoin(F.broadcast(n_docs))
-            .withColumn(
-                "w",
-                F.col("tf").cast("double")
-                * F.log(
-                    F.lit(1.0)
-                    + F.col("n").cast("double") / F.col("df").cast("double")
-                ),
-            )
-            .groupBy("node")
-            .agg(F.round(F.sum("w"), 6).alias("score"))
-        )
+        scored = A._text_scores(idx, qtokens, "tfidf")
         if limit is not None:
             scored = scored.orderBy(F.desc("score"), F.asc("node")).limit(limit)
         cols = [F.concat(F.lit("I|"), F.col("node")).alias(svar)]

@@ -389,10 +389,17 @@ class NamedGraphStore:
     # -- lineage / resume ---------------------------------------------------
     def lineage(self) -> DataFrame:
         """(graph, n_triples, action, version, commit): one row per graph
-        each commit published or unpublished. The explicit schema reads
-        the directory without a schema-merge job; commits written before
-        ``version`` existed read it as null."""
-        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self._lineage)
+        each visible commit published or unpublished. A merge killed
+        before its manifest leaves lineage under the next id; the head
+        filter hides it until a later commit overwrites it (a merge) or
+        deletes it (a compaction). The explicit schema reads the directory
+        without a schema-merge job; commits written before ``version``
+        existed read it as null."""
+        last = self.last_commit()
+        if last is None:
+            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+        lineage = self.spark.read.schema(LINEAGE_SCHEMA).parquet(self._lineage)
+        return lineage.where(F.col("commit") <= last)
 
     def dictionary_version(self) -> int | None:
         """The content version the current snapshot's dictionary graph was
@@ -434,7 +441,4 @@ class NamedGraphStore:
         graphs merged without a ``per_graph`` version (callers must treat
         null as unknown and reprocess; the whole-graph MERGE makes that
         safe)."""
-        last = self.last_commit()
-        if last is None:
-            return self.spark.createDataFrame([], "graph string, version bigint")
-        return self.lineage().where(F.col("commit") <= last).select("graph", "version")
+        return self.lineage().select("graph", "version")

@@ -212,7 +212,6 @@ def stream_user_running_totals(
     source_dir: str,
     checkpoint_dir: str,
     out_dir: str | None = None,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Custom stateful streaming operator: per-user running event count /
     value total carried across micro-batches in GroupState — the
@@ -223,17 +222,19 @@ def stream_user_running_totals(
 
     Emits the refreshed (user_id, n_events, total) row per touched user
     per batch to ``batch=N`` dirs; the final read is latest-per-user.
-    State is partitioned by user — one shuffle per batch, state store
-    local to each partition, exactly the layout RocksDB-backed state
-    uses on a cluster."""
+    Micro-batches take two source files each, as in
+    :func:`stream_dedup_events`. State is partitioned by user — one
+    shuffle per batch, state store local to each partition, exactly the
+    layout RocksDB-backed state uses on a cluster."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     out_dir = out_dir or checkpoint_dir + "_out"
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(source_dir)
+    src = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(source_dir)
+    )
 
     def update(key, pdfs, state: GroupState):
         n, total = state.get if state.exists else (0, 0.0)

@@ -95,6 +95,59 @@ def test_ivf_topk_recall(spark):
     assert len(a & e) / len(e) >= 0.5  # probing 3/7 partitions: recall well above chance
 
 
+@pytest.mark.parametrize("kind", ["float", "sign"])
+def test_every_search_path_scores_the_reference_cosine(spark, tmp_path, kind):
+    """Every cosine a vector-search operator returns is exactly
+    ``round(cosine_expr(a, b), 6)`` of its id pair, on seeded random
+    float vectors and on ±1/8 sign vectors (whose cosines tie often)."""
+    import random
+
+    rnd = random.Random(11)
+    draw = {"float": lambda: rnd.gauss(0, 1), "sign": lambda: rnd.choice([0.125, -0.125])}[kind]
+    rows = [(i, [draw() for _ in range(8)], i % 3) for i in range(60)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
+    q = emb.where("vec_id < 4").select(F.col("vec_id").alias("query_id"), "embedding")
+    a = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("a"))
+    b = emb.select("vec_id", F.col("embedding").alias("b"))
+    similarity.IvfIndex.build(emb, str(tmp_path / "ivf"))
+    paths = {
+        "cosine_topk": similarity.cosine_topk(emb, q, k=5),
+        "ivf_topk": similarity.ivf_topk(emb, q, k=5, n_probe=2),
+        "IvfIndex.topk": similarity.IvfIndex(spark, str(tmp_path / "ivf")).topk(q, k=5, n_probe=2),
+        "pq_topk": similarity.pq_topk(emb, q, n_subspaces=4, n_codes=4, k=5, refine=2, dim=8),
+        "embedding_near_duplicates": dedup.embedding_near_duplicates(emb, threshold=-1.0),
+        "embedding_lsh_near_duplicates": dedup.embedding_lsh_near_duplicates(
+            emb, dim=8, n_planes=4, n_bands=2, threshold=-1.0
+        ),
+    }
+    for name, out in paths.items():
+        if "id_a" in out.columns:
+            out = out.withColumnRenamed("id_a", "query_id").withColumnRenamed("id_b", "vec_id")
+        got = (
+            out.join(a, "query_id")
+            .join(b, "vec_id")
+            .select("cosine", F.round(similarity.cosine_expr(F.col("a"), F.col("b")), 6).alias("ref"))
+            .collect()
+        )
+        assert got, name
+        assert [r.cosine for r in got] == [r.ref for r in got], name
+
+
+def test_vector_split_checks_raise_value_errors(spark):
+    """A PQ dim that ``n_subspaces`` does not divide, and LSH planes that
+    ``n_bands`` does not divide, raise ``ValueError``, also under
+    ``python -O``."""
+    emb = spark.createDataFrame([(1, [1.0] * 8)], "vec_id long, embedding array<double>")
+    for build in (
+        lambda: similarity.pq_codebooks(emb, n_subspaces=3, dim=8),
+        lambda: similarity.pq_encode(emb, emb, n_subspaces=3, dim=8),
+        lambda: similarity.pq_topk(emb, emb.withColumnRenamed("vec_id", "query_id"), n_subspaces=3, dim=8),
+        lambda: dedup.hyperplane_lsh_buckets(emb, dim=8, n_planes=12, n_bands=5),
+    ):
+        with pytest.raises(ValueError, match="divi"):
+            build()
+
+
 def test_textstats(spark):
     df = spark.createDataFrame(
         [(1, "the cat sat on the mat. it was the best mat!")], "id long, text string"

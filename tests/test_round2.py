@@ -485,11 +485,9 @@ def test_stateful_stream_carries_state_across_batches(spark, sf_dir, tmp_path):
     from genegraph_spark.streaming import stream as S
 
     src = S.write_events_source(spark, sf_dir, str(tmp_path / "src"))
-    # maxFilesPerTrigger=1 over 4 files -> 4 micro-batches: the final
-    # totals are only right if GroupState survives batch boundaries
-    got = S.stream_user_running_totals(
-        spark, src, str(tmp_path / "ckpt"), max_files_per_trigger=1
-    )
+    # two files per trigger over 4 files -> 2 micro-batches: the final
+    # totals are only right if GroupState survives the batch boundary
+    got = S.stream_user_running_totals(spark, src, str(tmp_path / "ckpt"))
     expected = (
         spark.read.parquet(src)
         .groupBy("user_id")

@@ -493,8 +493,8 @@ def test_merge_that_changes_nothing_writes_nothing(spark, tmp_path):
 
 def test_manifest_write_killed_midway_leaves_the_head(spark, tmp_path, monkeypatch):
     """A manifest write that stops partway leaves no truncated manifest:
-    the head stays the previous commit and reads as before, and the next
-    merge takes the interrupted commit's id."""
+    the head stays the previous commit and reads as before (its lineage
+    too), and the next merge takes the interrupted commit's id."""
     from genegraph_spark.sinks import commit
 
     store = NamedGraphStore(spark, str(tmp_path / "torn"), n_buckets=4)
@@ -511,6 +511,8 @@ def test_manifest_write_killed_midway_leaves_the_head(spark, tmp_path, monkeypat
     reopened = NamedGraphStore(spark, str(tmp_path / "torn"))
     assert reopened.last_commit() == 0 and reopened.n_buckets == 4
     assert {r.graph for r in reopened.triples().collect()} == {"g1"}
+    # the killed merge wrote its lineage under id 1, which no manifest names
+    assert {(r.graph, r.commit) for r in reopened.lineage().collect()} == {("g1", 0)}
     assert reopened.merge(make(spark, [t("g2", "s", "p", "o2")]))["commit"] == 1
     assert {r.graph for r in reopened.triples().collect()} == {"g1", "g2"}
 
